@@ -907,13 +907,12 @@ def warehouse_movie_data_disk(spark, sf_dir):
     return _finish_scratch(wh.read("data_mart", "movie_data"), root)
 
 
-# The BUCKETED physical layout through the real disk path: stg
-# movie_emp_link is registered with bucket_key=movie_emp_link_id
-# (registry.py), so run_table routes it to BucketedVersionedTable —
-# catalog-backed bucketed parquet whose versions all share the bucket
-# spec, making every link ⋈ sat merge/join co-located (Exchange-free;
-# plan asserted in tests/test_sources.py::test_registry_bucketed_layout).
-# This query commits one bucketed version end-to-end and reads it back.
+# The big SCD2 link table through the real disk path: run_table commits
+# stg movie_emp_link as versioned parquet (partitioned by is_open, with
+# its committed schema) and the query reads that version back.  The
+# name is historical: the table was once a bucketed catalog table; the
+# bucketed link ⋈ sat layout itself is covered by
+# tests/test_plan_quality.py::test_bucketed_scd2_tables_join_without_shuffle.
 @query(
     "warehouse_emp_link_bucketed_disk",
     _PIPELINE_SQL_PRELUDE
@@ -936,17 +935,12 @@ def warehouse_emp_link_bucketed_disk(spark, sf_dir):
     wh.run_table("stg", "movie_hub", _SCD2_T0)
     wh.run_table("stg", "employee_hub", _SCD2_T0)
     wh.run_table("stg", "movie_emp_link", _SCD2_T0)
-    out = _finish_scratch(
+    return _finish_scratch(
         wh.read("stg", "movie_emp_link").select(
             "movie_emp_link_id", "movie_id", "emp_id"
         ),
         root,
     )
-    # the bucketed versions live as catalog tables under the session
-    # warehouse dir (not under `root`) — drop the per-invocation
-    # database too, or temp-root isolation would leak one DB per run
-    spark.sql(f"DROP DATABASE IF EXISTS {wh.catalog_database()} CASCADE")
-    return out
 
 
 # Two SCD2 batches through the REAL disk path: batch 1 loads the sat,

@@ -26,8 +26,8 @@ snapshot are joined full-outer on the (md5-uniform, skew-free) pk; each
 joined row emits 0–2 output rows via an array+explode, so close-out and
 insert are produced in a single pass with no second join and no
 ``.cache()``.  Closed history never joins at all — it is unioned back
-untouched (and with the ``is_open`` partitioning in the table layer, a
-cluster deployment reads only the open partition for the merge).
+untouched, so the table layer still reads and rewrites it on every
+merge (see ``sources/table.py``).
 """
 
 from __future__ import annotations

@@ -23,7 +23,6 @@ from .. import registry
 from ..operators.repair import repair_role_rotation
 from ..operators.scd2 import OPEN_SENTINEL, insert_only_merge, scd2_apply
 from ..sources.bronze import read_bronze
-from ..sources.bucketed import BucketedVersionedTable
 from ..sources.table import VersionedParquetTable
 from . import core as core_builders
 from . import marts as mart_builders
@@ -78,31 +77,20 @@ class Warehouse:
         return df
 
     def catalog_database(self) -> str:
-        """Name of this warehouse's session-catalog database for
-        bucketed tables — derived from the warehouse root so distinct
-        roots (per-invocation scratch dirs included) never collide.
-        The single source of truth: callers that must DROP the
-        database after an isolated run use this, not a re-derivation."""
+        """Name of a session-catalog database derived from the warehouse
+        root, so distinct roots (per-invocation scratch dirs included)
+        never collide.  The registered tables do not use the catalog;
+        this is for callers that keep their own catalog tables beside
+        a warehouse."""
         import hashlib
 
         return "wh_" + hashlib.md5(self.root.encode()).hexdigest()[:10]
 
-    def table(self, schema: str, name: str):
-        """Physical handle for a registered table.  Layout dispatch is
-        registry-driven: specs with a ``bucket_key`` get bucketed
-        versioned storage (catalog tables, shuffle-free co-located
-        joins); everything else gets plain versioned parquet."""
-        spec = registry.ALL_SPECS.get((schema, name))
-        if spec is not None and spec.bucket_key:
-            db = self.catalog_database()
-            return BucketedVersionedTable(
-                self.spark,
-                db,
-                f"{schema}_{name}",
-                spec.bucket_key,
-                spec.num_buckets,
-                pointer_root=os.path.join(self.root, schema),
-            )
+    def table(self, schema: str, name: str) -> VersionedParquetTable:
+        """Physical handle for a registered table: versioned parquet
+        under ``<root>/<schema>/<name>``.  Every table's layout, pointer
+        and schema live on disk, so a new session over the same root
+        sees the same committed history."""
         return VersionedParquetTable(self.spark, os.path.join(self.root, schema), name)
 
     def read(self, schema: str, name: str) -> DataFrame:
@@ -119,8 +107,8 @@ class Warehouse:
         cols = [c for c, _ in spec.columns]
         if spec.scd2:
             merged = scd2_apply(target, snapshot, spec.pk, spec.attrs, batch_ts)
-            # partition open vs closed: a cluster merge then only ever
-            # rewrites the (small) open partition
+            # partition open vs closed so readers can prune to open rows;
+            # the write still rewrites closed history (sources/table.py)
             merged = merged.withColumn(
                 "is_open", F.col("valid_to") == F.lit(OPEN_SENTINEL).cast("timestamp")
             )

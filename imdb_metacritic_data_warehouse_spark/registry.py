@@ -23,19 +23,7 @@ Load order is the reference's fixed dependency order
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
-
-# Deployment-sized bucket count for bucketed silver tables.  Every
-# table sharing a bucket KEY must share the COUNT or their joins
-# re-shuffle, so this is one registry-level constant, not per-table.
-# Sizing rule (sources/bucketed.py): buckets ≈ data / a-few-hundred-MB,
-# rounded to a power of two; at the bench SF (0.1, ~540k link rows) 32
-# buckets meant 17k-row ≈ 1.5 MB files — pure per-file overhead, A/B'd
-# at 7.3s vs 5.7s for 8 buckets (NOTES round 7).  A 100 TB deployment
-# raises this via SPARK_GRAFT_NUM_BUCKETS (e.g. 4096) — one env knob
-# because the count is a physical-layout contract across tables.
-DEFAULT_NUM_BUCKETS = int(os.environ.get("SPARK_GRAFT_NUM_BUCKETS", "8"))
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -46,12 +34,6 @@ class TableSpec:
     columns: list[tuple[str, str]]  # (name, spark type) — excl. valid_from/valid_to
     scd2: bool
     builder: str  # function name in plans.core / plans.marts
-    # Physical layout: None → versioned parquet directories; a column
-    # name → BucketedVersionedTable on that key, so every version of
-    # big silver tables sharing a bucket key joins co-located (no
-    # Exchange) — the 100 TB layout for link ⋈ sat chains.
-    bucket_key: str | None = None
-    num_buckets: int = DEFAULT_NUM_BUCKETS
 
     @property
     def attrs(self) -> list[str]:
@@ -59,8 +41,7 @@ class TableSpec:
         return [c for c, _ in self.columns if c != self.pk]
 
 
-def _spec(schema, table, pk, cols, scd2, builder, **kw):
-    return TableSpec(schema, table, pk, cols, scd2, builder, **kw)
+_spec = TableSpec
 
 
 # Column registry mirrors ddl.py:378-444 (types mapped PG→Spark).
@@ -81,17 +62,13 @@ STG_SPECS: list[TableSpec] = [
     _spec("stg", "movie_genre_link", "mv_gen_link_id",
           [("mv_gen_link_id", "string"), ("movie_id", "string"), ("genre_id", "string")],
           True, "build_movie_genre_link"),
-    # The two big SCD2 tables the marts repeatedly join on
-    # movie_emp_link_id: bucket both on that key so the link ⋈ sat
-    # join (employee_data, movie_employee_link) is shuffle-free on
-    # every version the merge writes.
     _spec("stg", "movie_emp_link", "movie_emp_link_id",
           [("movie_emp_link_id", "string"), ("movie_id", "string"), ("emp_id", "string")],
-          True, "build_movie_emp_link", bucket_key="movie_emp_link_id"),
+          True, "build_movie_emp_link"),
     _spec("stg", "emp_movie_l_sat", "movie_emp_role_id",
           [("movie_emp_role_id", "string"), ("movie_emp_link_id", "string"),
            ("description", "string"), ("role", "string")],
-          True, "build_emp_movie_l_sat", bucket_key="movie_emp_link_id"),
+          True, "build_emp_movie_l_sat"),
 ]
 
 MART_SPECS: list[TableSpec] = [

@@ -55,8 +55,10 @@ def bucketed_join(
 
 class BucketedVersionedTable:
     """Versioned table whose versions are BUCKETED catalog tables —
-    the storage layout for big silver tables whose joins should
-    co-locate (e.g. movie_emp_link ⋈ emp_movie_l_sat on the link key).
+    a storage layout for big tables whose joins should co-locate
+    (e.g. an SCD2 link ⋈ satellite on the link key).  ``Warehouse``
+    does not use it: without a persistent metastore the catalog dies
+    with the session, so a new session sees no committed version.
 
     Same commit protocol as ``VersionedParquetTable`` (version number in
     a pointer file, atomic rename) but each version is

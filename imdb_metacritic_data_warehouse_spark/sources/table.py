@@ -7,31 +7,41 @@ so each merge writes a *complete new version directory* and atomically
 swaps a pointer file:
 
     <root>/<table>/v=N/...parquet      (immutable version directories)
+    <root>/<table>/v=N/_schema.json    (the version's Spark schema)
     <root>/<table>/_VERSION            (text file: current N; atomic rename)
 
 This is a deliberately minimal Delta-style commit protocol (same idea as
 Delta Lake's _delta_log, without the jar dependency): readers resolve
 the pointer then read one immutable directory, so a crashed writer can
 never leave a half-merged table, and concurrent readers always see a
-consistent snapshot.
+consistent snapshot.  Each version carries its schema, committed
+before the pointer swap, so opening a version is a file listing and
+never a schema-inference Spark job; versions written before the schema
+file existed fall back to inference.  Spark's parquet reader skips
+``_``-prefixed files, so the schema file is invisible to scans.
 
 Scale notes (100 TB):
-- Rewriting a full table per merge would be wasteful at scale; the SCD2
-  writer therefore partitions by ``is_open`` (open rows are the only
-  mutable set) so closed history is written once and appended, and only
-  the open partition is rewritten per batch — see operators/scd2.py.
+- Every merge rewrites the whole table: ``scd2_apply`` unions closed
+  history back in and ``write`` puts all of it into the new version
+  directory, so merge cost is O(history), not O(open rows).  The SCD2
+  writer partitions by ``is_open`` so readers can prune to open rows;
+  carrying closed-history files forward by manifest instead of
+  rewriting them is ROADMAP item 4.
 - Version directories are plain parquet → vectorized scans, predicate
   pushdown, and partition pruning all work unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _POINTER = "_VERSION"
+_SCHEMA = "_schema.json"
 
 
 class VersionedParquetTable:
@@ -70,10 +80,21 @@ class VersionedParquetTable:
             raise FileNotFoundError(
                 f"table {self.name} version {version} is gone (outside retention)"
             )
-        df = self.spark.read.parquet(self._version_dir(v))
+        df = self._open(v)
         # `is_open` is a physical partitioning column (open-vs-closed
         # pruning for SCD2 merges), not part of the logical schema
         return df.drop("is_open") if "is_open" in df.columns else df
+
+    def _open(self, v: int) -> DataFrame:
+        """Version ``v`` with its physical columns, opened with the
+        committed schema (no inference job) when the version has one."""
+        out = self._version_dir(v)
+        try:
+            with open(os.path.join(out, _SCHEMA)) as f:
+                schema = StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return self.spark.read.parquet(out)
+        return self.spark.read.schema(schema).parquet(out)
 
     def write(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
         """Write a new version and commit it via atomic pointer rename."""
@@ -83,6 +104,8 @@ class VersionedParquetTable:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out)
+        with open(os.path.join(out, _SCHEMA), "w") as f:
+            f.write(df.schema.json())
         tmp = self._pointer_path() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -98,7 +121,7 @@ class VersionedParquetTable:
         degrade scan planning and NameNode/listing pressure, so compact
         periodically (target ≈ table_bytes / 128 MB).  Runs through the
         same atomic commit as any write."""
-        df = self.spark.read.parquet(self._version_dir(self.current_version()))
+        df = self._open(self.current_version())
         part = ["is_open"] if "is_open" in df.columns else None
         return self.write(df.coalesce(target_partitions), partition_by=part)
 
@@ -183,7 +206,7 @@ def version_diff(
     v_from = v_to - 1 if v_from is None else v_from
     old = table.read(v_from).alias("o")
     new = table.read(v_to).alias("n")
-    cols = [c for c in table.read(v_to).columns]
+    cols = new.columns
     attrs = [c for c in cols if c != pk]
     joined = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
     changed = F.lit(False)

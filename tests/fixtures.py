@@ -9,6 +9,9 @@ certificates.
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import SparkSession
 
 from imdb_metacritic_data_warehouse_spark.sources.bronze import BRONZE_SCHEMAS
@@ -77,3 +80,18 @@ def write_raw_fixtures(spark: SparkSession, root: str,
     for tab, rows in data.items():
         df = spark.createDataFrame(rows, BRONZE_SCHEMAS[tab])
         df.coalesce(1).write.mode("overwrite").parquet(f"{root}/{tab}.parquet")
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession):
+    """Yields a callable returning the ids of the Spark jobs this
+    thread has submitted since entering (tracked under a fresh job
+    group; the previous group is restored on exit)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)

@@ -8,6 +8,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from imdb_metacritic_data_warehouse_spark import registry
 from imdb_metacritic_data_warehouse_spark.operators.repair import repair_role_rotation
 from imdb_metacritic_data_warehouse_spark.plans.pipeline import Warehouse
 from imdb_metacritic_data_warehouse_spark.sources.table import VersionedParquetTable
@@ -17,6 +18,7 @@ from tests.fixtures import (
     ACTOR_IMDB_ROWS,
     ACTOR_META_ROWS,
     movie_row,
+    spark_jobs,
     write_raw_fixtures,
 )
 
@@ -137,30 +139,108 @@ def test_sql_view_surface(wh):
     assert rows[0].movie_name == "The Matrix" and rows[0].n_sources == 2
 
 
-def test_registry_bucketed_layout(wh):
-    """The registry's bucket_key flag routes the big link/sat tables to
-    bucketed versioned storage, and their recurring mart join
-    (movie_emp_link ⋈ emp_movie_l_sat on movie_emp_link_id) plans
-    without an Exchange on either scan."""
-    from imdb_metacritic_data_warehouse_spark.sources.bucketed import (
-        BucketedVersionedTable,
-    )
+def test_registry_tables_are_versioned_parquet(wh):
+    """Every registered table is plain versioned parquet under the
+    warehouse root: its pointer, schema and data live on disk, and the
+    warehouse keeps nothing in the session catalog."""
+    import os
 
-    assert isinstance(wh.table("stg", "movie_emp_link"), BucketedVersionedTable)
-    assert isinstance(wh.table("stg", "emp_movie_l_sat"), BucketedVersionedTable)
-    assert isinstance(wh.table("stg", "movie_hub"), VersionedParquetTable)
-
-    prev = wh.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        wh.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = wh.read("stg", "movie_emp_link").join(
-            wh.read("stg", "emp_movie_l_sat"), "movie_emp_link_id"
+    for schema, name in registry.ALL_SPECS:
+        tab = wh.table(schema, name)
+        assert isinstance(tab, VersionedParquetTable)
+        assert tab.path == os.path.join(wh.root, schema, name)
+        assert os.path.isfile(
+            os.path.join(tab.path, f"v={tab.current_version()}", "_schema.json")
         )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() > 0
-    finally:
-        wh.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert not wh.spark.catalog.databaseExists(wh.catalog_database())
+
+
+def test_register_views_submits_no_spark_job(wh):
+    """Opening every committed version is file listing plus the
+    committed schema: no schema-inference job per table."""
+    with spark_jobs(wh.spark) as jobs:
+        views = wh.register_views()
+        assert not jobs()
+        assert len(views) == len(registry.ALL_SPECS)
+        wh.spark.table(views[0]).count()
+        assert jobs()  # the probe sees this thread's jobs at all
+
+
+def _two_sessions(root: str) -> None:
+    """Batch 0 and batch 1 over one warehouse root, each in its own
+    Spark session (the first is stopped before the second is built).
+    Batch 1 changes one row of every SCD2 table: Matrix's IMDB rating
+    (movie_info_sat), Heat loses Drama (movie_genre_link) and Michael
+    Mann leaves Heat (movie_emp_link, emp_movie_l_sat).  Prints one
+    JSON line: per SCD2 table, batch-0 rows and the batch-1 history
+    counts."""
+    import json
+    import os
+
+    from imdb_metacritic_data_warehouse_spark.session import get_spark
+
+    def session():
+        conf = {"spark.sql.warehouse.dir": os.path.join(root, "spark-warehouse")}
+        return get_spark("scd2_restart", cpus=2, extra_conf=conf)
+
+    bronze, wh_root = os.path.join(root, "bronze"), os.path.join(root, "wh")
+    scd2 = [s.table for s in registry.STG_SPECS if s.scd2]
+    spark = session()
+    write_raw_fixtures(spark, bronze)
+    w = Warehouse(spark, bronze, wh_root)
+    w.run_pipeline(T0)
+    batch0 = {t: w.read("stg", t).count() for t in scd2}
+    spark.stop()
+
+    spark = session()
+    movies = [
+        movie_row("http://im/t1", "The Matrix", "136", original="The Matrix",
+                  year="1999", cert="R", rating="9.0",
+                  genres="['Action', 'Sci-Fi']", budget="63000000", gross="467222728"),
+        movie_row("http://im/t2", "Heat", "170", year="1995", cert="R", rating="8.3",
+                  genres="['Action', 'Crime']", budget="60000000", gross=""),
+    ] + MOVIE_IMDB_ROWS[2:]
+    actors = [r for r in ACTOR_IMDB_ROWS if r[2] != "Michael Mann"]
+    write_raw_fixtures(spark, bronze, movie_imdb=movies, actor_imdb=actors)
+    w = Warehouse(spark, bronze, wh_root)
+    w.run_pipeline(T1)
+    out = {}
+    for t in scd2:
+        h = w.read("stg", t)
+        vf, vt = F.col("valid_from").cast("string"), F.col("valid_to").cast("string")
+        out[t] = {
+            "batch0": batch0[t],
+            "from_t0": h.filter(vf == T0).count(),
+            "open_from_t0": h.filter((vf == T0) & vt.startswith("9999")).count(),
+            "closed_at_t1": h.filter(vt == T1).count(),
+        }
+    spark.stop()
+    print(json.dumps(out))
+
+
+def test_scd2_history_survives_session_restart(tmp_path):
+    """A new process over an existing warehouse must merge into the
+    committed history, not re-load it: every SCD2 table keeps its
+    batch-0 rows (valid_from = T0) and closes exactly the changed ones.
+    Runs in a child interpreter because it stops its Spark session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         f"from tests.test_pipeline import _two_sessions; _two_sessions({str(tmp_path)!r})"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert set(got) == {s.table for s in registry.STG_SPECS if s.scd2}
+    for table, c in got.items():
+        assert c["from_t0"] == c["batch0"], (table, c)
+        assert c["closed_at_t1"] == c["batch0"] - c["open_from_t0"] >= 1, (table, c)
 
 
 def test_table_time_travel_and_compaction(spark, tmp_path):

@@ -16,6 +16,7 @@ from imdb_metacritic_data_warehouse_spark.sources.connectors import (
     write_json,
 )
 from imdb_metacritic_data_warehouse_spark.sources.table import VersionedParquetTable
+from tests.fixtures import spark_jobs
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -91,6 +92,41 @@ def test_versioned_table_atomic_swap_and_gc(spark, tmp_path):
     import os
     dirs = sorted(d for d in os.listdir(tab.path) if d.startswith("v="))
     assert dirs == ["v=3", "v=4"]
+
+
+def test_versioned_read_submits_no_spark_job(spark, tmp_path):
+    """``read()`` opens a version with its committed schema, so it is
+    file listing only; a version without the schema file (written
+    before it existed) still reads, by inference."""
+    import os
+
+    tab = VersionedParquetTable(spark, str(tmp_path), "nojob")
+    df = spark.createDataFrame(
+        [("a", 1, True), ("b", 2, False)], "k string, n int, is_open boolean"
+    )
+    v = tab.write(df, partition_by=["is_open"])
+    with spark_jobs(spark) as jobs:
+        back = tab.read()
+        assert not jobs()
+        assert back.schema.simpleString() == "struct<k:string,n:int>"
+        assert sorted((r.k, r.n) for r in back.collect()) == [("a", 1), ("b", 2)]
+        assert jobs()  # the probe sees this thread's jobs at all
+    os.remove(os.path.join(tab.path, f"v={v}", "_schema.json"))
+    assert sorted((r.k, r.n) for r in tab.read().collect()) == [("a", 1), ("b", 2)]
+
+
+def test_empty_partitioned_version_reads_back(spark, tmp_path):
+    """A zero-row SCD2-shaped write leaves no parquet file to infer a
+    schema from; the committed schema still opens it, and compaction
+    runs through it."""
+    tab = VersionedParquetTable(spark, str(tmp_path), "empty")
+    df = spark.createDataFrame([], "k string, valid_from timestamp, is_open boolean")
+    tab.write(df, partition_by=["is_open"])
+    back = tab.read()
+    assert back.schema.simpleString() == "struct<k:string,valid_from:timestamp>"
+    assert back.count() == 0
+    assert tab.compact() == 2
+    assert tab.read().schema == back.schema and tab.read().count() == 0
 
 
 def test_python_datasource_synthetic_events(spark):

@@ -22,6 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as ent  # noqa: E402
 from imdb_metacritic_data_warehouse_spark.session import get_spark  # noqa: E402
 
+# Jobs submitted up to this long before a measured window opens still
+# count toward it (event-log times are epoch milliseconds).
+WINDOW_SLACK_MS = 5000
+
 
 def run(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -109,7 +113,7 @@ def run(names: list[str]) -> None:
         prev_end = t0
         for jid in sorted(jobs):
             j = jobs[jid]
-            if j["t0"] < t0 - 5 or j["t0"] > t1:
+            if j["t0"] < t0 - WINDOW_SLACK_MS or j["t0"] > t1:
                 continue
             wall = (j.get("t1", j["t0"]) - j["t0"]) / 1000
             gap = (j["t0"] - prev_end) / 1000
