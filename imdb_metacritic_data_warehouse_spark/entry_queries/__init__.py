@@ -1,601 +1,20 @@
-"""Driver-facing query registry — an ordered package of domain
-modules, split from the original flat entry_queries module
-(verdict r7 task #5; same registration decorator, same order).
+"""Driver-facing query registry: one domain module per query family.
 
-Importing this package imports every domain module IN ORDER —
-each ``@query`` registration lands in ``_registry.QUERIES`` exactly
-as it did in the flat file — then applies the same priority-
-prefix reordering.  Every top-level name is re-exported so
-``from ...entry_queries import <query_fn>`` keeps working.
+Each ``@query`` in a ``qNN_*`` module registers name → builder plus its
+DuckDB oracle in ``_registry``.  Importing this package imports the
+domain modules in order, so the public order of ``QUERIES``/``ORACLES``
+(and of ``__spark_entry__.queries()``) is plain registration order.
+Import helpers and query functions from their defining module.
 """
 
-from __future__ import annotations
-
-from ._registry import QUERIES, ORACLES
-from ._registry import (  # noqa: F401
-    Callable,
-    DataFrame,
-    F,
-    SparkSession,
-    _dec,
-    _events,
-    _t,
-    _units4,
-    annotations,
-    arg_max,
-    filter_latest,
-    filter_top_snapshots,
-    global_row_number,
-    hash_key,
-    insert_only_merge,
-    os,
-    query,
-    scd2_apply,
+from ._registry import ORACLES, QUERIES
+from . import (  # noqa: F401  (imported to register their queries)
+    q01_warehouse, q02_pipeline_parity, q03_dedup_lsh, q04_retrieval_text,
+    q05_sketch_graph, q06_stats_dimred, q07_resampling_tokenizer, q08_graph_ivm,
+    q09_quality_cdc, q10_text_drift, q11_calibration_survival,
+    q12_seasonal_incremental, q13_substring_fertility, q14_coreset_mixture,
+    q15_stats_sampling, q16_entropy_zipf, q17_calibration_series,
+    q18_power_analysis, q19_lcs_contamination, q20_source_readability,
+    q21_noise_mass, q22_influence_url_xlingual, q23_kmeans_prf_templates,
+    q24_kmv_quota,
 )
-from .q01_warehouse import (  # noqa: F401
-    STOPWORDS,
-    TOKEN_REGEX,
-    _GREATEST,
-    _H,
-    _LANG_CASE,
-    _MINHASH_CORPUS_SQL,
-    _MINHASH_SIG_SQL,
-    _NORM_SQL,
-    _SCD2_T0,
-    _SCD2_T1,
-    _ann_lsh_oracle,
-    _core,
-    _lang_hits_sql,
-    _marts,
-    _minhash_corpus,
-    ann_lsh_bucketed,
-    anti_join_new_keys,
-    argmax_per_group,
-    attach_media,
-    case_when_cleanup,
-    composite_key_join,
-    cosine_topk,
-    decontaminate,
-    dedup_exact,
-    dedup_exact_docs,
-    embedding_cosine_topk,
-    events_json_stats,
-    events_variant_stats,
-    explode_tokens_hub,
-    expression_join,
-    full_outer_snapshots,
-    global_rank_leaderboard,
-    hash_key_generation,
-    insert_only_merge_customers,
-    latest_snapshot_filter,
-    left_join_change_detect,
-    lsh_bucketed_topk,
-    lsh_candidate_pairs,
-    minhash_estimate_audit,
-    minhash_lsh_pairs,
-    minhash_sig_sql,
-    multimodal_metadata,
-    ngram_jaccard,
-    ngram_jaccard_pairs,
-    pit_lookup_orders,
-    q1_pricing_summary,
-    q5_revenue_per_nation,
-    rotation_repair,
-    salted_join_events,
-    scalar_subquery_filter,
-    scd2_merge_orders,
-    session_window_events,
-    simhash,
-    simhash_signatures,
-    sliding_window_events,
-    string_agg_sorted,
-    text_analysis,
-    top2_snapshots_filter,
-    tumbling_window_events,
-    typed_casts,
-    union_all_counts,
-    union_distinct,
-)
-from .q02_pipeline_parity import (  # noqa: F401
-    Window,
-    _ACTOR_SQL_CTES,
-    _BM25_TERMS,
-    _ND_SIG_SQL,
-    _PIPELINE_SQL_PRELUDE,
-    _SAT_ATTRS,
-    _SAT_SQL_CTES,
-    _ShimWarehouse,
-    _actor_wh,
-    _bpe_round_sql,
-    _finish_scratch,
-    _knn_buckets_sql,
-    _knn_graph_oracle,
-    _materialize,
-    _movie_meta_wh,
-    _scratch_dir,
-    _semantic_dedup_oracle,
-    _synth_actor_dedup,
-    _synth_actor_raw,
-    _synth_movie_raw,
-    _url_parity,
-    ann_ivf,
-    approx_sketches,
-    asof_join,
-    asof_join_events,
-    balanced_resample_docs,
-    bm25_docs,
-    bpe_pair_counts_docs,
-    bpe_train_merges_docs,
-    chunk_documents_sliding,
-    cohort_retention_events,
-    compaction_plan_orders,
-    contamination_ngram_docs,
-    correlated_agg_threshold,
-    cube_orders,
-    decontaminate_docs,
-    deterministic_global_shuffle,
-    deterministic_sample_split,
-    dup_ngram_fraction_docs,
-    embedding_centroid_outliers,
-    embedding_neardup,
-    embedding_neardup_pairs,
-    exact_percentiles,
-    exists_semi_join,
-    extract_features,
-    funnel_conversion_events,
-    intersect_except_sets,
-    knn_graph_embeddings,
-    leakage_safe_split_events,
-    multimodal_features,
-    ngram_containment_pairs,
-    pack_sequences_budget,
-    parse_digits_to_long,
-    parse_duration_minutes,
-    parse_year,
-    pipeline_emp_movie_l_sat,
-    pipeline_employee_data,
-    pipeline_employee_hub,
-    pipeline_genre_hub,
-    pipeline_genre_metrics,
-    pipeline_movie_data,
-    pipeline_movie_emp_link,
-    pipeline_movie_employee_link,
-    pipeline_movie_genre_link,
-    pipeline_movie_hub,
-    pipeline_movie_info_sat,
-    pipeline_rating_slide,
-    pivot_lineitem_status,
-    q17_small_quantity_revenue,
-    q9_product_type_profit,
-    quality_logit_docs,
-    range_join_bucketed,
-    range_join_events,
-    repetition_ratio_docs,
-    rolling_fingerprint_docs,
-    rollup_orders,
-    salted_agg,
-    salted_groupby_events,
-    scalar_parsing,
-    scrub_documents,
-    semantic_dedup_keep,
-    stratified_topk_docs,
-    unigram_logprob_docs,
-    unpivot_measures,
-    warehouse_emp_link_bucketed_disk,
-    warehouse_movie_data_disk,
-    warehouse_scd2_two_batch_disk,
-    window_frame_functions,
-)
-from .q03_dedup_lsh import (  # noqa: F401
-    _QUALITY_SQL,
-    _neardup_labels_cached,
-    ann_ivf_sampled,
-    connected_components,
-    corpus_report_by_source,
-    dedup_keep_canonical,
-    doc_frequency_terms,
-    dq_report_orders,
-    entity_clusters_parts,
-    fixed_histogram,
-    fuzzy_match_part_names,
-    gap_fill_user_hours,
-    grouping_sets_orders,
-    histogram_extendedprice,
-    incremental_agg_from_cdf,
-    incremental_mart_merge,
-    interval_overlap_sessions,
-    ivf_sampled_topk,
-    mixture_sample_domains,
-    neardup_clusters,
-    neardup_labels_persisted,
-    pq_codes_embeddings,
-    profile_lineitem_numeric,
-    profile_numeric,
-    q10_returned_revenue,
-    q11_important_suppliers,
-    q12_priority_case_agg,
-    q13_order_count_distribution,
-    q14_promo_revenue_share,
-    q15_top_supplier,
-    q16_supplier_count_distinct,
-    q18_large_orders,
-    q19_disjunctive_revenue,
-    q20_part_volume_suppliers,
-    q21_waiting_suppliers,
-    q22_dormant_rich_customers,
-    q2_cheapest_supplier,
-    q3_shipping_priority,
-    q4_priority_exists,
-    q6_forecast_revenue,
-    q7_nation_volume,
-    q8_market_share,
-    quality_calibrated_filter,
-    quality_quantile_filter,
-    quantize_embeddings_int8,
-    select_token_budget_docs,
-    tfidf_topk_docs,
-    topk_per_group_brand,
-    trailing_window_anomalies,
-    version_diff_orders,
-    vocab_coverage_docs,
-)
-from .q04_retrieval_text import (  # noqa: F401
-    _bm25_scored_cte,
-    _copurchase_pairs,
-    _lsh_band_sql,
-    ab_test_lift,
-    association_rules_parts,
-    attribution_last_touch,
-    chisq_event_dow,
-    ctr_wilson_bounds,
-    cumulative_unique_users_daily,
-    curate_corpus_end_to_end,
-    cusum_changepoint_daily,
-    daily_revenue_trend,
-    dau_wau_stickiness,
-    duplicate_chunk_spans,
-    equidepth_bins_orders,
-    funnel_latency_percentiles,
-    gdpr_erasure_cascade,
-    hard_negative_mining,
-    hybrid_search_rrf,
-    incremental_neardup_ingest,
-    inverted_index_postings,
-    jaccard_prefix_join_collapsed,
-    jaccard_prefix_join_docs,
-    mad_outliers_lineitem,
-    markov_transitions_events,
-    matryoshka_recall_audit,
-    mmr_rerank_topk,
-    out_of_order_stats_events,
-    pagerank_parts_copurchase,
-    scd2_validity_audit,
-    session_paths_events,
-    skew_report_lineitem,
-    survivorship_golden_docs,
-    table_checksum_orders,
-    time_decayed_engagement,
-    triangle_counts_parts,
-    twap_events,
-    user_event_entropy,
-    vocab_truncate_docs,
-    weighted_sample_pps_docs,
-    winsorize_lineitem_prices,
-)
-from .q05_sketch_graph import (  # noqa: F401
-    _ZORDER_N_FILES,
-    _ZORDER_PRED,
-    _knn_label_agreement_oracle,
-    _z_sql,
-    _zorder_audit_oracle,
-    attribution_linear_events,
-    auc_score_docs,
-    bfs_khop_parts,
-    bigram_logprob_docs,
-    bloom_prune_audit,
-    bpe_encode_docs,
-    cms_heavy_hitters_events,
-    cms_join_size_audit,
-    cohort_ltv_events,
-    crosscorr_clicks_purchases,
-    diff_in_diff_events,
-    dow_seasonal_residuals_events,
-    embedding_dim_stats,
-    encoding_advisor_lineitem,
-    ewma_control_daily,
-    fd_audit_orders,
-    fk_orphan_audit,
-    gaps_islands_orders,
-    gini_revenue_customers,
-    hazard_table_users,
-    knn_label_agreement,
-    knn_recall_audit,
-    ks_drift_orders,
-    langid_confusion_docs,
-    markov_accuracy_events,
-    mutual_information_events,
-    neardup_cluster_sizes,
-    overdispersion_events,
-    pareto_frontier_parts,
-    ppr_parts_seeded,
-    psi_drift_orders,
-    quantile_transform_docs,
-    recency_features_events,
-    revenue_share_of_parent,
-    scd3_merge_customers,
-    source_histogram_overlap,
-    spearman_price_size_parts,
-    target_encode_loo_orders,
-    weighted_median_lineitem,
-    yoy_growth_monthly,
-    zipf_slope_terms,
-    zorder_pruning_audit,
-)
-from .q06_stats_dimred import (  # noqa: F401
-    _MIX,
-    _MIX_HALF,
-    _MIX_MOD,
-    _POIS1_T,
-    _jl_oracle,
-    _mix_sql,
-    _pois_case_sql,
-    assortativity_copurchase,
-    benford_audit_lineitem,
-    bitmap_distinct_audit,
-    bootstrap_ci_lineitem,
-    collocations_pmi_docs,
-    conformal_interval_nation_monthly,
-    covariance_matrix_embeddings,
-    debounce_events,
-    duplicate_payment_audit_orders,
-    event_trigrams_users,
-    ipw_estimate_docs,
-    jl_distortion_audit,
-    js_divergence_sources,
-    moments_quantity_lineitem,
-    ols_trend_nation_monthly,
-    orc_roundtrip_lineitem,
-    pareto_head_parts,
-    partitioned_overwrite_orders,
-    pii_summary_by_source,
-    readability_docs,
-    rfm_segments_customers,
-    seasonal_naive_mape_monthly,
-    simpson_paradox_orders,
-    sprt_ab_events,
-    theil_sen_nation_monthly,
-    tokenizer_fertility_lang,
-    totalprice_reconciliation_orders,
-    yoy_waterfall_nation,
-)
-from .q07_resampling_tokenizer import (  # noqa: F401
-    _HLL_ALPHA,
-    _kcore_oracle,
-    acf_daily_revenue,
-    adamic_adar_parts,
-    bitemporal_snapshot_orders,
-    cuped_adjusted_lift_events,
-    funnel_deadline_events,
-    hll_distinct_audit,
-    holt_forecast_nation_monthly,
-    incremental_join_view_cdf,
-    kcore_parts_copurchase,
-    label_propagation_parts,
-    mannwhitney_u_lineitem,
-    mixed_media_decode_stats,
-    rollup_cascade_events,
-    scd4_current_history_customers,
-    seasonal_decompose_monthly,
-    wap_publish_audit_orders,
-)
-from .q08_graph_ivm import (  # noqa: F401
-    _pca_oracle_sql,
-    attribution_position_events,
-    audio_decode_stats,
-    cluster_purity_embeddings,
-    curriculum_mixture_schedule,
-    decontamination_split_audit,
-    dedup_token_loss_report,
-    heaps_law_vocab_growth,
-    hll_incremental_merge_audit,
-    hll_overlap_audience_events,
-    hll_rollup_lattice,
-    interevent_burstiness_events,
-    k_anonymity_audit_customers,
-    kruskal_wallis_lineitem,
-    max_drawdown_daily_revenue,
-    neardup_source_matrix,
-    ngram_novelty_batch,
-    packing_efficiency_audit,
-    pca_top_component_embeddings,
-    rerank_agreement_audit,
-    rolling_revenue_range_frame,
-    simhash_hamming_pairs,
-    simhash_hamming_pairs_collapsed,
-    temperature_mixture_weights_docs,
-    trimmed_mean_lineitem,
-    triplet_mining_embeddings,
-    welch_ttest_orders,
-)
-from .q09_quality_cdc import (  # noqa: F401
-    _gopher_per_doc,
-    asof_forward_tolerance_events,
-    boilerplate_chunk_removal_docs,
-    cdc_apply_multi_clause_orders,
-    cluster_safe_split_docs,
-    embedding_isotropy_audit,
-    fair_interleave_topk_docs,
-    gopher_quality_filter_docs,
-    hierarchy_rollup_parts,
-    hits_suppliers_parts,
-    item_cf_cosine_parts,
-    kappa_quality_labelers_docs,
-    l_diversity_audit_customers,
-    median_ci_lineitem,
-    modularity_brand_copurchase,
-    ndcg_retrieval_audit,
-    reliability_diagram_docs,
-    semiadditive_balance_monthly,
-    t_closeness_audit_customers,
-)
-from .q10_text_drift import (  # noqa: F401
-    cdc_chunk_dedup_docs,
-    dsir_selection_docs,
-    ecod_outliers_embeddings,
-    hill_tail_index_orders,
-    mrr_retrieval_audit,
-    naive_bayes_lang_docs,
-    shapley_source_valuation_docs,
-    spell_candidates_docs,
-    textrank_keywords_docs,
-    wasserstein_drift_orders,
-    winnowing_fingerprints_docs,
-)
-from .q11_calibration_survival import (  # noqa: F401
-    bradley_terry_brands,
-    frequent_triples_parts,
-    holt_winters_daily,
-    isotonic_calibration_docs,
-    km_survival_users,
-    linear_interp_user_hours,
-    logrank_test_users,
-    page_hinkley_daily,
-    quantile_normalize_embeddings,
-)
-from .q12_seasonal_incremental import (  # noqa: F401
-    blocking_quality_audit_docs,
-    cka_quantization_audit,
-    feature_hashing_audit_docs,
-    incremental_join_view_orders,
-    neardup_cluster_tightness,
-    negative_sampling_table_docs,
-    seasonal_anomaly_monthly,
-)
-from .q13_substring_fertility import (  # noqa: F401
-    prd_divergence_embeddings,
-    substring_dup_spans_docs,
-    tokenizer_fertility_drift,
-)
-from .q14_coreset_mixture import (  # noqa: F401
-    domain_reweight_step_docs,
-    kcenter_coreset_embeddings,
-    retraction_ivm_orders,
-)
-from .q15_stats_sampling import (  # noqa: F401
-    bh_fdr_sources,
-    horvitz_thompson_docs,
-    mann_kendall_daily,
-)
-from .q16_entropy_zipf import (  # noqa: F401
-    char_entropy_docs,
-    length_bucketing_audit_docs,
-)
-from .q17_calibration_series import (  # noqa: F401
-    acf_ljungbox_daily,
-    brier_decomposition_docs,
-    mcnemar_rules_docs,
-)
-from .q18_power_analysis import (  # noqa: F401
-    ab_power_sample_size_events,
-)
-from .q19_lcs_contamination import (  # noqa: F401
-    contamination_wave_attribution_docs,
-    domain_calibration_drift_docs,
-    lcs_doc_pairs_collapsed,
-    lcs_doc_pairs_docs,
-)
-from .q20_source_readability import (  # noqa: F401
-    flesch_readability_docs,
-    source_overlap_matrix_docs,
-)
-from .q21_noise_mass import (  # noqa: F401
-    confident_noise_docs,
-    effective_token_mass_docs,
-)
-from .q22_influence_url_xlingual import (  # noqa: F401
-    crosslingual_neardup_collapsed,
-    crosslingual_neardup_docs,
-    influence_selection_docs,
-    url_domain_dedup_docs,
-)
-from .q23_kmeans_prf_templates import (  # noqa: F401
-    boilerplate_templates_docs,
-    cuped_variance_reduction_events,
-    label_shift_bbse_docs,
-    kmeans_lloyd_embeddings,
-    rocchio_expansion_docs,
-)
-from .q24_kmv_quota import (  # noqa: F401
-    domain_quota_sample_docs,
-    kmv_overlap_sources,
-)
-
-
-
-# GENERATED by `python tools/prefix_policy.py --emit` (the rotation
-# policy is computed, not hand-pinned).  Queries whose reachable code
-# changed since their last green driver sample lead, most recent
-# change first, with stalest-last-sample as tiebreak.  Here that is the
-# versioned-table and Warehouse readers (the committed-schema read
-# path), then the oldest r8 changes.
-# tests/test_driver_prefix.py recomputes the policy and asserts this
-# list's head matches it; regenerate with --emit after touching
-# package modules.
-_PRIORITY_PREFIX = [
-    "warehouse_emp_link_bucketed_disk",
-    "warehouse_movie_data_disk",
-    "incremental_join_view_cdf",
-    "scd4_current_history_customers",
-    "wap_publish_audit_orders",
-    "gdpr_erasure_cascade",
-    "hll_incremental_merge_audit",
-    "incremental_agg_from_cdf",
-    "neardup_labels_persisted",
-    "version_diff_orders",
-    "pipeline_emp_movie_l_sat",
-    "pipeline_employee_data",
-    "pipeline_employee_hub",
-    "pipeline_genre_hub",
-    "pipeline_genre_metrics",
-    "pipeline_movie_data",
-    "pipeline_movie_emp_link",
-    "pipeline_movie_employee_link",
-    "pipeline_movie_genre_link",
-    "pipeline_movie_hub",
-    "pipeline_movie_info_sat",
-    "pipeline_rating_slide",
-    "warehouse_scd2_two_batch_disk",
-    "dedup_keep_canonical",
-    "deterministic_sample_split",
-    "doc_frequency_terms",
-    "events_variant_stats",
-    "exact_percentiles",
-    "exists_semi_join",
-    "grouping_sets_orders",
-    "histogram_extendedprice",
-    "intersect_except_sets",
-    "minhash_lsh_pairs",
-    "pack_sequences_budget",
-    "pit_lookup_orders",
-    "profile_lineitem_numeric",
-    "q10_returned_revenue",
-    "q11_important_suppliers",
-    "q12_priority_case_agg",
-    "q13_order_count_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q16_supplier_count_distinct",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q20_part_volume_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_rich_customers",
-    "q2_cheapest_supplier",
-    "q3_shipping_priority",
-]
-assert len(_PRIORITY_PREFIX) == 50, len(_PRIORITY_PREFIX)
-assert not set(_PRIORITY_PREFIX) - set(QUERIES), set(_PRIORITY_PREFIX) - set(QUERIES)
-
-_ordered = _PRIORITY_PREFIX + [n for n in QUERIES if n not in _PRIORITY_PREFIX]
-QUERIES = {n: QUERIES[n] for n in _ordered}
-ORACLES = {n: ORACLES[n] for n in _ordered if n in ORACLES}

@@ -699,7 +699,7 @@ def _actor_wh(spark, sf_dir, dedup_actor: bool = False) -> _ShimWarehouse:
         # the materialized 540k-row frame instead of an 890k-row union.
         # Builders reference columns by name, never df.attr, so the
         # shared leaf is safe.  Measured 15.6s → 7s best-of-3 at sf0.1
-        # (tools/emp_variants.py, fresh JVM per variant).
+        # (fresh JVM per variant; NOTES.md "Round 6 (work log)" item 4).
         actors = _materialize(_synth_actor_dedup(spark, sf_dir))
         actors_empty = actors.filter(F.lit(False))
         bronze_actor = {
@@ -1077,8 +1077,9 @@ def pipeline_employee_data(spark, sf_dir):
     # The sat is deliberately NOT checkpointed: its only consumer is the
     # mart's filter_latest (rows + 1-row max agg), and re-running the
     # sat chain once over the materialized dd/link inputs is cheaper
-    # than a 540k-row checkpoint write (A/B in tools/emp_variants.py:
-    # nosatmat 6-7s vs satmat 7.4-7.8s best-of-3).
+    # than a 540k-row checkpoint write (A/B recorded in NOTES.md
+    # "Round 6 (work log)" item 4: nosatmat 6-7s vs satmat 7.4-7.8s
+    # best-of-3).
     wh._stg["emp_movie_l_sat"] = scd2_apply(
         None, s, "movie_emp_role_id", ["movie_emp_link_id", "description", "role"], _SCD2_T0
     )

@@ -16,7 +16,7 @@ Cost per refresh: one scan of the DELTA + a shuffle keyed by the
 independent of the accumulated fact history.  The equivalence
 ``merge(state(b1), delta(b2)) ≡ full_recompute(b1 ∪ b2)`` is the
 correctness contract; the driver oracle checks it value-for-value
-(entry_queries.incremental_mart_merge).
+(``incremental_mart_merge``, entry_queries/q03).
 """
 
 from __future__ import annotations

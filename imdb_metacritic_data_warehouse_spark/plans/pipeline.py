@@ -70,7 +70,7 @@ class Warehouse:
         ``etl_layer_transfer.py:10-20`` — we repair on read, keeping
         bronze immutable).  Each call is a fresh scan on purpose: shared
         in-memory plans across builders break df.attr references in
-        join consumers (see entry_queries._ShimWarehouse docstring)."""
+        join consumers (see entry_queries.q02_pipeline_parity._ShimWarehouse)."""
         df = read_bronze(self.spark, self.bronze_root, table)
         if table.startswith("actor_raw"):
             df = repair_role_rotation(df)

@@ -20,7 +20,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Every CPU this process may run on, unless SPARK_GRAFT_CPUS overrides it.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemTotal (at least 1g)."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, kb // 2 // 2**20)}g"
+
 
 # Confs the engine's semantics DEPEND on (not tuning): Spark 4 defaults
 # ANSI mode ON, which makes ''::bigint crash exactly like the reference's
@@ -59,12 +70,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem())
         # Wide-vector expressions (a 64-dim dot product is ~70 codegen
         # ops) push whole-stage-codegen's processNext() past the JVM
         # JIT's 8 KB bytecode ceiling, and HotSpot then INTERPRETS the
@@ -76,7 +85,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_SEMANTIC_CONFS, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

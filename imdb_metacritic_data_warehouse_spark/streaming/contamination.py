@@ -26,7 +26,7 @@ not the corpus' billions) — small enough to broadcast into the
 scoring join; the merge itself hash-partitions on the shingle, the
 same bucketing a 100 TB deployment would give the committed index.
 
-Batch twin: ``entry_queries.contamination_wave_attribution_docs``
+Batch twin: ``contamination_wave_attribution_docs`` (entry_queries/q19)
 computes the identical per-doc wave-attributed overlap in one
 declarative plan; tests/test_streaming.py pins incremental == batch.
 """

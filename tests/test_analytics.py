@@ -139,7 +139,7 @@ def test_interval_overlap_join_exact_and_dedup(spark):
 
 
 def test_markov_transition_probs_sum_to_one(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         markov_transitions_events,
     )
 
@@ -152,8 +152,8 @@ def test_markov_transition_probs_sum_to_one(spark, sf_dir):
 
 
 def test_twap_bounds_and_interval_counts(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
-        _events,
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _events
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         twap_events,
     )
 
@@ -221,7 +221,9 @@ def test_pagerank_hand_graph(spark):
 
 
 def test_scd2_validity_audit_clean_history(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import scd2_validity_audit
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        scd2_validity_audit,
+    )
 
     r = scd2_validity_audit(spark, sf_dir).collect()[0]
     assert r["n_keys"] > 0 and r["n_rows"] >= r["n_keys"]
@@ -232,7 +234,7 @@ def test_scd2_validity_audit_clean_history(spark, sf_dir):
 def test_table_checksum_detects_single_row_change(spark, tmp_path, sf_dir):
     import shutil
 
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         table_checksum_orders,
     )
 
@@ -256,7 +258,7 @@ def test_table_checksum_detects_single_row_change(spark, tmp_path, sf_dir):
 
 
 def test_winsorize_bounds_and_clip_rates(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         winsorize_lineitem_prices,
     )
 
@@ -268,7 +270,7 @@ def test_winsorize_bounds_and_clip_rates(spark, sf_dir):
 
 
 def test_attribution_window_and_channels(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         attribution_last_touch,
     )
 
@@ -284,8 +286,8 @@ def test_attribution_window_and_channels(spark, sf_dir):
 
 
 def test_cumulative_uniques_monotone_and_total(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
-        _events,
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _events
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         cumulative_unique_users_daily,
     )
 
@@ -300,7 +302,7 @@ def test_cumulative_uniques_monotone_and_total(spark, sf_dir):
 
 
 def test_inverted_index_postings_consistency(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         inverted_index_postings,
     )
 
@@ -314,7 +316,7 @@ def test_inverted_index_postings_consistency(spark, sf_dir):
 
 
 def test_survivorship_fusion_rules(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         survivorship_golden_docs,
     )
 
@@ -333,7 +335,9 @@ def test_survivorship_fusion_rules(spark, sf_dir):
 
 
 def test_dau_wau_invariants(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import dau_wau_stickiness
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        dau_wau_stickiness,
+    )
 
     rows = dau_wau_stickiness(spark, sf_dir).collect()
     assert rows
@@ -343,7 +347,9 @@ def test_dau_wau_invariants(spark, sf_dir):
 
 
 def test_session_paths_gap_splitting(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import session_paths_events
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        session_paths_events,
+    )
 
     t0 = datetime(2024, 3, 1, 12, 0, 0)
 
@@ -364,7 +370,9 @@ def test_session_paths_gap_splitting(spark, tmp_path):
 
 
 def test_wilson_lower_bound_properties(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import ctr_wilson_bounds
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        ctr_wilson_bounds,
+    )
 
     rows = ctr_wilson_bounds(spark, sf_dir).collect()
     assert rows
@@ -375,8 +383,8 @@ def test_wilson_lower_bound_properties(spark, sf_dir):
 
 
 def test_ab_split_is_deterministic_and_covers_all(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
-        _events,
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _events
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         ab_test_lift,
     )
 
@@ -388,7 +396,7 @@ def test_ab_split_is_deterministic_and_covers_all(spark, sf_dir):
 
 
 def test_skew_report_shares(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         skew_report_lineitem,
     )
 
@@ -400,7 +408,7 @@ def test_skew_report_shares(spark, sf_dir):
 
 
 def test_time_decay_weights_recency(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         time_decayed_engagement,
     )
 
@@ -424,7 +432,7 @@ def test_time_decay_weights_recency(spark):
 
 
 def test_association_rules_math(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         association_rules_parts,
     )
 
@@ -439,7 +447,9 @@ def test_association_rules_math(spark, sf_dir):
 def test_entropy_bounds(spark, sf_dir):
     import math
 
-    from imdb_metacritic_data_warehouse_spark.entry_queries import user_event_entropy
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        user_event_entropy,
+    )
 
     rows = user_event_entropy(spark, sf_dir).collect()
     assert rows
@@ -449,7 +459,7 @@ def test_entropy_bounds(spark, sf_dir):
 
 
 def test_equidepth_bins_balanced(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         equidepth_bins_orders,
     )
 
@@ -462,7 +472,7 @@ def test_equidepth_bins_balanced(spark, sf_dir):
 
 
 def test_duplicate_chunk_spans_planted_boilerplate(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         duplicate_chunk_spans,
     )
 
@@ -481,7 +491,9 @@ def test_duplicate_chunk_spans_planted_boilerplate(spark, tmp_path):
 
 
 def test_chisq_nonnegative_and_dof(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import chisq_event_dow
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        chisq_event_dow,
+    )
 
     r = chisq_event_dow(spark, sf_dir).collect()[0]
     assert r["chi2"] >= 0
@@ -490,7 +502,9 @@ def test_chisq_nonnegative_and_dof(spark, sf_dir):
 
 
 def test_trend_slope_recovers_line(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import daily_revenue_trend
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        daily_revenue_trend,
+    )
 
     # y = 100 + 10x: one purchase per day with value 100+10*day
     rows = [
@@ -508,7 +522,7 @@ def test_trend_slope_recovers_line(spark, tmp_path):
 
 
 def test_funnel_latency_ordering(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         funnel_latency_percentiles,
     )
 
@@ -518,7 +532,7 @@ def test_funnel_latency_ordering(spark, sf_dir):
 
 
 def test_out_of_order_lateness_hand_case(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         out_of_order_stats_events,
     )
 

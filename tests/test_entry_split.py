@@ -1,12 +1,13 @@
-"""The entry_queries package split (verdict r7 task #5) — aggregation
-invariants that must survive any future module re-organization.
+"""The entry_queries package: one ``qNN_*`` domain module per query
+family, all registering into ``_registry`` — the invariants that must
+survive any future module re-organization.
 
-The one-shot split was verified against a byte-level snapshot of the
-flat module (same key ORDER, same oracle SQL, same function sources
-modulo the `from .` -> `from ..` depth rewrite — tools/
-split_entry_queries.py docstring).  These are the standing invariants.
+The package root only imports the domain modules in order, so the
+public ``QUERIES``/``ORACLES`` are the registry itself and their order
+is plain registration order.
 """
 
+import __spark_entry__
 from imdb_metacritic_data_warehouse_spark import entry_queries as eq
 from imdb_metacritic_data_warehouse_spark.entry_queries import _registry
 
@@ -16,29 +17,18 @@ def test_registry_shape():
     # FULL oracle coverage: every registered query has a DuckDB twin
     # (ann_ivf's contract-banded oracle included)
     assert set(eq.ORACLES) == set(eq.QUERIES)
-    # the reordered public dicts cover exactly the raw registrations
-    assert set(eq.QUERIES) == set(_registry.QUERIES)
-    assert set(eq.ORACLES) == set(_registry.ORACLES)
-
-
-def test_priority_prefix_leads():
-    assert len(eq._PRIORITY_PREFIX) == 50
-    assert list(eq.QUERIES)[: len(eq._PRIORITY_PREFIX)] == eq._PRIORITY_PREFIX
-
-
-def test_query_functions_reexported():
-    # external sites do `from ...entry_queries import <fn>` — every
-    # registered callable must be importable from the package root.
-    for name, fn in eq.QUERIES.items():
-        assert getattr(eq, fn.__name__) is fn, name
+    # the public dicts are the raw registrations, not a reordered copy
+    assert eq.QUERIES is _registry.QUERIES
+    assert eq.ORACLES is _registry.ORACLES
+    assert list(__spark_entry__.queries()) == list(eq.QUERIES)
 
 
 def test_domain_modules_register_in_order():
     # registration order must follow the qNN module order: a query
-    # defined in q03 can never precede one from q01 in the RAW dict.
+    # defined in q03 can never precede one from q01 in the public dict.
     import inspect
 
-    mods = [inspect.getmodule(fn).__name__ for fn in _registry.QUERIES.values()]
+    mods = [inspect.getmodule(fn).__name__ for fn in eq.QUERIES.values()]
     seq = [m.rsplit(".", 1)[1] for m in mods if ".entry_queries.q" in m]
     # ADVICE r8: the old asserts only enforced per-module contiguity
     # (any block arrangement passed).  Exact invariant: the sequence of

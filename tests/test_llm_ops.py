@@ -794,7 +794,9 @@ def test_pps_sample_membership_rules(spark):
 
 
 def test_vocab_truncate_marks_oov_and_preserves_order(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import vocab_truncate_docs
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        vocab_truncate_docs,
+    )
 
     common = " ".join(["alpha beta gamma"] * 20)  # 3 tokens x high frequency
     rare = " ".join(f"rare{i}" for i in range(60))  # 60 singletons
@@ -898,7 +900,9 @@ def test_prefix_filter_jaccard_exact_pairs(spark):
 
 
 def test_hard_negatives_exclude_own_label(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import hard_negative_mining
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        hard_negative_mining,
+    )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     labels = {r["vec_id"]: r["label"] for r in e.select("vec_id", "label").collect()}
@@ -910,7 +914,9 @@ def test_hard_negatives_exclude_own_label(spark, sf_dir):
 
 
 def test_mmr_diversifies_against_pure_relevance(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import mmr_rerank_topk
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
+        mmr_rerank_topk,
+    )
     from imdb_metacritic_data_warehouse_spark.operators.similarity import cosine_topk
 
     picks = {r["pos"]: r for r in mmr_rerank_topk(spark, sf_dir).collect()}
@@ -925,7 +931,7 @@ def test_mmr_diversifies_against_pure_relevance(spark, sf_dir):
 
 
 def test_matryoshka_recall_range(spark, sf_dir):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         matryoshka_recall_audit,
     )
 
@@ -963,7 +969,7 @@ def test_prefix_filter_collapse_exact_multiplicity(spark):
 
 def test_curation_chain_stage_effects(spark, sf_dir):
     """Every stage of the end-to-end chain must provably remove rows."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q04_retrieval_text import (
         curate_corpus_end_to_end,
     )
 

@@ -1250,7 +1250,7 @@ def test_substring_spans_two_data_exchanges(spark):
     char-gram key + one on doc_id (whose single sort feeds BOTH
     interval-merge windows) + the final presentation sort — never a
     nested-loop pair join, never a per-window re-shuffle."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         substring_dup_spans_docs,
     )
 
@@ -1276,7 +1276,7 @@ def test_retraction_ivm_no_base_rescan_shape(spark):
     """retraction_ivm_orders (r8w30): the view merge must be a single
     co-partitioned full-outer join (SortMergeJoin FullOuter) — and the
     zero-group filter must not force any extra exchange above it."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q14_coreset_mixture import (
         retraction_ivm_orders,
     )
 

@@ -463,7 +463,7 @@ _DOCTEXTS = st.lists(
 )
 @given(texts=_DOCTEXTS)
 def test_substring_spans_model_check(spark, tmp_path_factory, texts):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         substring_dup_spans_docs,
     )
 

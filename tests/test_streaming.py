@@ -951,7 +951,7 @@ def test_streaming_contamination_index_matches_batch_twin(spark, tmp_path):
     declarative plan — including under a wave REPLAY (set-union
     idempotence) and a late re-delivery of an early wave after a later
     one committed (first_wave is a MIN-merge: attribution stable)."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q19_lcs_contamination import (
         contamination_wave_attribution_docs,
     )
     from imdb_metacritic_data_warehouse_spark.streaming.contamination import (

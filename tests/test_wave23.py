@@ -106,7 +106,8 @@ def test_frequent_triples_support_vs_bruteforce(spark):
     basket set, including the top-20 cut order."""
     import itertools
 
-    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES, _t
+    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _t
 
     li = _t(spark, SF, "lineitem")
     pt = _t(spark, SF, "part")

@@ -48,7 +48,8 @@ def test_logrank_identical_cohorts_is_zero(spark):
 def test_holt_winters_matches_serial_model(spark):
     """The array fold must equal the serial additive HW recursion run in
     plain Python on the same daily series."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES, _t
+    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _t
 
     o = _t(spark, SF, "orders")
     daily = sorted(

@@ -144,7 +144,8 @@ def test_incremental_join_view_equals_full_recompute(spark):
     """The incrementally maintained view must equal the naive full
     join-aggregate, and the ΔA⋈B_old term is empty by the key split
     (new orders have no lines in the old snapshot)."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES, _t
+    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
+    from imdb_metacritic_data_warehouse_spark.entry_queries._registry import _t
     from pyspark.sql import functions as FF
 
     inc = {

@@ -18,7 +18,7 @@ def test_substring_spans_planted_duplicate(spark, tmp_path):
     must each report exactly that block as a duplicated span: the
     16-gram islands inside a 40-char shared block merge into ONE span
     of exactly 40 chars; the unique remainder contributes nothing."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         substring_dup_spans_docs,
     )
 
@@ -47,7 +47,7 @@ def test_substring_spans_planted_duplicate(spark, tmp_path):
 
 
 def test_substring_spans_bounded_by_doc_length(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         substring_dup_spans_docs,
     )
 
@@ -65,7 +65,7 @@ def test_prd_identical_distributions_hit_corner(spark, tmp_path):
     """P == Q (the same cell histogram on both sides) must yield
     precision = recall = 1 at lambda = 1, and alpha(l) = min(l, 1),
     beta(l) = min(1/l, 1) on the dyadic grid."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         prd_divergence_embeddings,
     )
 
@@ -90,7 +90,7 @@ def test_prd_identical_distributions_hit_corner(spark, tmp_path):
 
 
 def test_prd_values_in_unit_box(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         prd_divergence_embeddings,
     )
 
@@ -110,7 +110,7 @@ def test_fertility_monotone_under_more_merges(spark):
     """A second BPE merge can only shrink (or keep) per-word symbol
     counts, so fertility_v2 <= fertility_v1 and the drop is >= 0 for
     every source; fertility is always >= 1 token per word."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q13_substring_fertility import (
         tokenizer_fertility_drift,
     )
 

@@ -16,7 +16,7 @@ def test_kcenter_radii_non_increasing_and_distinct(spark):
     """Greedy k-center's coverage radius sequence is non-increasing
     (each pick is the current farthest point), centers are distinct,
     and the seed is the min vec_id."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q14_coreset_mixture import (
         kcenter_coreset_embeddings,
     )
 
@@ -42,7 +42,7 @@ def test_kcenter_planted_clusters(spark, tmp_path):
     picks (seed + 2) must land in three DIFFERENT clusters — the
     farthest-point rule cannot pick twice from one tight cluster while
     another cluster is uncovered."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q14_coreset_mixture import (
         kcenter_coreset_embeddings,
     )
 
@@ -72,7 +72,7 @@ def test_kcenter_planted_clusters(spark, tmp_path):
 def test_domain_reweight_weights_normalize_and_upweight(spark):
     """Weights sum to 1 (within rounding) and a domain with
     above-average fertility gets at least its token share."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q14_coreset_mixture import (
         domain_reweight_step_docs,
     )
 
@@ -104,7 +104,7 @@ def test_retraction_ivm_matches_naive_recompute(spark):
     """The delta-algebra merge must equal a naive recompute of the
     post-batch state — and customers whose every order was deleted
     must VANISH from the view (no zero rows)."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q14_coreset_mixture import (
         retraction_ivm_orders,
     )
 

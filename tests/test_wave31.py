@@ -17,7 +17,7 @@ def test_ht_exact_when_all_probabilities_one(spark, tmp_path):
     """With 50 equal-size docs the PPS threshold caps at pi=1 for every
     doc (100·n_chars ≥ total), so the 'sample' is the population and
     the HT estimate must equal the true total exactly."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q15_stats_sampling import (
         horvitz_thompson_docs,
     )
 
@@ -36,7 +36,7 @@ def test_ht_exact_when_all_probabilities_one(spark, tmp_path):
 
 
 def test_ht_estimate_in_band(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q15_stats_sampling import (
         horvitz_thompson_docs,
     )
 
@@ -51,7 +51,9 @@ def test_ht_estimate_in_band(spark):
 
 
 def test_bh_rejection_set_is_rank_prefix(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import bh_fdr_sources
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q15_stats_sampling import (
+        bh_fdr_sources,
+    )
 
     rows = sorted(bh_fdr_sources(spark, SF).collect(), key=lambda r: r.p_rank)
     assert [r.p_rank for r in rows] == list(range(1, len(rows) + 1))
@@ -78,7 +80,7 @@ def test_bh_rejection_set_is_rank_prefix(spark):
 def test_mann_kendall_planted_increasing_trend(spark, tmp_path):
     """A strictly increasing daily series: S = n(n-1)/2, no ties, and
     the test must call 'increasing'."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q15_stats_sampling import (
         mann_kendall_daily,
     )
 
@@ -101,7 +103,7 @@ def test_mann_kendall_planted_increasing_trend(spark, tmp_path):
 
 
 def test_mann_kendall_runs_on_testdata(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q15_stats_sampling import (
         mann_kendall_daily,
     )
 

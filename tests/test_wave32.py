@@ -18,7 +18,7 @@ def test_char_entropy_known_values(spark, tmp_path):
     """Hand-checkable fixtures: a single repeated char has H = 0 (and
     is flagged); a uniform 4-symbol doc has H = 2 exactly; a uniform
     8-symbol doc has H = 3."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q16_entropy_zipf import (
         char_entropy_docs,
     )
 
@@ -38,7 +38,7 @@ def test_char_entropy_known_values(spark, tmp_path):
 
 
 def test_char_entropy_bounded_by_alphabet(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q16_entropy_zipf import (
         char_entropy_docs,
     )
 
@@ -51,7 +51,7 @@ def test_char_entropy_bounded_by_alphabet(spark):
 
 
 def test_length_bucketing_partition_and_waste(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q16_entropy_zipf import (
         length_bucketing_audit_docs,
     )
 

@@ -11,7 +11,7 @@ SF = "/root/testdata/sf0.001"
 def test_brier_murphy_identity_and_ranges(spark):
     """Bin-constant forecasts make BS = REL − RES + UNC an identity up
     to the final roundings; every term lives in [0, 1] and UNC ≤ 1/4."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q17_calibration_series import (
         brier_decomposition_docs,
     )
 
@@ -27,7 +27,7 @@ def test_brier_perfect_forecast(spark, tmp_path):
     """All docs identical ⇒ one bin, p = 0.5-grid value vs a constant
     outcome: with every doc the same, o = 0 for all (no doc exceeds the
     mean strictly), p = 0.5 ⇒ BS = 0.25, REL = 0.25, RES = 0, UNC = 0."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q17_calibration_series import (
         brier_decomposition_docs,
     )
 
@@ -43,7 +43,7 @@ def test_brier_perfect_forecast(spark, tmp_path):
 
 
 def test_acf_lag_structure(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q17_calibration_series import (
         acf_ljungbox_daily,
     )
 
@@ -59,7 +59,7 @@ def test_acf_lag_structure(spark):
 def test_acf_constant_alternating_series(spark, tmp_path):
     """A strictly alternating daily series (+1/−1 around its mean) has
     ACF(1) ≈ −1 and ACF(2) ≈ +1 — the sign pattern is exact."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q17_calibration_series import (
         acf_ljungbox_daily,
     )
 
@@ -79,7 +79,7 @@ def test_acf_constant_alternating_series(spark, tmp_path):
 
 
 def test_mcnemar_cells_partition_corpus(spark):
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q17_calibration_series import (
         mcnemar_rules_docs,
     )
 
@@ -95,7 +95,7 @@ def test_power_sample_size_monotone(spark):
     """Wave-34: n per arm is strictly decreasing in the MDE (quadratic
     1/mde² law) and consistent with the closed form recomputed from the
     reported mean/stddev."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q18_power_analysis import (
         ab_power_sample_size_events,
     )
 

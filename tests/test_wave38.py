@@ -49,7 +49,7 @@ def test_url_domain_dedup_merges_variants_and_counts_dup_mass(spark, tmp_path):
     """Three host variants (www./m./bare) of one domain with tracking
     params must collapse to the same canonical URLs; exact-text dups
     within the domain show up as dup mass."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q22_influence_url_xlingual import (
         url_domain_dedup_docs,
     )
 
@@ -80,7 +80,7 @@ def test_url_domain_dedup_merges_variants_and_counts_dup_mass(spark, tmp_path):
 def test_influence_ranks_rule_model_disagreement_per_token(spark, tmp_path):
     """influence = |rule_label·1e6 − quality_units| · ntok, exactly;
     the top-ranked doc per source is the largest disagreement."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q22_influence_url_xlingual import (
         influence_selection_docs,
     )
     from imdb_metacritic_data_warehouse_spark.operators.text import (
@@ -122,7 +122,7 @@ def test_crosslingual_neardup_finds_translated_clone(spark, tmp_path):
     """A text duplicated under two different language LABELS is a
     cross-lingual pair with jaccard 1.0; a same-language clone pair is
     excluded; pred_match reflects the shared stopword prediction."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q22_influence_url_xlingual import (
         crosslingual_neardup_docs,
     )
 
@@ -152,7 +152,7 @@ def test_crosslingual_collapsed_reexpands_to_uncollapsed_pair_count(spark, tmp_p
     pair with pair_mult = m_a * m_b, matching the uncollapsed pair
     count; cross-lang EXACT clones survive collapse (keyed on
     (fingerprint, lang), not fingerprint alone)."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q22_influence_url_xlingual import (
         crosslingual_neardup_collapsed,
         crosslingual_neardup_docs,
     )

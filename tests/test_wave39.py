@@ -16,7 +16,7 @@ def test_kmeans_assigns_to_nearest_seed_and_counts_exactly(spark, tmp_path):
     """Seeds are vec_ids 0..7; planted points sit exactly on seed 3's
     coordinates, so after two Lloyd rounds they must be members of
     cluster 3 with zero inertia contribution."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         kmeans_lloyd_embeddings,
     )
 
@@ -44,7 +44,7 @@ def test_kmeans_recentys_between_rounds(spark, tmp_path):
     """A point nearer seed 0 than any other seed pulls centroid 0
     toward itself after round 1; round-2 assignment then uses the
     MOVED centroid — pinned by the exact integer inertia."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         kmeans_lloyd_embeddings,
     )
 
@@ -71,7 +71,7 @@ def test_rocchio_expands_with_cooccurring_terms(spark, tmp_path):
     """Terms co-occurring with the query inside the pseudo-relevant
     top-10 outrank corpus-frequent terms that never co-occur; the
     weight is rel_tf * ln(N/df) rounded to 6dp."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         rocchio_expansion_docs,
     )
 
@@ -99,7 +99,7 @@ def test_rocchio_expands_with_cooccurring_terms(spark, tmp_path):
 def test_boilerplate_counts_shared_prefixes(spark, tmp_path):
     """Docs sharing their first-8-token fingerprint count as one
     template; unique prefixes do not."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         boilerplate_templates_docs,
     )
 
@@ -132,7 +132,7 @@ def test_cuped_reduces_variance_with_correlated_pre_period(spark, tmp_path):
     """Planted users whose post value is exactly 2x their pre value:
     theta = 2 and the adjusted variance collapses to ~0; an
     uncorrelated-noise user set keeps var_adjusted <= var_post."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         cuped_variance_reduction_events,
     )
 
@@ -161,7 +161,7 @@ def test_bbse_reference_source_has_unit_weights(spark, tmp_path):
     be exactly (1, 1); a target whose positive-rate doubles shows
     w1 > 1.  Uses a perfectly accurate classifier (pred == y) so the
     2x2 system is diagonal and the closed form is easy to pin."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q23_kmeans_prf_templates import (
         label_shift_bbse_docs,
     )
 

@@ -10,7 +10,7 @@ def test_kmv_estimates_within_error_band_at_sf01(spark):
     ≈ 12.7%; assert 4 sigma) of the EXACT distinct union, pair by
     pair, and jaccard_est must track the exact jaccard within the
     same band (absolute, since jaccard here is small)."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q24_kmv_quota import (
         kmv_overlap_sources,
     )
 
@@ -56,7 +56,7 @@ def test_kmv_estimates_within_error_band_at_sf01(spark):
 def test_kmv_sketch_merge_is_exact_below_k(spark, tmp_path):
     """With fewer than k distinct fingerprints everywhere, the merged
     sketch IS the union set and inter_hits IS the exact intersection."""
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q24_kmv_quota import (
         kmv_overlap_sources,
     )
 
@@ -82,7 +82,7 @@ def test_domain_quota_caps_and_is_hash_deterministic(spark, tmp_path):
     order — pinned by recomputing the expected kept-id sum."""
     import hashlib
 
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q24_kmv_quota import (
         domain_quota_sample_docs,
     )
 

@@ -112,7 +112,9 @@ def test_theil_sen_resists_outlier(spark):
 def test_poisson_bootstrap_weights_distribution(spark):
     # the integer inverse-CDF must reproduce Poisson(1) frequencies:
     # ~36.8% zeros, mean ~1.0 over many draws
-    from imdb_metacritic_data_warehouse_spark.entry_queries import _POIS1_T
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q06_stats_dimred import (
+        _POIS1_T,
+    )
 
     from pyspark.sql import functions as F
 
@@ -241,7 +243,7 @@ def test_bootstrap_mix_draws_are_poisson_and_decorrelated(spark):
     (c) stay inside [0, 2^60) so the threshold compare is meaningful."""
     from pyspark.sql import functions as F
 
-    from imdb_metacritic_data_warehouse_spark.entry_queries import (
+    from imdb_metacritic_data_warehouse_spark.entry_queries.q06_stats_dimred import (
         _MIX,
         _MIX_HALF,
         _MIX_MOD,
