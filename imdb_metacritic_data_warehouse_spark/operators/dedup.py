@@ -596,6 +596,7 @@ def prefix_filter_jaccard_pairs(
     back to the 1× problem)."""
     from pyspark.sql import Window
 
+    from . import rank as _rank
     from .text import fingerprint, shingle_rows
 
     mult = None
@@ -637,8 +638,9 @@ def prefix_filter_jaccard_pairs(
             .alias("tok"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    if not _rank.is_plan_only():
+        tokens = tokens.localCheckpoint(eager=True)
     # Global token frequency and per-doc set size as WINDOW counts over
     # the element table instead of two aggregates joined back (r10):
     # the f-window rides ONE exchange on tok (the old plan shuffled
@@ -662,7 +664,9 @@ def prefix_filter_jaccard_pairs(
     prefix = ranked.filter(
         F.col("pos")
         <= F.col("sz") - F.floor((F.lit(threshold_pct) * F.col("sz") + 99) / 100) + 1
-    ).select("doc", "tok", "sz", "pos").localCheckpoint(eager=True)
+    ).select("doc", "tok", "sz", "pos")
+    if not _rank.is_plan_only():
+        prefix = prefix.localCheckpoint(eager=True)
     a = prefix.select(
         F.col("doc").alias("doc_a"), "tok",
         F.col("sz").alias("sz_a"), F.col("pos").alias("__pa"),

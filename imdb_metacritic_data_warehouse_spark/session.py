@@ -12,6 +12,29 @@ performance:
 - ANSI off, pinned explicitly: failed casts yield NULL.  The reference
   would *crash* on e.g. ``''::bigint`` (SURVEY.md §7.4); NULL-on-bad-cast
   is the deliberate, documented divergence and matches DuckDB TRY_CAST.
+
+Two defaults cut the fixed driver cost every plan pays, without changing
+any plan, result or shuffle (measured on a 4-vCPU host, see CHANGES.md):
+
+- ``spark.python.sql.dataFrameDebugging.enabled=false``.  PySpark 4.1
+  otherwise wraps every ``functions``/``Column`` call in a stack walk
+  plus ~10 extra py4j round trips to record the Python call site:
+  ``F.col("x").cast("string").alias("y")`` sends 35 py4j commands with
+  it and 5 without; a perfbench ``elt_history`` pass's plan builds send
+  12.3k against 5.7k.  PySpark reads the flag once per process, at the
+  first Column call, so it must be set here before any plan is built.
+  The cost: DataFrame error messages no longer name the Python line
+  that built the failing expression.  While debugging, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to a fresh process to get it back.
+- ``spark.sql.codegen.cache.maxEntries=1024`` (Spark's default is 100).
+  One ELT merge sweep alone needs ~340 generated classes, so at 100
+  entries Janino recompiled 681 per two-batch ``elt_history`` pass and
+  55-78 per ``light_queries`` pass, though those plans never change;
+  at 1024 it compiles 198 and 4.  A full 3-batch ELT run has ~495
+  distinct classes, so 1024 leaves about 2x headroom.  The cache is
+  JVM-wide and sized at the JVM's first codegen, so this holds for the
+  JVMs ``get_spark`` starts, not for a foreign session's.
 """
 
 from __future__ import annotations
@@ -84,9 +107,19 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
+        # per-plan driver overhead, see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in {**_SEMANTIC_CONFS, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def generated_class_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this session's JVM so far (code
+    cache misses; a hit compiles nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

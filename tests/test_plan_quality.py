@@ -502,6 +502,25 @@ def test_jaccard_prefix_join_carries_hashes_not_strings(spark):
     assert "0.6" not in plan
 
 
+def test_jaccard_prefix_join_plan_only_submits_no_job(spark):
+    """Inside ``plan_only()`` the element-table and prefix checkpoints
+    are skipped: building runs no Spark job and the plan shows the whole
+    operator tree, not an ``ExistingRDD`` cut."""
+    from imdb_metacritic_data_warehouse_spark.operators.dedup import (
+        prefix_filter_jaccard_pairs,
+    )
+    from imdb_metacritic_data_warehouse_spark.operators.rank import plan_only
+    from tests.fixtures import spark_jobs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    with plan_only(), spark_jobs(spark) as jobs:
+        df = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 60)
+        assert jobs() == set()
+    plan = _plan(df)
+    assert "ExistingRDD" not in plan
+    assert "Scan parquet" in plan
+
+
 def test_hard_negatives_broadcast_anchor_set(spark):
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 

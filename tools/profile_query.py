@@ -3,11 +3,14 @@
 Usage:  SPARK_GRAFT_SF_DIR=... python tools/profile_query.py <name> [<name>...]
 
 Runs each query once as warm-up, then once measured with
-spark.eventLog.enabled=true, and prints each job of the measured run:
-wall ms, executor-task ms, shuffle read/write bytes, and the callsite
-of the job.  This is guide §1 ("measure first") without the UI — the
-sandbox runs with spark.ui.enabled=false, so the event log is the only
-source of stage metrics.
+spark.eventLog.enabled=true, and prints two driver counts of the
+measured run: the py4j commands its build call (the query function)
+sent, and the classes Janino compiled for build + execution (zero when
+the JVM's code cache still holds the warm-up's classes).  Then each job
+of the measured run: wall ms, executor-task ms, shuffle read/write
+bytes, and the callsite of the job.  This is guide §1 ("measure
+first") without the UI — the sandbox runs with spark.ui.enabled=false,
+so the event log is the only source of stage metrics.
 """
 
 from __future__ import annotations
@@ -20,7 +23,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as ent  # noqa: E402
-from imdb_metacritic_data_warehouse_spark.session import get_spark  # noqa: E402
+from imdb_metacritic_data_warehouse_spark.session import (  # noqa: E402
+    generated_class_compiles,
+    get_spark,
+)
+from perfbench.tracing import Py4jCounter  # noqa: E402
 
 # Jobs submitted up to this long before a measured window opens still
 # count toward it (event-log times are epoch milliseconds).
@@ -44,16 +51,24 @@ def run(names: list[str]) -> None:
         },
     )
     qs = ent.queries()
+    py4j = Py4jCounter(spark)
     marks: dict[str, tuple[float, float]] = {}
     for name in names:
         fn = qs[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
         spark._jvm.System.gc()
+        compiles0 = generated_class_compiles(spark)
         t0 = time.time() * 1000
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with py4j.counting() as sent:
+            df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
         t1 = time.time() * 1000
         marks[name] = (t0, t1)
-        print(f"== {name}: measured wall {(t1 - t0) / 1000:.3f}s")
+        print(
+            f"== {name}: measured wall {(t1 - t0) / 1000:.3f}s  "
+            f"build py4j commands {sent()}  "
+            f"generated-class compiles {generated_class_compiles(spark) - compiles0}"
+        )
     spark.stop()
 
     events = []
