@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.keys import hash_key
 from ..operators.argmax import arg_max
+from ..operators.materialize import materialize
 from ..operators.rank import global_row_number
 from ..operators.scd2 import insert_only_merge, scd2_apply
 from ..operators.snapshots import filter_latest, filter_top_snapshots

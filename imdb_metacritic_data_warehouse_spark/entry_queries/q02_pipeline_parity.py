@@ -4,7 +4,7 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import DataFrame, F, _dec, _events, _t, _units4, os, query, scd2_apply
+from ._registry import DataFrame, F, _dec, _events, _t, _units4, materialize, os, query, scd2_apply
 from .q01_warehouse import (
     _MINHASH_CORPUS_SQL,
     _NORM_SQL,
@@ -27,24 +27,6 @@ from ..operators.dedup import connected_components
 # supplier/lineitem, checked against a full SQL transcription of the
 # reference's script chain (core/*.sql → mart/genre_metrics.sql shape).
 # ---------------------------------------------------------------------------
-def _materialize(df: DataFrame) -> DataFrame:
-    """Eager materialization for a plan referenced by 2+ branches.
-
-    ``localCheckpoint`` instead of ``.cache()``: a query-shaped callable
-    has no unpersist point, and round 2's leaked cache entries degraded
-    every later bench query (ADVICE.md) — checkpoint blocks are freed by
-    the ContextCleaner once the plan is dropped.  The trailing
-    per-column Alias re-keys the output attributes: a checkpoint
-    PRESERVES its plan's expression ids, so a table materialized over
-    another materialized table (employee_data's sat over the link)
-    re-exposes its parent's ids and later parent⋈child joins fail as
-    ambiguous self-joins; fresh Aliases give each table its own ids.
-    The projection is lazy but sits on the materialized RDD — branches
-    re-run only the no-op column map, never the upstream chain."""
-    ck = df.localCheckpoint(eager=True)
-    return ck.select(*[F.col(c).alias(c) for c in ck.columns])
-
-
 class _ShimWarehouse:
     """Duck-typed Warehouse over in-memory DataFrames: .bronze() serves
     synthesized raw tables; .read('stg', t) computes upstream builders
@@ -75,16 +57,14 @@ class _ShimWarehouse:
         # string keys / F.col refs, NOT df.attr refs (shared lineage
         # breaks those, see class docstring).  genre_metrics qualifies
         # and rebuilds hubs 3× without it.
-        # materialize_stg additionally localCheckpoints built stg
-        # tables (True = all, or a set of table names): a shared
-        # LOGICAL plan still re-executes once per consuming branch (no
-        # cross-branch CSE in Catalyst — round 2's genre_metrics
-        # rebuilt the hub chain ×3, 25.9s driver-bench); a checkpointed
-        # table executes once, and its blocks are ContextCleaner-freed
-        # when the query's plan is dropped (unlike .cache(), which
-        # leaks across bench invocations).  Single-consumer tables
-        # should NOT be in the set — materialization is a full extra
-        # write pass that only pays for itself from the second read.
+        # materialize_stg additionally materializes built stg tables
+        # (True = all, or a set of table names): a shared LOGICAL plan
+        # still re-executes once per consuming branch (no cross-branch
+        # CSE in Catalyst — round 2's genre_metrics rebuilt the hub
+        # chain ×3, 25.9s driver-bench); a materialized table executes
+        # once.  Single-consumer tables should NOT be in the set —
+        # materialization is a full extra write pass that only pays
+        # for itself from the second read.
         self._cache_stg = cache_stg
         self._materialize_stg = materialize_stg
 
@@ -102,7 +82,7 @@ class _ShimWarehouse:
             return self._stg[name]
         built = getattr(_core, f"build_{name}")(self)
         if self._should_materialize(name):
-            built = _materialize(built)
+            built = materialize(built, f"stg.{name}")
         if self._cache_stg or self._materialize_stg:
             self._stg[name] = built
         return built
@@ -700,7 +680,7 @@ def _actor_wh(spark, sf_dir, dedup_actor: bool = False) -> _ShimWarehouse:
         # Builders reference columns by name, never df.attr, so the
         # shared leaf is safe.  Measured 15.6s → 7s best-of-3 at sf0.1
         # (fresh JVM per variant; NOTES.md "Round 6 (work log)" item 4).
-        actors = _materialize(_synth_actor_dedup(spark, sf_dir))
+        actors = materialize(_synth_actor_dedup(spark, sf_dir), "actor_dedup")
         actors_empty = actors.filter(F.lit(False))
         bronze_actor = {
             "actor_raw_data_imdb": lambda: actors,
@@ -855,14 +835,14 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
 
 
 def _finish_scratch(df: DataFrame, root: str) -> DataFrame:
-    """Materialize the read-back frame off its scratch files (eager
-    localCheckpoint — the disk round-trip has happened by then), then
-    delete the scratch root so per-invocation temp dirs never
-    accumulate.  The returned plan references only the checkpointed
-    blocks, so the caller can hold it indefinitely."""
+    """Materialize the read-back frame off its scratch files (the disk
+    round-trip has happened by then), then delete the scratch root so
+    per-invocation temp dirs never accumulate.  The returned plan
+    references only the checkpointed blocks, so the caller can hold it
+    indefinitely."""
     import shutil
 
-    out = df.localCheckpoint(eager=True)
+    out = materialize(df, "scratch_readback")
     shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -1046,18 +1026,14 @@ def pipeline_employee_data(spark, sf_dir):
     # semi-join AND the mart's filter_latest (which itself references
     # its input twice: rows + the broadcast max aggregate) —
     # unmaterialized, the heavy actor_raw→link chain executed ~5×
-    # (measured 34.7s cold at sf0.1).  ``localCheckpoint`` instead of
-    # ``.cache()``: blocks are freed by the ContextCleaner when the
-    # plan is dropped, so back-to-back invocations (bench warm-up + 2
-    # timed runs × 45 queries) don't accumulate cache entries —
-    # round 2's leak (ADVICE.md) degraded every later bench query.
+    # (measured 34.7s cold at sf0.1).
     # dedup_actor (round-6): ONE shared wide-distinct actor projection
     # replaces the three builders' re-distinct of the full union —
     # see _actor_wh.  15.6s → ~7s best-of-3 at sf0.1.
     wh = _actor_wh(spark, sf_dir, dedup_actor=True)
     # employee_hub is read by the link builder AND the mart — one
     # distinct-shuffle over the actor table instead of two
-    wh._stg["employee_hub"] = _materialize(wh.read("stg", "employee_hub"))
+    wh._stg["employee_hub"] = materialize(wh.read("stg", "employee_hub"), "stg.employee_hub")
     mel = scd2_apply(
         None,
         wh.read("stg", "movie_emp_link"),
@@ -1065,7 +1041,7 @@ def pipeline_employee_data(spark, sf_dir):
         ["movie_id", "emp_id"],
         _SCD2_T0,
     )
-    mel = _materialize(mel)
+    mel = materialize(mel, "scd2.movie_emp_link")
     wh._stg["movie_emp_link"] = mel
     # Freshly bootstrapped SCD2 over a key-distinct snapshot: exactly
     # one (open) version per movie_emp_link_id, so the sat builder's
@@ -1163,20 +1139,13 @@ def pipeline_rating_slide(spark, sf_dir):
     #   materialize EAGERLY, else the raw→hub→sat builder chain
     #   executes once per reference (no cross-branch CSE in Catalyst).
     # - the historized ``s2`` feeds BOTH snapshot branches (t1 latest /
-    #   t2 top-2) and the rank's offset job — same reasoning.  A lazy
-    #   .cache() is NOT enough: the first mart action runs the branches
-    #   concurrently before any of them has populated the cache; and a
-    #   plain .cache() is never unpersisted by a query-shaped callable,
-    #   leaking entries across bench invocations (round-2 ADVICE) —
-    #   ``localCheckpoint`` blocks are ContextCleaner-freed instead.
+    #   t2 top-2) and the rank's offset job — same reasoning.
     # - movie_hub IS materialized (round-3 revision of the r2 rule):
-    #   with .cache() the InMemoryRelation's hidden stats demoted the
-    #   hub⋈sat joins to sort-merge (measured 2× slower); with
-    #   localCheckpoint, AQE's runtime shuffle statistics re-promote
-    #   the small side to broadcast, and skipping the 2× hub rebuild
-    #   wins — A/B at sf0.1: 5.1→3.7s steady, 12.1→4.7s cold.
-    wh._stg["movie_hub"] = _materialize(wh.read("stg", "movie_hub"))
-    sat = _materialize(wh.read("stg", "movie_info_sat"))
+    #   AQE's runtime shuffle statistics over the checkpoint keep the
+    #   hub⋈sat joins broadcast, and skipping the 2× hub rebuild wins —
+    #   A/B at sf0.1: 5.1→3.7s steady, 12.1→4.7s cold.
+    wh._stg["movie_hub"] = materialize(wh.read("stg", "movie_hub"), "stg.movie_hub")
+    sat = materialize(wh.read("stg", "movie_info_sat"), "stg.movie_info_sat")
     b2 = sat.withColumn(
         "rating",
         F.when(_url_parity(7), F.concat(F.col("rating"), F.lit("5"))).otherwise(
@@ -1184,7 +1153,7 @@ def pipeline_rating_slide(spark, sf_dir):
         ),
     )
     s1 = scd2_apply(None, sat, "title_item_id", _SAT_ATTRS, _SCD2_T0)
-    s2 = _materialize(scd2_apply(s1, b2, "title_item_id", _SAT_ATTRS, _SCD2_T1))
+    s2 = materialize(scd2_apply(s1, b2, "title_item_id", _SAT_ATTRS, _SCD2_T1), "scd2.movie_info_sat")
     wh._stg["movie_info_sat"] = s2
     out = _marts.build_rating_slide(wh)
     return out.select(

@@ -4,7 +4,7 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _dec, _events, _t, _units4, os, query
+from ._registry import F, _dec, _events, _t, _units4, materialize, os, query
 from .q01_warehouse import (
     _MINHASH_CORPUS_SQL,
     _MINHASH_SIG_SQL,
@@ -13,7 +13,7 @@ from .q01_warehouse import (
     _minhash_corpus,
     lsh_candidate_pairs,
 )
-from .q02_pipeline_parity import Window, _finish_scratch, _materialize, _scratch_dir
+from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 
 
 
@@ -455,13 +455,11 @@ def quality_quantile_filter(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # materialized: scored feeds BOTH the cutoff aggregation and the
     # join probe; without it the text-scoring scan runs twice (no
-    # cross-branch CSE — NOTES.md).  localCheckpoint, not .cache():
-    # query callables never get an unpersist point, and leaked cache
-    # entries across bench invocations were round 2's bench killer.
+    # cross-branch CSE — NOTES.md).
     scored = d.select(
         "doc_id", "lang", F.round(quality_score(F.col("text")), 6).alias("q")
     )
-    scored = _materialize(scored)
+    scored = materialize(scored, "quality_quantile_filter.scored")
     from ..operators.percentile import exact_percentiles_grouped
 
     cuts = exact_percentiles_grouped(scored, ["lang"], "q", [0.25], ["__cut"]).select(
@@ -1025,12 +1023,13 @@ def q21_waiting_suppliers(spark, sf_dir):
     # ``late`` feeds BOTH the candidate rows and the no-other-late-peer
     # anti-join — materialized once (round-2 ADVICE: two plan builds =
     # the lineitem⋈orders join executed twice, no cross-branch CSE)
-    late = _materialize(
+    late = materialize(
         li.join(
             o,
             (li.l_orderkey == o.o_orderkey)
             & (li.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")),
-        ).select("l_orderkey", "l_suppkey")
+        ).select("l_orderkey", "l_suppkey"),
+        "q21_waiting_suppliers.late",
     )
     s = _t(spark, sf_dir, "supplier")
     l1 = late
@@ -1202,12 +1201,13 @@ def q11_important_suppliers(spark, sf_dir):
     # the per-supplier aggregate feeds BOTH the output rows and the
     # global threshold — materialized once (round-2 ADVICE: building it
     # twice re-ran the lineitem aggregation per branch)
-    sv = _materialize(
+    sv = materialize(
         _t(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(
             F.sum(_dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))).alias("val")
-        )
+        ),
+        "q11_important_suppliers.sv",
     )
     thr = sv.agg((F.sum("val").cast("double") * F.lit(0.0011)).alias("__thr"))
     return (
@@ -1508,7 +1508,7 @@ def interval_overlap_sessions(spark, sf_dir):
     )
     # iv feeds both join sides — one scan+window each is cheap, but the
     # multi-branch rule (NOTES.md) says materialize once
-    iv = _materialize(iv)
+    iv = materialize(iv, "interval_overlap_sessions.iv")
     clicks = iv.filter(F.col("event_type") == "click").drop("event_type", "__sid")
     views = iv.filter(F.col("event_type") == "view").drop("event_type", "__sid")
     paired = interval_overlap_join(
@@ -2329,7 +2329,7 @@ def gap_fill_user_hours(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.avg("value"), 6).alias("avg_value"),
     )
-    hourly = _materialize(hourly)  # feeds bounds AND the join probe
+    hourly = materialize(hourly, "gap_fill_user_hours.hourly")  # feeds bounds AND the join probe
     bounds = hourly.groupBy("user_id").agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     )

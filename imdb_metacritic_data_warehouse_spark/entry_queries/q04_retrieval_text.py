@@ -12,6 +12,7 @@ from ._registry import (
     _units4,
     arg_max,
     global_row_number,
+    materialize,
     os,
     query,
     scd2_apply,
@@ -29,7 +30,6 @@ from .q02_pipeline_parity import (
     Window,
     _BM25_TERMS,
     _finish_scratch,
-    _materialize,
     _scratch_dir,
     asof_join,
 )
@@ -185,19 +185,20 @@ def hybrid_search_rrf(spark, sf_dir):
     # lsh_candidate_pairs no-cross-branch-CSE pattern, dedup.py:191)
     # bm25_scores already keeps only bm25 > 0 rows (matching the
     # oracle's WHERE) — no extra filter needed
-    lex = bm25_scores(d, _BM25_TERMS).localCheckpoint(eager=False)
+    lex = materialize(bm25_scores(d, _BM25_TERMS), "hybrid_search_rrf.lex", eager=False)
     lexr = global_row_number(
         lex, [F.desc("bm25"), F.asc("doc_id")], out_col="lr"
     ).select("doc_id", "lr")
     qv = e.filter(F.col("vec_id") == 5).select(F.col("embedding").alias("qv"))
-    dense = (
+    dense = materialize(
         e.filter(F.col("vec_id") != 5)
         .join(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
             F.round(dot_codegen("embedding", "qv"), 6).alias("cos"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "hybrid_search_rrf.dense",
+        eager=False,
     )
     denser = global_row_number(
         dense, [F.desc("cos"), F.asc("doc_id")], out_col="dr"
@@ -600,7 +601,7 @@ def triangle_counts_parts(spark, sf_dir):
 
     # the pair expansion feeds the operator's degree/orientation joins
     # AND the coefficient's degree table — materialize once
-    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    pairs = materialize(_copurchase_pairs(spark, sf_dir), "triangle_counts_parts.pairs")
     tc = triangle_counts(pairs, "pa", "pb")
     fwd = pairs.select(F.col("pa").alias("node")).unionByName(
         pairs.select(F.col("pb").alias("node"))
@@ -806,7 +807,8 @@ def scd2_validity_audit(spark, sf_dir):
     )
     state1 = scd2_apply(None, b1, "pk", ["prio", "status"], _SCD2_T0)
     merged = scd2_apply(state1, b2, "pk", ["prio", "status"], _SCD2_T1)
-    merged = _materialize(merged)  # feeds the window audit AND the per-key agg
+    # feeds the window audit AND the per-key agg
+    merged = materialize(merged, "scd2_validity_audit.merged")
     sentinel = F.lit("9999-12-31 00:00:00").cast("timestamp")
     w = Window.partitionBy("pk").orderBy("valid_from")
     seq = merged.select(
@@ -1247,7 +1249,7 @@ def survivorship_golden_docs(spark, sf_dir):
 def dau_wau_stickiness(spark, sf_dir):
     e = _events(spark, sf_dir)
     ud = e.select("user_id", F.to_date("ts").alias("d")).distinct()
-    ud = _materialize(ud)  # feeds days, dau AND the fanout
+    ud = materialize(ud, "dau_wau_stickiness.ud")  # feeds days, dau AND the fanout
     days = ud.select("d").distinct()
     dau = ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
     contrib = ud.select(
@@ -1518,38 +1520,40 @@ def mmr_rerank_topk(spark, sf_dir):
         cosine_topk(e, [5], k=20, dims=64)
         .select("vec_id", F.col("score").alias("rel"))
     )
+    # columns by name below: every join's sides have distinct names, and
+    # under plan_only() sim's lineage repeats inside sel2
     cvec = cand.join(e.select("vec_id", "embedding"), "vec_id").select(
         "vec_id", "rel", F.col("embedding").alias("v")
     )
-    cvec = _materialize(cvec)  # ≤20 rows; feeds sim AND three argmax steps
+    cvec = materialize(cvec, "mmr_rerank_topk.cvec")  # ≤20 rows; feeds sim AND three argmax steps
     a = cvec.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
     b = cvec.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
     sim = (
         a.join(b, F.col("ia") != F.col("ib"))
         .select("ia", "ib", F.round(dot_codegen("va", "vb"), 6).alias("s"))
     )
-    sim = _materialize(sim)
+    sim = materialize(sim, "mmr_rerank_topk.sim")
     cand = cvec.select("vec_id", "rel")
 
     lam, one_m = F.lit(0.7), F.lit(0.3)
     s1 = cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1)
     s1_id = s1.select(F.col("vec_id").alias("sel"))
     r2 = (
-        cand.join(F.broadcast(s1_id), cand["vec_id"] != F.col("sel"))
-        .join(sim, (sim["ia"] == cand["vec_id"]) & (sim["ib"] == F.col("sel")))
+        cand.join(F.broadcast(s1_id), F.col("vec_id") != F.col("sel"))
+        .join(sim, (F.col("ia") == F.col("vec_id")) & (F.col("ib") == F.col("sel")))
         .select("vec_id", (lam * F.col("rel") - one_m * F.col("s")).alias("mmr"))
     )
     s2 = r2.orderBy(F.desc("mmr"), F.asc("vec_id")).limit(1)
     sel2 = s1_id.unionByName(s2.select(F.col("vec_id").alias("sel")))
-    sel2 = _materialize(sel2)
+    sel2 = materialize(sel2, "mmr_rerank_topk.sel2")
     r3 = (
         cand.join(
             F.broadcast(sel2.groupBy().agg(F.collect_set("sel").alias("sels")))
         )
         .filter(~F.array_contains(F.col("sels"), F.col("vec_id")))
-        .join(sim, sim["ia"] == cand["vec_id"])
-        .join(F.broadcast(sel2), sim["ib"] == F.col("sel"))
-        .groupBy(cand["vec_id"], "rel")
+        .join(sim, F.col("ia") == F.col("vec_id"))
+        .join(F.broadcast(sel2), F.col("ib") == F.col("sel"))
+        .groupBy("vec_id", "rel")
         .agg(F.max("s").alias("ms"))
         .select("vec_id", (lam * F.col("rel") - one_m * F.col("ms")).alias("mmr"))
     )
@@ -1737,7 +1741,8 @@ def ab_test_lift(spark, sf_dir):
 def skew_report_lineitem(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
-    counts = _materialize(counts)  # feeds totals, the HHI pass AND the top-10
+    # feeds totals, the HHI pass AND the top-10
+    counts = materialize(counts, "skew_report_lineitem.counts")
     tot = counts.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("cnt").cast("bigint").alias("n_rows"),
@@ -1860,7 +1865,8 @@ def time_decayed_engagement(spark, sf_dir):
 def association_rules_parts(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     items = li.distinct()  # (order, item) memberships
-    items = _materialize(items)  # feeds order count, item counts AND pairs
+    # feeds order count, item counts AND pairs
+    items = materialize(items, "association_rules_parts.items")
     n_orders = items.select("l_orderkey").distinct().count()
     item_counts = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item"))
     per_order = items.groupBy("l_orderkey").agg(
@@ -2069,7 +2075,7 @@ def chisq_event_dow(spark, sf_dir):
     obs = e.groupBy(
         "event_type", (F.dayofweek("ts") - 1).alias("dow")
     ).agg(F.count(F.lit(1)).alias("o"))
-    obs = _materialize(obs)  # feeds row/col/grand totals AND the cells
+    obs = materialize(obs, "chisq_event_dow.obs")  # feeds row/col/grand totals AND the cells
     rt = obs.groupBy("event_type").agg(F.sum("o").cast("bigint").alias("r"))
     ct = obs.groupBy("dow").agg(F.sum("o").cast("bigint").alias("c"))
     n = obs.agg(F.sum("o").cast("bigint").alias("n"))
@@ -2352,7 +2358,8 @@ def funnel_latency_percentiles(spark, sf_dir):
     )
     from ..operators.percentile import exact_percentiles_grouped
 
-    delays = _materialize(delays)  # feeds the count AND both rank passes
+    # feeds the count AND both rank passes
+    delays = materialize(delays, "funnel_latency_percentiles.delays")
     qs = exact_percentiles_grouped(
         delays, [], "delay_s", [0.5, 0.9], ["__p50", "__p90"]
     )
@@ -2465,7 +2472,8 @@ def curate_corpus_end_to_end(spark, sf_dir):
     )
     corpus = base.unionByName(mirror).unionByName(near)
     survivors = dedup_exact(corpus, "doc_id", "text")
-    survivors = _materialize(survivors)  # feeds LSH AND the canon anti-join
+    # feeds LSH AND the canon anti-join
+    survivors = materialize(survivors, "curate_corpus_end_to_end.survivors")
     pairs = lsh_candidate_pairs(survivors, "doc_id", "text")
     clusters = connected_components(pairs)
     losers = clusters.filter(F.col("node") != F.col("cluster")).select("node")

@@ -4,7 +4,7 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _dec, _events, _t, _units4, global_row_number, os, query
+from ._registry import F, _dec, _events, _t, _units4, global_row_number, materialize, os, query
 from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 from .q04_retrieval_text import _copurchase_pairs
 
@@ -1400,7 +1400,6 @@ def _jl_oracle(out_dims: int = 16, dims: int = 64, seed: int = 7000) -> str:
 
 @query("jl_distortion_audit", _jl_oracle())
 def jl_distortion_audit(spark, sf_dir):
-    from ..operators.rank import is_plan_only
     from ..operators.similarity import dot_codegen, jl_project
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1422,8 +1421,7 @@ def jl_distortion_audit(spark, sf_dir):
         dot_codegen("embedding", "embedding").alias("__svv"),
         dot_codegen("proj", "proj", dims=16).alias("__spp"),
     )
-    if not is_plan_only():
-        p = p.localCheckpoint(eager=True)
+    p = materialize(p, "jl_distortion_audit.p")
     q = p.filter(F.col("vec_id").isin([0, 1, 2, 3, 4])).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -2071,11 +2069,7 @@ def bootstrap_ci_lineitem(spark, sf_dir):
     aggs.append(F.count(F.lit(1)).cast("bigint").alias("__n_rows"))
     aggs.append(F.sum("qs").cast("bigint").alias("__sqs"))
     folded = weighted.agg(*aggs)
-    from ..operators.rank import is_plan_only
-
-    if not is_plan_only():  # 1 row; feeds means + pt (ADVICE r10:
-        # plan-only dumps must show the full tree, not ExistingRDD)
-        folded = folded.localCheckpoint(eager=True)
+    folded = materialize(folded, "bootstrap_ci_lineitem.folded")
     stack_args = ", ".join(
         f"{b}, __swq_{b}, __sw_{b}" for b in range(32)
     )

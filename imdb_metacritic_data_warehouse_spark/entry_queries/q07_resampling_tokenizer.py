@@ -4,7 +4,7 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _dec, _events, _t, query
+from ._registry import F, _dec, _events, _t, materialize, query
 from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 from .q04_retrieval_text import _copurchase_pairs
 
@@ -1021,12 +1021,8 @@ def seasonal_decompose_monthly(spark, sf_dir):
 )
 def adamic_adar_parts(spark, sf_dir):
     from ..operators.graph import undirected_edges
-    from ..operators.rank import is_plan_only
-
     pairs = _copurchase_pairs(spark, sf_dir)
-    if not is_plan_only():  # ADVICE r10: plan-only dumps must keep the
-        # full operator tree instead of truncating at ExistingRDD
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs, "adamic_adar_parts.pairs")
     und = undirected_edges(pairs, "pa", "pb")
     deg = und.groupBy(F.col("src").alias("z")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -1041,8 +1037,7 @@ def adamic_adar_parts(spark, sf_dir):
     e1 = und.join(F.broadcast(seeds), und["src"] == seeds["x"]).select(
         "x", F.col("dst").alias("z")
     )
-    if not is_plan_only():
-        e1 = e1.localCheckpoint(eager=True)
+    e1 = materialize(e1, "adamic_adar_parts.e1")
     # wedge expansion: broadcast the SEED-ADJACENT side into the edge
     # list so the 2|E| table is probed map-side, never shuffled (r10;
     # previously e2 was hash-shuffled on z).  deg is node-dimension —

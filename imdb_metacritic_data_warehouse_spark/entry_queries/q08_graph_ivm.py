@@ -4,9 +4,9 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _dec, _events, _t, query
+from ._registry import F, _dec, _events, _t, materialize, query
 from .q01_warehouse import _MINHASH_CORPUS_SQL, _MINHASH_SIG_SQL, cosine_topk, simhash
-from .q02_pipeline_parity import Window, _finish_scratch, _materialize, _scratch_dir
+from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 from .q03_dedup_lsh import _neardup_labels_cached
 from .q07_resampling_tokenizer import _HLL_ALPHA
 
@@ -2089,7 +2089,7 @@ def rerank_agreement_audit(spark, sf_dir):
     rr = ov.withColumn(
         "rr", F.row_number().over(Window.orderBy(F.desc("n_overlap"), F.asc("doc_id")))
     )
-    rrm = _materialize(rr)
+    rrm = materialize(rr, "rerank_agreement_audit.rrm")
     a = rrm.select(
         F.col("doc_id").alias("ida"), F.col("dr").alias("dra"), F.col("rr").alias("rra")
     )
@@ -2496,7 +2496,8 @@ def cluster_purity_embeddings(spark, sf_dir):
         .groupBy("bucket", "label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    cells = _materialize(cells)  # contingency-sized; read by 5 branches
+    # contingency-sized; read by 5 branches
+    cells = materialize(cells, "cluster_purity_embeddings.cells")
     tot = cells.agg(F.sum("n").cast("bigint").alias("nn"))
     bc = cells.groupBy("bucket").agg(F.sum("n").cast("bigint").alias("nb"))
     lc = cells.groupBy("label").agg(F.sum("n").cast("bigint").alias("nl"))

@@ -4,7 +4,7 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _events, _t, _units4, global_row_number, query
+from ._registry import F, _events, _t, _units4, global_row_number, materialize, query
 from .q01_warehouse import (
     _MINHASH_CORPUS_SQL,
     _MINHASH_SIG_SQL,
@@ -12,7 +12,7 @@ from .q01_warehouse import (
     cosine_topk,
     lsh_candidate_pairs,
 )
-from .q02_pipeline_parity import Window, _materialize, asof_join
+from .q02_pipeline_parity import Window, asof_join
 from .q03_dedup_lsh import _QUALITY_SQL, connected_components
 from .q04_retrieval_text import _copurchase_pairs
 
@@ -490,7 +490,7 @@ def cluster_safe_split_docs(spark, sf_dir):
     # pairs feed THREE consumers (CC, the safe-crossing audit, the
     # naive-crossing audit) — materialize once or the banded LSH
     # pipeline re-executes per branch (no cross-branch CSE).
-    pairs = _materialize(lsh_candidate_pairs(corpus, "doc_id", "text"))
+    pairs = materialize(lsh_candidate_pairs(corpus, "doc_id", "text"), "lsh_pairs")
     labels = connected_components(pairs)
     assigned = (
         corpus.join(labels, corpus.doc_id == labels.node, "left")
@@ -508,7 +508,8 @@ def cluster_safe_split_docs(spark, sf_dir):
         .otherwise(F.lit("eval"))
         .alias("split"),
     )
-    split = _materialize(split)  # feeds the rollup AND the safe-crossing join
+    # feeds the rollup AND the safe-crossing join
+    split = materialize(split, "cluster_safe_split_docs.split")
     sa = split.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("sa"))
     sb = split.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("sb"))
     xsafe = (
@@ -745,7 +746,8 @@ def semiadditive_balance_monthly(spark, sf_dir):
     ob = o.groupBy("c", "m").agg(
         F.expr("max_by(u, struct(d, k))").alias("bal")
     )
-    ob = _materialize(ob)  # feeds the months spine AND the balance join
+    # feeds the months spine AND the balance join
+    ob = materialize(ob, "semiadditive_balance_monthly.ob")
     months = ob.select("m").distinct()
     custs = ob.select("c").distinct()
     spine = custs.crossJoin(F.broadcast(months))
@@ -1112,7 +1114,7 @@ def ndcg_retrieval_audit(spark, sf_dir):
             "gain"
         ),
     )
-    g = _materialize(g)  # feeds the DCG agg AND the ideal re-ranking
+    g = materialize(g, "ndcg_retrieval_audit.g")  # feeds the DCG agg AND the ideal re-ranking
 
     def _term_u(gain_col, rank_col):
         return (
@@ -1219,7 +1221,8 @@ def t_closeness_audit_customers(spark, sf_dir):
         F.floor(F.col("c_acctbal") / 1000.0).cast("bigint").alias("bal_band"),
         "c_mktsegment",
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_gs"))
-    cell = _materialize(cell)  # feeds group totals, segment totals, grand total
+    # feeds group totals, segment totals, grand total
+    cell = materialize(cell, "t_closeness_audit_customers.cell")
     grp = cell.groupBy("c_nationkey", "bal_band").agg(
         F.sum("n_gs").cast("bigint").alias("n_g")
     )

@@ -4,9 +4,9 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _t, _units4, global_row_number, query
+from ._registry import F, _t, _units4, global_row_number, materialize, query
 from .q01_warehouse import cosine_topk
-from .q02_pipeline_parity import Window, _materialize
+from .q02_pipeline_parity import Window
 
 
 
@@ -70,7 +70,6 @@ from .q02_pipeline_parity import Window, _materialize
 def winnowing_fingerprints_docs(spark, sf_dir):
     from pyspark.sql import Window
 
-    from ..operators.rank import is_plan_only
     from ..operators.text import winnow_fingerprints
 
     d = _t(spark, sf_dir, "documents")
@@ -85,8 +84,7 @@ def winnowing_fingerprints_docs(spark, sf_dir):
         .filter(F.col("d") <= 64)
         .select("fph", "doc_id")
     )
-    if not is_plan_only():
-        small = small.localCheckpoint(eager=True)
+    small = materialize(small, "winnowing_fingerprints_docs.small")
     pairs = (
         small.alias("a")
         .join(
@@ -831,11 +829,11 @@ def textrank_keywords_docs(spark, sf_dir):
     pw = adj.groupBy(
         F.least("wa", "wb").alias("a"), F.greatest("wa", "wb").alias("b")
     ).agg(F.count(F.lit(1)).alias("wt"))
-    sym = pw.select(
+    sym = materialize(pw.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "wt"
     ).unionByName(
         pw.select(F.col("b").alias("src"), F.col("a").alias("dst"), "wt")
-    ).localCheckpoint(eager=True)  # feeds nodes/strength/2 iterations
+    ), "textrank_keywords_docs.sym")  # feeds nodes/strength/2 iterations
     nodes = sym.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()  # scalar only
     st = sym.groupBy("src").agg(F.sum("wt").cast("long").alias("s"))
@@ -953,7 +951,7 @@ def wasserstein_drift_orders(spark, sf_dir):
     u = base.select(F.col("grp0").alias("grp"), "v", "b1", "b2").unionByName(
         base.select(F.lit("ALL").alias("grp"), "v", "b1", "b2")
     )
-    u = _materialize(u)  # feeds the value-level table AND the totals
+    u = materialize(u, "wasserstein_drift_orders.u")  # feeds the value-level table AND the totals
     vl = u.groupBy("grp", "v").agg(
         F.sum("b1").cast("long").alias("c1"), F.sum("b2").cast("long").alias("c2")
     )
@@ -981,7 +979,7 @@ def wasserstein_drift_orders(spark, sf_dir):
         ).alias("g2"),
     )
     gp = global_prefix(vl, [F.col("grp"), F.col("v")], ["c1", "c2"], rn_col="rn")
-    gp = _materialize(gp)  # both the adjacency join sides read it
+    gp = materialize(gp, "wasserstein_drift_orders.gp")  # both the adjacency join sides read it
     nxt = gp.select(
         F.col("grp").alias("g2nd"), (F.col("rn") - 1).alias("rn"),
         F.col("v").alias("v_next"),
@@ -1068,7 +1066,7 @@ def hill_tail_index_orders(spark, sf_dir):
     ranked = global_row_number(
         o, [F.col("x").desc(), F.col("o_orderkey").asc()], out_col="rn"
     ).filter(F.col("rn") <= 1001)
-    ranked = _materialize(ranked)  # thresholds AND terms read it
+    ranked = materialize(ranked, "hill_tail_index_orders.ranked")  # thresholds AND terms read it
     th = ranked.filter(F.col("rn").isin(201, 501, 1001)).select(
         (F.col("rn") - 1).alias("k"), F.col("x").alias("x_k1")
     )
@@ -1192,7 +1190,7 @@ def mrr_retrieval_audit(spark, sf_dir):
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
     )
-    ov = _materialize(ov)  # corpus recall AND the top-10 hit join read it
+    ov = materialize(ov, "mrr_retrieval_audit.ov")  # corpus recall AND the top-10 hit join read it
     corpus = ov.filter(F.col("n_overlap") >= 4).groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rel_corpus")
     )
@@ -1352,7 +1350,8 @@ def shapley_source_valuation_docs(spark, sf_dir):
         .groupBy("s")
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("cov"))
     )
-    cov = _materialize(cov)  # 32 rows; read by pairs, solo, loo, grand
+    # 32 rows; read by pairs, solo, loo, grand
+    cov = materialize(cov, "shapley_source_valuation_docs.cov")
     ch = spark_.range(5).select(F.col("id").alias("c"))
     pairs = (
         F.broadcast(ch)

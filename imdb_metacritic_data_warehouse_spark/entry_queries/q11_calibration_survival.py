@@ -4,8 +4,8 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _events, _t, _units4, global_row_number, query
-from .q02_pipeline_parity import Window, _materialize
+from ._registry import F, _events, _t, _units4, global_row_number, materialize, query
+from .q02_pipeline_parity import Window
 from .q03_dedup_lsh import _QUALITY_SQL
 from .q09_quality_cdc import _gopher_per_doc
 
@@ -110,7 +110,8 @@ def isotonic_calibration_docs(spark, sf_dir):
             F.sum("y").cast("bigint").alias("n_pos"),
         )
     )
-    dec = _materialize(dec)  # <=10 rows; feeds intervals, mins and output
+    # <=10 rows; feeds intervals, mins and output
+    dec = materialize(dec, "isotonic_calibration_docs.dec")
     a = dec.select(F.col("bin").alias("i"))
     b = dec.select(F.col("bin").alias("j"))
     m = dec.select(F.col("bin").alias("mid"), "n", "n_pos")
@@ -246,7 +247,7 @@ def bradley_terry_brands(spark, sf_dir):
         ).alias("p")
     ).filter(~F.col("p.tie")).select("p.wb", "p.lb")
     dw = c.groupBy("wb", "lb").agg(F.count(F.lit(1)).cast("long").alias("w_ij"))
-    dw = _materialize(dw)  # brand-pair matrix: wins, np, and both folds
+    dw = materialize(dw, "bradley_terry_brands.dw")  # brand-pair matrix: wins, np, and both folds
     np_ = (
         dw.select(F.col("wb").alias("i"), F.col("lb").alias("j"), F.col("w_ij").alias("n"))
         .unionByName(
@@ -256,7 +257,7 @@ def bradley_terry_brands(spark, sf_dir):
         .groupBy("i", "j")
         .agg(F.sum("n").cast("long").alias("n_ij"))
     )
-    np_ = _materialize(np_)
+    np_ = materialize(np_, "bradley_terry_brands.np_")
     wsum = dw.groupBy(F.col("wb").alias("i")).agg(
         F.sum("w_ij").cast("long").alias("wnum")
     )
@@ -266,7 +267,7 @@ def bradley_terry_brands(spark, sf_dir):
         .join(wsum, "i", "left")
         .select("i", F.coalesce("wnum", F.lit(0)).cast("long").alias("w"), "contests")
     )
-    wins = _materialize(wins)
+    wins = materialize(wins, "bradley_terry_brands.wins")
 
     def _fold_sum(df_terms):
         """Ordered left fold of (j, term) in brand order — the exact
@@ -288,7 +289,7 @@ def bradley_terry_brands(spark, sf_dir):
     p1 = wins.join(s1, "i").select(
         "i", F.round(F.col("w").cast("double") / F.col("s"), 6).alias("p")
     )
-    p1 = _materialize(p1)  # both sides of the second-iteration join
+    p1 = materialize(p1, "bradley_terry_brands.p1")  # both sides of the second-iteration join
     s2 = _fold_sum(
         np_.join(p1.select(F.col("i"), F.col("p").alias("p_i")), "i")
         .join(
@@ -366,7 +367,8 @@ def frequent_triples_parts(spark, sf_dir):
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
         .distinct()
     )
-    ob = _materialize(ob)  # triples, singles and the order count read it
+    # triples, singles and the order count read it
+    ob = materialize(ob, "frequent_triples_parts.ob")
     nn = ob.agg(F.countDistinct("o").cast("long").alias("n"))
     s1 = ob.groupBy("b").agg(F.count(F.lit(1)).cast("long").alias("s"))
     per = ob.groupBy("o").agg(F.sort_array(F.collect_set("b")).alias("bs"))
@@ -495,7 +497,7 @@ def km_survival_users(spark, sf_dir):
     life = e.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("fd"), F.max(F.to_date("ts")).alias("ld")
     )
-    life = _materialize(life)  # bounds, starts and ends all read it
+    life = materialize(life, "km_survival_users.life")  # bounds, starts and ends all read it
     bounds = life.agg(F.min("fd").alias("d0"), F.max("ld").alias("d1"))
     spine = bounds.select(
         F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("d")
@@ -848,7 +850,7 @@ def quantile_normalize_embeddings(spark, sf_dir):
     r = ranked.crossJoin(F.broadcast(n_vec)).select(
         "dim", "q", (F.col("rn") - F.col("dim") * F.col("nv")).alias("rk")
     )
-    r = _materialize(r)  # profile AND the shift join read it
+    r = materialize(r, "quantile_normalize_embeddings.r")  # profile AND the shift join read it
     prof = r.groupBy("rk").agg(F.sum("q").cast("long").alias("psum"))
     shifted = r.join(prof, "rk").select(
         "dim", "q", "psum", F.abs(F.col("q") * 64 - F.col("psum")).alias("shift_u")
@@ -978,7 +980,7 @@ def logrank_test_users(spark, sf_dir):
         "user_id", "fd", "ld",
         F.when(hash_bucket(F.col("user_id")) < 5000, 1).otherwise(0).alias("in_a"),
     )
-    life = _materialize(life)
+    life = materialize(life, "logrank_test_users.life")
     bounds = life.agg(F.min("fd").alias("d0"), F.max("ld").alias("d1"))
     spine = bounds.select(
         F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("d")

@@ -4,9 +4,9 @@ entry_queries/__init__.py for the aggregation contract."""
 
 from __future__ import annotations
 
-from ._registry import F, _t, _units4, query
+from ._registry import F, _t, _units4, materialize, query
 from .q01_warehouse import _MINHASH_CORPUS_SQL, _MINHASH_SIG_SQL, _minhash_corpus
-from .q02_pipeline_parity import Window, _materialize
+from .q02_pipeline_parity import Window
 from .q03_dedup_lsh import _neardup_labels_cached
 
 
@@ -94,7 +94,7 @@ def cka_quantization_audit(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     n = e.agg(F.count(F.lit(1)).cast("long").alias("n"))
     g = cka_grids(e, "embedding", scale=10**4, quant_levels=127)
-    g = _materialize(g)  # the three grids and both sum vectors read it
+    g = materialize(g, "cka_quantization_audit.g")  # the three grids and both sum vectors read it
     sums = (
         g.filter(F.col("grid") == "sx")
         .select("i", F.col("s").alias("sx"))
@@ -242,7 +242,7 @@ def seasonal_anomaly_monthly(spark, sf_dir):
         .cast("bigint")
         .alias("cents")
     )
-    m = _materialize(m)  # both sides of the moving-average self-join
+    m = materialize(m, "seasonal_anomaly_monthly.m")  # both sides of the moving-average self-join
     a = m.select(F.col("x").alias("xa"), "moy", F.col("cents").alias("ca"))
     b = m.select(F.col("x").alias("xb"), F.col("cents").alias("cb_"))
     tr = (
@@ -270,7 +270,7 @@ def seasonal_anomaly_monthly(spark, sf_dir):
         "x", "cents",
         (F.col("dev_x24").cast("double") - F.col("seasonal_x24")).alias("r"),
     )
-    rem = _materialize(rem)  # bounded series (<=85 rows)
+    rem = materialize(rem, "seasonal_anomaly_monthly.rem")  # bounded series (<=85 rows)
     wall = Window.orderBy("r", "x")
     rk = rem.select(
         "x", "cents", "r",
@@ -419,7 +419,8 @@ def neardup_cluster_tightness(spark, sf_dir):
     )
     corpus = _minhash_corpus(spark, sf_dir)
     dsh = shingle_rows(corpus, "doc_id", "text").distinct()
-    dsh = _materialize(dsh)  # set sizes AND both pair sides read it
+    # set sizes AND both pair sides read it
+    dsh = materialize(dsh, "neardup_cluster_tightness.dsh")
     nsz = dsh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("nsh"))
     pairs = (
         members.select("cluster", "sz", F.col("node").alias("da"))
@@ -507,7 +508,7 @@ def negative_sampling_table_docs(spark, sf_dir):
             * F.lit(1000000)
         ).cast("long").alias("pu"),
     )
-    pw = _materialize(pw)  # the total AND the top-k cut read it
+    pw = materialize(pw, "negative_sampling_table_docs.pw")  # the total AND the top-k cut read it
     tot = pw.agg(F.sum("pu").cast("long").alias("tu"))
     return (
         pw.crossJoin(F.broadcast(tot))
@@ -576,7 +577,8 @@ def feature_hashing_audit_docs(spark, sf_dir):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    cnt = _materialize(cnt)  # bucket rollup AND the vocab totals read it
+    # bucket rollup AND the vocab totals read it
+    cnt = materialize(cnt, "feature_hashing_audit_docs.cnt")
     hashed = cnt.select(
         "w", "c",
         (
@@ -759,7 +761,8 @@ def blocking_quality_audit_docs(spark, sf_dir):
             F.slice(F.split(F.lower("text"), " "), 1, 2), " "
         ).alias("blk"),
     )
-    keyed = _materialize(keyed)  # block sizes, truth probes, doc count
+    # block sizes, truth probes, doc count
+    keyed = materialize(keyed, "blocking_quality_audit_docs.keyed")
     n = keyed.agg(F.count(F.lit(1)).cast("long").alias("n"))
     blocks = keyed.groupBy("blk").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     cand = blocks.agg(

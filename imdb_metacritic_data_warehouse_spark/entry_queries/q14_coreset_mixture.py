@@ -5,7 +5,7 @@ incremental view maintenance (deletes + updates, not just inserts)."""
 
 from __future__ import annotations
 
-from ._registry import F, _t, query
+from ._registry import F, _t, materialize, query
 
 _DIMS = 64
 _K_CENTERS = 6
@@ -98,20 +98,20 @@ def kcenter_coreset_embeddings(spark, sf_dir):
 
     seed = e.orderBy("vec_id").limit(1).collect()[0]
     centers = [(1, int(seed.vec_id), None)]
-    m = e.select(
+    m = materialize(e.select(
         "vec_id", "embedding", dist_to(list(seed.embedding)).alias("mind")
-    ).localCheckpoint(eager=True)
+    ), "kcenter_coreset_embeddings.m")
     for r in range(2, _K_CENTERS + 1):
         top = m.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1).collect()[0]
         centers.append((r, int(top.vec_id), round(float(top.mind), 6)))
         if r < _K_CENTERS:
-            m = m.select(
+            m = materialize(m.select(
                 "vec_id",
                 "embedding",
                 F.least(
                     F.col("mind"), dist_to(list(top.embedding))
                 ).alias("mind"),
-            ).localCheckpoint(eager=True)
+            ), "kcenter_coreset_embeddings.m")
     return spark.createDataFrame(
         centers, "round int, vec_id bigint, radius double"
     ).orderBy("round")

@@ -9,8 +9,7 @@ index), and per-domain calibration drift of the quality scorer
 
 from __future__ import annotations
 
-from ._registry import F, _t, query
-from .q02_pipeline_parity import _materialize
+from ._registry import F, _t, materialize, query
 from .q03_dedup_lsh import _QUALITY_SQL
 
 
@@ -383,7 +382,8 @@ def domain_calibration_drift_docs(spark, sf_dir):
             F.sum("y").cast("bigint").alias("n_pos"),
         )
     )
-    dec = _materialize(dec)  # <= sources x 10 rows; feeds both PAV passes
+    # <= sources x 10 rows; feeds both PAV passes
+    dec = materialize(dec, "domain_calibration_drift_docs.dec")
 
     def _pav(grid, keys):
         # grid: (keys..., bin, n, n_pos) — returns (keys..., bin, fitted)

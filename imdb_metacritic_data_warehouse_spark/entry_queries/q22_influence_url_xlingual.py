@@ -8,7 +8,7 @@ set-similarity over the fixture's translated clones).
 
 from __future__ import annotations
 
-from ._registry import F, _t, query
+from ._registry import F, _t, materialize, query
 from .q01_warehouse import _H, _LANG_CASE, _lang_hits_sql
 from .q03_dedup_lsh import _QUALITY_SQL
 
@@ -302,8 +302,6 @@ def crosslingual_neardup_docs(spark, sf_dir):
     from ..operators.dedup import prefix_filter_jaccard_pairs
     from ..operators.text import language_id
 
-    from ..operators.rank import is_plan_only
-
     d = _t(spark, sf_dir, "documents")
     pairs = prefix_filter_jaccard_pairs(d, "doc_id", "text", threshold_pct=60)
     # The annotation joins are INNER, so only docs that appear in a
@@ -315,8 +313,7 @@ def crosslingual_neardup_docs(spark, sf_dir):
     # the corpus scan, and the tiny annotated table broadcasts into
     # both pair sides.  Inner-join semantics make the restriction
     # provably lossless.
-    if not is_plan_only():
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs, "crosslingual_neardup_docs.pairs")
     ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -330,8 +327,7 @@ def crosslingual_neardup_docs(spark, sf_dir):
     ann = d.join(F.broadcast(ids), "doc_id", "left_semi").select(
         "doc_id", "lang", language_id(F.col("text")).alias("pred")
     )
-    if not is_plan_only():
-        ann = ann.localCheckpoint(eager=True)
+    ann = materialize(ann, "crosslingual_neardup_docs.ann")
     a = ann.select(
         F.col("doc_id").alias("doc_a"),
         F.col("lang").alias("lang_a"),
@@ -429,8 +425,6 @@ def crosslingual_neardup_collapsed(spark, sf_dir):
     from ..operators.dedup import prefix_filter_jaccard_pairs
     from ..operators.text import fingerprint
 
-    from ..operators.rank import is_plan_only
-
     d = _t(spark, sf_dir, "documents")
     reps = (
         d.select("doc_id", "lang", "text", fingerprint(F.col("text")).alias("f"))
@@ -445,8 +439,7 @@ def crosslingual_neardup_collapsed(spark, sf_dir):
     # The collapse aggregate shuffles the full corpus TEXT; it feeds
     # the pair join AND both annotation branches, and unmaterialized it
     # re-executed three times (r10).  Checkpoint once.
-    if not is_plan_only():
-        reps = reps.localCheckpoint(eager=True)
+    reps = materialize(reps, "crosslingual_neardup_collapsed.reps")
     pairs = prefix_filter_jaccard_pairs(reps, "doc_id", "text", threshold_pct=60)
     # SIZE CONTRACT for the annotation broadcasts (ADVICE r10): the
     # joins below are INNER, so only representatives that appear in a
@@ -457,8 +450,7 @@ def crosslingual_neardup_collapsed(spark, sf_dir):
     # is checkpointed so the participant probe doesn't re-run the pair
     # join; at-scale fallback if |pairs| ever outgrew the broadcast cap
     # is dropping the hint (AQE picks the shuffle join).
-    if not is_plan_only():
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs, "crosslingual_neardup_collapsed.pairs")
     ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))

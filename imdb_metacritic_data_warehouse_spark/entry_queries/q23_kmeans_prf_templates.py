@@ -8,7 +8,7 @@ boilerplate template detection by shared prefix/suffix fingerprints
 
 from __future__ import annotations
 
-from ._registry import F, _t, query
+from ._registry import F, _t, materialize, query
 from .q03_dedup_lsh import _QUALITY_SQL
 
 _KM_K = 8
@@ -92,13 +92,13 @@ def _km_round_sql(r: int) -> str:
     """,
 )
 def kmeans_lloyd_embeddings(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = materialize(_t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
             "transform(embedding, x -> "
             "CAST(round(CAST(x AS DOUBLE) * 10000, 0) AS BIGINT))"
         ).alias("u"),
-    ).localCheckpoint(eager=True)
+    ), "kmeans_lloyd_embeddings.e")
 
     # seeds: the k lowest vec_ids — a bounded scalar collect of a
     # dimension-sized frame (k rows), the kcenter literal-injection
@@ -221,10 +221,7 @@ def rocchio_expansion_docs(spark, sf_dir):
     # ONE execution of the token explode + aggregate instead of three
     # (the dedup.pp discipline; 64× probe measured the re-execution at
     # 3× the whole query's cost)
-    from ..operators import rank as _rank
-
-    if not _rank.is_plan_only():
-        tf = tf.localCheckpoint(eager=True)
+    tf = materialize(tf, "rocchio_expansion_docs.tf")
     # top-10 via orderBy+limit → TakeOrderedAndProject: a distributed
     # per-partition top-k + driver merge of 10-row heads, NOT a
     # single-partition row_number window (the r10 64× probe measured

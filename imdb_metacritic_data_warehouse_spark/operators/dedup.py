@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import fingerprint, shingle_rows
+from .materialize import materialize
 
 MINHASH_HASHES = 12
 MINHASH_BANDS = 4  # 4 bands × 3 rows
@@ -230,10 +231,10 @@ def lsh_candidate_pairs(
         num_hashes, bands = lsh_params(threshold, max_hashes)
     banded = lsh_band_table(df, id_col, text_col, num_hashes, bands)
     w = Window.partitionBy("band", "band_sig")
-    sized = (
+    sized = materialize(
         banded.withColumn("__bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bsz") > 1)
-        .localCheckpoint(eager=True)
+        .filter(F.col("__bsz") > 1),
+        "lsh_candidate_pairs.sized",
     )
     small = (
         sized.filter(F.col("__bsz") <= bucket_cap)
@@ -412,7 +413,7 @@ def connected_components(
     # pipeline twice (no cross-branch CSE in Catalyst — measured 2× on
     # the LSH input at sf0.1); explode duplicates rows inside a single
     # scan instead.
-    edges = (
+    edges = materialize(
         pairs.select(
             F.explode(
                 F.array(
@@ -422,16 +423,16 @@ def connected_components(
             ).alias("e")
         )
         .select("e.s", "e.d")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "connected_components.edges",
     )
     # round 0 fused into init: with identity labels, the first
     # propagation is just min(least(n, neighbor)) — one aggregate over
     # the edge list, no join.  Cliques converge here immediately.
-    labels = (
+    labels = materialize(
         edges.groupBy(F.col("s").alias("n"))
-        .agg(F.min(F.least(F.col("s"), F.col("d"))).alias("lbl"))
-        .localCheckpoint(eager=True)
+        .agg(F.min(F.least(F.col("s"), F.col("d"))).alias("lbl")),
+        "connected_components.labels",
     )
     # labels only ever decrease under min-propagation, so Σlbl strictly
     # decreases until the fixpoint: a stable sum IS convergence.  One
@@ -443,13 +444,13 @@ def connected_components(
             .groupBy("s")
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(nbr_min, labels.n == nbr_min.s, "left")
             .select(
                 labels.n,
                 F.least(labels.lbl, F.coalesce(nbr_min.nbr_lbl, labels.lbl)).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "connected_components.new_labels",
         )
         new_sum = new_labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
         labels = new_labels
@@ -596,7 +597,6 @@ def prefix_filter_jaccard_pairs(
     back to the 1× problem)."""
     from pyspark.sql import Window
 
-    from . import rank as _rank
     from .text import fingerprint, shingle_rows
 
     mult = None
@@ -639,8 +639,7 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    if not _rank.is_plan_only():
-        tokens = tokens.localCheckpoint(eager=True)
+    tokens = materialize(tokens, "prefix_filter_jaccard_pairs.tokens")
     # Global token frequency and per-doc set size as WINDOW counts over
     # the element table instead of two aggregates joined back (r10):
     # the f-window rides ONE exchange on tok (the old plan shuffled
@@ -665,8 +664,7 @@ def prefix_filter_jaccard_pairs(
         F.col("pos")
         <= F.col("sz") - F.floor((F.lit(threshold_pct) * F.col("sz") + 99) / 100) + 1
     ).select("doc", "tok", "sz", "pos")
-    if not _rank.is_plan_only():
-        prefix = prefix.localCheckpoint(eager=True)
+    prefix = materialize(prefix, "prefix_filter_jaccard_pairs.prefix")
     a = prefix.select(
         F.col("doc").alias("doc_a"), "tok",
         F.col("sz").alias("sz_a"), F.col("pos").alias("__pa"),
@@ -844,10 +842,7 @@ def lcs_pairs(
         .filter((F.col("c") >= 2) & (F.col("c") <= cap))
         .drop("c")
     )
-    from . import rank as _rank
-
-    if not _rank.is_plan_only():
-        pp = pp.localCheckpoint(eager=True)
+    pp = materialize(pp, "lcs_pairs.pp")
     a = pp.select(F.col("doc_id").alias("da"), F.col("p").alias("pa"), "g")
     b = pp.select(F.col("doc_id").alias("db"), F.col("p").alias("pb"), "g")
     pairs = (

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from .materialize import materialize
 
 
 def dq_report(
@@ -45,7 +46,7 @@ def dq_report(
     CSE (NOTES.md), so the shared 1-row total is materialized eagerly
     (a single count job) instead of re-scanning the fact once per
     branch; all row rules share ONE scan via a stacked aggregate."""
-    total = df.agg(F.count(F.lit(1)).alias("__n")).localCheckpoint(eager=True)
+    total = materialize(df.agg(F.count(F.lit(1)).alias("__n")), "dq_report.total")
 
     def out(name: str, frame: DataFrame, bad) -> DataFrame:
         return frame.join(F.broadcast(total)).select(

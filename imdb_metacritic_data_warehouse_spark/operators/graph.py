@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from .materialize import materialize
 
 
 def undirected_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
@@ -70,17 +71,17 @@ def pagerank(
     # loop-invariant join below — unmaterialized, an expensive upstream
     # edge build (e.g. the co-occurrence self-join) re-executes 4×
     # (measured 12.0s → 3.4s at sf0.1 on the co-purchase graph).
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, "pagerank.edges")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    deg = deg.localCheckpoint(eager=True)
+    deg = materialize(deg, "pagerank.deg")
     if symmetric:
         nodes = deg.select(F.col("src").alias("node"))
     else:
-        nodes = (
+        nodes = materialize(
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "pagerank.nodes",
         )
     n_nodes = nodes.count()  # scalar only — not a data collect
     # degree folds into the NODE-sized rank table each round (a
@@ -119,7 +120,7 @@ def pagerank(
             )
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks, "pagerank.ranks")
     return ranks
 
 
@@ -190,13 +191,7 @@ def triangle_counts(pairs: DataFrame, a: str = "pa", b: str = "pb") -> DataFrame
     nbrs = oriented.groupBy(F.col("src").alias("node")).agg(
         F.collect_list("dst").alias("nb")
     )
-    from .rank import is_plan_only
-
-    if not is_plan_only():
-        # feeds the edge view + both probe sides; plan-only dumps skip
-        # the boundary so the full tree (incl. the pinned exchange) is
-        # visible to plan audits
-        nbrs = nbrs.localCheckpoint(eager=True)
+    nbrs = materialize(nbrs, "triangle_counts.nbrs")
     e = nbrs.select(F.col("node").alias("src"), F.explode("nb").alias("dst"))
     probed = (
         e.join(nbrs.select(F.col("node").alias("src"), F.col("nb").alias("nb_u")), "src")
@@ -274,7 +269,8 @@ def bfs_distances(
     contract; leave False for billion-node graphs).
     """
     _b = F.broadcast if broadcast_frontier else (lambda df: df)
-    visited = seeds.select("node", F.lit(0).alias("dist")).distinct().localCheckpoint(eager=False)
+    visited = seeds.select("node", F.lit(0).alias("dist")).distinct()
+    visited = materialize(visited, "bfs_distances.visited", eager=False)
     frontier = visited.select("node")
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -284,8 +280,8 @@ def bfs_distances(
             .join(_b(visited.select("node")), "node", "left_anti")
             .withColumn("dist", F.lit(hop))
         )
-        nxt = nxt.localCheckpoint(eager=False)
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        nxt = materialize(nxt, "bfs_distances.nxt", eager=False)
+        visited = materialize(visited.unionByName(nxt), "bfs_distances.visited", eager=False)
         frontier = nxt.select("node")
     return visited
 
@@ -335,17 +331,17 @@ def personalized_pagerank(
     blocks up front.
     """
     if checkpoint_edges:
-        edges = edges.localCheckpoint(eager=True)
+        edges = materialize(edges, "personalized_pagerank.edges")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    deg = deg.localCheckpoint(eager=True)
+    deg = materialize(deg, "personalized_pagerank.deg")
     if symmetric:
         nodes = deg.select(F.col("src").alias("node"))
     else:
-        nodes = (
+        nodes = materialize(
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "personalized_pagerank.nodes",
         )
 
     seed_nodes = seeds.select("node").distinct()
@@ -360,7 +356,7 @@ def personalized_pagerank(
         # fresh-alias copies re-key attribute ids per round: without the
         # per-round checkpoint the previous round's lineage embeds deg's
         # and edges' attributes, and re-joining the originals trips
-        # Spark's ambiguous-self-join check (the _materialize id-rekey
+        # Spark's ambiguous-self-join check (the materialize id-rekey
         # rule; harmless when checkpointing).
         degr = deg.select(
             F.col("src").alias("rsrc"), F.col("out_deg").alias("__od")
@@ -390,7 +386,7 @@ def personalized_pagerank(
             )
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks, "personalized_pagerank.ranks")
     return ranks
 
 
@@ -487,7 +483,7 @@ def kcore_peel(
             # reads the last edge set three times (node stats, edge
             # count), and unmaterialized each branch re-executed the
             # whole last round's degree aggregate + both semi-joins.
-            edges = edges.localCheckpoint(eager=True)
+            edges = materialize(edges, "kcore_peel.edges")
         if r == rounds - 2:
             prev_nodes = edges
     summary_edges = edges
@@ -601,7 +597,7 @@ def label_propagation(
             .select("v", (-F.col("m.nl")).alias("label"))
         )
         if r % 2 == 1:
-            lab = lab.localCheckpoint(eager=True)
+            lab = materialize(lab, "label_propagation.lab")
     return lab
 
 
@@ -643,27 +639,27 @@ def hits_bipartite(
     pagerank ``broadcast_ranks`` contract; leave False for data-sized
     node sets).
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, "hits_bipartite.edges")
     hubs = edges.select(F.col("src").alias("node")).distinct()
     h = hubs.select("node", F.lit(1).cast("long").alias("score"))
     a = None
     _b = F.broadcast if broadcast_scores else (lambda df: df)
     for _ in range(iters):
-        a = (
+        a = materialize(
             edges.join(
                 _b(h.select(F.col("node").alias("src"), "score")), "src"
             )
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("score").alias("score"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("score").alias("score")),
+            "hits_bipartite.a",
         )
-        h = (
+        h = materialize(
             edges.join(
                 _b(a.select(F.col("node").alias("dst"), "score")), "dst"
             )
             .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("score").alias("score"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("score").alias("score")),
+            "hits_bipartite.h",
         )
     return h.select("node", F.lit("hub").alias("role"), "score").unionByName(
         a.select("node", F.lit("authority").alias("role"), "score")

@@ -8,7 +8,7 @@ global token stream? — is a global cumulative sum.  A bare
 (the same straggler as the reference's un-partitioned row_number,
 ``mart/rating_slide.sql:7``); ``global_cumsum`` is the two-phase
 version (range partition → local cumsum → broadcast per-partition
-offsets), the prefix-sum twin of ``operators/rank.global_row_number``.
+offsets), the one-column case of ``operators/rank.global_prefix``.
 
 Given each document's [start, end) token span, its sequence assignments
 are pure arithmetic: it lands in sequences ``floor(start/B)`` through
@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rank import global_prefix
 
 
 def global_cumsum(
@@ -44,37 +46,8 @@ def global_cumsum(
                 )
             ),
         )
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # persist() pins ONE execution of the range exchange for both the
-    # local-cumsum branch and the offsets branch — repartitionByRange's
-    # sampled bounds differ between re-executions (RDD-id-seeded), which
-    # double/drops rows near partition bounds (found as an off-by-one in
-    # ks_drift_orders' ECDF; same hazard as rank.global_row_number).
-    parted = df.repartitionByRange(n, *order_cols).persist()
-    pid = F.spark_partition_id()
-    local = parted.withColumn("__pid", pid).withColumn(
-        "__local_sum",
-        F.sum(value_col).over(
-            Window.partitionBy(pid)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    offsets = (
-        local.groupBy("__pid")
-        .agg(F.sum(value_col).alias("__total"))
-        .withColumn(
-            "__offset",
-            F.sum("__total").over(
-                Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
-        .select("__pid", F.coalesce("__offset", F.lit(0)).alias("__offset"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__local_sum") + F.col("__offset")).cast("long"))
-        .drop("__pid", "__local_sum", "__offset")
+    return global_prefix(df, order_cols, [value_col], None, num_partitions).withColumnRenamed(
+        f"cum_{value_col}", out_col
     )
 
 

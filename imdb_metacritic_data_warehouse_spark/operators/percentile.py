@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def exact_percentiles_grouped(
     df: DataFrame,
@@ -48,16 +50,14 @@ def exact_percentiles_grouped(
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
     v = F.col(value_col).cast("double")
-    base = (
+    # materialized: every branch (local ranks, offsets, counts, ranked)
+    # must see ONE execution of the sampled range exchange — see
+    # rank.global_prefix
+    base = materialize(
         df.select(*keys, v.alias("__v"))
         .filter(F.col("__v").isNotNull())
-        .repartitionByRange(n_parts, *[F.col(k) for k in keys], F.col("__v"))
-        # persist() pins ONE execution of the range exchange for every
-        # branch (local ranks, offsets, counts, ranked): the sampled
-        # range bounds are re-drawn per execution (RDD-id-seeded seed),
-        # so unshared re-executions can disagree about which partition a
-        # boundary row landed in — see rank.global_row_number
-        .persist()
+        .repartitionByRange(n_parts, *[F.col(k) for k in keys], F.col("__v")),
+        "exact_percentiles_grouped",
     )
     pid = F.spark_partition_id()
     local = base.withColumn("__pid", pid).withColumn(
@@ -160,14 +160,14 @@ def weighted_median_grouped(
     wt = (weight_col if not isinstance(weight_col, str) else F.col(weight_col)).cast(
         "long"
     )
-    base = (
+    # one pinned execution for every branch — see exact_percentiles
+    base = materialize(
         df.select(*keys, v.alias("__v"), wt.alias("__wt"))
         .filter(F.col("__v").isNotNull())
         .groupBy(*keys, "__v")
         .agg(F.sum("__wt").alias("__wt"))
-        .repartitionByRange(n_parts, *[F.col(k) for k in keys], F.col("__v"))
-        # one pinned execution for every branch — see exact_percentiles
-        .persist()
+        .repartitionByRange(n_parts, *[F.col(k) for k in keys], F.col("__v")),
+        "weighted_median_grouped",
     )
     pid = F.spark_partition_id()
     local = base.withColumn("__pid", pid).withColumn(

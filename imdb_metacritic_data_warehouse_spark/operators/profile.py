@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def profile_numeric(df: DataFrame, cols: list[str]) -> DataFrame:
     """Long-format numeric profile: one row per column with
@@ -79,8 +81,8 @@ def run_length_stats(
 
     The naive formulation is ``lag() over (ORDER BY …)`` — a global
     unpartitioned window, the repo's forbidden single-task shape.
-    Two-phase instead: range-partition on the order (persisted — one
-    pinned execution, see rank.global_row_number), count value CHANGES
+    Two-phase instead: range-partition on the order (materialized —
+    one pinned execution, see rank.global_prefix), count value CHANGES
     inside each partition with a pid-local window, then add the
     partition-boundary changes by comparing each partition's FIRST
     value with its predecessor's LAST (a partitions-sized table,
@@ -93,10 +95,9 @@ def run_length_stats(
     from pyspark.sql import Window
 
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = (
-        df.withColumn("__v", F.col(value_col))
-        .repartitionByRange(n, *order_cols)
-        .persist()
+    parted = materialize(
+        df.withColumn("__v", F.col(value_col)).repartitionByRange(n, *order_cols),
+        "run_length_stats",
     )
     pid = F.spark_partition_id()
     w = Window.partitionBy(pid).orderBy(*order_cols)
@@ -165,7 +166,7 @@ def run_length_stats_multi(
     from pyspark.sql import Window
 
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *order_cols).persist()
+    parted = materialize(df.repartitionByRange(n, *order_cols), "run_length_stats_multi")
     pid = F.spark_partition_id()
     w = Window.partitionBy(pid).orderBy(*order_cols)
     local = parted.withColumn("__pid", pid).withColumn("__rn", F.row_number().over(w))

@@ -22,41 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Schema/plan-only tooling (tools/lint_parity.py, tools/gen_plans.py)
-# enters ``plan_only()`` so plan CONSTRUCTION stays lazy:
-# ``global_prefix``'s eager localCheckpoint otherwise runs a real
-# range-exchange job the moment the query function is called (ADVICE
-# r8).  A contextvar + context manager, NOT a module global (ADVICE
-# r9): a mutable process-global left set by tooling silently changed
-# operator semantics for every plan built afterwards in the same
-# process — the scope is now exception-safe and local to the tooling
-# block.  Execution paths never enter it — the eager materialization
-# is what pins ONE execution of the sampled range exchange for both
-# consumer branches.
-import contextlib
-import contextvars
-
-_PLAN_ONLY: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "rank_plan_only", default=False
-)
-
-
-def is_plan_only() -> bool:
-    """True inside a ``plan_only()`` block (lint/plan tooling only)."""
-    return _PLAN_ONLY.get()
-
-
-@contextlib.contextmanager
-def plan_only():
-    """Scope within which eager checkpoint/persist materializations are
-    skipped so query-function calls only BUILD plans.  Plans built
-    inside must not be executed — they lose the pinned one-execution
-    contract on the sampled range exchange."""
-    token = _PLAN_ONLY.set(True)
-    try:
-        yield
-    finally:
-        _PLAN_ONLY.reset(token)
+from .materialize import materialize
 
 
 def global_row_number(
@@ -74,39 +40,7 @@ def global_row_number(
     """
     if not two_phase:
         return df.withColumn(out_col, F.row_number().over(Window.orderBy(*order_cols)))
-
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # persist() is a CORRECTNESS requirement, not an optimization:
-    # repartitionByRange samples its range bounds with an RDD-id-derived
-    # seed, so if the local-rank branch and the offsets branch each
-    # re-executed the exchange they could see DIFFERENT partition
-    # boundaries (off-by-a-few ranks for rows near a bound).  The cached
-    # InMemoryRelation is planned once, so both branches share ONE
-    # shuffle execution; the range exchange stays visible in the plan
-    # (unlike localCheckpoint, which hides it behind an ExistingRDD).
-    parted = df.repartitionByRange(n, *order_cols).persist()
-    pid = F.spark_partition_id()
-    local = parted.withColumn("__pid", pid).withColumn(
-        "__local_rn",
-        F.row_number().over(Window.partitionBy(pid).orderBy(*order_cols)),
-    )
-    # per-partition counts → running offset (tiny: one row per partition)
-    offsets = (
-        local.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .withColumn(
-            "__offset",
-            F.sum("__cnt").over(
-                Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
-        .select("__pid", F.coalesce("__offset", F.lit(0)).alias("__offset"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__local_rn") + F.col("__offset")).cast("long"))
-        .drop("__pid", "__local_rn", "__offset")
-    )
+    return global_prefix(df, order_cols, [], out_col, num_partitions)
 
 
 def global_prefix(
@@ -117,38 +51,21 @@ def global_prefix(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Row number + inclusive prefix sums of several columns under ONE
-    total order through ONE range exchange (the fused N-ary twin of
-    ``global_row_number`` / ``packing.global_cumsum`` — ECDF-style
+    total order through ONE range exchange (``global_row_number`` and
+    ``packing.global_cumsum`` are its one-output cases — ECDF-style
     consumers need rank AND two cumulative counts, and three separate
     two-phase passes would shuffle the same frame three times).
 
-    Prefix sums come back as ``cum_<value_col>`` (long).  Same
-    correctness constraint as the single-value primitives — the local
-    and offsets branches must see ONE execution of the sampled range
-    exchange (identical partition bounds) — but pinned here with an
-    EAGER ``localCheckpoint`` instead of ``persist()``: a query-shaped
-    caller has no unpersist point, and a leaked cache entry on a
-    data-sized frame accumulates across bench invocations (round 2's
-    bench killer; ADVICE r7).  Checkpoint blocks are freed by the
-    ContextCleaner once the plan is dropped, and the frozen RDD makes
-    divergent re-sampling of the range bounds impossible by
-    construction.  (``global_row_number`` keeps ``persist()`` — its
-    range exchange is plan-gated in tests/test_plan_quality.py and its
-    callers wrap dimension-sized frames.)
-
-    Deployment caveat (ADVICE r8): ``localCheckpoint`` blocks live on
-    executor local storage and are NOT recoverable — under executor
-    loss or dynamic-allocation decommissioning the query fails instead
-    of recomputing lineage.  Fine for the local bench target; on a
-    long-lived cluster with a configured checkpoint dir, swap in
-    reliable ``checkpoint()`` (same eager semantics, storage-backed).
-    Plan-only tooling enters ``plan_only()`` to skip the
-    materialization (contextvar-scoped; ADVICE r9).
+    Prefix sums come back as ``cum_<value_col>`` (long).  The local and
+    offsets branches must see ONE execution of the sampled range
+    exchange (identical partition bounds): ``repartitionByRange``
+    samples its bounds with an RDD-id-derived seed, so two executions
+    can disagree about which partition a boundary row lands in.  The
+    range-partitioned input is pinned with ``materialize`` (its module
+    docstring has the checkpoint-not-cache rule).
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *order_cols)
-    if not is_plan_only():
-        parted = parted.localCheckpoint(eager=True)
+    parted = materialize(df.repartitionByRange(n, *order_cols), "global_prefix")
     # __pid must be STAMPED as a column once, and every window spec must
     # reference the COLUMN: with several WindowExec nodes in one chain, a
     # raw spark_partition_id() inside the second window's partitionBy is

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from .materialize import materialize
 
 N_PLANES = 8
 
@@ -836,11 +837,11 @@ def gram_power_iteration(
     Returns (i, vint, wi) after ``iters`` rounds: the micro-grid
     iterate plus its final exact matrix-vector image, from which the
     caller derives loadings (vint/10⁶) and the Rayleigh quotient."""
-    full = grid.select("i", "j", "sxy").unionByName(
+    full = materialize(grid.select("i", "j", "sxy").unionByName(
         grid.filter(F.col("i") != F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "sxy"
         )
-    ).localCheckpoint(eager=True)
+    ), "gram_power_iteration.full")
     # Exactness guard (ADVICE r5): the matvec casts sxy down to
     # decimal(25,0) so the product stays within precision 38 BY TYPE —
     # but Spark's non-ANSI overflowing cast returns NULL silently

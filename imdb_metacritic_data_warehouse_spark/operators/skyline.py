@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def strict_prefix_max(
     df: DataFrame,
@@ -43,10 +45,9 @@ def strict_prefix_max(
     Two-phase: no single-task global window.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # persist() pins one range-exchange execution for both branches
-    # (sampled bounds are otherwise re-drawn per execution — see
-    # rank.global_row_number for the full story)
-    parted = df.repartitionByRange(n, *order_cols).persist()
+    # materialized: one range-exchange execution for both branches
+    # (see rank.global_prefix)
+    parted = materialize(df.repartitionByRange(n, *order_cols), "strict_prefix_max")
     pid = F.spark_partition_id()
     w = Window.partitionBy(pid).orderBy(*order_cols)
     local = parted.withColumn("__pid", pid).withColumn(

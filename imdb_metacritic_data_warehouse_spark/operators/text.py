@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from .materialize import materialize
 
 # Tiny per-language stopword sets for the n-gram/stopword heuristic.
 # Order matters only for tie-breaking (lexicographic language code wins).
@@ -707,14 +708,14 @@ def _bpe_merged_symbols(df, text_col: str, merges: int):
     # and the next round compounds the lineage — checkpoint per round
     # (vocabulary-sized, cheap), the iterative-loop discipline of
     # connected_components/pagerank
-    sym = (
+    sym = materialize(
         wc.filter(F.length("w") >= 1)
         .select(
             "w",
             "c",
             F.posexplode(F.split(F.col("w"), "")).alias("pos", "sym"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "_bpe_merged_symbols.sym",
     )
     w_seq = Window.partitionBy("w").orderBy("pos")
     for _ in range(merges):
@@ -735,7 +736,7 @@ def _bpe_merged_symbols(df, text_col: str, merges: int):
             (F.col("sym") == F.col("a"))
             & (F.lead("sym").over(w_seq) == F.col("b")),
         )
-        sym = (
+        sym = materialize(
             marked.withColumn(
                 "is_tail",
                 F.coalesce(F.lag("is_start").over(w_seq), F.lit(False)),
@@ -750,8 +751,8 @@ def _bpe_merged_symbols(df, text_col: str, merges: int):
                 )
                 .otherwise(F.col("sym"))
                 .alias("sym"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "_bpe_merged_symbols.sym",
         )
     return sym
 

@@ -28,12 +28,14 @@ def build_employee_data(wh) -> DataFrame:
         eh.join(mel, "emp_id", "inner")
         .join(emls, "movie_emp_link_id", "inner")
     )
+    # by name: only the join keys and the SCD2 validity columns repeat
+    # across the three tables, and none of those is selected
     out = joined.select(
-        emls.movie_emp_role_id,
-        eh.emp_nm.alias("name"),
-        emls.role.alias("role"),
-        F.when(emls.description == "NaN", F.lit(""))
-        .otherwise(strip_parens(emls.description))
+        "movie_emp_role_id",
+        F.col("emp_nm").alias("name"),
+        "role",
+        F.when(F.col("description") == "NaN", F.lit(""))
+        .otherwise(strip_parens(F.col("description")))
         .alias("role_description"),
     )
     # Final dedup elidable under declared key uniqueness (see

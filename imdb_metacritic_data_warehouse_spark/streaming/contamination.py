@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
 from ..operators.text import tokens
 from ..sources.table import VersionedParquetTable
 
@@ -142,20 +143,14 @@ def contamination_against_index(
     threshold the join falls back to a plain shuffle join on the
     shingle key — uniform, one exchange per side.
     """
-    from ..operators import rank as _rank
-
     dsh = _shingles(docs.select(id_col, text_col), n=n, text_col=text_col)
-    if _rank.is_plan_only():
-        # lint/plan tooling: no jobs — build the ungated shuffle plan.
-        hit = dsh.join(index, "s", "left")
-    else:
-        # Checkpoint the (eval-set-bounded, shingle-grained) index so
-        # the sizing count and the join read ONE materialization
-        # instead of rebuilding the index plan twice.
-        index = index.localCheckpoint(eager=True)
-        # 1-row scalar on the materialized index — not a data pull.
-        small = index.count() <= broadcast_max_rows
-        hit = dsh.join(F.broadcast(index) if small else index, "s", "left")
+    # Checkpoint the (eval-set-bounded, shingle-grained) index so the
+    # sizing count and the join read ONE materialization instead of
+    # rebuilding the index plan twice.
+    index = materialize(index, "contamination_against_index.index")
+    # 1-row scalar on the materialized index — not a data pull.
+    small = index.count() <= broadcast_max_rows
+    hit = dsh.join(F.broadcast(index) if small else index, "s", "left")
     aggs = [
         F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
         *[

@@ -6,8 +6,11 @@ must flag every one.  The repo itself must lint clean — that's the
 standing gate that keeps the seven NOTES rules mechanical.
 """
 
+import io
 import os
+import re
 import sys
+import tokenize
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
@@ -81,3 +84,56 @@ def test_r7_no_nonscalar_driver_gated_output(spark, sf_dir):
     # the driver's pandas canonicalizer before the values compare.
     # Every queries() entry must resolve to an all-atomic schema.
     assert lint_output_types(spark, sf_dir) == []
+
+
+# Eager materialization has one home: operators/materialize.py owns the
+# plan-only skip, the checkpoint-not-cache rule, the id re-key and the
+# job label, so no other package module may pin a plan itself.
+_MATERIALIZE_CALLS = re.compile(
+    r"localCheckpoint\s*\(|\.\s*persist\s*\(|\.\s*cache\s*\(\s*\)|\bis_plan_only\b"
+)
+_PROSE = {tokenize.COMMENT, tokenize.STRING}
+
+
+def _materialization_calls(source: str) -> list[str]:
+    """Code lines (comments and string literals, docstrings included,
+    blanked out) that pin a plan outside ``materialize``."""
+    toks = tokenize.generate_tokens(io.StringIO(source).readline)
+    code: dict[int, list[str]] = {}
+    for t in toks:
+        if t.type not in _PROSE:
+            code.setdefault(t.start[0], []).append(t.string)
+    return [
+        " ".join(parts)
+        for _, parts in sorted(code.items())
+        if _MATERIALIZE_CALLS.search(" ".join(parts))
+    ]
+
+
+def test_materialization_scan_ignores_prose():
+    src = (
+        '"""Pinned with localCheckpoint, never .cache() or .persist()."""\n'
+        "# is_plan_only() used to guard this\n"
+        "a = df.localCheckpoint(eager=True)\n"
+        "b = df.persist()\n"
+        "c = df.cache()\n"
+        "if not is_plan_only():\n"
+        "    pass\n"
+    )
+    assert len(_materialization_calls(src)) == 4
+
+
+def test_materialization_has_one_module():
+    pkg = os.path.join(
+        os.path.dirname(__file__), "..", "imdb_metacritic_data_warehouse_spark"
+    )
+    home = os.path.join("operators", "materialize.py")
+    found = []
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if name.endswith(".py") and rel != home:
+                with open(path) as fh:
+                    found += [f"{rel}: {ln}" for ln in _materialization_calls(fh.read())]
+    assert found == [], "pin plans through operators.materialize.materialize"

@@ -334,3 +334,26 @@ def test_repeat_merge_sweep_reuses_generated_classes(spark, tmp_path):
     before = generated_class_compiles(spark)
     w.run_pipeline("2024-03-01 00:00:00")
     assert generated_class_compiles(spark) - before <= 100
+
+
+def test_materializations_leave_the_cache_empty(spark, sf_dir, tmp_path):
+    """Every eager materialization is a checkpoint, never a cache entry:
+    a query-shaped caller has no unpersist point.  After two runs of the
+    light leaderboard query and three fixture ELT batches (each builds
+    the two-phase rank in rating_slide) the session's CacheManager still
+    holds nothing."""
+    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for _ in range(2):
+        QUERIES["global_rank_leaderboard"](spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    assert cache.isEmpty()
+    bronze = str(tmp_path / "bronze")
+    write_raw_fixtures(spark, bronze)
+    w = Warehouse(spark, bronze, str(tmp_path / "wh"))
+    for ts in (T0, T1, "2024-03-01 00:00:00"):
+        w.run_pipeline(ts)
+    assert cache.isEmpty()

@@ -21,6 +21,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plans(build) -> tuple[str, str]:
+    """(plan of ``build()`` under ``plan_only()``, its executed plan).
+    The first is the whole operator tree; in the second each eager
+    materialization, such as a two-phase primitive's range exchange,
+    reads back as a ``Scan ExistingRDD``."""
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
+
+    with plan_only():
+        tree = _plan(build())
+    return tree, _plan(build())
+
+
 @pytest.fixture(scope="module")
 def lineitem(spark):
     return spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -54,14 +66,16 @@ def test_global_rank_is_two_phase(spark):
     from imdb_metacritic_data_warehouse_spark.operators.rank import global_row_number
 
     df = spark.read.parquet(f"{SF_DIR}/supplier.parquet")
-    ranked = global_row_number(df, [F.desc("s_acctbal"), F.asc("s_suppkey")])
-    plan = _plan(ranked)
+    plan, executed = _plans(
+        lambda: global_row_number(df, [F.desc("s_acctbal"), F.asc("s_suppkey")])
+    )
     # data flows through a range repartition, never a global
     # single-partition sort window over the full input
     assert "rangepartitioning" in plan.lower()
     # the only SinglePartition exchange allowed is the tiny per-partition
     # offset aggregate (one row per partition), which is then broadcast
     assert "BroadcastExchange" in plan
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_salted_agg_is_two_phase(spark):
@@ -379,9 +393,10 @@ def test_pack_sequences_cumsum_is_two_phase(spark):
     the only SinglePartition stage)."""
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["pack_sequences_budget"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["pack_sequences_budget"](spark, SF_DIR))
     assert "rangepartitioning" in plan  # phase 1: range repartition
     assert "SPARK_PARTITION_ID()" in plan  # phase 2: local windows + offsets
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_bm25_single_broadcast_no_explode(spark):
@@ -502,22 +517,41 @@ def test_jaccard_prefix_join_carries_hashes_not_strings(spark):
     assert "0.6" not in plan
 
 
-def test_jaccard_prefix_join_plan_only_submits_no_job(spark):
-    """Inside ``plan_only()`` the element-table and prefix checkpoints
-    are skipped: building runs no Spark job and the plan shows the whole
-    operator tree, not an ``ExistingRDD`` cut."""
+_PLAN_ONLY_QUERIES = [
+    "global_rank_leaderboard",
+    "exact_percentiles",
+    "pack_sequences_budget",
+    "pipeline_employee_data",
+    "pipeline_rating_slide",
+    "triangle_counts_parts",
+    "pagerank_parts_copurchase",
+    "funnel_latency_percentiles",
+]
+
+
+@pytest.mark.parametrize("case", ["jaccard_prefix_join", *_PLAN_ONLY_QUERIES])
+def test_plan_only_builds_the_whole_tree(spark, case):
+    """Inside ``plan_only()`` every ``materialize`` is skipped: the plan
+    shows the whole operator tree, with no ``ExistingRDD`` cut and no
+    cached ``InMemoryRelation``.  The jaccard join builds without
+    submitting a single Spark job."""
+    from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
     from imdb_metacritic_data_warehouse_spark.operators.dedup import (
         prefix_filter_jaccard_pairs,
     )
-    from imdb_metacritic_data_warehouse_spark.operators.rank import plan_only
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
     from tests.fixtures import spark_jobs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     with plan_only(), spark_jobs(spark) as jobs:
-        df = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 60)
-        assert jobs() == set()
+        if case == "jaccard_prefix_join":
+            df = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 60)
+            assert jobs() == set()
+        else:
+            df = QUERIES[case](spark, SF_DIR)
     plan = _plan(df)
     assert "ExistingRDD" not in plan
+    assert "InMemoryRelation" not in plan
     assert "Scan parquet" in plan
 
 
@@ -569,7 +603,7 @@ def test_hybrid_search_rrf_has_no_corpus_global_window(spark):
     prefix-sums (ordered on __pid, one row per partition)."""
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["hybrid_search_rrf"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["hybrid_search_rrf"](spark, SF_DIR))
     windows = _window_nodes(plan)
     assert windows, "expected Window nodes in the hybrid RRF plan"
     for part, order in windows:
@@ -581,6 +615,7 @@ def test_hybrid_search_rrf_has_no_corpus_global_window(spark):
         )
     # three two-phase ranks → three range exchanges feeding the local ranks
     assert plan.lower().count("rangepartitioning") >= 3
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_insert_only_merge_null_safe_anti_join_is_hashable(spark):
@@ -618,9 +653,10 @@ def test_exact_percentiles_has_no_buffering_aggregate(spark):
     no percentile() aggregate expression."""
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["exact_percentiles"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["exact_percentiles"](spark, SF_DIR))
     assert "percentile(" not in plan
     assert "rangepartitioning" in plan.lower()
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_tfidf_broadcasts_idf_and_partitions_rank(spark):
@@ -647,9 +683,10 @@ def test_triangle_counts_no_nested_loop(spark):
 def test_mad_outliers_has_no_buffering_percentile(spark):
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["mad_outliers_lineitem"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["mad_outliers_lineitem"](spark, SF_DIR))
     assert "percentile(" not in plan
     assert "rangepartitioning" in plan.lower()
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_pareto_skyline_is_two_phase(spark):
@@ -658,12 +695,13 @@ def test_pareto_skyline_is_two_phase(spark):
     )
 
     p = spark.read.parquet(f"{SF_DIR}/part.parquet")
-    plan = _plan(pareto_frontier_2d(p, "p_retailprice", "p_size"))
+    plan, executed = _plans(lambda: pareto_frontier_2d(p, "p_retailprice", "p_size"))
     # the strict-prefix running max range-partitions the tier table —
     # never a single-task window over the full input
     assert "rangepartitioning" in plan.lower()
     # the per-partition prefix maxes are broadcast back
     assert "BroadcastExchange" in plan
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_cms_sketch_combines_map_side(spark):
@@ -700,10 +738,11 @@ def test_bfs_lineage_is_checkpoint_bounded(spark):
 def test_zorder_audit_rank_is_two_phase(spark):
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["zorder_pruning_audit"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["zorder_pruning_audit"](spark, SF_DIR))
     # file assignment rides the two-phase rank's range exchange
     assert "rangepartitioning" in plan.lower()
     assert "BroadcastExchange" in plan
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_attribution_linear_collapses_clicks_before_join(spark):
@@ -727,13 +766,15 @@ def test_run_length_stats_no_global_window(spark):
     )
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    df = run_length_stats(
-        li, [F.col("l_orderkey").asc(), F.col("l_linenumber").asc()], "l_returnflag"
+    plan, executed = _plans(
+        lambda: run_length_stats(
+            li, [F.col("l_orderkey").asc(), F.col("l_linenumber").asc()], "l_returnflag"
+        )
     )
-    plan = _plan(df)
     # data flows through the range exchange; the only unpartitioned
     # window is over the partitions-sized per-pid table
     assert "rangepartitioning" in plan.lower()
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_weighted_median_no_buffering_aggregate(spark):
@@ -742,13 +783,16 @@ def test_weighted_median_no_buffering_aggregate(spark):
     )
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    plan = _plan(
-        weighted_median_grouped(li, ["l_returnflag"], "l_extendedprice", "l_quantity")
+    plan, executed = _plans(
+        lambda: weighted_median_grouped(
+            li, ["l_returnflag"], "l_extendedprice", "l_quantity"
+        )
     )
     low = plan.lower()
     assert "rangepartitioning" in low
     # never the value-buffering percentile aggregate
     assert "percentile" not in low
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_duplicate_payment_join_is_equi_not_bnlj(spark):
@@ -836,9 +880,10 @@ def test_bootstrap_folds_replicates_map_side(spark):
 def test_pareto_head_cumsum_is_two_phase(spark):
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["pareto_head_parts"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["pareto_head_parts"](spark, SF_DIR))
     assert "rangepartitioning" in plan.lower()
     assert "BroadcastExchange" in plan
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 def test_trigram_window_is_partitioned(spark):
     """The trigram LEADs must run inside per-user window partitions —
@@ -1063,8 +1108,9 @@ def test_median_ci_uses_two_phase_rank(spark):
     Window.orderBy over the fact table."""
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
-    plan = _plan(QUERIES["median_ci_lineitem"](spark, SF_DIR))
+    plan, executed = _plans(lambda: QUERIES["median_ci_lineitem"](spark, SF_DIR))
     assert "rangepartitioning" in plan
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
 
 
 def test_wave19_21_no_cartesian_and_bounded_windows(spark):

@@ -284,9 +284,15 @@ def test_target_encode_loo_hand_case(spark):
 def test_quantile_transform_is_two_phase_and_uniform(spark, sf_dir):
     from imdb_metacritic_data_warehouse_spark.entry_queries import QUERIES
 
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
+
+    with plan_only():  # the whole operator tree, range exchange included
+        tree = QUERIES["quantile_transform_docs"](spark, sf_dir)
+    plan = tree._jdf.queryExecution().executedPlan().toString()
     df = QUERIES["quantile_transform_docs"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    executed = df._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower()  # never a one-task rank
+    assert "Scan ExistingRDD" in executed  # the one-execution pin
     rows = df.collect()
     pcts = sorted(r["pct"] for r in rows)
     n = len(rows)

@@ -3,9 +3,9 @@
 Usage: python tools/dump_plan.py <outdir> <suffix> <query> [query ...]
 
 Writes ``<outdir>/<query>_<suffix>.txt`` with the FULL logical-to-
-physical formatted plan.  Runs inside ``rank.plan_only()`` so eager
-localCheckpoint/persist materializations are skipped and the complete
-operator tree is visible (an executed query would show ExistingRDD
+physical formatted plan.  Runs inside
+``operators.materialize.plan_only()`` so every ``materialize`` call is
+skipped and the complete operator tree is visible (an executed query would show ExistingRDD
 scans at every checkpoint boundary, hiding the upstream plan the
 audit is about) — each file's header says so.
 """
@@ -25,13 +25,13 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
 
     import imdb_metacritic_data_warehouse_spark.entry_queries as eq
-    from imdb_metacritic_data_warehouse_spark.operators import rank
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
     from imdb_metacritic_data_warehouse_spark.session import get_spark
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     spark = get_spark("dump_plan", cpus=8)
     for name in names:
-        with rank.plan_only():
+        with plan_only():
             df = eq.QUERIES[name](spark, sf)
             # capture the formatted explain (it prints to stdout)
             buf = io.StringIO()
@@ -44,11 +44,11 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(
                 f"# {name} — explain('formatted') at {sf}\n"
-                "# Captured under rank.plan_only(): eager localCheckpoint/"
-                "persist materialization\n"
-                "# boundaries are SKIPPED so the full operator tree is "
-                "visible (the executed\n"
-                "# query reads ExistingRDD at each checkpoint boundary "
+                "# Captured under operators.materialize.plan_only(): "
+                "materialize() boundaries\n"
+                "# are SKIPPED so the full operator tree is visible (the "
+                "executed query\n"
+                "# reads ExistingRDD at each materialization boundary "
                 "instead).\n\n"
             )
             fh.write(buf.getvalue())

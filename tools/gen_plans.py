@@ -113,7 +113,7 @@ CASES = [
 def main() -> None:
     from imdb_metacritic_data_warehouse_spark.session import get_spark
     import imdb_metacritic_data_warehouse_spark.entry_queries as eq
-    from imdb_metacritic_data_warehouse_spark.operators import rank
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
 
     spark = get_spark("plans", cpus=8)
     sf = "/root/testdata/sf0.001"
@@ -124,11 +124,9 @@ def main() -> None:
     print("regenerate with `python tools/gen_plans.py`.  Each section: the")
     print("scale-relevant property, then the executed plan (AQE initial).")
     for name, note in CASES:
-        # plan audit only — keep global_prefix's eager checkpoint lazy
-        # so building wasserstein_drift's plan doesn't run the
-        # range-exchange job eagerly (ADVICE r8; contextvar-scoped per
-        # ADVICE r9 so nothing leaks past the audit)
-        with rank.plan_only():
+        # plan audit only: materializations are skipped, so building
+        # runs no materialization job and the plan is the whole tree
+        with plan_only():
             df = eq.QUERIES[name](spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = re.sub(r"file:[^,\]]*", "file:<path>", plan)

@@ -46,9 +46,9 @@ Rules (NOTES rule → lint id):
   (``F.array_join`` / exploded rows) instead.  Schema-based, so it
   needs a live SparkSession: run via ``lint_output_types(spark)``
   (tests/test_lint_parity.py) — plan construction, not full query
-  execution (it runs inside ``operators.rank.plan_only()`` so ``global_prefix``
-  stays lazy; ``_materialize``-based pipeline queries still run their
-  bounded scratch writes when their plans are built — ADVICE r8).
+  execution (it runs inside ``operators.materialize.plan_only()``, so
+  no materialization runs; the scratch-writing disk queries still run
+  their bounded writes when their plans are built — ADVICE r8).
 * **R4 bare float literal in oracle arithmetic** — REPORT-ONLY:
   DuckDB parses ``0.5`` as DECIMAL(2,1) while Spark builders usually
   inject doubles; green today at both SFs everywhere, so this reports
@@ -167,17 +167,17 @@ def lint_module_source(fname: str, text: str) -> list[tuple[str, str, str]]:
 def lint_output_types(spark, sf_dir: str = "/root/testdata/sf0.001") -> list[tuple[str, str, str]]:
     """R7: no top-level array/map/struct columns in driver-gated query
     output.  Builds every ``queries()`` plan for schema resolution and
-    flags non-atomic top-level fields.  Runs inside ``rank.plan_only()`` so
-    ``global_prefix``'s eager checkpoint stays lazy; queries routed
-    through ``_materialize`` still execute their bounded scratch
-    writes at plan-build time (ADVICE r8 — inherent to their design)."""
+    flags non-atomic top-level fields.  Runs inside ``plan_only()`` so
+    no materialization runs; the scratch-writing disk queries still
+    execute their bounded writes at plan-build time (ADVICE r8 —
+    inherent to their design)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     from imdb_metacritic_data_warehouse_spark import entry_queries as eq
-    from imdb_metacritic_data_warehouse_spark.operators import rank
+    from imdb_metacritic_data_warehouse_spark.operators.materialize import plan_only
 
     out = []
-    with rank.plan_only():
+    with plan_only():
         plans = [(name, fn(spark, sf_dir)) for name, fn in eq.QUERIES.items()]
     for name, df in plans:
         for field in df.schema.fields:
