@@ -1,9 +1,11 @@
 """Benchmark harness (driver-run per round; also the local feedback loop).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line.  Each query is forced end-to-end with the `noop` sink (full
-materialization, no driver collect, no disk write skew).
+line.  The order is ``bench_order``: registration order with the
+``RUN_LAST`` batch at the tail.  Each query is forced end-to-end with
+the `noop` sink (full materialization, no driver collect, no disk
+write skew).
 """
 
 from __future__ import annotations
@@ -40,339 +42,6 @@ HEADLINE_FIXED45 = [
     "q2_cheapest_supplier", "incremental_mart_merge",
 ]
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q5_revenue_per_nation",
-    "hash_key_generation",
-    "union_distinct",
-    "full_outer_snapshots",
-    "argmax_per_group",
-    "global_rank_leaderboard",
-    "scd2_merge_orders",
-    "insert_only_merge_customers",
-    "text_analysis",
-    "dedup_exact_docs",
-    "minhash_lsh_pairs",
-    "simhash_signatures",
-    "embedding_cosine_topk",
-    "ann_lsh_bucketed",
-    "tumbling_window_events",
-    "session_window_events",
-    "asof_join_events",
-    "pipeline_genre_metrics",
-    "pipeline_rating_slide",
-    "rollup_orders",
-    "scalar_parsing",
-    "exists_semi_join",
-    "salted_groupby_events",
-    "window_frame_functions",
-    "embedding_neardup_pairs",
-    "correlated_agg_threshold",
-    "exact_percentiles",
-    "deterministic_sample_split",
-    "scrub_documents",
-    "rolling_fingerprint_docs",
-    "neardup_clusters",
-    "q3_shipping_priority",
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "doc_frequency_terms",
-    "grouping_sets_orders",
-    "ann_ivf_sampled",
-    "quality_quantile_filter",
-    "profile_lineitem_numeric",
-    "histogram_extendedprice",
-    "q21_waiting_suppliers",
-    "q16_supplier_count_distinct",
-    "q2_cheapest_supplier",
-    "incremental_mart_merge",
-    # round 3: training-data ops + the real disk persistence path
-    "pack_sequences_budget",
-    "decontaminate_docs",
-    "deterministic_global_shuffle",
-    "repetition_ratio_docs",
-    "warehouse_movie_data_disk",
-    "warehouse_scd2_two_batch_disk",
-    # retrieval + corpus-audit ops and the two remaining TPC-H shapes
-    "bm25_docs",
-    "dup_ngram_fraction_docs",
-    "balanced_resample_docs",
-    "embedding_centroid_outliers",
-    "q9_product_type_profit",
-    "q17_small_quantity_revenue",
-    "knn_graph_embeddings",
-    "select_token_budget_docs",
-    "corpus_report_by_source",
-    # round-3 continuation: new join/vector/sampling/persistence ops
-    "interval_overlap_sessions",
-    "mixture_sample_domains",
-    "quantize_embeddings_int8",
-    "vocab_coverage_docs",
-    "semantic_dedup_keep",
-    "neardup_labels_persisted",
-    # round-3 continuation 2: sequence analytics, graph, exact set-join,
-    # reconciliation/audit, MDM fusion, attribution
-    "markov_transitions_events",
-    "twap_events",
-    "vocab_truncate_docs",
-    "pagerank_parts_copurchase",
-    "jaccard_prefix_join_docs",
-    "cumulative_unique_users_daily",
-    "scd2_validity_audit",
-    "table_checksum_orders",
-    "winsorize_lineitem_prices",
-    "attribution_last_touch",
-    "survivorship_golden_docs",
-    "dau_wau_stickiness",
-    "session_paths_events",
-    # round-3 continuation 3: retrieval, experiment stats, market-basket,
-    # and the end-to-end curation composition
-    "hard_negative_mining",
-    "mmr_rerank_topk",
-    "ctr_wilson_bounds",
-    "ab_test_lift",
-    "skew_report_lineitem",
-    "association_rules_parts",
-    "user_event_entropy",
-    "equidepth_bins_orders",
-    "daily_revenue_trend",
-    "jaccard_prefix_join_collapsed",
-    "curate_corpus_end_to_end",
-    # round 4: the de-scale-killed RRF fusion, the newly oracle-gated
-    # sketch/multimodal paths, the standalone link-table build, and the
-    # erasure/CDF disk paths (now race-free per-invocation scratch)
-    "hybrid_search_rrf",
-    "pipeline_movie_genre_link",
-    "multimodal_features",
-    "approx_sketches",
-    "version_diff_orders",
-    "gdpr_erasure_cascade",
-    "triangle_counts_parts",
-    "minhash_estimate_audit",
-    "entity_clusters_parts",
-    "tfidf_topk_docs",
-    "bpe_train_merges_docs",
-    "mad_outliers_lineitem",
-    "incremental_agg_from_cdf",
-    "leakage_safe_split_events",
-    "cusum_changepoint_daily",
-    # round-4 continuation: sketch/skyline/BFS/drift/survival batch
-    "revenue_share_of_parent",
-    "source_histogram_overlap",
-    "neardup_cluster_sizes",
-    "embedding_dim_stats",
-    "crosscorr_clicks_purchases",
-    "cohort_ltv_events",
-    "overdispersion_events",
-    "knn_recall_audit",
-    "encoding_advisor_lineitem",
-    "scd3_merge_customers",
-    "fk_orphan_audit",
-    "ewma_control_daily",
-    "auc_score_docs",
-    "langid_confusion_docs",
-    "markov_accuracy_events",
-    "zipf_slope_terms",
-    "gini_revenue_customers",
-    "attribution_linear_events",
-    "zorder_pruning_audit",
-    "spearman_price_size_parts",
-    "target_encode_loo_orders",
-    "recency_features_events",
-    "quantile_transform_docs",
-    "ppr_parts_seeded",
-    "weighted_median_lineitem",
-    "bpe_encode_docs",
-    "cms_join_size_audit",
-    "bloom_prune_audit",
-    "mutual_information_events",
-    "ks_drift_orders",
-    "fd_audit_orders",
-    "dow_seasonal_residuals_events",
-    "knn_label_agreement",
-    "bigram_logprob_docs",
-    "hazard_table_users",
-    "diff_in_diff_events",
-    "gaps_islands_orders",
-    "yoy_growth_monthly",
-    "cms_heavy_hitters_events",
-    "pareto_frontier_parts",
-    "bfs_khop_parts",
-    "psi_drift_orders",
-    "benford_audit_lineitem",
-    "moments_quantity_lineitem",
-    "collocations_pmi_docs",
-    "ols_trend_nation_monthly",
-    "simpson_paradox_orders",
-    "orc_roundtrip_lineitem",
-    "rfm_segments_customers",
-    "seasonal_naive_mape_monthly",
-    "sprt_ab_events",
-    "partitioned_overwrite_orders",
-    "debounce_events",
-    "ipw_estimate_docs",
-    "conformal_interval_nation_monthly",
-    "covariance_matrix_embeddings",
-    "duplicate_payment_audit_orders",
-    "totalprice_reconciliation_orders",
-    "yoy_waterfall_nation",
-    "jl_distortion_audit",
-    "theil_sen_nation_monthly",
-    "readability_docs",
-    "assortativity_copurchase",
-    "pareto_head_parts",
-    "event_trigrams_users",
-    "js_divergence_sources",
-    "bootstrap_ci_lineitem",
-    "tokenizer_fertility_lang",
-    "bitmap_distinct_audit",
-    "pii_summary_by_source",
-    "kcore_parts_copurchase",
-    "funnel_deadline_events",
-    "incremental_join_view_cdf",
-    "rollup_cascade_events",
-    # round 5: sketches, inference, forecasting, graph communities,
-    # warehouse temporality, mixed-media decode, exact-Gram PCA
-    "hll_distinct_audit",
-    "hll_incremental_merge_audit",
-    "mannwhitney_u_lineitem",
-    "acf_daily_revenue",
-    "label_propagation_parts",
-    "cuped_adjusted_lift_events",
-    "holt_forecast_nation_monthly",
-    "seasonal_decompose_monthly",
-    "adamic_adar_parts",
-    "scd4_current_history_customers",
-    "bitemporal_snapshot_orders",
-    "wap_publish_audit_orders",
-    "mixed_media_decode_stats",
-    "pca_top_component_embeddings",
-    "interevent_burstiness_events",
-    "welch_ttest_orders",
-    "kruskal_wallis_lineitem",
-    "temperature_mixture_weights_docs",
-    "trimmed_mean_lineitem",
-    "max_drawdown_daily_revenue",
-    # round 6 (verdict task #3): EVERY reference-surface pipeline_* /
-    # warehouse_* query goes under the perf gate — the engine's own
-    # 12-table mart workload was the one part of the surface the bench
-    # couldn't see, and the one real hotspot (pipeline_employee_data,
-    # 11.6s at sf0.1 in r5) hid there.
-    "pipeline_genre_hub",
-    "pipeline_movie_hub",
-    "pipeline_employee_hub",
-    "pipeline_movie_emp_link",
-    "pipeline_emp_movie_l_sat",
-    "pipeline_movie_info_sat",
-    "pipeline_movie_data",
-    "pipeline_movie_employee_link",
-    "pipeline_employee_data",
-    "warehouse_emp_link_bucketed_disk",
-    # round-6 wave 12: audio decode, simhash near-dup join, HLL rollup
-    # lattice, cross-source leakage, RANGE frames, U-shaped attribution
-    "audio_decode_stats",
-    "simhash_hamming_pairs",
-    "hll_rollup_lattice",
-    "neardup_source_matrix",
-    "rolling_revenue_range_frame",
-    "attribution_position_events",
-    # round-6 wave 13: vocab growth, triplet mining, dedup accounting,
-    # k-anonymity, packing efficiency
-    "heaps_law_vocab_growth",
-    "triplet_mining_embeddings",
-    "dedup_token_loss_report",
-    "k_anonymity_audit_customers",
-    "packing_efficiency_audit",
-    "simhash_hamming_pairs_collapsed",
-    "hll_overlap_audience_events",
-    # round-7 wave 14
-    "rerank_agreement_audit",
-    "ngram_novelty_batch",
-    "curriculum_mixture_schedule",
-    "decontamination_split_audit",
-    "cluster_purity_embeddings",
-    # wave 15
-    "gopher_quality_filter_docs",
-    "kappa_quality_labelers_docs",
-    "boilerplate_chunk_removal_docs",
-    "embedding_isotropy_audit",
-    "cluster_safe_split_docs",
-    "cdc_apply_multi_clause_orders",
-    # wave 16
-    "asof_forward_tolerance_events",
-    "semiadditive_balance_monthly",
-    "reliability_diagram_docs",
-    # wave 17
-    "hierarchy_rollup_parts",
-    "l_diversity_audit_customers",
-    "ndcg_retrieval_audit",
-    "t_closeness_audit_customers",
-    # wave 18
-    "fair_interleave_topk_docs",
-    "median_ci_lineitem",
-    # wave 19
-    "hits_suppliers_parts",
-    "modularity_brand_copurchase",
-    "item_cf_cosine_parts",
-    # wave 20
-    "winnowing_fingerprints_docs",
-    "dsir_selection_docs",
-    "naive_bayes_lang_docs",
-    "spell_candidates_docs",
-    "cdc_chunk_dedup_docs",
-    # wave 21
-    "ecod_outliers_embeddings",
-    "textrank_keywords_docs",
-    # wave 22
-    "wasserstein_drift_orders",
-    "hill_tail_index_orders",
-    "mrr_retrieval_audit",
-    "shapley_source_valuation_docs",
-    # wave 23
-    "isotonic_calibration_docs",
-    "bradley_terry_brands",
-    "frequent_triples_parts",
-    # wave 24
-    "km_survival_users",
-    "page_hinkley_daily",
-    "linear_interp_user_hours",
-    "quantile_normalize_embeddings",
-    # wave 25
-    "logrank_test_users",
-    "holt_winters_daily",
-    # wave 26
-    "cka_quantization_audit",
-    "seasonal_anomaly_monthly",
-    "neardup_cluster_tightness",
-    # wave 27
-    "negative_sampling_table_docs",
-    "feature_hashing_audit_docs",
-    # wave 28
-    "incremental_join_view_orders",
-    "blocking_quality_audit_docs",
-    # wave 29 (r8)
-    "substring_dup_spans_docs",
-    "prd_divergence_embeddings",
-    "tokenizer_fertility_drift",
-    # wave 30 (r8)
-    "kcenter_coreset_embeddings",
-    "domain_reweight_step_docs",
-    "retraction_ivm_orders",
-    # wave 31 (r8)
-    "horvitz_thompson_docs",
-    "bh_fdr_sources",
-    "mann_kendall_daily",
-    # wave 32 (r8)
-    "char_entropy_docs",
-    "length_bucketing_audit_docs",
-    # wave 33 (r8)
-    "brier_decomposition_docs",
-    "acf_ljungbox_daily",
-    "mcnemar_rules_docs",
-    # wave 34 (r8)
-    "ab_power_sample_size_events",
-]
-
 # Pathologically heavy queries run LAST (verdict r5 task #6): one heavy
 # query's GC pressure poisons the shared bench JVM for every query after
 # it (NOTES.md: the 45s all-pairs AA inflated the common set 2×; the r5
@@ -398,10 +67,10 @@ RUN_LAST = {
     "pipeline_employee_data",
     "jaccard_prefix_join_docs",
     "cluster_safe_split_docs",
-    # ADVICE r9: registry-minus-HEADLINE extras append to the LIGHT
-    # section unless listed here, so heavy newcomers (the lcs pair
-    # joins: corpus gram explode + self-join + per-pair interval merge)
-    # would otherwise run mid-sequence and contaminate neighbors.
+    # Every other query runs in registration order before this batch,
+    # so heavy newcomers (the lcs pair joins: corpus gram explode +
+    # self-join + per-pair interval merge) must be listed here or they
+    # run mid-sequence and contaminate neighbors.
     "lcs_doc_pairs_docs",
     "lcs_doc_pairs_collapsed",
     "jaccard_prefix_join_collapsed",
@@ -429,6 +98,12 @@ def _plan_fingerprint(df) -> str:
     return hashlib.md5(norm.encode()).hexdigest()[:12]
 
 
+def bench_order(qs) -> list[str]:
+    """Every query of ``qs`` once: registration order without the
+    ``RUN_LAST`` batch, then that batch (also in registration order)."""
+    return [n for n in qs if n not in RUN_LAST] + [n for n in qs if n in RUN_LAST]
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -439,18 +114,7 @@ def main():
     spark = get_spark("bench")
     qs = ent.queries()
 
-    # Heavy batch at the tail (see RUN_LAST) — stable order otherwise.
-    # Registry queries not yet in the curated HEADLINE list append after
-    # it (sorted, so the order is stable) — the clean record must cover
-    # the FULL current surface, and a hand-maintained list drifts as
-    # waves land (verdict r8 task #3: the r8 record missed waves 32-34).
-    extra = sorted(set(qs) - set(HEADLINE))
-    order = (
-        [n for n in HEADLINE if n not in RUN_LAST]
-        + [n for n in extra if n not in RUN_LAST]
-        + [n for n in HEADLINE if n in RUN_LAST]
-        + [n for n in extra if n in RUN_LAST]
-    )
+    order = bench_order(qs)
 
     # Prior round's record (if committed): plan fingerprints let us
     # separate "plan changed" from "JVM poisoning / host noise" when a

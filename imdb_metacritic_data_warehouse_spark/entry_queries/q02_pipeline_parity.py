@@ -46,18 +46,12 @@ class _ShimWarehouse:
         self,
         spark,
         bronze: dict,
-        cache_stg: bool = False,
         materialize_stg: bool | set[str] = False,
     ):
         self.spark = spark
         self._bronze = bronze
         self._stg: dict[str, DataFrame] = {}
-        # cache_stg=True reuses one logical plan per stg table (what the
-        # caching warehouse does) — safe only for consumers that join on
-        # string keys / F.col refs, NOT df.attr refs (shared lineage
-        # breaks those, see class docstring).  genre_metrics qualifies
-        # and rebuilds hubs 3× without it.
-        # materialize_stg additionally materializes built stg tables
+        # materialize_stg materializes built stg tables and reuses them
         # (True = all, or a set of table names): a shared LOGICAL plan
         # still re-executes once per consuming branch (no cross-branch
         # CSE in Catalyst — round 2's genre_metrics rebuilt the hub
@@ -65,7 +59,6 @@ class _ShimWarehouse:
         # once.  Single-consumer tables should NOT be in the set —
         # materialization is a full extra write pass that only pays
         # for itself from the second read.
-        self._cache_stg = cache_stg
         self._materialize_stg = materialize_stg
 
     def bronze(self, table):
@@ -83,7 +76,7 @@ class _ShimWarehouse:
         built = getattr(_core, f"build_{name}")(self)
         if self._should_materialize(name):
             built = materialize(built, f"stg.{name}")
-        if self._cache_stg or self._materialize_stg:
+        if self._materialize_stg:
             self._stg[name] = built
         return built
 
@@ -888,8 +881,8 @@ def warehouse_movie_data_disk(spark, sf_dir):
 
 
 # The big SCD2 link table through the real disk path: run_table commits
-# stg movie_emp_link as versioned parquet (partitioned by is_open, with
-# its committed schema) and the query reads that version back.  The
+# stg movie_emp_link as one versioned parquet directory (with its
+# committed schema) and the query reads that version back.  The
 # name is historical: the table was once a bucketed catalog table; the
 # bucketed link ⋈ sat layout itself is covered by
 # tests/test_plan_quality.py::test_bucketed_scd2_tables_join_without_shuffle.
@@ -929,7 +922,7 @@ def warehouse_emp_link_bucketed_disk(spark, sf_dir):
 # version-2 table on disk must hold, per changed key, a closed T0 row
 # (valid_to = T1) plus an open T1 row, and untouched keys keep their
 # single open T0 row.  Exercises: versioned re-merge (v1→v2 commit +
-# atomic pointer swap), the is_open partition split, align_to_spec on
+# atomic pointer swap), align_to_spec on
 # the committed target, and bronze truncate-then-load (S10).  Validity
 # columns cast to string (9999-12-31 sentinel overflows pandas ns).
 @query(

@@ -2159,7 +2159,7 @@ def scd3_merge_customers(spark, sf_dir):
 # the table's storage order, driving a DICT/RLE/PLAIN recommendation
 # (what a format optimizer or OPTIMIZE-advisor computes before
 # rewriting files).  The run count is the new two-phase primitive
-# ``operators/profile.run_length_stats``: ordered adjacency WITHOUT a
+# ``operators/profile.run_length_stats_multi``: ordered adjacency WITHOUT a
 # global window — pid-local change counts + a partitions-sized
 # boundary reconciliation (dense-sequenced so interior empty range
 # partitions cannot skip a boundary).  The recommendation compares

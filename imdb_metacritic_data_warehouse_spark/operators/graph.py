@@ -173,21 +173,6 @@ def triangle_counts(pairs: DataFrame, a: str = "pa", b: str = "pb") -> DataFrame
         )
         .select("e.src", "e.dst")
     )
-    # Pin the pack exchange at cluster parallelism (r11): the keyed
-    # repartition IS the aggregate's exchange (same clustering, so the
-    # groupBy adds no second shuffle), but a user-specified partition
-    # count is exempt from AQE's byte-based coalescing — which
-    # otherwise shrinks the ~MB-sized packed table to a handful of
-    # partitions and serializes the probe stage's array_intersect work
-    # (profiled: 5 tasks × 2s on a 1.2M-edge graph; paired A/B
-    # 3.83 → 2.74s).  The intersect stage is CPU-dense per byte, the
-    # exact case byte-based coalescing mis-sizes.  Cores-count
-    # partitions keep per-task packed-array memory at
-    # O(nodes/cores · √m) — pass a larger count downstream if a
-    # billion-node graph ever exceeds task memory.
-    oriented = oriented.repartition(
-        pairs.sparkSession.sparkContext.defaultParallelism, "src"
-    )
     nbrs = oriented.groupBy(F.col("src").alias("node")).agg(
         F.collect_list("dst").alias("nb")
     )

@@ -20,7 +20,7 @@ exactly like the training layout they feed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .rank import global_prefix
@@ -31,21 +31,11 @@ def global_cumsum(
     order_cols: list[Column],
     value_col: str,
     out_col: str = "cumsum",
-    two_phase: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Attach the inclusive prefix sum of ``value_col`` under a total
     order (``order_cols`` must be deterministic and unique-prefixed,
     like global_row_number's)."""
-    if not two_phase:
-        return df.withColumn(
-            out_col,
-            F.sum(value_col).over(
-                Window.orderBy(*order_cols).rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            ),
-        )
     return global_prefix(df, order_cols, [value_col], None, num_partitions).withColumnRenamed(
         f"cum_{value_col}", out_col
     )

@@ -33,6 +33,21 @@ from pyspark.sql import functions as F
 from .materialize import materialize
 
 
+def _null_safe_join(left: DataFrame, right: DataFrame, on_keys: list[str]) -> DataFrame:
+    """Inner join of ``left`` with a broadcast ``right`` on ``on_keys``,
+    NULL-SAFE: groupBy treats NULL as a group (so F.percentile emits a
+    row for it), and a plain equi-join back to the data would silently
+    drop that whole group."""
+    rsel = right.select(
+        *[F.col(c).alias(f"__r_{c}") for c in on_keys],
+        *[c for c in right.columns if c not in on_keys],
+    )
+    cond = F.lit(True)
+    for c in on_keys:
+        cond = cond & F.col(c).eqNullSafe(F.col(f"__r_{c}"))
+    return left.join(F.broadcast(rsel), cond).drop(*[f"__r_{c}" for c in on_keys])
+
+
 def exact_percentiles_grouped(
     df: DataFrame,
     keys: list[str],
@@ -84,21 +99,6 @@ def exact_percentiles_grouped(
         )
     )
     counts = offsets.groupBy(*keys).agg(F.sum("__cnt").alias("__n"))
-
-    # joins back to the data must be NULL-SAFE on the keys: groupBy
-    # treats NULL as a group (so F.percentile emits a row for it), and
-    # a plain equi-join would silently drop that whole group
-    def _null_safe_join(left, right, on_keys):
-        rsel = right.select(
-            *[F.col(c).alias(f"__r_{c}") for c in on_keys],
-            *[c for c in right.columns if c not in on_keys],
-        )
-        cond = F.lit(True)
-        for c in on_keys:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__r_{c}"))
-        return left.join(F.broadcast(rsel), cond).drop(
-            *[f"__r_{c}" for c in on_keys]
-        )
 
     ranked = _null_safe_join(
         local, offsets.select("__pid", *keys, "__off"), ["__pid", *keys]
@@ -194,11 +194,11 @@ def weighted_median_grouped(
         )
     )
     totals = offsets.groupBy(*keys).agg(F.sum("__pw").alias("__W"))
-    joined = (
-        local.join(F.broadcast(offsets.select("__pid", *keys, "__off")), ["__pid", *keys])
-        .join(F.broadcast(totals), keys)
-        .withColumn("__cw", F.col("__lcw") + F.col("__off"))
-    )
+    joined = _null_safe_join(
+        _null_safe_join(local, offsets.select("__pid", *keys, "__off"), ["__pid", *keys]),
+        totals,
+        keys,
+    ).withColumn("__cw", F.col("__lcw") + F.col("__off"))
     return (
         joined.filter(F.lit(2) * F.col("__cw") >= F.col("__W"))
         .groupBy(*keys, "__W")

@@ -68,100 +68,30 @@ def fixed_histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     )
 
 
-def run_length_stats(
-    df: DataFrame,
-    order_cols: list,
-    value_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Run statistics of ``value_col`` under the table's storage order
-    (``order_cols``) — the RLE-encodability signal a storage advisor
-    needs: ``runs`` = number of maximal constant stretches, ``n`` =
-    rows, avg run length = n/runs.
-
-    The naive formulation is ``lag() over (ORDER BY …)`` — a global
-    unpartitioned window, the repo's forbidden single-task shape.
-    Two-phase instead: range-partition on the order (materialized —
-    one pinned execution, see rank.global_prefix), count value CHANGES
-    inside each partition with a pid-local window, then add the
-    partition-boundary changes by comparing each partition's FIRST
-    value with its predecessor's LAST (a partitions-sized table,
-    driver-free broadcast self-join).  runs = internal changes +
-    boundary changes + 1 (counted per non-empty partition and
-    reconciled: first partition contributes its leading run).
-    NULL-safe comparison throughout: NULL is a value, a NULL stretch
-    is a run.
-    """
-    from pyspark.sql import Window
-
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = materialize(
-        df.withColumn("__v", F.col(value_col)).repartitionByRange(n, *order_cols),
-        "run_length_stats",
-    )
-    pid = F.spark_partition_id()
-    w = Window.partitionBy(pid).orderBy(*order_cols)
-    local = parted.withColumn("__pid", pid).withColumn(
-        "__rn", F.row_number().over(w)
-    )
-    # a partition's first row never continues a run INSIDE the
-    # partition (its predecessor lives in the previous partition and
-    # is handled as a boundary below); NULL is a value — a NULL
-    # stretch is a run, so the comparison is null-safe
-    local = local.withColumn(
-        "__chg",
-        F.when(F.col("__rn") == 1, F.lit(0)).otherwise(
-            (~F.col("__v").eqNullSafe(F.lag("__v").over(w))).cast("int")
-        ),
-    )
-    per_pid = local.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__rows"),
-        F.sum("__chg").alias("__internal"),
-        F.min_by("__v", "__rn").alias("__first"),
-        F.max_by("__v", "__rn").alias("__last"),
-    )
-    # adjacency over NON-EMPTY partitions only: dense-sequence them
-    # first (per_pid is partitions-sized, so this unpartitioned window
-    # is bounded by construction), else an interior empty range
-    # partition would silently skip a boundary comparison
-    seq_w = Window.orderBy("__pid")
-    per_pid = per_pid.withColumn("__seq", F.row_number().over(seq_w))
-    nxt = per_pid.select(
-        (F.col("__seq") - 1).alias("__prev_seq"),
-        F.col("__first").alias("__next_first"),
-    )
-    joined = per_pid.join(
-        F.broadcast(nxt), per_pid["__seq"] == nxt["__prev_seq"], "left"
-    )
-    # boundary change between pid and pid+1 when last != next_first
-    boundary = joined.select(
-        "__rows",
-        "__internal",
-        F.when(
-            F.col("__next_first").isNotNull()
-            & ~F.col("__last").eqNullSafe(F.col("__next_first")),
-            1,
-        )
-        .otherwise(0)
-        .alias("__bchg"),
-    )
-    return boundary.agg(
-        F.sum("__rows").cast("bigint").alias("n"),
-        (F.sum("__internal") + F.sum("__bchg") + 1).cast("bigint").alias("runs"),
-    )
-
-
 def run_length_stats_multi(
     df: DataFrame,
     order_cols: list,
     value_cols: list[str],
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """``run_length_stats`` for several columns in ONE pass: one range
-    exchange, one pid-local window, per-column change counters and
-    boundary values — the advisor audits every column of a 100 TB
-    table for the price of a single shuffle instead of |columns|.
-    Returns one row per column: (col_name, n, runs).
+    """Run statistics of each of ``value_cols`` under the table's
+    storage order (``order_cols``) — the RLE-encodability signal a
+    storage advisor needs: ``runs`` = number of maximal constant
+    stretches, ``n`` = rows, avg run length = n/runs.  Returns one row
+    per column: (col_name, n, runs).
+
+    The naive formulation is ``lag() over (ORDER BY …)`` — a global
+    unpartitioned window, the repo's forbidden single-task shape.
+    Two-phase instead, every column in ONE pass: range-partition on the
+    order (materialized — one pinned execution, see rank.global_prefix),
+    count each column's value CHANGES inside each partition with one
+    pid-local window, then add the partition-boundary changes by
+    comparing each partition's FIRST value with its predecessor's LAST
+    (a partitions-sized table, driver-free broadcast self-join).  runs =
+    internal changes + boundary changes + 1.  NULL-safe comparison
+    throughout: NULL is a value, a NULL stretch is a run.  The advisor
+    audits every column of a 100 TB table for the price of a single
+    shuffle instead of |columns|.
     """
     from pyspark.sql import Window
 
@@ -185,6 +115,10 @@ def run_length_stats_multi(
             F.max_by(F.col(c), F.col("__rn")).alias(f"__last_{c}"),
         ]
     per_pid = local.groupBy("__pid").agg(*aggs)
+    # adjacency over NON-EMPTY partitions only: dense-sequence them
+    # first (per_pid is partitions-sized, so this unpartitioned window
+    # is bounded by construction), else an interior empty range
+    # partition would silently skip a boundary comparison
     seq_w = Window.orderBy("__pid")
     per_pid = per_pid.withColumn("__seq", F.row_number().over(seq_w))
     nxt = per_pid.select(
@@ -194,11 +128,13 @@ def run_length_stats_multi(
     joined = per_pid.join(
         F.broadcast(nxt), per_pid["__seq"] == nxt["__prev_seq"], "left"
     )
+    # a boundary exists where a next partition does (a NULL first value
+    # is still a value); the last partition's join finds none
     outs = []
     for c in value_cols:
         bchg = (
             F.when(
-                F.col(f"__next_first_{c}").isNotNull()
+                F.col("__prev_seq").isNotNull()
                 & ~F.col(f"__last_{c}").eqNullSafe(F.col(f"__next_first_{c}")),
                 1,
             )

@@ -12,9 +12,7 @@ the reference's ~5k movies, a straggler at 100 TB.
 3. add the broadcast prefix-sum of partition counts.
 
 One extra narrow pass over the data (the count aggregation) buys
-unbounded parallelism.  For small inputs (< ``small_threshold`` rows is
-checked lazily via a cheap partition heuristic — callers that KNOW the
-input is tiny can pass ``two_phase=False``) the plain window is used.
+unbounded parallelism.
 """
 
 from __future__ import annotations
@@ -29,7 +27,6 @@ def global_row_number(
     df: DataFrame,
     order_cols: list[Column],
     out_col: str = "rn",
-    two_phase: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Attach a 1-based global row number under a total order.
@@ -38,8 +35,6 @@ def global_row_number(
     column if the prefix is non-unique — otherwise, like the
     reference's SQL, ties get an arbitrary stable-only-per-plan order).
     """
-    if not two_phase:
-        return df.withColumn(out_col, F.row_number().over(Window.orderBy(*order_cols)))
     return global_prefix(df, order_cols, [], out_col, num_partitions)
 
 

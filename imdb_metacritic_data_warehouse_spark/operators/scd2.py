@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.keys import null_safe_neq_any
+
 OPEN_SENTINEL = "9999-12-31 00:00:00"
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
@@ -84,9 +86,7 @@ def scd2_apply(
             valid_to.alias(VALID_TO),
         )
 
-    changed = F.lit(False)
-    for a in attrs:
-        changed = changed | ~F.col(f"t.{a}").eqNullSafe(F.col(f"n.{a}"))
+    changed = null_safe_neq_any("t", "n", attrs)
 
     t_present = F.col(f"t.{pk}").isNotNull()
     n_present = F.col(f"n.{pk}").isNotNull()

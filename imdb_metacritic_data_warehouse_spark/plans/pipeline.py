@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import registry
 from ..operators.repair import repair_role_rotation
-from ..operators.scd2 import OPEN_SENTINEL, insert_only_merge, scd2_apply
+from ..operators.scd2 import insert_only_merge, scd2_apply
 from ..sources.bronze import read_bronze
 from ..sources.table import VersionedParquetTable
 from . import core as core_builders
@@ -107,15 +107,9 @@ class Warehouse:
         cols = [c for c, _ in spec.columns]
         if spec.scd2:
             merged = scd2_apply(target, snapshot, spec.pk, spec.attrs, batch_ts)
-            # partition open vs closed so readers can prune to open rows;
-            # the write still rewrites closed history (sources/table.py)
-            merged = merged.withColumn(
-                "is_open", F.col("valid_to") == F.lit(OPEN_SENTINEL).cast("timestamp")
-            )
-            tab.write(merged, partition_by=["is_open"])
         else:
             merged = insert_only_merge(target, snapshot, spec.pk, cols)
-            tab.write(merged)
+        tab.write(merged)
 
     def run_layer(self, schema: str, batch_ts: str) -> None:
         order = registry.STG_ORDER if schema == "stg" else registry.MART_ORDER

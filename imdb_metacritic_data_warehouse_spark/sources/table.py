@@ -23,12 +23,12 @@ file existed fall back to inference.  Spark's parquet reader skips
 Scale notes (100 TB):
 - Every merge rewrites the whole table: ``scd2_apply`` unions closed
   history back in and ``write`` puts all of it into the new version
-  directory, so merge cost is O(history), not O(open rows).  The SCD2
-  writer partitions by ``is_open`` so readers can prune to open rows;
-  carrying closed-history files forward by manifest instead of
-  rewriting them is ROADMAP item 4.
-- Version directories are plain parquet → vectorized scans, predicate
-  pushdown, and partition pruning all work unchanged.
+  directory, so merge cost is O(history), not O(open rows).  Each
+  version is one unpartitioned directory; carrying closed-history
+  files forward by manifest instead of rewriting them is ROADMAP
+  item 4.
+- Version directories are plain parquet → vectorized scans and
+  predicate pushdown work unchanged.
 """
 
 from __future__ import annotations
@@ -39,6 +39,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from ..functions.keys import null_safe_neq_any
 
 _POINTER = "_VERSION"
 _SCHEMA = "_schema.json"
@@ -72,23 +74,17 @@ class VersionedParquetTable:
     # -- IO -----------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame:
         """Read the committed version, or time-travel to an older one
-        still inside the retention window (``_gc`` keeps the last 2)."""
+        still inside the retention window (``_gc`` keeps the last 2).
+        Opens with the version's committed schema (no inference job)
+        when it has one."""
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"table {self.name} has no committed version")
-        if version is not None and not os.path.isdir(self._version_dir(version)):
+        out = self._version_dir(v)
+        if version is not None and not os.path.isdir(out):
             raise FileNotFoundError(
                 f"table {self.name} version {version} is gone (outside retention)"
             )
-        df = self._open(v)
-        # `is_open` is a physical partitioning column (open-vs-closed
-        # pruning for SCD2 merges), not part of the logical schema
-        return df.drop("is_open") if "is_open" in df.columns else df
-
-    def _open(self, v: int) -> DataFrame:
-        """Version ``v`` with its physical columns, opened with the
-        committed schema (no inference job) when the version has one."""
-        out = self._version_dir(v)
         try:
             with open(os.path.join(out, _SCHEMA)) as f:
                 schema = StructType.fromJson(json.load(f))
@@ -96,14 +92,11 @@ class VersionedParquetTable:
             return self.spark.read.parquet(out)
         return self.spark.read.schema(schema).parquet(out)
 
-    def write(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
+    def write(self, df: DataFrame) -> int:
         """Write a new version and commit it via atomic pointer rename."""
         v = (self.current_version() or 0) + 1
         out = self._version_dir(v)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(out)
+        df.write.mode("overwrite").parquet(out)
         with open(os.path.join(out, _SCHEMA), "w") as f:
             f.write(df.schema.json())
         tmp = self._pointer_path() + ".tmp"
@@ -116,14 +109,12 @@ class VersionedParquetTable:
     def compact(self, target_partitions: int = 1) -> int:
         """Rewrite the current version into ``target_partitions`` files —
         the small-files countermeasure.  Every SCD2 merge writes a fresh
-        version whose open partition can fragment into one file per
-        shuffle task; at cluster scale thousands of tiny files per table
-        degrade scan planning and NameNode/listing pressure, so compact
+        version that can fragment into one file per shuffle task; at
+        cluster scale thousands of tiny files per table degrade scan
+        planning and NameNode/listing pressure, so compact
         periodically (target ≈ table_bytes / 128 MB).  Runs through the
         same atomic commit as any write."""
-        df = self._open(self.current_version())
-        part = ["is_open"] if "is_open" in df.columns else None
-        return self.write(df.coalesce(target_partitions), partition_by=part)
+        return self.write(self.read().coalesce(target_partitions))
 
     def vacuum(self, retain: int = 2, orphan_age_seconds: float = 3600.0) -> list[str]:
         """Explicit maintenance sweep, the union of two cleanups ``_gc``
@@ -209,9 +200,7 @@ def version_diff(
     cols = new.columns
     attrs = [c for c in cols if c != pk]
     joined = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
-    changed = F.lit(False)
-    for a in attrs:
-        changed = changed | ~F.col(f"o.{a}").eqNullSafe(F.col(f"n.{a}"))
+    changed = null_safe_neq_any("o", "n", attrs)
     o_present = F.col(f"o.{pk}").isNotNull()
     n_present = F.col(f"n.{pk}").isNotNull()
     change_type = (

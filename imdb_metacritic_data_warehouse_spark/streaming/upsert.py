@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.keys import null_safe_neq_any
 from ..operators.scd2 import OPEN_SENTINEL, VALID_FROM, VALID_TO, stamp
 from ..sources.table import VersionedParquetTable
 
@@ -28,9 +29,10 @@ def scd2_upsert_batch(
     """Merge one micro-batch (keyed upserts, no vanished-key close-out)."""
     cols = [pk, *attrs]
     out_cols = [*cols, VALID_FROM, VALID_TO]
-    # last writer per key wins within the batch (deterministic: max ts wins,
-    # ties by attr order) — required because a micro-batch may carry several
-    # updates for one key
+    # one row per key: the merge's full-outer join needs a unique pk on
+    # the batch side.  An arbitrary row survives here, so a caller whose
+    # batch may hold several updates for one key compacts it first
+    # (``scd2_streaming_sink`` keeps each key's latest row by event time)
     dedup = batch_df.select(*cols).dropDuplicates([pk])
     new = stamp(dedup, batch_ts)
 
@@ -46,9 +48,7 @@ def scd2_upsert_batch(
     n = new.alias("n")
     joined = open_tgt.join(n, F.col(f"t.{pk}") == F.col(f"n.{pk}"), "full_outer")
 
-    changed = F.lit(False)
-    for a in attrs:
-        changed = changed | ~F.col(f"t.{a}").eqNullSafe(F.col(f"n.{a}"))
+    changed = null_safe_neq_any("t", "n", attrs)
     t_present = F.col(f"t.{pk}").isNotNull()
     n_present = F.col(f"n.{pk}").isNotNull()
     batch_lit = F.lit(batch_ts).cast("timestamp")
@@ -87,13 +87,20 @@ def scd2_streaming_sink(
     checkpoint: str | None = None,
 ):
     """Attach the SCD2 upsert as a ``foreachBatch`` sink; batch_ts =
-    max event time in the batch (deterministic for a given input)."""
+    max event time in the batch (deterministic for a given input).
+    Each key's latest row by ``ts_col`` is its new state, whatever its
+    position in the micro-batch."""
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
             return
         ts = batch_df.agg(F.max(ts_col)).collect()[0][0]
-        scd2_upsert_batch(table, batch_df, pk, attrs, str(ts))
+        latest = (
+            batch_df.groupBy(pk)
+            .agg(F.max_by(F.struct(*[F.col(a) for a in attrs]), F.col(ts_col)).alias("__last"))
+            .select(pk, "__last.*")
+        )
+        scd2_upsert_batch(table, latest, pk, attrs, str(ts))
 
     writer = stream_df.writeStream.foreachBatch(handle).outputMode("update")
     if checkpoint:

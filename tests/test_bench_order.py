@@ -1,10 +1,8 @@
-"""bench.py coverage contract (verdict r8 task #3 aftermath): the
-clean-record surface must cover EVERY registry query — the curated
-HEADLINE list drifts as waves land (r8's record missed waves 32-34,
-and the never-benched fuzzy_match_part_names hid a 49s tail until the
-first full-surface run).  bench.main() auto-extends its order with
-sorted registry-minus-HEADLINE names; these tests pin that logic and
-the frozen fixed45 yardstick."""
+"""bench.py coverage contract: the clean-record surface must cover EVERY
+registry query (a hand-maintained list once drifted as waves landed and
+hid a 49s tail).  bench.main() runs ``bench.bench_order``: registration
+order with the ``RUN_LAST`` batch at the tail; these tests pin that
+order and the frozen fixed45 yardstick."""
 
 import importlib.util
 import os
@@ -18,30 +16,19 @@ spec.loader.exec_module(bench)
 from imdb_metacritic_data_warehouse_spark import entry_queries as eq
 
 
-def _order(qs):
-    # mirror of bench.main()'s ordering logic
-    extra = sorted(set(qs) - set(bench.HEADLINE))
-    return (
-        [n for n in bench.HEADLINE if n not in bench.RUN_LAST]
-        + [n for n in extra if n not in bench.RUN_LAST]
-        + [n for n in bench.HEADLINE if n in bench.RUN_LAST]
-        + [n for n in extra if n in bench.RUN_LAST]
-    )
-
-
 def test_bench_order_covers_full_registry():
-    order = _order(eq.QUERIES)
+    order = bench.bench_order(eq.QUERIES)
     assert set(order) == set(eq.QUERIES)
     assert len(order) == len(eq.QUERIES)  # no duplicates
 
 
-def test_headline_names_all_registered():
-    unknown = [n for n in bench.HEADLINE if n not in eq.QUERIES]
+def test_run_last_names_all_registered():
+    unknown = [n for n in bench.RUN_LAST if n not in eq.QUERIES]
     assert not unknown, unknown
 
 
 def test_run_last_is_the_tail():
-    order = _order(eq.QUERIES)
+    order = bench.bench_order(eq.QUERIES)
     in_last = [n in bench.RUN_LAST for n in order]
     # once the heavy tail starts, it never yields back to light queries
     if True in in_last:

@@ -3,6 +3,7 @@ repetition stats — the round-3 training-data operators."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from imdb_metacritic_data_warehouse_spark.operators.dedup import decontaminate
@@ -22,11 +23,11 @@ def test_global_cumsum_matches_single_task_window(spark):
         r["id"]: r["cs"]
         for r in global_cumsum(df, [F.col("id")], "v", "cs").collect()
     }
+    # reference: the single-task unbounded-preceding window
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     one = {
         r["id"]: r["cs"]
-        for r in global_cumsum(
-            df, [F.col("id")], "v", "cs", two_phase=False
-        ).collect()
+        for r in df.withColumn("cs", F.sum("v").over(w)).collect()
     }
     assert two == one
 

@@ -762,13 +762,13 @@ def test_run_length_stats_no_global_window(spark):
     from pyspark.sql import functions as F
 
     from imdb_metacritic_data_warehouse_spark.operators.profile import (
-        run_length_stats,
+        run_length_stats_multi,
     )
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     plan, executed = _plans(
-        lambda: run_length_stats(
-            li, [F.col("l_orderkey").asc(), F.col("l_linenumber").asc()], "l_returnflag"
+        lambda: run_length_stats_multi(
+            li, [F.col("l_orderkey").asc(), F.col("l_linenumber").asc()], ["l_returnflag"]
         )
     )
     # data flows through the range exchange; the only unpartitioned

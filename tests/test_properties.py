@@ -258,7 +258,11 @@ def test_pareto_frontier_model_check(spark, rows):
 )
 @given(
     rows=st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 6), st.integers(1, 5)),
+        st.tuples(
+            st.one_of(st.none(), st.integers(0, 2)),  # NULL is a group too
+            st.integers(0, 6),
+            st.integers(1, 5),
+        ),
         min_size=1,
         max_size=25,
     )

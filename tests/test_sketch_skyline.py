@@ -219,13 +219,16 @@ def test_weighted_median_hand_case(spark):
         ("b", 5.0, 2), ("b", 7.0, 2),
         # group c: single row
         ("c", 9.0, 3),
+        # NULL key: a group of its own, like F.percentile's;
+        # 1(w2), 3(w1) -> half of 3 is 1.5, crossing at 1
+        (None, 1.0, 2), (None, 3.0, 1),
     ]
     df = spark.createDataFrame(rows, "k string, v double, w int")
     got = {
         r["k"]: (r["total_weight"], r["weighted_median"])
         for r in weighted_median_grouped(df, ["k"], "v", "w").collect()
     }
-    assert got == {"a": (12, 3.0), "b": (4, 5.0), "c": (3, 9.0)}
+    assert got == {"a": (12, 3.0), "b": (4, 5.0), "c": (3, 9.0), None: (3, 1.0)}
 
 
 def test_personalized_pagerank_localizes_mass(spark):
@@ -305,7 +308,7 @@ def test_run_length_stats_hand_case(spark):
     from pyspark.sql import functions as F
 
     from imdb_metacritic_data_warehouse_spark.operators.profile import (
-        run_length_stats,
+        run_length_stats_multi,
     )
 
     # order by i: values A A B B B A NULL NULL A -> runs = 5
@@ -313,27 +316,34 @@ def test_run_length_stats_hand_case(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "i int, v string"
     )
-    r = run_length_stats(df, [F.col("i").asc()], "v", num_partitions=4).collect()[0]
+    r = run_length_stats_multi(df, [F.col("i").asc()], ["v"], num_partitions=4).collect()[0]
     assert (r["n"], r["runs"]) == (9, 5)
 
     # single run across many partitions (boundaries must NOT split it)
     df2 = spark.range(1000).select(F.col("id").alias("i"), F.lit("x").alias("v"))
-    r2 = run_length_stats(df2, [F.col("i").asc()], "v", num_partitions=8).collect()[0]
+    r2 = run_length_stats_multi(df2, [F.col("i").asc()], ["v"], num_partitions=8).collect()[0]
     assert (r2["n"], r2["runs"]) == (1000, 1)
 
     # alternating values: every row its own run
     df3 = spark.range(100).select(
         F.col("id").alias("i"), (F.col("id") % 2).cast("string").alias("v")
     )
-    r3 = run_length_stats(df3, [F.col("i").asc()], "v", num_partitions=8).collect()[0]
+    r3 = run_length_stats_multi(df3, [F.col("i").asc()], ["v"], num_partitions=8).collect()[0]
     assert (r3["n"], r3["runs"]) == (100, 100)
+
+    # value and NULL alternating: a partition that starts with NULL
+    # still starts a new run
+    df4 = spark.range(100).select(
+        F.col("id").alias("i"), F.when(F.col("id") % 2 == 0, "x").alias("v")
+    )
+    r4 = run_length_stats_multi(df4, [F.col("i").asc()], ["v"], num_partitions=8).collect()[0]
+    assert (r4["n"], r4["runs"]) == (100, 100)
 
 
 def test_run_length_stats_multi_matches_single(spark):
     from pyspark.sql import functions as F
 
     from imdb_metacritic_data_warehouse_spark.operators.profile import (
-        run_length_stats,
         run_length_stats_multi,
     )
 
@@ -349,7 +359,8 @@ def test_run_length_stats_multi_matches_single(spark):
         ).collect()
     }
     for c in ["a", "b"]:
-        single = run_length_stats(
-            df, [F.col("i").asc()], c, num_partitions=6
+        single = run_length_stats_multi(
+            df, [F.col("i").asc()], [c], num_partitions=6
         ).collect()[0]
+        assert single["col_name"] == c
         assert multi[c] == (single["n"], single["runs"]), c

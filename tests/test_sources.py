@@ -101,10 +101,8 @@ def test_versioned_read_submits_no_spark_job(spark, tmp_path):
     import os
 
     tab = VersionedParquetTable(spark, str(tmp_path), "nojob")
-    df = spark.createDataFrame(
-        [("a", 1, True), ("b", 2, False)], "k string, n int, is_open boolean"
-    )
-    v = tab.write(df, partition_by=["is_open"])
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n int")
+    v = tab.write(df)
     with spark_jobs(spark) as jobs:
         back = tab.read()
         assert not jobs()
@@ -115,13 +113,13 @@ def test_versioned_read_submits_no_spark_job(spark, tmp_path):
     assert sorted((r.k, r.n) for r in tab.read().collect()) == [("a", 1), ("b", 2)]
 
 
-def test_empty_partitioned_version_reads_back(spark, tmp_path):
+def test_empty_version_reads_back(spark, tmp_path):
     """A zero-row SCD2-shaped write leaves no parquet file to infer a
     schema from; the committed schema still opens it, and compaction
     runs through it."""
     tab = VersionedParquetTable(spark, str(tmp_path), "empty")
-    df = spark.createDataFrame([], "k string, valid_from timestamp, is_open boolean")
-    tab.write(df, partition_by=["is_open"])
+    df = spark.createDataFrame([], "k string, valid_from timestamp")
+    tab.write(df)
     back = tab.read()
     assert back.schema.simpleString() == "struct<k:string,valid_from:timestamp>"
     assert back.count() == 0

@@ -168,6 +168,19 @@ def test_streaming_scd2_sink_end_to_end(spark, tmp_path):
     u2 = [r for r in rows if r.user_id == 2]
     assert len(u2) == 1 and str(u2[0].valid_to).startswith("9999")
 
+    # two updates for one key in one micro-batch, the older first in
+    # the file: the latest by ts is the key's new state
+    run_batch(
+        [(2, "silver", "2024-03-01 00:00:00"), (2, "platinum", "2024-03-02 00:00:00")],
+        "b3",
+    )
+    u2 = sorted(
+        [r for r in tab.read().collect() if r.user_id == 2], key=lambda r: str(r.valid_from)
+    )
+    assert [r.tier for r in u2] == ["bronze", "platinum"]
+    assert str(u2[0].valid_to) == str(u2[1].valid_from) == "2024-03-02 00:00:00"
+    assert str(u2[1].valid_to).startswith("9999")
+
 
 def test_stream_stream_interval_join(spark, tmp_path):
     from imdb_metacritic_data_warehouse_spark.streaming.joins import (
