@@ -1043,8 +1043,8 @@ def events_variant_stats(spark, sf_dir):
     )
 
 
-# Streaming-shaped windows, batch-checked (streaming/ has the readStream
-# twins; semantics identical per Structured Streaming's model).
+# Streaming-shaped windows (tumbling, sliding, session), computed in
+# batch over the events table.
 @query(
     "tumbling_window_events",
     """

@@ -793,9 +793,8 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
     path (round-3 shape) races when two processes run the same query
     concurrently — e.g. bench.py and check_oracle.py on one sf_dir both
     rmtree + rewrite the same version pointer (ADVICE r3).  mkdtemp
-    gives every invocation its own root; the bucketed catalog database
-    name is derived from this root (plans/pipeline.py), so catalog
-    entries isolate too.
+    gives every invocation its own root, so version pointers and
+    committed tables isolate too.
 
     Failure hygiene: _finish_scratch only runs on success, so a
     crashed/interrupted invocation abandons its dir.  Each call

@@ -538,7 +538,6 @@ def pagerank_parts_copurchase(spark, sf_dir):
         undirected_edges(pairs, "pa", "pb"),
         iters=3,
         damping=0.85,
-        broadcast_ranks=True,  # parts are dimension-sized
         checkpoint_every=0,  # 3 fixed rounds fuse into one job (r9 A/B)
         symmetric=True,  # undirected_edges guarantees the mirror
     )

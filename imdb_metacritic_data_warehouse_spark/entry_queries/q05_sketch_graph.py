@@ -200,9 +200,7 @@ def pareto_frontier_parts(spark, sf_dir):
 
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice", "p_size")
     return (
-        pareto_frontier_2d(
-            p, "p_retailprice", "p_size", broadcast_tiers=True  # 1k price tiers
-        )
+        pareto_frontier_2d(p, "p_retailprice", "p_size")  # 1k price tiers
         .select("p_partkey", "p_retailprice", "p_size")
         .orderBy("p_retailprice", "p_partkey")
     )
@@ -246,11 +244,7 @@ def bfs_khop_parts(spark, sf_dir):
     pairs = _copurchase_pairs(spark, sf_dir)
     edges = undirected_edges(pairs, "pa", "pb")
     seeds = edges.agg(F.min("src").alias("node"))
-    # broadcast_frontier: parts are dimension-sized, so the frontier /
-    # visited sets broadcast and the edge list is probed map-side every
-    # hop instead of being hash-shuffled (r10; the pagerank
-    # broadcast_ranks contract).
-    dists = bfs_distances(edges, seeds, max_hops=3, broadcast_frontier=True)
+    dists = bfs_distances(edges, seeds, max_hops=3)
     return (
         dists.groupBy("dist")
         .agg(
@@ -1146,13 +1140,9 @@ def ppr_parts_seeded(spark, sf_dir):
     # checkpoint_every=0: 3 fixed rounds fuse into one job; symmetric:
     # undirected_edges guarantees the mirror, so nodes ride the degree
     # aggregate (A/B r9 fresh-JVM best-of-3: 5.25s per-round-ckpt ->
-    # 3.53s min / ~4.4s median with these two).  checkpoint_edges stays
-    # True: the =False variant re-scans the parquet edge cache per
-    # round and measured LESS stable under ambient load (7.4s outlier)
-    # for no better floor.
+    # 3.53s min / ~4.4s median with these two).
     ranks = personalized_pagerank(
-        edges, seeds, iters=3, damping=0.85, broadcast_ranks=True,
-        checkpoint_every=0, symmetric=True,
+        edges, seeds, iters=3, damping=0.85, checkpoint_every=0, symmetric=True
     )
     return (
         ranks.filter(F.col("pr") > 0)

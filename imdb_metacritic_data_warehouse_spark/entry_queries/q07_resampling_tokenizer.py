@@ -78,11 +78,7 @@ def kcore_parts_copurchase(spark, sf_dir):
     from ..operators.graph import kcore_peel
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    # broadcast_survivors: parts are dimension-sized, so the per-round
-    # surviving-node set broadcasts and both semi-join filters run
-    # map-side — the edge list is never shuffled for the filter (r10;
-    # the pagerank broadcast_ranks contract).
-    return kcore_peel(pairs, k=3, rounds=6, broadcast_survivors=True)
+    return kcore_peel(pairs, k=3, rounds=6)
 
 
 # Deadline-bounded funnel — conversion counted only when the first
@@ -616,13 +612,10 @@ def label_propagation_parts(spark, sf_dir):
     from ..operators.graph import label_propagation
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    # broadcast_labels: parts are dimension-sized (the pagerank
-    # broadcast_ranks contract); distinct_pairs: the co-purchase
-    # builder emits DISTINCT (pa < pb) pairs, so round 1 reduces to a
-    # min-neighbor aggregate (provably identical — see operator).
-    lab = label_propagation(
-        pairs, rounds=3, broadcast_labels=True, distinct_pairs=True
-    )
+    # distinct_pairs: the co-purchase builder emits DISTINCT (pa < pb)
+    # pairs, so round 1 reduces to a min-neighbor aggregate (provably
+    # identical — see operator).
+    lab = label_propagation(pairs, rounds=3, distinct_pairs=True)
     return (
         lab.groupBy(F.col("label").alias("community"))
         .agg(

@@ -1427,11 +1427,7 @@ def hits_suppliers_parts(spark, sf_dir):
     edges = li.select(
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     ).distinct()
-    # broadcast_scores: suppliers and parts are dimension-sized, so
-    # the per-half-step score tables broadcast and the edge list is
-    # probed map-side, never shuffled (r10; the pagerank
-    # broadcast_ranks contract).
-    scored = hits_bipartite(edges, iters=2, broadcast_scores=True)
+    scored = hits_bipartite(edges, iters=2)
     # One integer total per role (2-row aggregate, broadcast back).
     totals = scored.groupBy("role").agg(F.sum("score").alias("t"))
     sn = scored.join(F.broadcast(totals), "role").select(

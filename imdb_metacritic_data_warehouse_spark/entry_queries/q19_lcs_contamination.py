@@ -1,10 +1,9 @@
 """Round-9 wave 35 — sequence/sample-level curation ops (verdict r8
 task #5): exact longest-common-substring per document pair (the
 deterministic pairwise complement to substring_dup_spans' per-doc
-view), eval-set contamination ATTRIBUTED to arrival waves (the batch
-twin of streaming/contamination.py's incrementally-maintained n-gram
-index), and per-domain calibration drift of the quality scorer
-(isotonic PAV per source vs the global fit).
+view), eval-set contamination ATTRIBUTED to arrival waves, and
+per-domain calibration drift of the quality scorer (isotonic PAV per
+source vs the global fit).
 """
 
 from __future__ import annotations
@@ -180,21 +179,18 @@ def lcs_doc_pairs_collapsed(spark, sf_dir):
     )
 
 
-# Contamination attributed to eval-set ARRIVAL WAVES — the batch twin
-# of streaming/contamination.py, where the benchmark arrives as a
-# stream (waves 0/1/2 = releases) and the persisted n-gram index tags
-# each shingle with the FIRST wave that contributed it (MIN-merge,
-# replay-idempotent).  Per corpus doc: distinct 5-gram count, hit
-# counts split by contributing wave, total overlap fraction — i.e.
-# not just "is this doc contaminated" but "which benchmark release
-# contaminated it", the question a dataset audit actually asks.  The
-# Spark side runs the REAL scoring path
-# (contamination_against_index) over the declaratively-built index;
-# tests/test_streaming.py pins the incrementally-merged index to this
-# batch result.  Scale: a real eval index is dimension-sized and
-# broadcasts; the hint is size-GATED (ADVICE r9) because THIS query's
-# synthetic eval set is a fixed 1/9 of the corpus, so at scale the
-# join degrades gracefully to one shingle-key shuffle per side.
+# Contamination attributed to eval-set ARRIVAL WAVES: the benchmark
+# arrives in releases (waves 0/1/2) and the n-gram index tags each
+# shingle with the FIRST wave that contributed it (MIN over waves).
+# Per corpus doc: distinct 5-gram count, hit counts split by
+# contributing wave, total overlap fraction — i.e. not just "is this
+# doc contaminated" but "which benchmark release contaminated it", the
+# question a dataset audit actually asks.  Scoring runs
+# operators/text.contamination_against_index.  Scale: a real eval
+# index is dimension-sized and broadcasts; the hint is size-GATED
+# (ADVICE r9) because THIS query's synthetic eval set is a fixed 1/9
+# of the corpus, so at scale the join degrades gracefully to one
+# shingle-key shuffle per side.
 @query(
     "contamination_wave_attribution_docs",
     """
@@ -231,18 +227,19 @@ def lcs_doc_pairs_collapsed(spark, sf_dir):
     """,
 )
 def contamination_wave_attribution_docs(spark, sf_dir):
-    from ..streaming.contamination import (
-        _shingles,
-        contamination_against_index,
-    )
+    from ..operators.text import contamination_against_index, tokens, word_shingles
 
     d = _t(spark, sf_dir, "documents")
-    ev = d.filter(F.col("doc_id") % 9 == 0).select(
-        (F.expr("doc_id div 9") % 3).cast("long").alias("wave"), "text"
+    ev = (
+        d.filter(F.col("doc_id") % 9 == 0)
+        .select(
+            (F.expr("doc_id div 9") % 3).cast("long").alias("wave"),
+            tokens(F.col("text")).alias("__w"),
+        )
+        .select("wave", F.explode(word_shingles(F.col("__w"), 5)).alias("s"))
     )
     index = (
-        _shingles(ev, n=5, text_col="text")
-        .groupBy("s")
+        ev.groupBy("s")
         .agg(F.min("wave").cast("bigint").alias("first_wave"))
     )
     return contamination_against_index(

@@ -20,6 +20,17 @@ On an UNDIRECTED graph (edges present in both directions, as
 no dangling-mass term — the simple update above conserves probability
 exactly.  For directed graphs with sinks, add the dangling term before
 reusing this.
+
+Every iterative operator here broadcasts its per-round NODE-sized
+table (ranks, frontier and visited set, k-core survivors, labels, HITS
+scores, ``pareto_frontier_2d``'s tiers in operators/skyline.py): every
+graph the engine builds is dimension-sized (parts, suppliers), and a
+broadcast turns each per-round edges⋈nodes join into a map-side hash
+probe, so the edge list is never shuffled for it.  Materialized frames
+lose their size stats, so without the explicit hint Spark shuffles the
+full edge list every round (measured 2× on the co-purchase graph).  A
+billion-node graph, whose node tables are data-sized, would need these
+joins to shuffle on the node key instead.
 """
 
 from __future__ import annotations
@@ -42,7 +53,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    broadcast_ranks: bool = False,
     checkpoint_every: int = 1,
     symmetric: bool = False,
 ) -> DataFrame:
@@ -52,15 +62,6 @@ def pagerank(
     SQL-oracle-expressible (the DuckDB twin unrolls the same
     iterations); production runs would iterate to an L1 tolerance the
     same way connected_components loops to a fixpoint.
-
-    ``broadcast_ranks``: the per-iteration rank table is one (node, pr)
-    row per node.  On dimension-sized graphs (parts, products — up to
-    ~10M nodes) broadcasting it turns the per-iteration edges⋈ranks
-    shuffle into a map-side hash join — checkpointed frames lose their
-    size stats, so without the explicit hint Spark shuffles the full
-    edge list every round (measured 2× on the co-purchase graph).
-    Leave False for billion-node graphs: both sides then shuffle on
-    the node key.
 
     ``checkpoint_every`` / ``symmetric``: same semantics as
     :func:`personalized_pagerank` — 0 fuses the fixed small-``iters``
@@ -100,7 +101,7 @@ def pagerank(
         rd = ranks.join(degr, ranks["node"] == degr["rsrc"]).select(
             "rsrc", (F.col("pr") / F.col("__od")).alias("c")
         )
-        r = F.broadcast(rd) if broadcast_ranks else rd
+        r = F.broadcast(rd)
         er = edges.select(F.col("src").alias("esrc"), F.col("dst").alias("edst"))
         contrib = (
             er.join(r, er["esrc"] == r["rsrc"])
@@ -108,8 +109,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        if broadcast_ranks:
-            contrib = F.broadcast(contrib)
+        contrib = F.broadcast(contrib)
         ranks = (
             nodes.join(contrib, "node", "left")
             .select(
@@ -226,7 +226,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    broadcast_frontier: bool = False,
 ) -> DataFrame:
     """Minimum hop distance from a seed set, bounded at ``max_hops`` —
     the "blast radius" primitive (recall expansion from a labeled set,
@@ -246,23 +245,19 @@ def bfs_distances(
     for the undirected read.  ``seeds``: one column ``node``.
     Returns (node, dist) for every node within ``max_hops``.
 
-    ``broadcast_frontier``: frontier and visited are NODE-dimension-
-    sized; on dimension-sized graphs broadcasting them makes both the
-    expansion join and the anti-join map-side, so the edge list is
-    never shuffled — the only exchange per hop is the ``distinct`` on
-    the (node-bounded) next frontier (the pagerank ``broadcast_ranks``
-    contract; leave False for billion-node graphs).
+    Frontier and visited broadcast, so both the expansion join and the
+    anti-join run map-side — the only exchange per hop is the
+    ``distinct`` on the (node-bounded) next frontier.
     """
-    _b = F.broadcast if broadcast_frontier else (lambda df: df)
     visited = seeds.select("node", F.lit(0).alias("dist")).distinct()
     visited = materialize(visited, "bfs_distances.visited", eager=False)
     frontier = visited.select("node")
     for hop in range(1, max_hops + 1):
         nxt = (
-            edges.join(_b(frontier.withColumnRenamed("node", "src")), "src")
+            edges.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(_b(visited.select("node")), "node", "left_anti")
+            .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .withColumn("dist", F.lit(hop))
         )
         nxt = materialize(nxt, "bfs_distances.nxt", eager=False)
@@ -276,10 +271,8 @@ def personalized_pagerank(
     seeds: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    broadcast_ranks: bool = False,
     checkpoint_every: int = 1,
     symmetric: bool = False,
-    checkpoint_edges: bool = True,
 ) -> DataFrame:
     """Personalized PageRank — teleport mass returns to the SEED set
     instead of spreading uniformly, turning global importance into
@@ -308,15 +301,8 @@ def personalized_pagerank(
     emits): the node set then EQUALS the out-degree table's keys, so
     the separate union+distinct shuffle over 2|E| rows is elided and
     ``nodes`` rides the degree aggregate.
-
-    ``checkpoint_edges=False`` skips the eager edge materialization —
-    right when ``edges`` is already a cheap re-scannable source (a
-    committed parquet edge cache): the file bounds the lineage, and
-    re-scanning per round costs less than writing 2|E| checkpoint
-    blocks up front.
     """
-    if checkpoint_edges:
-        edges = materialize(edges, "personalized_pagerank.edges")
+    edges = materialize(edges, "personalized_pagerank.edges")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     deg = materialize(deg, "personalized_pagerank.deg")
     if symmetric:
@@ -349,7 +335,7 @@ def personalized_pagerank(
         rd = ranks.join(degr, ranks["node"] == degr["rsrc"]).select(
             "rsrc", (F.col("pr") / F.col("__od")).alias("c")
         )
-        r = F.broadcast(rd) if broadcast_ranks else rd
+        r = F.broadcast(rd)
         er = edges.select(F.col("src").alias("esrc"), F.col("dst").alias("edst"))
         contrib = (
             er.join(r, er["esrc"] == r["rsrc"])
@@ -357,8 +343,7 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        if broadcast_ranks:
-            contrib = F.broadcast(contrib)
+        contrib = F.broadcast(contrib)
         ranks = (
             nodes.join(contrib, "node", "left")
             .join(F.broadcast(r0), "node", "left")
@@ -421,7 +406,6 @@ def kcore_peel(
     rounds: int = 6,
     a: str = "pa",
     b: str = "pb",
-    broadcast_survivors: bool = False,
 ) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly drop nodes with degree
     < k and the edges touching them.  ``rounds`` is FIXED (not
@@ -436,15 +420,10 @@ def kcore_peel(
     where ``converged`` compares the node count after round ``rounds``
     against round ``rounds``−1.
 
-    ``broadcast_survivors``: the per-round surviving-node set is
-    NODE-dimension-sized (one row per node with degree ≥ k).  On
-    dimension-sized graphs (parts, products — the broadcast_ranks
-    contract in :func:`pagerank`) broadcasting it turns BOTH semi-join
-    filters into map-side hash probes, so the edge list is never
-    shuffled for the filter — only the degree aggregate moves data
-    (one 2|E| shuffle per round instead of three E-sized ones).  Leave
-    False for billion-node graphs, where the node set itself is data-
-    sized and the semi-joins should co-partition."""
+    The per-round surviving-node set broadcasts, so BOTH semi-join
+    filters are map-side hash probes and only the degree aggregate
+    moves data (one 2|E| shuffle per round instead of three E-sized
+    ones)."""
     edges = pairs.select(F.col(a).alias("pa"), F.col(b).alias("pb"))
     prev_nodes = None
     for r in range(rounds):
@@ -455,8 +434,7 @@ def kcore_peel(
             .filter(F.col("d") >= k)
             .select(F.col("src").alias("node"))
         )
-        if broadcast_survivors:
-            deg = F.broadcast(deg)
+        deg = F.broadcast(deg)
         edges = (
             edges.join(deg.withColumnRenamed("node", "pa"), "pa", "left_semi")
             .join(deg.withColumnRenamed("node", "pb"), "pb", "left_semi")
@@ -509,7 +487,6 @@ def label_propagation(
     rounds: int = 3,
     a: str = "pa",
     b: str = "pb",
-    broadcast_labels: bool = False,
     distinct_pairs: bool = False,
 ) -> DataFrame:
     """Fixed-round synchronous label propagation (Raghavan 2007) —
@@ -530,12 +507,7 @@ def label_propagation(
     row_number window re-shuffled AND sorted the count rows.  Lineage
     is cut every other round with localCheckpoint (the CC discipline),
     so the plan never compounds across rounds.  Returns (v, label).
-
-    ``broadcast_labels``: the per-round label table is one (node,
-    label) row per node — on dimension-sized graphs broadcasting it
-    makes the edges⋈labels join map-side (the pagerank
-    ``broadcast_ranks`` contract); leave False for billion-node
-    graphs.
+    The per-round label table broadcasts into the edges⋈labels join.
 
     ``distinct_pairs``: declares the input a DISTINCT (a < b) pair
     list (what the co-purchase builder emits).  Round 1 then needs no
@@ -560,9 +532,9 @@ def label_propagation(
             .select("v", F.col("v").alias("label"))
         )
     for r in range(start, rounds):
-        labside = lab.select(F.col("v").alias("src"), F.col("label").alias("nl"))
-        if broadcast_labels:
-            labside = F.broadcast(labside)
+        labside = F.broadcast(
+            lab.select(F.col("v").alias("src"), F.col("label").alias("nl"))
+        )
         cnt = (
             und.join(labside, "src")
             .groupBy(F.col("dst").alias("v"), F.col("nl").alias("label"))
@@ -586,9 +558,7 @@ def label_propagation(
     return lab
 
 
-def hits_bipartite(
-    edges: DataFrame, iters: int = 2, broadcast_scores: bool = False
-) -> DataFrame:
+def hits_bipartite(edges: DataFrame, iters: int = 2) -> DataFrame:
     """HITS hubs & authorities over a directed bipartite edge list
     (src → dst), e.g. supplier → supplied-part: a good hub points at
     good authorities and vice versa (Kleinberg's mutual-reinforcement
@@ -615,24 +585,17 @@ def hits_bipartite(
     scored side + one aggregate keyed on the other side — node-keyed
     shuffles only, no global state; `iters` is small and fixed so the
     DuckDB oracle unrolls the same algebra.  Returns
-    (node, role['hub'|'authority'], score bigint).
-
-    ``broadcast_scores``: both score tables are NODE-dimension-sized
-    (suppliers / parts); on dimension-sized graphs broadcasting them
-    makes every edges⋈scores join map-side, so the edge list is never
-    shuffled — only the per-half-step aggregate moves data (the
-    pagerank ``broadcast_ranks`` contract; leave False for data-sized
-    node sets).
+    (node, role['hub'|'authority'], score bigint).  Both score tables
+    broadcast, so only the per-half-step aggregate moves data.
     """
     edges = materialize(edges, "hits_bipartite.edges")
     hubs = edges.select(F.col("src").alias("node")).distinct()
     h = hubs.select("node", F.lit(1).cast("long").alias("score"))
     a = None
-    _b = F.broadcast if broadcast_scores else (lambda df: df)
     for _ in range(iters):
         a = materialize(
             edges.join(
-                _b(h.select(F.col("node").alias("src"), "score")), "src"
+                F.broadcast(h.select(F.col("node").alias("src"), "score")), "src"
             )
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("score").alias("score")),
@@ -640,7 +603,7 @@ def hits_bipartite(
         )
         h = materialize(
             edges.join(
-                _b(a.select(F.col("node").alias("dst"), "score")), "dst"
+                F.broadcast(a.select(F.col("node").alias("dst"), "score")), "dst"
             )
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("score").alias("score")),

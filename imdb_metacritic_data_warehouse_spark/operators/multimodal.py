@@ -9,10 +9,11 @@ columns, and partitioning on ``media_type``/date keeps scans selective.
 
 Decode / feature-extraction run as Arrow-batched ``mapInPandas``
 operators: whole binary batches cross the JVM↔Python boundary once per
-batch (not per row).  The actual codecs (PIL/ffmpeg/etc.) are NOT in
-this container, so ``decode_image`` raises ``NotImplementedError`` by
-design; ``fake_decode`` is the deterministic stand-in that keeps the
-plumbing (schema, batching, partitioning) fully testable.
+batch (not per row).  Compressed codecs (PIL/ffmpeg/etc.) are not
+dependencies, so ``extract_features``' ``_fake_feature`` is the
+deterministic stand-in that keeps the plumbing (schema, batching,
+partitioning) testable; the raw-raster formats (PPM, PGM, BMP, WAV)
+decode for real with numpy alone.
 """
 
 from __future__ import annotations
@@ -22,25 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = "doc_id long, media_type string, n_bytes long, checksum string, feature array<double>"
 
@@ -59,51 +41,6 @@ def attach_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.lit(64).alias("height"),
             F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
         ).alias("meta"),
-    )
-
-
-def read_media_dir(
-    spark,
-    path: str,
-    glob: str = "*",
-    media_type: str = "application/octet-stream",
-) -> DataFrame:
-    """Ingest a directory of raw media files through Spark's
-    ``binaryFile`` source into the media-frame shape the rest of the
-    multimodal stack consumes (``extract_features`` / ``frame_sample``).
-
-    This is the object-store ingestion path — each file becomes one row
-    (path, modificationTime, length, content) read in parallel across
-    executors; ``doc_id`` derives from the stable hash of the file path
-    so re-ingesting the same listing is idempotent.  Partition count
-    follows ``spark.sql.files.maxPartitionBytes`` like any file scan,
-    so a 100 TB media lake shards across the cluster with no driver
-    listing bottleneck beyond the initial file index."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return raw.select(
-        F.xxhash64(F.col("path")).alias("doc_id"),
-        F.col("content"),
-        F.lit(media_type).alias("media_type"),
-        F.struct(
-            F.lit(-1).alias("width"),
-            F.lit(-1).alias("height"),
-            F.col("length").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-        F.col("path").alias("source_path"),
-    )
-
-
-def decode_image(content: bytes):  # pragma: no cover - intentional stub
-    """Real image decode — requires PIL/libvips, absent in this
-    environment.  The Spark-side contract (binary in, array out) is
-    exercised through ``fake_decode``."""
-    raise NotImplementedError(
-        "image codecs are not available in this container; "
-        "swap in PIL.Image.open(io.BytesIO(content)) in a full deployment"
     )
 
 
@@ -142,42 +79,14 @@ def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     return media.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """'Frame sampling' plumbing demo: slice the binary payload at
-    fixed strides (a video decoder would emit frames here); shows
-    binary slicing stays JVM-side via ``substring`` on binary."""
-    return media.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.octet_length("content") - 1) / every_n_bytes, F.lit(0)
-                    ).cast("int"),
-                ),
-                lambda i: F.substring(
-                    F.col("content"), (i * every_n_bytes + 1).cast("int"), every_n_bytes
-                ),
-            )
-        ).alias("frame_idx", "frame_bytes"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # REAL decode path for a codec-free format: binary PPM (P6).
 #
-# The container has no PIL/ffmpeg, so compressed formats stay stubbed
-# (``decode_image`` above) — but P6 PPM is a pure header + raw RGB
-# layout that numpy decodes by itself, which makes the WHOLE pipeline
-# (binary column → Arrow batch → decode → per-image features) real for
-# at least one format instead of a fake end to end.
+# With no PIL/ffmpeg, compressed formats have no decoder — but P6 PPM
+# is a pure header + raw RGB layout that numpy decodes by itself, which
+# makes the WHOLE pipeline (binary column → Arrow batch → decode →
+# per-image features) real instead of a fake end to end.
 # ---------------------------------------------------------------------------
-
-IMAGE_STATS_SCHEMA = (
-    "doc_id long, width int, height int, "
-    "mean_r double, mean_g double, mean_b double"
-)
 
 
 def encode_ppm(arr) -> bytes:
@@ -216,39 +125,6 @@ def decode_ppm(content: bytes):
         raise ValueError(f"only maxval=255 supported, got {maxval}")
     arr = np.frombuffer(content, dtype=np.uint8, offset=i, count=w * h * 3)
     return w, h, arr.reshape(h, w, 3)
-
-
-def image_stats(media: DataFrame) -> DataFrame:
-    """Per-image dimensions + channel means via REAL PPM decode,
-    Arrow-batched: each ``mapInPandas`` batch decodes whole columns of
-    binary payloads Python-side exactly once.  Rows whose payload is
-    not valid P6 yield NULL stats (bad media never kills the batch —
-    the permissive-read discipline every large media corpus needs)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": pdf["doc_id"], "width": [], "height": [],
-                    "mean_r": [], "mean_g": [], "mean_b": []}
-            for content in pdf["content"]:
-                try:
-                    w, h, arr = decode_ppm(bytes(content))
-                    means = arr.reshape(-1, 3).mean(axis=0)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(float(means[0]))
-                    rows["mean_g"].append(float(means[1]))
-                    rows["mean_b"].append(float(means[2]))
-                except (ValueError, IndexError):
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["mean_r"].append(None)
-                    rows["mean_g"].append(None)
-                    rows["mean_b"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.select("doc_id", "content").mapInPandas(
-        op, schema=IMAGE_STATS_SCHEMA
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -324,7 +200,7 @@ def decode_wav(content: bytes):
 
 def audio_stats(media: DataFrame) -> DataFrame:
     """Per-clip sample rate / duration / RMS / peak via REAL WAV
-    decode, Arrow-batched like ``image_stats``; non-WAV payloads yield
+    decode, Arrow-batched like ``image_stats_any``; non-WAV payloads yield
     NULL stats (permissive-read — bad media never kills the batch)."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -362,7 +238,7 @@ def audio_stats(media: DataFrame) -> DataFrame:
 # a codec library — PGM is the single-channel twin of P6, and BMP adds
 # the three honest quirks of a real container: BGR byte order, 4-byte
 # row stride padding, and bottom-up row storage.  ``sniff_format`` +
-# the widened ``image_stats`` give the ingest path one mixed-format
+# ``image_stats_any`` give the ingest path one mixed-format
 # binary column, which is how a real media lake arrives.
 # ---------------------------------------------------------------------------
 

@@ -31,24 +31,6 @@ def hash_bucket(id_col: Column) -> Column:
     ).cast("int")
 
 
-def deterministic_sample(df: DataFrame, id_col: str, fraction: float) -> DataFrame:
-    """Keep ~``fraction`` of rows, decided by id hash."""
-    return df.filter(hash_bucket(F.col(id_col)) < int(fraction * _BUCKETS))
-
-
-def stratified_sample(
-    df: DataFrame, id_col: str, strata_col: str, fractions: dict[str, float]
-) -> DataFrame:
-    """Per-stratum deterministic sampling (class rebalancing): strata
-    absent from ``fractions`` are dropped."""
-    expr = None
-    b = hash_bucket(F.col(id_col))
-    for value, frac in fractions.items():
-        cond = (F.col(strata_col) == value) & (b < int(frac * _BUCKETS))
-        expr = cond if expr is None else (expr | cond)
-    return df.filter(expr if expr is not None else F.lit(False))
-
-
 def balanced_resample(df: DataFrame, id_col: str, strata_col: str) -> DataFrame:
     """Temperature-0.5 stratum rebalancing (the domain/language mixing
     step of corpus assembly): expected kept rows per stratum become
@@ -56,9 +38,8 @@ def balanced_resample(df: DataFrame, id_col: str, strata_col: str) -> DataFrame:
     without flattening to uniform — keep_rate(s) = √(min_count /
     count_s), so the rarest stratum keeps everything.
 
-    Unlike ``stratified_sample`` the rates are DATA-DERIVED (one
-    stratum-count aggregate, broadcast back — strata are few by
-    definition) yet still deterministic: membership is the same
+    The rates are DATA-DERIVED (one stratum-count aggregate, broadcast
+    back — strata are few by definition) yet still deterministic: membership is the same
     content-hash bucket test.  √ of an exact integer ratio is correctly
     rounded in IEEE 754, and the bucket threshold floors it — both
     engines compute bit-identical thresholds, so the kept SET (not just

@@ -77,7 +77,9 @@ def scd2_apply(
 
     t = open_tgt.alias("t")
     n = new_stamped.alias("n")
-    joined = t.join(n, F.col(f"t.{pk}") == F.col(f"n.{pk}"), "full_outer")
+    # NULL-safe key match: a NULL pk is one key like any other, so its
+    # open row closes or survives instead of never matching itself.
+    joined = t.join(n, F.col(f"t.{pk}").eqNullSafe(F.col(f"n.{pk}")), "full_outer")
 
     def row_struct(prefix: str, valid_from, valid_to):
         return F.struct(
@@ -88,8 +90,9 @@ def scd2_apply(
 
     changed = null_safe_neq_any("t", "n", attrs)
 
-    t_present = F.col(f"t.{pk}").isNotNull()
-    n_present = F.col(f"n.{pk}").isNotNull()
+    # presence from a column never NULL on its side (the pk may be)
+    t_present = F.col(f"t.{VALID_FROM}").isNotNull()
+    n_present = F.col(f"n.{VALID_FROM}").isNotNull()
     batch_lit = F.lit(batch_ts).cast("timestamp")
 
     t_open = row_struct("t", F.col(f"t.{VALID_FROM}"), F.col(f"t.{VALID_TO}"))

@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from .materialize import materialize
 
-N_PLANES = 8
-
 
 def _dot(a, b):
     """Sequential double-precision dot product (order-stable)."""
@@ -108,27 +106,6 @@ def _plane_weights(plane: int, dims: int) -> list[float]:
         1.0 if hashlib.md5(f"{i}#{plane}".encode()).hexdigest()[0] in "02468ace" else -1.0
         for i in range(dims)
     ]
-
-
-def hyperplane_sign(vec, plane: int, dims: int = 64) -> F.Column:
-    """Sign bit of ``vec`` against pseudo-random hyperplane ``plane``."""
-    weights = F.array(*[F.lit(w) for w in _plane_weights(plane, dims)])
-    proj = F.aggregate(
-        F.zip_with(vec, weights, lambda x, w: x.cast("double") * w),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_bucket(vec, table: int, n_planes: int = N_PLANES) -> F.Column:
-    """Concatenated sign bits of hash-table ``table`` → bucket id."""
-    return F.concat(
-        *[
-            hyperplane_sign(vec, table * 1000 + p).cast("string")
-            for p in range(n_planes)
-        ]
-    )
 
 
 def ivf_index(
@@ -325,7 +302,7 @@ def _sign_buckets(
     only (vec_id, tbl, bucket) — callers that dedup candidate PAIRS
     before scoring want id-only rows through that shuffle).
 
-    ``hyperplane_sign``'s ``aggregate(zip_with(...))`` is a higher-order
+    A per-plane ``aggregate(zip_with(...))`` sign is a higher-order
     function — Spark interprets its lambda per element, and n_tables ×
     n_planes separate chains made bucket assignment the dominant (and
     jittery) cost.  Here: ONE ``posexplode`` of the vector, then a
@@ -374,27 +351,6 @@ def _sign_buckets(
         return tb
     vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     return tb.join(vecs, "vec_id")
-
-
-def knn_planes_for(n_vectors: int, target_bucket: int = 128) -> int:
-    """Plane count that holds expected LSH bucket size near
-    ``target_bucket``: buckets per table = 2^planes, so planes =
-    ceil(log2(N / target)).  The candidate-pair count of ``knn_graph``
-    is Σ|bucket|² ≈ N²/2^planes — FIXED planes make the graph build
-    quadratic as the corpus grows; scaling planes with log₂(N) keeps
-    it linear in N at constant recall-per-table (add tables to buy
-    recall back).  This is the knob a 100 TB run must turn.
-
-    >>> knn_planes_for(2_000, 125)
-    4
-    >>> knn_planes_for(32_000, 125)
-    8
-    """
-    import math
-
-    if n_vectors <= target_bucket:
-        return 1
-    return max(1, math.ceil(math.log2(n_vectors / target_bucket)))
 
 
 def knn_graph(

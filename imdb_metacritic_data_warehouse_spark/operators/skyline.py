@@ -75,24 +75,18 @@ def strict_prefix_max(
     )
 
 
-def pareto_frontier_2d(
-    df: DataFrame, cost_col: str, gain_col: str, broadcast_tiers: bool = False
-) -> DataFrame:
+def pareto_frontier_2d(df: DataFrame, cost_col: str, gain_col: str) -> DataFrame:
     """Rows not dominated under (minimize ``cost_col``, maximize
-    ``gain_col``).  Input columns pass through unchanged.
-
-    ``broadcast_tiers``: hint the tier table onto the probe side —
-    right only when distinct-cost cardinality is dimension-sized
-    (otherwise the equi-join shuffles, which is the safe default).
+    ``gain_col``).  Input columns pass through unchanged.  The tier
+    table broadcasts onto the probe side, so the caller's distinct-cost
+    cardinality must be dimension-sized.
     """
     tiers = df.groupBy(cost_col).agg(F.max(gain_col).alias("__tier_max"))
     tiers = strict_prefix_max(
         tiers, [F.col(cost_col).asc()], "__tier_max", out_col="__prev_max"
     )
-    if broadcast_tiers:
-        tiers = F.broadcast(tiers)
     survivors = (
-        df.join(tiers, cost_col)
+        df.join(F.broadcast(tiers), cost_col)
         .filter(
             (F.col("__prev_max").isNull() | (F.col("__prev_max") < F.col(gain_col)))
             & (F.col("__tier_max") == F.col(gain_col))

@@ -538,6 +538,73 @@ def contamination_overlap(
     )
 
 
+# An eval-set index up to this many shingles is broadcast into the
+# scoring join of ``contamination_against_index``; a larger one joins by
+# a plain shuffle on the shingle.
+_INDEX_BROADCAST_MAX_ROWS = 2_000_000
+
+
+def contamination_against_index(
+    docs,
+    index,
+    n: int = 5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_waves: int = 3,
+):
+    """Score a corpus against a wave-attributed eval n-gram index
+    ``(s, first_wave)``: per doc, distinct n-gram count, per-wave hit
+    counts, and the overlap fraction — ``contamination_overlap`` with
+    each hit attributed to the eval release that first contained it.
+
+    A REAL eval-set index is dimension-sized (benchmarks are thousands
+    of documents, not corpus-proportional) and broadcasting it removes
+    the shingle shuffle — but the hint is GATED on the index's actual
+    row count (ADVICE r9): ``contamination_wave_attribution_docs``
+    builds its eval set as a fixed FRACTION of the corpus, so an
+    unconditional broadcast would scale linearly with input.  The count
+    is one scalar aggregate over the materialized, shingle-grained
+    index; above ``_INDEX_BROADCAST_MAX_ROWS`` the join falls back to a
+    plain shuffle join on the shingle key — uniform, one exchange per
+    side.
+    """
+    dsh = (
+        docs.select(id_col, tokens(F.col(text_col)).alias("__w"))
+        .select(id_col, F.explode(word_shingles(F.col("__w"), n)).alias("s"))
+        .distinct()
+    )
+    # Materialize the index so the sizing count and the join read ONE
+    # materialization instead of rebuilding the index plan twice.
+    index = materialize(index, "contamination_against_index.index")
+    # 1-row scalar on the materialized index — not a data pull.
+    small = index.count() <= _INDEX_BROADCAST_MAX_ROWS
+    hit = dsh.join(F.broadcast(index) if small else index, "s", "left")
+    aggs = [
+        F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
+        *[
+            F.sum(F.when(F.col("first_wave") == w, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"hits_w{w}")
+            for w in range(n_waves)
+        ],
+        F.sum(F.when(F.col("first_wave").isNotNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("hits"),
+    ]
+    return (
+        hit.groupBy(id_col)
+        .agg(*aggs)
+        .select(
+            id_col,
+            "n_shingles",
+            *[f"hits_w{w}" for w in range(n_waves)],
+            F.round(
+                F.col("hits").cast("double") / F.col("n_shingles").cast("double"), 6
+            ).alias("overlap_frac"),
+        )
+    )
+
+
 def quality_logit_score(df, id_col: str = "doc_id", text_col: str = "text"):
     """Deployed-classifier quality gate: a fixed-weight logistic model
     over four engineered signals (token count, punctuation ratio,
@@ -611,16 +678,17 @@ def bpe_pair_counts(df, text_col: str = "text"):
     return pairs.groupBy("pair").agg(F.sum("c").alias("cnt"))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (array<string>); fewer than ``n`` words →
-    one shingle of the whole text.
+def word_shingles(words: Column, n: int = 3) -> Column:
+    """Word n-gram shingles (array<string>) of a ``tokens`` array
+    column; fewer than ``n`` words → one shingle of the whole text.
 
-    NB: ``transform``/``slice`` are higher-order functions — Spark
-    evaluates their lambdas interpreted, outside whole-stage codegen.
-    Fine for array-valued use sites; the minhash hot path uses the
-    row-based ``shingle_rows`` below instead (measured ~2× on the
-    shingle stage at sf0.1)."""
-    words = tokens(text)
+    Pass a column that already holds the tokens, not a ``tokens(...)``
+    expression: the slice lambda would re-tokenize the text once per
+    shingle.  ``transform``/``slice`` are higher-order functions —
+    Spark evaluates their lambdas interpreted, outside whole-stage
+    codegen.  Fine for array-valued use sites; the minhash hot path
+    uses the row-based ``shingle_rows`` below instead (measured ~2× on
+    the shingle stage at sf0.1)."""
     return F.when(
         F.size(words) < n, F.array(F.array_join(words, " "))
     ).otherwise(

@@ -45,14 +45,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Equi-join of two co-bucketed tables — plans with zero Exchange
-    on either side when bucket specs match."""
-    return spark.table(left_table).join(spark.table(right_table), key)
-
-
 class BucketedVersionedTable:
     """Versioned table whose versions are BUCKETED catalog tables —
     a storage layout for big tables whose joins should co-locate

@@ -185,9 +185,9 @@ def version_diff(
     applying the feed to ``v_from`` reproduces ``v_to`` exactly.
 
     Defaults compare the previous committed version against the current
-    one (both must still be inside the retention window).  Scale: the
-    pk join is the only shuffle, and at 100 TB both sides share the
-    table's layout, so a bucketed-by-pk table diffs Exchange-free."""
+    one (both must still be inside the retention window).  Keys match
+    NULL-safely, so a NULL pk diffs like any other key.  Scale: the pk
+    join is the only shuffle."""
     from pyspark.sql import functions as F
 
     cur = table.current_version()
@@ -195,14 +195,16 @@ def version_diff(
         raise FileNotFoundError(f"table {table.name} has no committed version")
     v_to = cur if v_to is None else v_to
     v_from = v_to - 1 if v_from is None else v_from
-    old = table.read(v_from).alias("o")
-    new = table.read(v_to).alias("n")
+    new = table.read(v_to)
     cols = new.columns
     attrs = [c for c in cols if c != pk]
-    joined = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
+    # presence markers: never NULL on their own side, unlike the pk
+    old = table.read(v_from).withColumn("__in_o", F.lit(True)).alias("o")
+    new = new.withColumn("__in_n", F.lit(True)).alias("n")
+    joined = old.join(new, F.col(f"o.{pk}").eqNullSafe(F.col(f"n.{pk}")), "full_outer")
     changed = null_safe_neq_any("o", "n", attrs)
-    o_present = F.col(f"o.{pk}").isNotNull()
-    n_present = F.col(f"n.{pk}").isNotNull()
+    o_present = F.col("o.__in_o").isNotNull()
+    n_present = F.col("n.__in_n").isNotNull()
     change_type = (
         F.when(~o_present, F.lit("insert"))
         .when(~n_present, F.lit("delete"))

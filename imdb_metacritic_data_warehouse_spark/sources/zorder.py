@@ -5,8 +5,9 @@ key and none on any other.  Interleaving the bits of two keys into a
 Morton code and range-partitioning on THAT gives useful locality on
 both: a predicate on either dimension (or a rectangle on both) touches
 only the files whose z-range intersects it — the standard
-Delta/Iceberg `OPTIMIZE ZORDER BY` layout, here as a plain parquet
-write-path operator.
+Delta/Iceberg `OPTIMIZE ZORDER BY` layout.  ``zorder_pruning_audit``
+(entry_queries/q05) builds that layout from ``z_value_scaled`` and
+reports each file's min/max box against a rectangle predicate.
 
 Parquet then prunes at two levels for free: file-level via min/max
 file statistics and row-group-level via the reader's predicate
@@ -17,7 +18,7 @@ Columns are min/max-normalized to the full ``bits`` range before
 interleaving: with raw values, the wider-cardinality column owns all
 the high interleave bits and the narrow column degrades to a suffix
 (no locality).  The min/max pair per column is four scalars computed
-once at write time — the same tiny stats pass every table format's
+once by the caller — the same tiny stats pass every table format's
 OPTIMIZE does; the z expression itself is assembled as ONE SQL string
 (NOTES.md: >100 literal sub-expressions built from Python Column ops
 put plan construction ahead of execution).
@@ -25,7 +26,7 @@ put plan construction ahead of execution).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -57,37 +58,3 @@ def z_value_scaled(
         terms.append(f"shiftleft(shiftright({b}, {j}) & 1, {2 * j + 1})")
     return F.expr(" + ".join(terms))
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the
-    z-curve of (col_a, col_b): min/max the two columns (one tiny stats
-    aggregate), range-partition on the z-value (sampled split points —
-    skew-resistant, same machinery as a global sort), then sort within
-    each partition so min/max stats stay tight inside every file."""
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).collect()[0]
-    if lo_a is None or lo_b is None:
-        # an all-NULL clustering column has no range to interleave —
-        # fail loudly rather than TypeError-ing in int() below
-        bad = col_a if lo_a is None else col_b
-        raise ValueError(
-            f"write_zordered: column {bad!r} is entirely NULL; "
-            "pick a non-null clustering key or filter first"
-        )
-    z = z_value_scaled(col_a, int(lo_a), int(hi_a), col_b, int(lo_b), int(hi_b), bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -1,16 +1,13 @@
-"""As-of / range join unit tests + bootstrap catalog test."""
+"""As-of / range join unit tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from imdb_metacritic_data_warehouse_spark.bootstrap import bootstrap, struct_type_for
 from imdb_metacritic_data_warehouse_spark.operators.asof import (
     asof_join,
     range_join_bucketed,
 )
-from imdb_metacritic_data_warehouse_spark.plans.pipeline import Warehouse
-from imdb_metacritic_data_warehouse_spark.registry import ALL_SPECS
 
 
 def _ts(spark, rows, schema):
@@ -57,23 +54,6 @@ def test_range_join_bucketed(spark):
         left, right, "user_id", "click_ts", "purchase_ts", range_seconds=3600
     ).collect()
     assert [r.purchase_id for r in out] == [10]
-
-
-def test_bootstrap_catalog_and_empty_tables(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "bronze"), str(tmp_path / "wh"))
-    catalog = bootstrap(spark, wh)
-    assert "stg.movie_hub" in catalog and "movie_raw_data_imdb" in catalog
-    # SCD2 tables get validity columns in their declared schema
-    sat = catalog["stg.movie_info_sat"]
-    assert "valid_from" in sat.fieldNames() and "valid_to" in sat.fieldNames()
-    # empty v1 tables materialized with correct schema, idempotent
-    t = wh.table("stg", "movie_hub")
-    assert t.exists() and t.read().count() == 0
-    v1 = t.current_version()
-    bootstrap(spark, wh)
-    assert t.current_version() == v1
-    for (schema, table), spec in ALL_SPECS.items():
-        assert struct_type_for(spec).fieldNames()[0] == spec.columns[0][0]
 
 
 def test_asof_join_right_tiebreak_is_deterministic(spark):

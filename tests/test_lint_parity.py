@@ -6,6 +6,7 @@ must flag every one.  The repo itself must lint clean — that's the
 standing gate that keeps the seven NOTES rules mechanical.
 """
 
+import ast
 import io
 import os
 import re
@@ -137,3 +138,78 @@ def test_materialization_has_one_module():
                 with open(path) as fh:
                     found += [f"{rel}: {ln}" for ln in _materialization_calls(fh.read())]
     assert found == [], "pin plans through operators.materialize.materialize"
+
+
+# Every top-level package function or class needs a caller outside the
+# tests: a query builder, the Warehouse, bench.py, __spark_entry__.py,
+# tools/ or perfbench/.  A name reached only by its own body, an
+# ``__all__`` list, a package ``__init__`` re-export or a test is dead
+# code.  Registered ``@query`` builders are reached through the registry.
+_REPO = os.path.join(os.path.dirname(__file__), "..")
+_PKG = "imdb_metacritic_data_warehouse_spark"
+_CALLER_ROOTS = (_PKG, "tools", "perfbench", "bench.py", "__spark_entry__.py")
+
+
+def _py_sources():
+    for root in _CALLER_ROOTS:
+        path = os.path.join(_REPO, root)
+        if path.endswith(".py"):
+            yield root, path
+            continue
+        for dirpath, _dirs, files in os.walk(path):
+            for name in sorted(files):
+                if name.endswith(".py") and not name.startswith("test_"):
+                    full = os.path.join(dirpath, name)
+                    yield os.path.relpath(full, _REPO), full
+
+
+def _referenced_names(node, skip_imports: bool) -> set[str]:
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias) and not skip_imports:
+            names.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            names.add(n.value)  # getattr-style lookups
+    return names
+
+
+def _is_all(stmt) -> bool:
+    return isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    )
+
+
+def _is_query(fn) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in fn.decorator_list
+    )
+
+
+def _uncalled_package_names() -> list[str]:
+    defined: dict[str, list[str]] = {}
+    used: set[str] = set()
+    for rel, path in _py_sources():
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        in_pkg = rel.startswith(_PKG + os.sep)
+        reexports = in_pkg and rel.endswith("__init__.py")
+        for stmt in tree.body:
+            if _is_all(stmt):
+                continue
+            own = None
+            if in_pkg and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not _is_query(stmt):
+                own = stmt.name
+                defined.setdefault(own, []).append(f"{rel}:{stmt.lineno} {own}")
+            used |= _referenced_names(stmt, reexports) - {own}
+    return sorted(loc for name, locs in defined.items() if name not in used for loc in locs)
+
+
+def test_every_package_function_has_a_caller():
+    assert _uncalled_package_names() == []

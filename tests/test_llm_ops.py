@@ -16,9 +16,7 @@ from imdb_metacritic_data_warehouse_spark.operators.dedup import (
 )
 from imdb_metacritic_data_warehouse_spark.operators.multimodal import (
     attach_media,
-    decode_image,
     extract_features,
-    frame_sample,
 )
 from imdb_metacritic_data_warehouse_spark.operators.similarity import (
     cosine_topk,
@@ -130,16 +128,6 @@ def test_multimodal_plumbing(spark):
     import hashlib
     assert feats[1].checksum == hashlib.md5(b"hello world").hexdigest()
 
-    frames = frame_sample(media, every_n_bytes=64).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[1]) == 1 and len(by_doc[2]) == 4  # 200 bytes → 4 strides
-    assert bytes(by_doc[1][0].frame_bytes) == b"hello world"
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
 
 def test_embedding_neardup(spark):
     from imdb_metacritic_data_warehouse_spark.operators.dedup import embedding_neardup
@@ -181,28 +169,17 @@ def test_ivf_topk(spark):
 
 
 def test_deterministic_sampling(spark):
-    from imdb_metacritic_data_warehouse_spark.operators.sampling import (
-        deterministic_sample,
-        hash_split,
-        stratified_sample,
-    )
+    from imdb_metacritic_data_warehouse_spark.operators.sampling import hash_split
 
-    df = spark.range(1000).select(F.col("id"), (F.col("id") % 2 == 0).cast("string").alias("cls"))
-    s1 = {r.id for r in deterministic_sample(df, "id", 0.3).collect()}
-    s2 = {r.id for r in deterministic_sample(df.repartition(7), "id", 0.3).collect()}
-    assert s1 == s2  # partitioning-independent
-    assert 200 < len(s1) < 400
-    # nested fractions: a 10% sample is a subset of the 30% sample
-    s_small = {r.id for r in deterministic_sample(df, "id", 0.1).collect()}
-    assert s_small <= s1
+    df = spark.range(1000)
     splits = hash_split(df, "id", {"train": 0.8, "test": 0.2})
     tr = {r.id for r in splits["train"].collect()}
     te = {r.id for r in splits["test"].collect()}
     assert tr.isdisjoint(te) and len(tr) + len(te) == 1000
-    strat = stratified_sample(df, "id", "cls", {"true": 0.5, "false": 0.1})
-    got = strat.groupBy("cls").count().collect()
-    by_cls = {r.cls: r["count"] for r in got}
-    assert by_cls["true"] > by_cls["false"]
+    assert 700 < len(tr) < 900
+    # membership is a function of the id, not of the partitioning
+    again = hash_split(df.repartition(7), "id", {"train": 0.8, "test": 0.2})
+    assert {r.id for r in again["train"].collect()} == tr
 
 
 def test_ann_recall_floor(spark, sf_dir):
@@ -315,7 +292,7 @@ def test_ppm_roundtrip_and_image_stats(spark):
     from imdb_metacritic_data_warehouse_spark.operators.multimodal import (
         decode_ppm,
         encode_ppm,
-        image_stats,
+        image_stats_any,
     )
 
     imgs = []
@@ -337,9 +314,10 @@ def test_ppm_roundtrip_and_image_stats(spark):
     media = spark.createDataFrame(
         rows, "doc_id long, content binary, media_type string"
     )
-    got = {r.doc_id: r for r in image_stats(media).collect()}
+    got = {r.doc_id: r for r in image_stats_any(media).collect()}
     for doc_id, arr in imgs:
         r = got[doc_id]
+        assert r.format == "ppm"
         assert (r.width, r.height) == (arr.shape[1], arr.shape[0])
         means = arr.reshape(-1, 3).mean(axis=0)
         assert abs(r.mean_r - means[0]) < 1e-9
@@ -582,25 +560,6 @@ def test_bpe_pair_counts_hand_check(spark):
     got = {r.pair: r.cnt for r in bpe_pair_counts(docs).collect()}
     # 'aaab' occurs twice -> pairs aa (x2 per word), ab (x1 per word)
     assert got == {"aa": 4, "ab": 2, "cd": 1}
-
-
-def test_knn_planes_for_keeps_buckets_bounded():
-    from imdb_metacritic_data_warehouse_spark.operators.similarity import (
-        knn_planes_for,
-    )
-
-    # expected bucket size N / 2^planes stays within [target/2, target]
-    for n in (1_000, 10_000, 1_000_000, 10**9):
-        planes = knn_planes_for(n, 128)
-        assert n / (2**planes) <= 128
-        assert n / (2**planes) > 32  # not over-split either
-    # candidate pairs N^2 / 2^planes grow ~linearly in N with this rule
-    import math
-
-    for n in (10**6, 16 * 10**6):
-        planes = knn_planes_for(n, 128)
-        pairs_per_vec = n / (2**planes)
-        assert pairs_per_vec <= 128  # bounded per-vector work
 
 
 def test_session_new_operators_handle_empty_inputs(spark):
@@ -1181,45 +1140,6 @@ def test_gram_upper_cells_overflow_safe_blocks(spark):
                 sum(int(a) * int(b) for a, b in zip(Q[:, i], Q[:, j]))
             )
     assert got == expect
-
-
-def test_read_media_dir_binaryfile_ingest(spark, tmp_path):
-    """Raw-file ingestion through the binaryFile source must feed the
-    same downstream contract as parquet-embedded media: stable hashed
-    doc_ids, exact byte payloads, and features from extract_features."""
-    import numpy as np
-
-    from imdb_metacritic_data_warehouse_spark.operators.multimodal import (
-        decode_ppm,
-        encode_ppm,
-        extract_features,
-        read_media_dir,
-    )
-
-    rng = np.random.default_rng(3)
-    payloads = {}
-    for name in ["a.ppm", "b.ppm"]:
-        arr = rng.integers(0, 255, size=(4, 3, 3), dtype=np.uint8)
-        data = encode_ppm(arr)
-        (tmp_path / name).write_bytes(data)
-        payloads[name] = data
-    (tmp_path / "ignore.txt").write_bytes(b"not media")
-
-    media = read_media_dir(spark, str(tmp_path), glob="*.ppm", media_type="image/ppm")
-    rows = media.collect()
-    assert len(rows) == 2  # glob filtered the .txt out
-    by_name = {r.source_path.rsplit("/", 1)[-1]: r for r in rows}
-    for name, data in payloads.items():
-        assert bytes(by_name[name].content) == data
-        w, h, _ = decode_ppm(bytes(by_name[name].content))
-        assert (w, h) == (3, 4)
-    # ids are stable across re-ingestion (idempotent re-list)
-    again = {r.source_path: r.doc_id for r in read_media_dir(
-        spark, str(tmp_path), glob="*.ppm").collect()}
-    assert {r.source_path: r.doc_id for r in rows} == again
-    feats = extract_features(media.select("doc_id", "content", "media_type"))
-    assert feats.count() == 2
-    assert all(len(r.feature) == 4 for r in feats.collect())
 
 
 def test_vacuum_removes_stale_and_orphans(spark, tmp_path):

@@ -116,10 +116,7 @@ def test_scd2_merge_single_shuffle_join(spark):
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
-    from imdb_metacritic_data_warehouse_spark.sources.bucketed import (
-        bucketed_join,
-        write_bucketed,
-    )
+    from imdb_metacritic_data_warehouse_spark.sources.bucketed import write_bucketed
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
@@ -133,7 +130,9 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "bucket_test.li_b", "bucket_test.o_b", "l_orderkey")
+        joined = spark.table("bucket_test.li_b").join(
+            spark.table("bucket_test.o_b"), "l_orderkey"
+        )
         plan = _plan(joined)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert "Exchange hashpartitioning" not in plan

@@ -93,6 +93,25 @@ def test_scd2_invariants(spark):
             assert cur.valid_from >= prev.valid_to
 
 
+def test_scd2_null_pk_is_one_key(spark):
+    """A NULL pk matches its own open row: a changed attr closes the
+    old row and opens the new one, like any other key."""
+    out = run_batches(
+        spark,
+        [
+            (T0, [("k1", "x"), (None, "y")]),
+            (T1, [("k1", "x"), (None, "z")]),
+        ],
+    ).collect()
+    got = {(r.pk, r.attr, str(r.valid_from)[:10], str(r.valid_to)[:10]) for r in out}
+    assert got == {
+        (None, "y", "2024-01-01", "2024-02-01"),
+        (None, "z", "2024-02-01", "9999-12-31"),
+        ("k1", "x", "2024-01-01", "9999-12-31"),
+    }
+    assert len(out) == 3
+
+
 def test_insert_only_merge_appends_new_keys_once(spark):
     b1 = spark.createDataFrame([("k1", "a"), (None, "nullrow")], "pk string, v string")
     b2 = spark.createDataFrame([("k1", "CHANGED"), ("k2", "b"), (None, "nullrow2")],

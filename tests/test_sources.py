@@ -1,67 +1,14 @@
-"""Connector and schema-evolution tests (S8/S9/S13, ddl.py:492-520)."""
+"""Versioned-table, change-feed and schema-evolution tests (S9/S13,
+ddl.py:492-520)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from imdb_metacritic_data_warehouse_spark.plans.pipeline import align_to_spec
-from imdb_metacritic_data_warehouse_spark.registry import ALL_SPECS, TableSpec
-from imdb_metacritic_data_warehouse_spark.sources.bronze import BRONZE_SCHEMAS
-from imdb_metacritic_data_warehouse_spark.sources.connectors import (
-    read_csv,
-    read_jdbc,
-    read_json,
-    write_csv,
-    write_json,
-)
+from imdb_metacritic_data_warehouse_spark.registry import TableSpec
 from imdb_metacritic_data_warehouse_spark.sources.table import VersionedParquetTable
 from tests.fixtures import spark_jobs
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    schema = BRONZE_SCHEMAS["actor_raw_data_imdb"]
-    df = spark.createDataFrame(
-        [("Heat", 170, "Al Pacino", "NaN", "actor")], schema
-    )
-    write_csv(df, str(tmp_path / "csv"))
-    back = read_csv(spark, str(tmp_path / "csv"), schema)
-    assert back.collect() == df.collect()
-
-
-def test_json_roundtrip(spark, tmp_path):
-    schema = BRONZE_SCHEMAS["movie_raw_data_imdb"]
-    df = spark.createDataFrame(
-        [("http://x", "Heat", None, "1995", "R", "8.3", "['Crime']", None, None, "170")],
-        schema,
-    )
-    write_json(df, str(tmp_path / "json"))
-    back = read_json(spark, str(tmp_path / "json"), schema)
-    assert back.collect() == df.collect()
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from imdb_metacritic_data_warehouse_spark.sources.connectors import (
-        read_orc,
-        write_orc,
-    )
-
-    df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    write_orc(df, str(tmp_path / "orc"))
-    back = read_orc(spark, str(tmp_path / "orc"))
-    assert back.count() == 100
-    filtered = back.filter(F.col("k") > 90).select("k")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    # ORC scans get the same pushdown/pruning treatment as parquet
-    assert "PushedFilters" in plan and "GreaterThan(k" in plan
-    assert filtered.count() == 9
-
-
-def test_jdbc_fails_cleanly_without_driver(spark):
-    with pytest.raises(Exception):
-        read_jdbc(spark, "jdbc:postgresql://localhost/x", "t").collect()
 
 
 def test_align_to_spec_add_retype_drop(spark):
@@ -92,6 +39,26 @@ def test_versioned_table_atomic_swap_and_gc(spark, tmp_path):
     import os
     dirs = sorted(d for d in os.listdir(tab.path) if d.startswith("v="))
     assert dirs == ["v=3", "v=4"]
+
+
+def test_versioned_table_crash_safety(spark, tmp_path):
+    """An orphan version directory (crash after data write, before
+    pointer swap) must be invisible to readers and harmless to the next
+    writer."""
+    import os
+
+    tab = VersionedParquetTable(spark, str(tmp_path), "t")
+    tab.write(spark.createDataFrame([(1, "a")], "id long, x string"))
+    # simulate a crashed writer: v=2 data exists, pointer still says 1
+    spark.createDataFrame([(99, "junk")], "id long, x string").write.parquet(
+        os.path.join(tab.path, "v=2")
+    )
+    assert tab.current_version() == 1
+    assert [r.id for r in tab.read().collect()] == [1]
+    # next commit overwrites the orphan and swaps atomically
+    tab.write(spark.createDataFrame([(2, "b")], "id long, x string"))
+    assert tab.current_version() == 2
+    assert [r.id for r in tab.read().collect()] == [2]
 
 
 def test_versioned_read_submits_no_spark_job(spark, tmp_path):
@@ -127,61 +94,6 @@ def test_empty_version_reads_back(spark, tmp_path):
     assert tab.read().schema == back.schema and tab.read().count() == 0
 
 
-def test_python_datasource_synthetic_events(spark):
-    """Spark 4 Python DataSource API: deterministic generator source,
-    partitioned executor-side (no driver materialization)."""
-    from imdb_metacritic_data_warehouse_spark.sources.synthetic import register
-
-    register(spark)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", 1000)
-        .option("n_partitions", 4)
-        .option("n_users", 10)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 1000
-    assert df.select("event_id").distinct().count() == 1000
-    # deterministic: a second read produces identical rows
-    df2 = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", 1000)
-        .option("n_partitions", 4)
-        .option("n_users", 10)
-        .load()
-    )
-    assert df.exceptAll(df2).count() == 0
-    users = df.select("user_id").distinct().count()
-    assert users == 10
-
-
-def test_export_jsonl_shards_deterministic_and_balanced(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from imdb_metacritic_data_warehouse_spark.sources.connectors import (
-        export_jsonl_shards,
-    )
-
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("t"), F.col("id")).alias("text")
-    )
-    p1, p2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    export_jsonl_shards(df, p1, 8, "doc_id", salt="v1")
-    export_jsonl_shards(df, p2, 8, "doc_id", salt="v1")
-
-    back = spark.read.json(p1)
-    assert back.count() == 2000
-    sizes = {r.shard: r.n for r in back.groupBy("shard").agg(F.count("*").alias("n")).collect()}
-    assert len(sizes) == 8
-    assert max(sizes.values()) < 2 * min(sizes.values())  # salted md5 balance
-
-    # deterministic: identical shard assignment across exports
-    a = {(r.doc_id, r.shard) for r in back.collect()}
-    b = {(r.doc_id, r.shard) for r in spark.read.json(p2).collect()}
-    assert a == b
-
-
 def test_version_diff_apply_reproduces_target(spark, tmp_path):
     """Applying the change feed to v1 must reproduce v2 exactly:
     (v1 − deleted − updated-old) ∪ (inserts + update-new rows) == v2."""
@@ -213,6 +125,22 @@ def test_version_diff_apply_reproduces_target(spark, tmp_path):
     assert {(r.id, r.val) for r in applied.collect()} == {
         (r.id, r.val) for r in t.read(2).collect()
     }
+
+
+def test_version_diff_null_pk_is_one_key(spark, tmp_path):
+    """A NULL pk matches itself across versions: an unchanged NULL-pk
+    row is no change, and a changed one is one update, not a spurious
+    insert plus delete."""
+    from imdb_metacritic_data_warehouse_spark.sources.table import version_diff
+
+    t = VersionedParquetTable(spark, str(tmp_path), "cdf_null")
+    rows = [(1, "a"), (None, "n")]
+    t.write(spark.createDataFrame(rows, "id long, val string"))
+    t.write(spark.createDataFrame(rows, "id long, val string"))
+    assert version_diff(t, "id").collect() == []
+    t.write(spark.createDataFrame([(1, "a"), (None, "m")], "id long, val string"))
+    got = {(r.change_type, r.id, r.val) for r in version_diff(t, "id").collect()}
+    assert got == {("update", None, "m")}
 
 
 def test_dq_report_counts_each_rule_class(spark):

@@ -89,31 +89,6 @@ def test_hierarchy_rollup_matches_bruteforce(spark):
     assert got == {a: tuple(v) for a, v in want.items()}
 
 
-def test_cdc_upsert_batch_replay_is_idempotent(spark, tmp_path):
-    """Replaying the SAME micro-batch (checkpoint re-delivery) leaves
-    the table unchanged — the net-effect normalization makes re-applied
-    I/U/D a fixpoint."""
-    from imdb_metacritic_data_warehouse_spark.sources.table import (
-        VersionedParquetTable,
-    )
-    from imdb_metacritic_data_warehouse_spark.streaming.upsert import cdc_upsert_batch
-
-    tab = VersionedParquetTable(spark, str(tmp_path / "t"), "acct")
-    b0 = spark.createDataFrame(
-        [(1, "a", "I", 1), (2, "b", "I", 2)], "k long, v string, op string, seq long"
-    )
-    b1 = spark.createDataFrame(
-        [(1, "a2", "U", 3), (2, None, "D", 4), (3, "c", "I", 5)],
-        "k long, v string, op string, seq long",
-    )
-    cdc_upsert_batch(tab, b0, "k")
-    cdc_upsert_batch(tab, b1, "k")
-    state1 = sorted((r.k, r.v) for r in tab.read().collect())
-    cdc_upsert_batch(tab, b1, "k")  # replay
-    state2 = sorted((r.k, r.v) for r in tab.read().collect())
-    assert state1 == state2 == [(1, "a2"), (3, "c")]
-
-
 def test_isotropy_extremes(spark):
     """Participation ratio hits its analytic extremes: orthogonal
     one-hot rows → PR = dims; rank-1 (all rows identical) → PR = 1."""

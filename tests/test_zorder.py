@@ -12,10 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from imdb_metacritic_data_warehouse_spark.sources.zorder import (
-    write_zordered,
-    z_value_scaled,
-)
+from imdb_metacritic_data_warehouse_spark.sources.zorder import z_value_scaled
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 N_FILES = 8
@@ -42,7 +39,20 @@ def test_second_dimension_predicate_touches_fewer_files(spark, tmp_path):
         "l_orderkey", "l_partkey", "l_quantity"
     )
     zpath, kpath = str(tmp_path / "z"), str(tmp_path / "k")
-    write_zordered(li, zpath, "l_orderkey", "l_partkey", n_files=N_FILES)
+    # z-clustered: range-partition on the Morton code of both keys, sort
+    # within each file so its min/max stats stay tight
+    lo_a, hi_a, lo_b, hi_b = li.agg(
+        F.min("l_orderkey"), F.max("l_orderkey"), F.min("l_partkey"), F.max("l_partkey")
+    ).collect()[0]
+    z = z_value_scaled("l_orderkey", lo_a, hi_a, "l_partkey", lo_b, hi_b)
+    (
+        li.withColumn("__z", z)
+        .repartitionByRange(N_FILES, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite")
+        .parquet(zpath)
+    )
     # baseline: clustered on the FIRST key only — perfect for orderkey
     # predicates, blind to partkey
     (

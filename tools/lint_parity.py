@@ -219,7 +219,7 @@ def run(verbose: bool = True) -> list[tuple[str, str, str]]:
 
     pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "imdb_metacritic_data_warehouse_spark")
-    for sub in ("operators", "functions", "streaming", "plans", "sources"):
+    for sub in ("operators", "functions", "plans", "sources"):
         d = os.path.join(pkg, sub)
         for f in sorted(os.listdir(d)):
             if f.endswith(".py"):
