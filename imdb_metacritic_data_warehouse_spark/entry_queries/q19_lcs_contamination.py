@@ -227,23 +227,21 @@ def lcs_doc_pairs_collapsed(spark, sf_dir):
     """,
 )
 def contamination_wave_attribution_docs(spark, sf_dir):
-    from ..operators.text import contamination_against_index, tokens, word_shingles
+    from ..operators.text import contamination_against_index, contamination_shingles
 
     d = _t(spark, sf_dir, "documents")
-    ev = (
-        d.filter(F.col("doc_id") % 9 == 0)
-        .select(
-            (F.expr("doc_id div 9") % 3).cast("long").alias("wave"),
-            tokens(F.col("text")).alias("__w"),
-        )
-        .select("wave", F.explode(word_shingles(F.col("__w"), 5)).alias("s"))
+    ev = contamination_shingles(
+        d.filter(F.col("doc_id") % 9 == 0).select(
+            (F.expr("doc_id div 9") % 3).cast("long").alias("wave"), "text"
+        ),
+        "wave",
     )
     index = (
         ev.groupBy("s")
         .agg(F.min("wave").cast("bigint").alias("first_wave"))
     )
     return contamination_against_index(
-        d.select("doc_id", "text"), index, n=5, n_waves=3
+        d.select("doc_id", "text"), index
     ).orderBy("doc_id")
 
 

@@ -20,6 +20,10 @@ reference, both deliberate and documented:
 - **Null-safe change detection**: the reference's dynamic ``l.a != t.a
   or ...`` predicate (``ddl.py:532-534``) treats value↔NULL transitions
   as "unchanged"; we use ``<=>`` so they close/open correctly.
+- **NULL pks**: the reference's ``=`` join never matches a NULL pk, so
+  its NULL-pk rows never close and are re-inserted open every batch;
+  here a NULL-pk row matches an identical open row and otherwise
+  closes or opens like a vanished or new key.
 
 Scale design (100 TB): ONE shuffle.  Open target rows and the new
 snapshot are joined full-outer on the (md5-uniform, skew-free) pk; each
@@ -77,9 +81,15 @@ def scd2_apply(
 
     t = open_tgt.alias("t")
     n = new_stamped.alias("n")
-    # NULL-safe key match: a NULL pk is one key like any other, so its
-    # open row closes or survives instead of never matching itself.
-    joined = t.join(n, F.col(f"t.{pk}").eqNullSafe(F.col(f"n.{pk}")), "full_outer")
+    changed = null_safe_neq_any("t", "n", attrs)
+    # A NULL pk names no row: NULL-pk rows match only an identical row,
+    # so an unchanged one stays open and any other closes or opens.
+    # Several NULL-pk rows may share a snapshot; the snapshot being a
+    # row set (every builder ends in a distinct) keeps matches 1:1.
+    key_match = F.col(f"t.{pk}").eqNullSafe(F.col(f"n.{pk}")) & (
+        F.col(f"t.{pk}").isNotNull() | ~changed
+    )
+    joined = t.join(n, key_match, "full_outer")
 
     def row_struct(prefix: str, valid_from, valid_to):
         return F.struct(
@@ -87,8 +97,6 @@ def scd2_apply(
             valid_from.alias(VALID_FROM),
             valid_to.alias(VALID_TO),
         )
-
-    changed = null_safe_neq_any("t", "n", attrs)
 
     # presence from a column never NULL on its side (the pk may be)
     t_present = F.col(f"t.{VALID_FROM}").isNotNull()

@@ -538,24 +538,31 @@ def contamination_overlap(
     )
 
 
-# An eval-set index up to this many shingles is broadcast into the
-# scoring join of ``contamination_against_index``; a larger one joins by
-# a plain shuffle on the shingle.
+# ``contamination_against_index`` scores word 5-grams of ``text`` per
+# ``doc_id`` against an index whose ``first_wave`` runs 0..2.  An index
+# up to _INDEX_BROADCAST_MAX_ROWS shingles is broadcast into the scoring
+# join; a larger one joins by a plain shuffle on the shingle.
+_CONTAMINATION_N = 5
+_N_WAVES = 3
 _INDEX_BROADCAST_MAX_ROWS = 2_000_000
 
 
-def contamination_against_index(
-    docs,
-    index,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_waves: int = 3,
-):
-    """Score a corpus against a wave-attributed eval n-gram index
-    ``(s, first_wave)``: per doc, distinct n-gram count, per-wave hit
-    counts, and the overlap fraction — ``contamination_overlap`` with
-    each hit attributed to the eval release that first contained it.
+def contamination_shingles(df, key_col: str):
+    """(``key_col``, s) rows, one per word 5-gram of ``text`` (repeats
+    kept): the shingles ``contamination_against_index`` scores, and the
+    ones its index is built from.  Tokenizes each row once, into the
+    column that ``word_shingles`` slices."""
+    return df.select(key_col, tokens(F.col("text")).alias("__w")).select(
+        key_col, F.explode(word_shingles(F.col("__w"), _CONTAMINATION_N)).alias("s")
+    )
+
+
+def contamination_against_index(docs, index):
+    """Score a ``(doc_id, text)`` corpus against a wave-attributed eval
+    n-gram index ``(s, first_wave)`` built from ``contamination_shingles``:
+    per doc, distinct n-gram count, per-wave hit counts, and the overlap
+    fraction — ``contamination_overlap`` with each hit attributed to the
+    eval release that first contained it.
 
     A REAL eval-set index is dimension-sized (benchmarks are thousands
     of documents, not corpus-proportional) and broadcasting it removes
@@ -568,11 +575,7 @@ def contamination_against_index(
     plain shuffle join on the shingle key — uniform, one exchange per
     side.
     """
-    dsh = (
-        docs.select(id_col, tokens(F.col(text_col)).alias("__w"))
-        .select(id_col, F.explode(word_shingles(F.col("__w"), n)).alias("s"))
-        .distinct()
-    )
+    dsh = contamination_shingles(docs, "doc_id").distinct()
     # Materialize the index so the sizing count and the join read ONE
     # materialization instead of rebuilding the index plan twice.
     index = materialize(index, "contamination_against_index.index")
@@ -585,19 +588,19 @@ def contamination_against_index(
             F.sum(F.when(F.col("first_wave") == w, 1).otherwise(0))
             .cast("bigint")
             .alias(f"hits_w{w}")
-            for w in range(n_waves)
+            for w in range(_N_WAVES)
         ],
         F.sum(F.when(F.col("first_wave").isNotNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("hits"),
     ]
     return (
-        hit.groupBy(id_col)
+        hit.groupBy("doc_id")
         .agg(*aggs)
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
-            *[f"hits_w{w}" for w in range(n_waves)],
+            *[f"hits_w{w}" for w in range(_N_WAVES)],
             F.round(
                 F.col("hits").cast("double") / F.col("n_shingles").cast("double"), 6
             ).alias("overlap_frac"),
@@ -678,11 +681,12 @@ def bpe_pair_counts(df, text_col: str = "text"):
     return pairs.groupBy("pair").agg(F.sum("c").alias("cnt"))
 
 
-def word_shingles(words: Column, n: int = 3) -> Column:
+def word_shingles(words: Column, n: int) -> Column:
     """Word n-gram shingles (array<string>) of a ``tokens`` array
     column; fewer than ``n`` words → one shingle of the whole text.
 
-    Pass a column that already holds the tokens, not a ``tokens(...)``
+    ``words`` must be a column that already holds the tokens (as
+    ``contamination_shingles`` passes it), not a ``tokens(...)``
     expression: the slice lambda would re-tokenize the text once per
     shingle.  ``transform``/``slice`` are higher-order functions —
     Spark evaluates their lambdas interpreted, outside whole-stage

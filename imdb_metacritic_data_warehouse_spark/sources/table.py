@@ -185,9 +185,10 @@ def version_diff(
     applying the feed to ``v_from`` reproduces ``v_to`` exactly.
 
     Defaults compare the previous committed version against the current
-    one (both must still be inside the retention window).  Keys match
-    NULL-safely, so a NULL pk diffs like any other key.  Scale: the pk
-    join is the only shuffle."""
+    one (both must still be inside the retention window).  A NULL pk
+    names no row and never matches: every NULL-pk row of ``v_from`` is
+    a delete and every one of ``v_to`` an insert.  Scale: the pk join
+    is the only shuffle."""
     from pyspark.sql import functions as F
 
     cur = table.current_version()
@@ -201,7 +202,7 @@ def version_diff(
     # presence markers: never NULL on their own side, unlike the pk
     old = table.read(v_from).withColumn("__in_o", F.lit(True)).alias("o")
     new = new.withColumn("__in_n", F.lit(True)).alias("n")
-    joined = old.join(new, F.col(f"o.{pk}").eqNullSafe(F.col(f"n.{pk}")), "full_outer")
+    joined = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
     changed = null_safe_neq_any("o", "n", attrs)
     o_present = F.col("o.__in_o").isNotNull()
     n_present = F.col("n.__in_n").isNotNull()

@@ -93,23 +93,32 @@ def test_scd2_invariants(spark):
             assert cur.valid_from >= prev.valid_to
 
 
-def test_scd2_null_pk_is_one_key(spark):
-    """A NULL pk matches its own open row: a changed attr closes the
-    old row and opens the new one, like any other key."""
-    out = run_batches(
-        spark,
-        [
-            (T0, [("k1", "x"), (None, "y")]),
-            (T1, [("k1", "x"), (None, "z")]),
-        ],
-    ).collect()
+def test_scd2_null_pk_rows_match_by_content(spark):
+    """A NULL pk names no row, and a snapshot may hold several: each
+    NULL-pk row matches only an identical open row, so an unchanged one
+    stays open, a vanished one closes, a new one opens, and reloading
+    the same snapshot keeps one open row per NULL-pk row."""
+    batches = [
+        (T0, [("k1", "x"), (None, "y"), (None, "w")]),
+        (T1, [("k1", "x"), (None, "z"), (None, "w")]),
+        (T2, [("k1", "x"), (None, "z"), (None, "w")]),
+    ]
+    state = None
+    for ts, rows in batches:
+        state = scd2_apply(state, snap(spark, rows), "pk", ["attr"], ts)
+        state = spark.createDataFrame(state.collect(), state.schema)
+        open_null = [r for r in state.collect()
+                     if r.pk is None and str(r.valid_to).startswith("9999")]
+        assert len(open_null) == 2
+    out = state.collect()
     got = {(r.pk, r.attr, str(r.valid_from)[:10], str(r.valid_to)[:10]) for r in out}
     assert got == {
         (None, "y", "2024-01-01", "2024-02-01"),
+        (None, "w", "2024-01-01", "9999-12-31"),
         (None, "z", "2024-02-01", "9999-12-31"),
         ("k1", "x", "2024-01-01", "9999-12-31"),
     }
-    assert len(out) == 3
+    assert len(out) == 4
 
 
 def test_insert_only_merge_appends_new_keys_once(spark):

@@ -127,20 +127,32 @@ def test_version_diff_apply_reproduces_target(spark, tmp_path):
     }
 
 
-def test_version_diff_null_pk_is_one_key(spark, tmp_path):
-    """A NULL pk matches itself across versions: an unchanged NULL-pk
-    row is no change, and a changed one is one update, not a spurious
-    insert plus delete."""
+def test_version_diff_null_pk_never_matches(spark, tmp_path):
+    """A NULL pk names no row: every NULL-pk row of the old version is a
+    delete and every one of the new version an insert, never an update,
+    and applying the feed reproduces the new version row for row."""
+    from collections import Counter
+
     from imdb_metacritic_data_warehouse_spark.sources.table import version_diff
 
     t = VersionedParquetTable(spark, str(tmp_path), "cdf_null")
-    rows = [(1, "a"), (None, "n")]
-    t.write(spark.createDataFrame(rows, "id long, val string"))
-    t.write(spark.createDataFrame(rows, "id long, val string"))
-    assert version_diff(t, "id").collect() == []
-    t.write(spark.createDataFrame([(1, "a"), (None, "m")], "id long, val string"))
-    got = {(r.change_type, r.id, r.val) for r in version_diff(t, "id").collect()}
-    assert got == {("update", None, "m")}
+    v1 = [(1, "a"), (None, "n"), (None, "p")]
+    v2 = [(1, "a"), (None, "n"), (None, "p")]  # unchanged
+    v3 = [(1, "a"), (None, "m"), (None, "p")]  # one NULL-pk row changed
+    t.write(spark.createDataFrame(v1, "id long, val string"))
+    for prev, rows in ((v1, v2), (v2, v3)):
+        v = t.write(spark.createDataFrame(rows, "id long, val string"))
+        feed = version_diff(t, "id")
+        got = Counter((r.change_type, r.id, r.val) for r in feed.collect())
+        assert got == Counter(
+            [("delete", None, val) for _, val in prev[1:]]
+            + [("insert", None, val) for _, val in rows[1:]]
+        )
+        old, touched = t.read(v - 1), feed.select("id").distinct()
+        applied = old.join(
+            touched, old["id"].eqNullSafe(touched["id"]), "left_anti"
+        ).unionByName(feed.filter(F.col("change_type") != "delete").select("id", "val"))
+        assert Counter((r.id, r.val) for r in applied.collect()) == Counter(rows)
 
 
 def test_dq_report_counts_each_rule_class(spark):
