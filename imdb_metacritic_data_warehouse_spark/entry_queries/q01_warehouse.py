@@ -206,7 +206,7 @@ def latest_snapshot_filter(spark, sf_dir):
 )
 def top2_snapshots_filter(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    return filter_top_snapshots(o, "o_orderdate", k=2).select(
+    return filter_top_snapshots(o, "o_orderdate").select(
         "o_orderkey", "o_orderdate"
     )
 
@@ -1004,7 +1004,7 @@ def salted_join_events(spark, sf_dir):
         .distinct()
         .withColumn("type_code", F.md5("event_type"))
     )
-    joined = salted_join(e, dim, ["event_type"], salt_col="event_id", salt_buckets=16)
+    joined = salted_join(e, dim, ["event_type"], salt_col="event_id")
     return (
         joined.groupBy("type_code")
         .agg(

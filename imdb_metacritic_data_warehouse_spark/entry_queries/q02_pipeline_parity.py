@@ -800,7 +800,7 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
     crashed/interrupted invocation abandons its dir.  Each call
     therefore garbage-collects SIBLING per-invocation dirs older than
     an hour (the ``<tag>_<sf>_`` mkdtemp pattern only — the long-lived
-    ``neardup_cc_cache`` never matches), keeping accumulation bounded
+    ``content_cache`` never matches), keeping accumulation bounded
     without racing live concurrent runs."""
     import shutil
     import tempfile
@@ -2510,7 +2510,7 @@ def _bpe_round_sql(i: int, prev: str) -> str:
 def bpe_train_merges_docs(spark, sf_dir):
     from ..operators.text import bpe_train_symbols
 
-    out = bpe_train_symbols(_t(spark, sf_dir, "documents"), merges=2)
+    out = bpe_train_symbols(_t(spark, sf_dir, "documents"))
     return out.orderBy(F.desc("cnt"), F.asc("symbol")).limit(40)
 
 

@@ -14,6 +14,7 @@ from .q01_warehouse import (
     lsh_candidate_pairs,
 )
 from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
+from ..operators.text import token_count_ws, tokens
 
 
 
@@ -57,42 +58,58 @@ from ..operators.dedup import connected_components  # noqa: E402
     """,
 )
 def _neardup_labels_cached(spark, sf_dir):
-    """Converged near-dup labels served from a content-keyed committed
-    cache.  The label-propagation loop is ITERATIVE (LSH sketch + N
+    """Converged near-dup labels served from the content-keyed cache.
+    The label-propagation loop is ITERATIVE (LSH sketch + N
     checkpointed rounds) — a long-lived pipeline computes it once per
     corpus version and every consumer reads the committed table (the
-    production discipline; NOTES r3 known gap).  The cache key is the
-    corpus content fingerprint (row count + crc32 aggregate — one
-    cheap scan), so any change to the documents table recomputes;
-    commit is an atomic directory rename, first writer wins."""
-    import shutil
-    import tempfile
-
+    production discipline; NOTES r3 known gap)."""
     from ..operators.dedup import MINHASH_BANDS, MINHASH_HASHES
 
-    corpus = _minhash_corpus(spark, sf_dir)
-    # content fingerprint: unit-separated concat (a bare concat makes
-    # (12,'x') and (1,'2x') collide) — the SUM stays order-insensitive
-    # on purpose (content multiset identity)
-    fp = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.crc32(F.concat_ws("\x1f", F.col("doc_id").cast("string"), F.col("text")))
-        ).alias("h"),
-    ).collect()[0]
-    # the key must ALSO encode the algorithm: stale labels from an old
-    # banding/bucket/CC formulation must never serve a new one
-    algo = f"mh{MINHASH_HASHES}b{MINHASH_BANDS}cap1024ccv1"
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(repo_root, ".scratch", "neardup_cc_cache")
-    os.makedirs(base, exist_ok=True)
-    # GC tmp dirs abandoned by a crashed writer (committed cache dirs
-    # never start with 'tmp' and are kept on purpose)
-    import time as _time
+    return _content_cached(
+        spark,
+        sf_dir,
+        _minhash_corpus(spark, sf_dir),
+        f"neardup-mh{MINHASH_HASHES}b{MINHASH_BANDS}cap1024ccv1",
+        lambda corpus: connected_components(
+            lsh_candidate_pairs(corpus, "doc_id", "text")
+        ),
+    )
 
-    cutoff = _time.time() - 3600
-    for entry in os.listdir(base):
-        path = os.path.join(base, entry)
+
+# Committed results of the iterative/expanding builders, one directory
+# per (tag, sf dir, input content).  The name holds no "_sf", so
+# q02's _scratch_dir sweep never removes it.
+_CONTENT_CACHE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".scratch",
+    "content_cache",
+)
+
+
+def _content_cached(spark, sf_dir, src, tag, build):
+    """``build(src)`` served from a content-keyed committed cache.  The
+    key is ``tag``, the sf dir name and ``src``'s content fingerprint
+    (row count + a crc32 sum over its unit-separated columns — one
+    cheap scan), so any change to the input recomputes.  ``tag`` must
+    name the algorithm too: a changed formulation must never be served
+    a stale result.  Commit is an atomic directory rename, first writer
+    wins; staging dirs a crashed writer abandoned are removed after an
+    hour (committed dirs never start with ``tmp``)."""
+    import shutil
+    import tempfile
+    import time
+
+    # unit-separated concat (a bare concat makes (12,'x') and (1,'2x')
+    # collide) — the SUM stays order-insensitive on purpose (content
+    # multiset identity)
+    row = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in src.columns])
+    fp = src.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.crc32(row)).alias("h")
+    ).collect()[0]
+    os.makedirs(_CONTENT_CACHE, exist_ok=True)
+    cutoff = time.time() - 3600
+    for entry in os.listdir(_CONTENT_CACHE):
+        path = os.path.join(_CONTENT_CACHE, entry)
         try:
             if (
                 entry.startswith("tmp")
@@ -103,15 +120,13 @@ def _neardup_labels_cached(spark, sf_dir):
         except OSError:
             pass
     final = os.path.join(
-        base,
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{algo}-{fp['n']}-{fp['h']:x}",
+        _CONTENT_CACHE,
+        f"{tag}-{os.path.basename(sf_dir.rstrip('/'))}-{fp['n']}-{fp['h']:x}",
     )
     if not os.path.isdir(final):
-        pairs = lsh_candidate_pairs(corpus, "doc_id", "text")
-        labels = connected_components(pairs)
-        tmp = tempfile.mkdtemp(dir=base)
-        staged = os.path.join(tmp, "labels")
-        labels.write.parquet(staged)
+        tmp = tempfile.mkdtemp(dir=_CONTENT_CACHE)
+        staged = os.path.join(tmp, "out")
+        build(src).write.parquet(staged)
         try:
             os.rename(staged, final)
         except OSError:
@@ -265,7 +280,7 @@ def doc_frequency_terms(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split(F.lower(F.col("text")), " "))).alias("term"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
     ).filter(F.length("term") >= 3)
     stats = tok.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -317,7 +332,7 @@ def doc_frequency_terms(spark, sf_dir):
 def tfidf_topk_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") >= 3)
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
@@ -407,7 +422,7 @@ from ..operators.similarity import ivf_sampled_topk  # noqa: E402
 )
 def ann_ivf_sampled(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    out = ivf_sampled_topk(e, [0, 1, 2, 3, 4], k=10, dims=64)
+    out = ivf_sampled_topk(e, [0, 1, 2, 3, 4], dims=64)
     return out.select(
         "query_id", "vec_id", "score", F.col("rank").cast("int").alias("rank")
     )
@@ -504,7 +519,7 @@ def quality_quantile_filter(spark, sf_dir):
 )
 def select_token_budget_docs(spark, sf_dir):
     from ..operators.packing import global_cumsum
-    from ..operators.text import quality_score, token_count_ws
+    from ..operators.text import quality_score
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -550,7 +565,7 @@ def select_token_budget_docs(spark, sf_dir):
     """,
 )
 def corpus_report_by_source(spark, sf_dir):
-    from ..operators.text import fingerprint, quality_score, token_count_ws
+    from ..operators.text import fingerprint, quality_score
 
     scored = _t(spark, sf_dir, "documents").select(
         "source",
@@ -1511,10 +1526,7 @@ def interval_overlap_sessions(spark, sf_dir):
     iv = materialize(iv, "interval_overlap_sessions.iv")
     clicks = iv.filter(F.col("event_type") == "click").drop("event_type", "__sid")
     views = iv.filter(F.col("event_type") == "view").drop("event_type", "__sid")
-    paired = interval_overlap_join(
-        clicks, views, "user_id", ("start_ts", "end_ts"), ("start_ts", "end_ts"),
-        chunk_seconds=86400,
-    )
+    paired = interval_overlap_join(clicks, views, "user_id")
     return paired.select(
         "user_id",
         F.col("start_ts").cast("string").alias("click_start"),
@@ -1870,7 +1882,7 @@ def fuzzy_match_part_names(spark, sf_dir):
         F.count(F.lit(1)).alias("cnt"),
     )
     names = grp.select("n", "pk1")
-    cross = fuzzy_join(names, names, "n", "n", max_distance=2).filter(
+    cross = fuzzy_join(names, names, "n", "n").filter(
         F.col("n") != F.col("n_r")
     )
     cross_best = cross.groupBy("n").agg(
@@ -1963,7 +1975,7 @@ def entity_clusters_parts(spark, sf_dir):
     )
     reps = names.select(F.col("rep").alias("p_partkey"), F.col("n").alias("p_name"))
     pairs = (
-        fuzzy_join(reps, reps, "p_name", "p_name", max_distance=2)
+        fuzzy_join(reps, reps, "p_name", "p_name")
         .filter(F.col("p_partkey") < F.col("p_partkey_r"))
         .select(
             F.col("p_partkey").alias("doc_a"), F.col("p_partkey_r").alias("doc_b")

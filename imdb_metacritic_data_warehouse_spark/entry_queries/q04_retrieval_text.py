@@ -33,7 +33,8 @@ from .q02_pipeline_parity import (
     _scratch_dir,
     asof_join,
 )
-from .q03_dedup_lsh import connected_components
+from .q03_dedup_lsh import _content_cached, connected_components
+from ..operators.text import token_count_ws, tokens
 
 
 
@@ -371,7 +372,7 @@ def weighted_sample_pps_docs(spark, sf_dir):
 def vocab_truncate_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
     vocab = (
         tok.groupBy("tok")
@@ -411,38 +412,17 @@ def _copurchase_pairs(spark, sf_dir):
     100× (a group-size cap belongs here if per-key fan-in were
     unbounded).
 
-    Served from a content-keyed committed cache (same discipline as
-    the near-dup labels): the edge table is a standard materialized
-    artifact of a production graph pipeline — PageRank, triangles, and
-    any future graph consumer read ONE committed build per fact-table
-    version instead of re-expanding per query."""
-    import shutil
-    import tempfile
+    Served from q03's content-keyed cache: the edge table is a
+    standard materialized artifact of a production graph pipeline —
+    PageRank, triangles, and any future graph consumer read ONE
+    committed build per fact-table version instead of re-expanding per
+    query."""
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    fp = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.crc32(
-                F.concat_ws(
-                    "\x1f",
-                    F.col("l_orderkey").cast("string"),
-                    F.col("l_partkey").cast("string"),
-                )
-            )
-        ).alias("h"),
-    ).collect()[0]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(repo_root, ".scratch", "copurchase_edge_cache")
-    os.makedirs(base, exist_ok=True)
-    final = os.path.join(
-        base, f"{os.path.basename(sf_dir.rstrip('/'))}-{fp['n']}-{fp['h']:x}"
-    )
-    if not os.path.isdir(final):
+    def build(li):
         per_order = li.groupBy("l_orderkey").agg(
             F.collect_set("l_partkey").alias("ps")
         )
-        pairs = (
+        return (
             per_order.select(
                 F.explode(
                     F.expr(
@@ -455,15 +435,9 @@ def _copurchase_pairs(spark, sf_dir):
             .select("p.pa", "p.pb")
             .distinct()
         )
-        tmp = tempfile.mkdtemp(dir=base)
-        staged = os.path.join(tmp, "pairs")
-        pairs.write.parquet(staged)
-        try:
-            os.rename(staged, final)
-        except OSError:
-            pass  # concurrent writer committed first — use theirs
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(final)
+
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return _content_cached(spark, sf_dir, li, "copurchase-v1", build)
 
 
 # PageRank over the co-purchase graph — parts are linked when they
@@ -536,8 +510,6 @@ def pagerank_parts_copurchase(spark, sf_dir):
     pairs = _copurchase_pairs(spark, sf_dir)
     ranks = pagerank(
         undirected_edges(pairs, "pa", "pb"),
-        iters=3,
-        damping=0.85,
         checkpoint_every=0,  # 3 fixed rounds fuse into one job (r9 A/B)
         symmetric=True,  # undirected_edges guarantees the mirror
     )
@@ -601,7 +573,7 @@ def triangle_counts_parts(spark, sf_dir):
     # the pair expansion feeds the operator's degree/orientation joins
     # AND the coefficient's degree table — materialize once
     pairs = materialize(_copurchase_pairs(spark, sf_dir), "triangle_counts_parts.pairs")
-    tc = triangle_counts(pairs, "pa", "pb")
+    tc = triangle_counts(pairs)
     fwd = pairs.select(F.col("pa").alias("node")).unionByName(
         pairs.select(F.col("pb").alias("node"))
     )
@@ -668,7 +640,7 @@ def jaccard_prefix_join_docs(spark, sf_dir):
     from ..operators.dedup import prefix_filter_jaccard_pairs
 
     d = _t(spark, sf_dir, "documents")
-    return prefix_filter_jaccard_pairs(d, "doc_id", "text", threshold_pct=60)
+    return prefix_filter_jaccard_pairs(d, "doc_id", "text")
 
 
 # Cumulative distinct users by day — the scalable REWRITE of
@@ -1111,7 +1083,7 @@ def inverted_index_postings(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split(F.lower(F.col("text")), " "))).alias(
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias(
             "term"
         ),
     )
@@ -2163,8 +2135,7 @@ def jaccard_prefix_join_collapsed(spark, sf_dir):
         F.upper(F.col("text")).alias("text"),
     )
     return prefix_filter_jaccard_pairs(
-        docs.unionByName(mirror), "doc_id", "text", threshold_pct=60,
-        collapse_exact=True,
+        docs.unionByName(mirror), "doc_id", "text", collapse_exact=True
     )
 
 
@@ -2455,11 +2426,10 @@ def funnel_latency_percentiles(spark, sf_dir):
 def curate_corpus_end_to_end(spark, sf_dir):
     from ..operators.dedup import connected_components, dedup_exact, lsh_candidate_pairs
     from ..operators.packing import global_cumsum
-    from ..operators.text import tokens
 
     d = _t(spark, sf_dir, "documents")
     base = d.filter(
-        (F.col("lang") == "en") & (F.size(tokens(F.col("text"))) >= 20)
+        (F.col("lang") == "en") & (token_count_ws(F.col("text")) >= 20)
     ).select("doc_id", "text")
     mirror = base.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -2480,7 +2450,7 @@ def curate_corpus_end_to_end(spark, sf_dir):
         F.broadcast(losers), survivors["doc_id"] == F.col("node"), "left_anti"
     )
     sized = canon.select(
-        "doc_id", F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens")
+        "doc_id", token_count_ws(F.col("text")).cast("bigint").alias("n_tokens")
     )
     spanned = global_cumsum(
         sized, [F.desc("n_tokens"), F.asc("doc_id")], "n_tokens",

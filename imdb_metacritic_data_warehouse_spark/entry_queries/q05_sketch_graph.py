@@ -1141,9 +1141,7 @@ def ppr_parts_seeded(spark, sf_dir):
     # undirected_edges guarantees the mirror, so nodes ride the degree
     # aggregate (A/B r9 fresh-JVM best-of-3: 5.25s per-round-ckpt ->
     # 3.53s min / ~4.4s median with these two).
-    ranks = personalized_pagerank(
-        edges, seeds, iters=3, damping=0.85, checkpoint_every=0, symmetric=True
-    )
+    ranks = personalized_pagerank(edges, seeds, checkpoint_every=0, symmetric=True)
     return (
         ranks.filter(F.col("pr") > 0)
         .select(F.col("node").alias("part"), F.round("pr", 8).alias("ppr"))

@@ -7,6 +7,7 @@ from __future__ import annotations
 from ._registry import F, _dec, _events, _t, _units4, global_row_number, materialize, os, query
 from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 from .q04_retrieval_text import _copurchase_pairs
+from ..operators.text import token_count_ws, tokens
 
 
 
@@ -1116,7 +1117,7 @@ def covariance_matrix_embeddings(spark, sf_dir):
             (F.col("sx").cast("double") / F.col("n") / F.lit(scale)).alias("m"),
         )
     )
-    grid = gram_upper_cells(e, "embedding")
+    grid = gram_upper_cells(e)
     m1 = mean.select(F.col("i"), F.col("m").alias("m1"))
     m2 = mean.select(F.col("i").alias("j"), F.col("m").alias("m2"))
     return (
@@ -1367,14 +1368,14 @@ def yoy_waterfall_nation(spark, sf_dir):
 # left-associative dot both engines fold identically; ±1 weights and the
 # /16 normalizer are exact in binary, so the distortion ratio is
 # bit-stable under round-6.
-def _jl_oracle(out_dims: int = 16, dims: int = 64, seed: int = 7000) -> str:
-    from ..operators.similarity import _plane_weights
+def _jl_oracle() -> str:
+    from ..operators.similarity import _DIMS, _JL_DIMS, _JL_SEED, _plane_weights
 
     planes = ", ".join(
         "list_dot_product(v, ["
-        + ", ".join(str(x) for x in _plane_weights(seed + j, dims))
+        + ", ".join(str(x) for x in _plane_weights(_JL_SEED + j, _DIMS))
         + "])"
-        for j in range(out_dims)
+        for j in range(_JL_DIMS)
     )
     return f"""
     WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1392,7 +1393,7 @@ def _jl_oracle(out_dims: int = 16, dims: int = 64, seed: int = 7000) -> str:
       FROM q JOIN p ON q.query_id < p.vec_id
     )
     SELECT query_id, vec_id, round(d2o, 6) AS d2_orig,
-           round(d2p / ({out_dims} * d2o), 6) AS distortion
+           round(d2p / ({_JL_DIMS} * d2o), 6) AS distortion
     FROM d WHERE d2o > 0
     ORDER BY query_id, vec_id
     """
@@ -1414,7 +1415,7 @@ def jl_distortion_audit(spark, sf_dir):
     # ExistingRDD.  Self-dots ride the same pass: d2o keeps the exact
     # shape qq − 2·qc + cc with each dot's fold order unchanged, so
     # every double is bit-identical to the oracle's.
-    p = jl_project(e, "embedding", "proj", out_dims=16).select(
+    p = jl_project(e).select(
         "vec_id",
         "embedding",
         "proj",
@@ -1583,7 +1584,7 @@ def readability_docs(spark, sf_dir):
     from ..operators.text import readability_score
 
     d = _t(spark, sf_dir, "documents")
-    cols = readability_score("text")
+    cols = readability_score()
     # rule #6: round-4 scores carried as exact int64 1e-4 units.
     sc = d.select(
         "source",
@@ -1647,7 +1648,7 @@ def assortativity_copurchase(spark, sf_dir):
     from ..operators.graph import degree_assortativity
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    return degree_assortativity(pairs, "pa", "pb")
+    return degree_assortativity(pairs)
 
 
 # Pareto head selection — the minimal revenue-ranked prefix of the part
@@ -1808,7 +1809,7 @@ def event_trigrams_users(spark, sf_dir):
 def js_divergence_sources(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("t")
+        "source", F.explode(tokens(F.col("text"))).alias("t")
     )
     c = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     tt = c.groupBy("source").agg(F.sum("c").cast("bigint").alias("tot"))
@@ -2134,13 +2135,13 @@ def bootstrap_ci_lineitem(spark, sf_dir):
     """,
 )
 def tokenizer_fertility_lang(spark, sf_dir):
-    from ..operators.text import token_count_bpe, tokens
+    from ..operators.text import token_count_bpe
 
     d = _t(spark, sf_dir, "documents")
     per = d.select(
         "lang",
         token_count_bpe(F.col("text")).alias("toks"),
-        F.size(tokens(F.col("text"))).alias("words"),
+        token_count_ws(F.col("text")).alias("words"),
         F.length("text").alias("chars"),
     )
     return (

@@ -78,7 +78,7 @@ def kcore_parts_copurchase(spark, sf_dir):
     from ..operators.graph import kcore_peel
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    return kcore_peel(pairs, k=3, rounds=6)
+    return kcore_peel(pairs)
 
 
 # Deadline-bounded funnel — conversion counted only when the first
@@ -339,8 +339,8 @@ def hll_distinct_audit(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("grp"), "l_partkey"
     )
-    regs = hll_register_maxes(li, ["grp"], "l_partkey", p=8, seed=4242)
-    est = hll_estimate(regs, ["grp"], p=8)
+    regs = hll_register_maxes(li, ["grp"], "l_partkey")
+    est = hll_estimate(regs, ["grp"])
     exact = li.groupBy("grp").agg(
         F.count_distinct("l_partkey").cast("bigint").alias("exact_distinct")
     )
@@ -615,7 +615,7 @@ def label_propagation_parts(spark, sf_dir):
     # distinct_pairs: the co-purchase builder emits DISTINCT (pa < pb)
     # pairs, so round 1 reduces to a min-neighbor aggregate (provably
     # identical — see operator).
-    lab = label_propagation(pairs, rounds=3, distinct_pairs=True)
+    lab = label_propagation(pairs, distinct_pairs=True)
     return (
         lab.groupBy(F.col("label").alias("community"))
         .agg(

@@ -9,6 +9,7 @@ from .q01_warehouse import _MINHASH_CORPUS_SQL, _MINHASH_SIG_SQL, cosine_topk, s
 from .q02_pipeline_parity import Window, _finish_scratch, _scratch_dir
 from .q03_dedup_lsh import _neardup_labels_cached
 from .q07_resampling_tokenizer import _HLL_ALPHA
+from ..operators.text import token_count_ws, tokens
 
 
 
@@ -87,8 +88,8 @@ def pca_top_component_embeddings(spark, sf_dir):
     from ..operators.similarity import gram_power_iteration, gram_upper_cells
 
     e = _t(spark, sf_dir, "embeddings")
-    grid = gram_upper_cells(e, "embedding")
-    vw = gram_power_iteration(grid, dims=64, iters=3)
+    grid = gram_upper_cells(e)
+    vw = gram_power_iteration(grid, dims=64)
     n = e.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ray = vw.agg(
         F.sum(
@@ -537,7 +538,7 @@ def kruskal_wallis_lineitem(spark, sf_dir):
 def temperature_mixture_weights_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
-        F.sum(F.size(F.split(F.lower("text"), " ")))
+        F.sum(token_count_ws(F.col("text")))
         .cast("bigint")
         .alias("n_tokens")
     )
@@ -1086,13 +1087,13 @@ def hll_rollup_lattice(spark, sf_dir):
     e = _events(spark, sf_dir).select(
         "event_type", F.weekday("ts").alias("dow"), "user_id"
     )
-    r_fine = hll_register_maxes(e, ["event_type", "dow"], "user_id", p=8, seed=4242)
+    r_fine = hll_register_maxes(e, ["event_type", "dow"], "user_id")
     r_merged = r_fine.groupBy("event_type", "bucket").agg(F.max("mj").alias("mj"))
-    r_direct = hll_register_maxes(e, ["event_type"], "user_id", p=8, seed=4242)
-    est_m = hll_estimate(r_merged, ["event_type"], p=8).select(
+    r_direct = hll_register_maxes(e, ["event_type"], "user_id")
+    est_m = hll_estimate(r_merged, ["event_type"]).select(
         "event_type", F.col("hll_estimate").alias("est_merged")
     )
-    est_d = hll_estimate(r_direct, ["event_type"], p=8).select(
+    est_d = hll_estimate(r_direct, ["event_type"]).select(
         "event_type", F.col("hll_estimate").alias("est_direct")
     )
     exact = e.groupBy("event_type").agg(
@@ -1424,11 +1425,11 @@ def attribution_position_events(spark, sf_dir):
 def heaps_law_vocab_growth(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     )
     fd = toks.groupBy("t").agg(F.min("doc_id").alias("first_doc"))
     nt = d.select(
-        "doc_id", F.size(F.split(F.lower("text"), " ")).alias("n")
+        "doc_id", token_count_ws(F.col("text")).alias("n")
     )
     mx = d.agg(F.max("doc_id").alias("mid"))
     ks = spark.range(1, 11).select(F.col("id").cast("int").alias("k"))
@@ -1683,7 +1684,7 @@ def dedup_token_loss_report(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split(F.lower("text"), " ")).alias("n_tok"),
+        token_count_ws(F.col("text")).alias("n_tok"),
         F.md5("text").alias("fp"),
     )
     canon = d.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
@@ -1815,7 +1816,6 @@ def k_anonymity_audit_customers(spark, sf_dir):
 )
 def packing_efficiency_audit(spark, sf_dir):
     from ..operators.packing import pack_sequences
-    from ..operators.text import token_count_ws
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", token_count_ws(F.col("text")).alias("n_tok")
@@ -1941,12 +1941,12 @@ def hll_overlap_audience_events(spark, sf_dir):
     purch = e.filter(F.col("event_type") == "purchase").select(
         F.lit("g").alias("g"), "user_id"
     )
-    ra = hll_register_maxes(clicks, ["g"], "user_id", p=8, seed=4242)
-    rb = hll_register_maxes(purch, ["g"], "user_id", p=8, seed=4242)
+    ra = hll_register_maxes(clicks, ["g"], "user_id")
+    rb = hll_register_maxes(purch, ["g"], "user_id")
     ru = hll_merge_registers(ra, rb, ["g"])
-    ea = hll_estimate(ra, ["g"], p=8).select(F.col("hll_estimate").alias("est_a"))
-    eb = hll_estimate(rb, ["g"], p=8).select(F.col("hll_estimate").alias("est_b"))
-    eu = hll_estimate(ru, ["g"], p=8).select(F.col("hll_estimate").alias("est_union"))
+    ea = hll_estimate(ra, ["g"]).select(F.col("hll_estimate").alias("est_a"))
+    eb = hll_estimate(rb, ["g"]).select(F.col("hll_estimate").alias("est_b"))
+    eu = hll_estimate(ru, ["g"]).select(F.col("hll_estimate").alias("est_union"))
     exact_a = clicks.agg(
         F.count_distinct("user_id").cast("bigint").alias("exact_a")
     )
@@ -2065,12 +2065,12 @@ def rerank_agreement_audit(spark, sf_dir):
     )
     qtok = (
         d.filter(F.col("doc_id") == 5)
-        .select(F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        .select(F.explode(tokens(F.col("text"))).alias("t"))
         .distinct()
     )
     ctok = (
         cand.join(d, "doc_id")
-        .select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        .select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
         .distinct()
     )
     ov = (
@@ -2253,7 +2253,6 @@ def ngram_novelty_batch(spark, sf_dir):
 )
 def curriculum_mixture_schedule(spark, sf_dir):
     from ..operators.sampling import _BUCKETS, hash_bucket
-    from ..operators.text import token_count_ws
 
     d = _t(spark, sf_dir, "documents")
     feat = d.select("doc_id", "source", token_count_ws(F.col("text")).alias("n_tok"))

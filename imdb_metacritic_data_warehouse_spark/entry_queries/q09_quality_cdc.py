@@ -15,6 +15,7 @@ from .q01_warehouse import (
 from .q02_pipeline_parity import Window, asof_join
 from .q03_dedup_lsh import _QUALITY_SQL, connected_components
 from .q04_retrieval_text import _copurchase_pairs
+from ..operators.text import tokens
 
 
 
@@ -123,7 +124,7 @@ def _gopher_per_doc(spark, sf_dir):
     tok = d.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+        F.explode(tokens(F.col("text"))).alias("w"),
     )
     c = tok.groupBy("doc_id", "source", "w").agg(F.count(F.lit(1)).alias("cnt"))
     return c.groupBy("doc_id", "source").agg(
@@ -357,7 +358,7 @@ def embedding_isotropy_audit(spark, sf_dir):
     scale = 10000.0
     e = _t(spark, sf_dir, "embeddings")
     n = e.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    grid = gram_upper_cells(e, "embedding", scale=int(scale))
+    grid = gram_upper_cells(e, scale=int(scale))
     # sxy ≤ n·s² ≈ 1e17 even at 10⁹ rows → decimal(19,0) holds each
     # cell; squaring two of them caps at precision 38 BY TYPE (no
     # silent overflow on either engine at any tested SF or 16× probe).
@@ -590,7 +591,7 @@ def cdc_apply_multi_clause_orders(spark, sf_dir):
         "o_totalprice",
     )
     changes = deletes.unionByName(updates).unionByName(inserts)
-    final = apply_cdc_batch(base, changes, "o_orderkey", "op")
+    final = apply_cdc_batch(base, changes, "o_orderkey")
     return (
         final.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
@@ -1087,13 +1088,13 @@ def ndcg_retrieval_audit(spark, sf_dir):
         d.filter(F.col("doc_id").isin(anchors))
         .select(
             F.col("doc_id").alias("query_id"),
-            F.explode(F.split(F.lower("text"), " ")).alias("t"),
+            F.explode(tokens(F.col("text"))).alias("t"),
         )
         .distinct()
     )
     ctok = (
         cand.join(d, "doc_id")
-        .select("query_id", "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        .select("query_id", "doc_id", F.explode(tokens(F.col("text"))).alias("t"))
         .distinct()
     )
     ov = cand.join(
@@ -1427,7 +1428,7 @@ def hits_suppliers_parts(spark, sf_dir):
     edges = li.select(
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     ).distinct()
-    scored = hits_bipartite(edges, iters=2)
+    scored = hits_bipartite(edges)
     # One integer total per role (2-row aggregate, broadcast back).
     totals = scored.groupBy("role").agg(F.sum("score").alias("t"))
     sn = scored.join(F.broadcast(totals), "role").select(

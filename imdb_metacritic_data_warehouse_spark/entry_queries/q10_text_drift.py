@@ -7,6 +7,7 @@ from __future__ import annotations
 from ._registry import F, _t, _units4, global_row_number, materialize, query
 from .q01_warehouse import cosine_topk
 from .q02_pipeline_parity import Window
+from ..operators.text import tokens
 
 
 
@@ -73,7 +74,7 @@ def winnowing_fingerprints_docs(spark, sf_dir):
     from ..operators.text import winnow_fingerprints
 
     d = _t(spark, sf_dir, "documents")
-    fp = winnow_fingerprints(d, "doc_id", "text", n=3, w=4)
+    fp = winnow_fingerprints(d)
     # r11: document frequency as a WINDOW count riding the fph exchange
     # (the jaccard r10 trick — one exchange instead of aggregate+join),
     # and the filtered table checkpointed ONCE: the profile showed the
@@ -169,7 +170,7 @@ def dsir_selection_docs(spark, sf_dir):
     from pyspark.sql import Window
 
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens(F.col("text"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
         d.filter(F.size(words) >= 2)
@@ -322,7 +323,7 @@ def naive_bayes_lang_docs(spark, sf_dir):
         .cast("long") % 10
     )
     docs = d.select(
-        "doc_id", "lang", F.split(F.lower("text"), " ").alias("ws"),
+        "doc_id", "lang", tokens(F.col("text")).alias("ws"),
         bkt.alias("bkt"),
     )
     tr_tok = docs.filter(F.col("bkt") != 0).select(
@@ -472,7 +473,7 @@ def spell_candidates_docs(spark, sf_dir):
     from pyspark.sql import Window
 
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens(F.col("text"))
     tok0 = d.select("doc_id", F.posexplode(words).alias("pos", "w"))
     sel = (
         F.conv(
@@ -597,7 +598,7 @@ def cdc_chunk_dedup_docs(spark, sf_dir):
     from pyspark.sql import Window
 
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens(F.col("text"))
     tok = d.select("doc_id", "source", F.posexplode(words).alias("pos", "w"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     cut_hash = (
@@ -818,7 +819,7 @@ def textrank_keywords_docs(spark, sf_dir):
     from pyspark.sql import Window
 
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens(F.col("text"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     adj = (
         d.filter(F.size(words) >= 2)
@@ -1177,12 +1178,12 @@ def mrr_retrieval_audit(spark, sf_dir):
         d.filter(F.col("doc_id").isin(anchors))
         .select(
             F.col("doc_id").alias("query_id"),
-            F.explode(F.split(F.lower("text"), " ")).alias("t"),
+            F.explode(tokens(F.col("text"))).alias("t"),
         )
         .distinct()
     )
     atok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     ).distinct()
     ov = (
         atok.join(F.broadcast(qtok), "t")
@@ -1307,7 +1308,7 @@ def shapley_source_valuation_docs(spark, sf_dir):
     from pyspark.sql import Window as W
 
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens(F.col("text"))
     wo = W.partitionBy("doc_id").orderBy("pos")
     sh = (
         d.select(

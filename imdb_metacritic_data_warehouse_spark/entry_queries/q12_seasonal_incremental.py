@@ -8,6 +8,7 @@ from ._registry import F, _t, _units4, materialize, query
 from .q01_warehouse import _MINHASH_CORPUS_SQL, _MINHASH_SIG_SQL, _minhash_corpus
 from .q02_pipeline_parity import Window
 from .q03_dedup_lsh import _neardup_labels_cached
+from ..operators.text import tokens
 
 
 
@@ -93,7 +94,7 @@ def cka_quantization_audit(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     n = e.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    g = cka_grids(e, "embedding", scale=10**4, quant_levels=127)
+    g = cka_grids(e, quant_levels=127)
     g = materialize(g, "cka_quantization_audit.g")  # the three grids and both sum vectors read it
     sums = (
         g.filter(F.col("grid") == "sx")
@@ -496,7 +497,7 @@ def neardup_cluster_tightness(spark, sf_dir):
 def negative_sampling_table_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     cnt = (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+        d.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -573,7 +574,7 @@ def feature_hashing_audit_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     cnt = (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+        d.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -758,7 +759,7 @@ def blocking_quality_audit_docs(spark, sf_dir):
     keyed = corpus.select(
         "doc_id",
         F.array_join(
-            F.slice(F.split(F.lower("text"), " "), 1, 2), " "
+            F.slice(tokens(F.col("text")), 1, 2), " "
         ).alias("blk"),
     )
     # block sizes, truth probes, doc count

@@ -82,7 +82,7 @@ def lcs_doc_pairs_docs(spark, sf_dir):
     from ..operators.dedup import lcs_pairs
 
     return (
-        lcs_pairs(_t(spark, sf_dir, "documents"), k=7, cap=16)
+        lcs_pairs(_t(spark, sf_dir, "documents"), cap=16)
         .orderBy(F.col("lcs_words").desc(), "da", "db")
         .limit(20)
     )
@@ -173,7 +173,7 @@ def lcs_doc_pairs_collapsed(spark, sf_dir):
         F.upper(F.col("text")).alias("text"),
     )
     return (
-        lcs_pairs(docs.unionByName(mirror), k=7, cap=16, collapse_exact=True)
+        lcs_pairs(docs.unionByName(mirror), cap=16, collapse_exact=True)
         .orderBy(F.col("lcs_words").desc(), "da", "db")
         .limit(20)
     )

@@ -9,6 +9,7 @@ Gopher battery).
 from __future__ import annotations
 
 from ._registry import F, _t, query
+from ..operators.text import token_count_ws, tokens
 
 
 # Cross-source duplication matrix — for every (source_a < source_b)
@@ -67,7 +68,7 @@ from ._registry import F, _t, query
     """,
 )
 def source_overlap_matrix_docs(spark, sf_dir):
-    from ..operators.text import fingerprint, tokens
+    from ..operators.text import fingerprint
 
     d = _t(spark, sf_dir, "documents").select(
         "source",
@@ -171,7 +172,7 @@ def flesch_readability_docs(spark, sf_dir):
         .select(
             "doc_id",
             "source",
-            F.size(F.split(F.lower(F.col("text")), " ")).cast("long").alias("w"),
+            token_count_ws(F.col("text")).cast("long").alias("w"),
             F.greatest(
                 F.regexp_count(F.col("text"), F.lit(r"[.!?]+")), F.lit(1)
             ).cast("long").alias("s"),

@@ -9,6 +9,7 @@ deployed quality classifier and the rule-battery labels).
 from __future__ import annotations
 
 from ._registry import F, _t, query
+from ..operators.text import token_count_ws
 
 # lcm(1..12): every clone-group size 1..12 divides it, so the
 # down-weight 1/min(size,12) becomes the exact integer 27720/min(s,12)
@@ -58,7 +59,7 @@ def effective_token_mass_docs(spark, sf_dir):
         "doc_id",
         "source",
         fingerprint(F.col("text")).alias("f"),
-        F.size(F.split(F.lower(F.col("text")), " ")).cast("long").alias("t"),
+        token_count_ws(F.col("text")).cast("long").alias("t"),
     )
     grp = d.groupBy("f").agg(F.count(F.lit(1)).cast("long").alias("s"))
     w = d.join(grp, "f").select(

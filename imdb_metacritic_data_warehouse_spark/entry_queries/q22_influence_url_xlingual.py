@@ -303,7 +303,7 @@ def crosslingual_neardup_docs(spark, sf_dir):
     from ..operators.text import language_id
 
     d = _t(spark, sf_dir, "documents")
-    pairs = prefix_filter_jaccard_pairs(d, "doc_id", "text", threshold_pct=60)
+    pairs = prefix_filter_jaccard_pairs(d, "doc_id", "text")
     # The annotation joins are INNER, so only docs that appear in a
     # pair ever need a prediction — language_id (~32 array_remove
     # passes per doc) previously ran over the WHOLE corpus, here it
@@ -440,7 +440,7 @@ def crosslingual_neardup_collapsed(spark, sf_dir):
     # the pair join AND both annotation branches, and unmaterialized it
     # re-executed three times (r10).  Checkpoint once.
     reps = materialize(reps, "crosslingual_neardup_collapsed.reps")
-    pairs = prefix_filter_jaccard_pairs(reps, "doc_id", "text", threshold_pct=60)
+    pairs = prefix_filter_jaccard_pairs(reps, "doc_id", "text")
     # SIZE CONTRACT for the annotation broadcasts (ADVICE r10): the
     # joins below are INNER, so only representatives that appear in a
     # pair ever contribute — semi-join the rep table down to the pair

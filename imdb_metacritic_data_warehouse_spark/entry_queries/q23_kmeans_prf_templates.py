@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from ._registry import F, _t, materialize, query
 from .q03_dedup_lsh import _QUALITY_SQL
+from ..operators.text import token_count_ws, tokens
 
 _KM_K = 8
 _KM_DIMS = 64
@@ -212,7 +213,7 @@ def rocchio_expansion_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") >= 3)
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -321,7 +322,7 @@ def rocchio_expansion_docs(spark, sf_dir):
 def boilerplate_templates_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     w = d.select(
-        "doc_id", "source", F.split(F.lower(F.col("text")), " ").alias("t")
+        "doc_id", "source", tokens(F.col("text")).alias("t")
     )
     fp = w.select(
         "doc_id",
@@ -550,7 +551,7 @@ def cuped_variance_reduction_events(spark, sf_dir):
     """,
 )
 def label_shift_bbse_docs(spark, sf_dir):
-    from ..operators.text import quality_score, token_count_ws
+    from ..operators.text import quality_score
 
     d = _t(spark, sf_dir, "documents")
     s = d.select(

@@ -24,21 +24,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+_CHUNK_SECONDS = 86400  # interval_overlap_join's time chunk: one day
+
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_payload: list[str] | None = None,
-    suffix: str = "_asof",
     right_tiebreak: str | None = None,
     direction: str = "backward",
     tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row + the nearest right payload —
-    pandas ``merge_asof`` parity on a distributed plan.
+    pandas ``merge_asof`` parity on a distributed plan.  Both sides
+    carry their timestamp in ``ts``; payload columns come out with an
+    ``_asof`` suffix.
 
     ``direction='backward'`` (default) carries the most recent right
     row at or BEFORE the left timestamp; ``'forward'`` the earliest at
@@ -59,9 +60,9 @@ def asof_join(
     scan (never a θ-join) — forward simply scans time in reverse."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    payload = right_payload or [c for c in right.columns if c not in (key, right_ts)]
+    payload = right_payload or [c for c in right.columns if c not in (key, "ts")]
     tie_type = dict(right.dtypes)[right_tiebreak] if right_tiebreak else "int"
-    rts_type = dict(right.dtypes)[right_ts]
+    rts_type = dict(right.dtypes)["ts"]
     r_struct_type = (
         "struct<"
         + ",".join(f"{c}:{dict(right.dtypes)[c]}" for c in payload)
@@ -69,7 +70,7 @@ def asof_join(
     )
     l_tag = left.select(
         F.col(key),
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__is_left"),
         F.lit(None).cast(tie_type).alias("__tie"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__l"),
@@ -77,14 +78,14 @@ def asof_join(
     )
     r_tag = right.select(
         F.col(key),
-        F.col(right_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(0).alias("__is_left"),
         (F.col(right_tiebreak) if right_tiebreak else F.lit(0)).alias("__tie"),
         F.lit(None).cast(
             "struct<" + ",".join(f"{c}:{dict(left.dtypes)[c]}" for c in left.columns) + ">"
         ).alias("__l"),
         F.struct(
-            *[F.col(c) for c in payload], F.col(right_ts).alias("__rts")
+            *[F.col(c) for c in payload], F.col("ts").alias("__rts")
         ).alias("__r"),
     )
     unioned = l_tag.unionByName(r_tag)
@@ -115,7 +116,7 @@ def asof_join(
         matched = F.when(gap <= F.lit(int(tolerance_seconds)), F.col("__last_r"))
     carried = carried.withColumn("__m", matched)
     out_cols = [F.col(f"__l.{c}").alias(c) for c in left.columns] + [
-        F.col(f"__m.{c}").alias(f"{c}{suffix}") for c in payload
+        F.col(f"__m.{c}").alias(f"{c}_asof") for c in payload
     ]
     return carried.filter(F.col("__is_left") == 1).select(*out_cols)
 
@@ -127,11 +128,11 @@ def range_join_bucketed(
     left_ts: str,
     right_ts: str,
     range_seconds: int,
-    bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Pairs (left, right) with same key and ``left_ts - range <=
-    right_ts <= left_ts``, via bucketized equi-join + residual filter."""
-    bucket = bucket_seconds or max(range_seconds, 1)
+    right_ts <= left_ts``, via bucketized equi-join + residual filter
+    on buckets one range wide."""
+    bucket = max(range_seconds, 1)
     n_buckets = range_seconds // bucket + 1
     l_b = left.withColumn(
         "__bucket", (F.unix_timestamp(left_ts) / bucket).cast("long")
@@ -155,18 +156,14 @@ def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_bounds: tuple[str, str] = ("start_ts", "end_ts"),
-    right_bounds: tuple[str, str] = ("start_ts", "end_ts"),
-    chunk_seconds: int = 86400,
-    suffix: str = "_r",
 ) -> DataFrame:
     """INTERVAL × INTERVAL overlap join (both sides are [start, end]
-    ranges — the shape ``range_join_bucketed`` does not cover, where
-    only one side is a point): all same-key pairs with
+    ranges in ``start_ts``/``end_ts`` — the shape ``range_join_bucketed``
+    does not cover, where only one side is a point): all same-key pairs with
     ``l.start <= r.end AND r.start <= l.end``.
 
     Spark plans a raw overlap predicate as BroadcastNestedLoop — O(n·m)
-    per key.  Here both sides explode to the ``chunk_seconds`` time
+    per key.  Here both sides explode to the ``_CHUNK_SECONDS`` time
     chunks their interval covers and equi-join on (key, chunk), which
     shuffles instead of looping.  A pair overlapping several chunks
     would emit duplicates; instead of a ``dropDuplicates`` shuffle,
@@ -175,24 +172,23 @@ def interval_overlap_join(
     first instant, which both rows provably cover) — a pure codegen
     filter, so the whole operator is ONE shuffle.
 
-    Scale: fan-out per row is ⌈span/chunk⌉+1 — pick ``chunk_seconds``
+    Scale: fan-out per row is ⌈span/chunk⌉+1 — the one-day chunk sits
     near the TYPICAL interval span (explosion stays O(rows)); a few
     huge intervals only widen their own fan-out linearly, and the
     (key, chunk) join AQE-splits hot chunks.  Right columns are
-    suffixed; both bound columns must be non-null timestamps."""
-    ls, le = left_bounds
-    rs_, re_ = right_bounds
+    suffixed ``_r``; both bound columns must be non-null timestamps."""
+    ls, le = "start_ts", "end_ts"
     r_renamed = right.select(
         F.col(key),
-        *[F.col(c).alias(f"{c}{suffix}") for c in right.columns if c != key],
+        *[F.col(c).alias(f"{c}_r") for c in right.columns if c != key],
     )
-    rs, re = f"{rs_}{suffix}", f"{re_}{suffix}"
+    rs, re = "start_ts_r", "end_ts_r"
 
     def chunks(start_col: str, end_col: str) -> Column:
         return F.explode(
             F.sequence(
-                F.floor(F.unix_timestamp(F.col(start_col)) / chunk_seconds),
-                F.floor(F.unix_timestamp(F.col(end_col)) / chunk_seconds),
+                F.floor(F.unix_timestamp(F.col(start_col)) / _CHUNK_SECONDS),
+                F.floor(F.unix_timestamp(F.col(end_col)) / _CHUNK_SECONDS),
             )
         )
 
@@ -200,7 +196,7 @@ def interval_overlap_join(
     r_c = r_renamed.withColumn("__chunk", chunks(rs, re))
     owner = F.floor(
         F.greatest(F.unix_timestamp(F.col(ls)), F.unix_timestamp(F.col(rs)))
-        / chunk_seconds
+        / _CHUNK_SECONDS
     )
     return (
         l_c.join(r_c, [key, "__chunk"])

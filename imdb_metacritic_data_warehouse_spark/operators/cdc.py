@@ -29,12 +29,11 @@ def apply_cdc_batch(
     base: DataFrame,
     changes: DataFrame,
     key: str,
-    op_col: str = "op",
     strict: bool = False,
 ) -> DataFrame:
     """Apply a CDC batch to ``base``.
 
-    ``changes`` must carry ``key``, ``op_col`` ('I' | 'U' | 'D'), and
+    ``changes`` must carry ``key``, ``op`` ('I' | 'U' | 'D'), and
     the same payload columns as ``base`` (payload values are ignored
     for 'D').  At most one change row per key per batch is the caller's
     contract (enforce upstream with last-change-wins compaction).
@@ -46,7 +45,7 @@ def apply_cdc_batch(
     """
     payload = [c for c in base.columns if c != key]
     ch = changes.select(
-        F.col(key), F.col(op_col).alias("__op"), *[F.col(c).alias(f"__n_{c}") for c in payload]
+        F.col(key), F.col("op").alias("__op"), *[F.col(c).alias(f"__n_{c}") for c in payload]
     )
     if strict:
         bad = (

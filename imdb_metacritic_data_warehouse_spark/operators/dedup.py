@@ -27,11 +27,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import fingerprint, shingle_rows
+from .text import fingerprint, shingle_rows, tokens
 from .materialize import materialize
 
 MINHASH_HASHES = 12
 MINHASH_BANDS = 4  # 4 bands × 3 rows
+_CC_MAX_ITERS = 25  # connected_components' round cap
+_EMBED_SIG_BITS = 8  # embedding_neardup's sign-signature width
+_JACCARD_PCT = 60  # prefix_filter_jaccard_pairs' threshold, integer percent
+_LCS_K = 7  # lcs_pairs' anchor gram length in words
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -101,32 +105,31 @@ def _minhash_cols(
     )
 
 
-def minhash_sig_sql(shingles_expr: str = "shingles", num_hashes: int = 12) -> str:
+def minhash_sig_sql() -> str:
     """The DuckDB twin of ``_minhash_cols``'s hash family as a
-    list-valued SQL expression (used by the oracle queries so engine
-    and oracle share ONE set of coefficients)."""
+    list-valued SQL expression over a ``shingles`` list column (used by
+    the oracle queries so engine and oracle share ONE set of
+    coefficients)."""
     hi = "CAST(CONCAT('0x', substr(md5(s), 1, 8)) AS BIGINT)"
     lo = "CAST(CONCAT('0x', substr(md5(s), 9, 8)) AS BIGINT)"
     parts = [
         (
-            f"list_min(list_transform({shingles_expr}, "
+            f"list_min(list_transform(shingles, "
             f"s -> ({a} * {hi} + {b} * {lo} + {c}) % {MINHASH_MOD}))"
         )
-        for a, b, c in MINHASH_COEFFS[:num_hashes]
+        for a, b, c in MINHASH_COEFFS[:MINHASH_HASHES]
     ]
     return "list_value(" + ", ".join(parts) + ")"
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = MINHASH_HASHES
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document MinHash signature: ``minhash_j = min over shingles
     of g_j(md5(shingle))`` with the 2-universal multiply-add family
     above, over word-3-gram shingles.  md5-as-base-hash keeps the
     sketch reproducible in any engine."""
-    cols = _minhash_cols(df, id_col, text_col, num_hashes)
+    cols = _minhash_cols(df, id_col, text_col, MINHASH_HASHES)
     return cols.select(
-        "doc_id", F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias("sig")
+        "doc_id", F.array(*[F.col(f"h{j}") for j in range(MINHASH_HASHES)]).alias("sig")
     )
 
 
@@ -164,8 +167,6 @@ def incremental_neardup_filter(
     corpus_bands: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """Incremental near-dup ingest gate: batch documents colliding with
     ANY committed corpus band signature are dropped; the rest survive.
@@ -178,7 +179,7 @@ def incremental_neardup_filter(
     candidate-level test (same recall/precision as
     ``lsh_candidate_pairs``); chain ``ngram_jaccard`` on the hit pairs
     when the pipeline needs verified-similarity drops instead."""
-    bb = lsh_band_table(batch, id_col, text_col, num_hashes, bands)
+    bb = lsh_band_table(batch, id_col, text_col)
     hits = (
         bb.join(corpus_bands.select("band", "band_sig"), ["band", "band_sig"], "left_semi")
         .select("doc_id")
@@ -193,8 +194,6 @@ def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
     bucket_cap: int = 1024,
     threshold: float | None = None,
     max_hashes: int = MINHASH_HASHES,
@@ -225,8 +224,9 @@ def lsh_candidate_pairs(
     ``threshold`` is the preferred front door: the banding scheme is
     derived from the target Jaccard similarity via ``lsh_params``
     (S-curve midpoint fitting, bounded by ``max_hashes``) instead of
-    hand-picked (num_hashes, bands).
+    hand-picked ``MINHASH_HASHES``/``MINHASH_BANDS``.
     """
+    num_hashes, bands = MINHASH_HASHES, MINHASH_BANDS
     if threshold is not None:
         num_hashes, bands = lsh_params(threshold, max_hashes)
     banded = lsh_band_table(df, id_col, text_col, num_hashes, bands)
@@ -265,7 +265,6 @@ def decontaminate(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    bench_text_col: str | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: drop every training document whose
     normalized-text fingerprint appears in ``benchmark`` (the eval-set
@@ -278,9 +277,9 @@ def decontaminate(
     corpus is never shuffled; md5 keys are uniform so even a sort-merge
     fallback has no skew.  Matching is exact-after-normalization;
     near-dup contamination composes by routing ``lsh_candidate_pairs``
-    over corpus ∪ benchmark instead."""
-    bcol = bench_text_col or text_col
-    bench_fp = benchmark.select(fingerprint(F.col(bcol)).alias("__fp")).distinct()
+    over corpus ∪ benchmark instead.  Both sides carry the text in
+    ``text_col``."""
+    bench_fp = benchmark.select(fingerprint(F.col(text_col)).alias("__fp")).distinct()
     return (
         corpus.withColumn("__fp", fingerprint(F.col(text_col)))
         .join(bench_fp, "__fp", "left_anti")
@@ -298,9 +297,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     shuffle regardless of ``bits``, no bits× row blowup.
     Output: (doc_id, simhash: long)."""
     tok_hash = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10).cast("long")
-    tokens = df.select(
+    toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("__tok"),
+        F.explode(tokens(F.col(text_col))).alias("__tok"),
     ).select("doc_id", tok_hash.alias("h"))
     votes = [
         F.sum(
@@ -308,7 +307,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
         ).alias(f"v{j}")
         for j in range(bits)
     ]
-    per_doc = tokens.groupBy("doc_id").agg(*votes)
+    per_doc = toks.groupBy("doc_id").agg(*votes)
     sig = None
     for j in range(bits):
         bit = F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
@@ -320,15 +319,13 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
 
 def embedding_neardup(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.99,
-    n_bits: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the fifth dedup variant.
 
     Scale shape (same philosophy as MinHash+LSH): never the O(n²)
-    cross-join.  Each vector gets an ``n_bits``-bit sign signature from
+    cross-join.  Each ``(vec_id, embedding)`` row gets an
+    ``_EMBED_SIG_BITS``-bit sign signature from
     fixed coordinate-difference hyperplanes (bit j = sign of
     ``v[2j] − v[2j+1]``); only vectors sharing the full signature are
     exact-scored with cosine = dot/(‖a‖·‖b‖).  Fixed-coordinate planes
@@ -341,12 +338,12 @@ def embedding_neardup(
     """
 
     def bit(j: int) -> F.Column:
-        d = F.element_at(F.col(vec_col), 2 * j + 1).cast("double") - F.element_at(
-            F.col(vec_col), 2 * j + 2
+        d = F.element_at(F.col("embedding"), 2 * j + 1).cast("double") - F.element_at(
+            F.col("embedding"), 2 * j + 2
         ).cast("double")
         return F.when(d >= 0, F.lit("1")).otherwise(F.lit("0"))
 
-    sig = F.concat(*[bit(j) for j in range(n_bits)])
+    sig = F.concat(*[bit(j) for j in range(_EMBED_SIG_BITS)])
     dot = F.aggregate(
         F.zip_with(
             F.col("a.v"), F.col("b.v"), lambda x, y: x.cast("double") * y.cast("double")
@@ -360,14 +357,14 @@ def embedding_neardup(
     # distinct values)
     norm = F.sqrt(
         F.aggregate(
-            F.col(vec_col),
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
     bucketed = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
         sig.alias("sig"),
         norm.alias("nrm"),
     )
@@ -386,12 +383,7 @@ def embedding_neardup(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Group near-duplicate candidate pairs into clusters — the final
     stage of large-scale dedup (LSH emits *pairs*; keeping one document
     per transitive group needs components).
@@ -405,8 +397,9 @@ def connected_components(
     per round so the plan doesn't grow with iterations (the classic
     iterative-algorithm trap at scale).
 
-    Output: (node, cluster) for every node appearing in ``pairs``,
-    cluster = min node id reachable (the canonical keeper).
+    Output: (node, cluster) for every node of the ``doc_a``/``doc_b``
+    edges in ``pairs``, cluster = min node id reachable (the canonical
+    keeper).
     """
     # Both edge directions from ONE pass over ``pairs``: a union of
     # (s,d) and (d,s) branches would execute the candidate-pair
@@ -417,8 +410,8 @@ def connected_components(
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
-                    F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
+                    F.struct(F.col("doc_a").alias("s"), F.col("doc_b").alias("d")),
+                    F.struct(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")),
                 )
             ).alias("e")
         )
@@ -438,7 +431,7 @@ def connected_components(
     # decreases until the fixpoint: a stable sum IS convergence.  One
     # cheap aggregate per round instead of a join-based diff.
     prev_sum = labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         nbr_min = (
             edges.join(labels, edges.d == labels.n)
             .groupBy("s")
@@ -461,13 +454,13 @@ def connected_components(
 
 
 def _pair_gram_stats(
-    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str, n: int
+    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Shared machinery for pairwise n-gram measures: one distinct-
     shingle explode, two semi-bounded joins (only candidate docs'
     shingles move), group-wise intersection counts.  Returns pairs +
     (n_inter, n_a, n_b); Jaccard and containment are projections."""
-    sh = shingle_rows(df, id_col, text_col, n).distinct().withColumnRenamed("s", "sh")
+    sh = shingle_rows(df, id_col, text_col).distinct().withColumnRenamed("s", "sh")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("sa")
     b = sh.alias("sb")
@@ -486,12 +479,12 @@ def _pair_gram_stats(
 
 
 def ngram_jaccard(
-    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str, n: int = 3
+    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for given (doc_a, doc_b) pairs:
+    """Exact word-3-gram Jaccard similarity for given (doc_a, doc_b) pairs:
     |A∩B| counted group-wise, |A∪B| derived as |A|+|B|−|A∩B|.
     Output: pairs + ``jaccard``."""
-    return _pair_gram_stats(df, pairs, id_col, text_col, n).select(
+    return _pair_gram_stats(df, pairs, id_col, text_col).select(
         "doc_a",
         "doc_b",
         F.round(
@@ -503,16 +496,16 @@ def ngram_jaccard(
 
 
 def ngram_containment(
-    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str, n: int = 3
+    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Directed n-gram containment for candidate pairs:
+    """Directed word-3-gram containment for candidate pairs:
     ``containment_a = |grams(A) ∩ grams(B)| / |grams(A)|`` (and the
     mirror for B) — the asymmetric complement to ``ngram_jaccard``.
     Jaccard misses the wire-copy case where a short document sits
     whole inside a long one (|A∩B|/|A∪B| is small when |B| ≫ |A|,
     but containment_a ≈ 1 flags it).  Output: pairs +
     (containment_a, containment_b)."""
-    return _pair_gram_stats(df, pairs, id_col, text_col, n).select(
+    return _pair_gram_stats(df, pairs, id_col, text_col).select(
         "doc_a",
         "doc_b",
         F.round(F.col("n_inter").cast("double") / F.col("n_a").cast("double"), 6).alias(
@@ -553,10 +546,9 @@ def prefix_filter_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold_pct: int = 60,
     collapse_exact: bool = False,
 ) -> DataFrame:
-    """EXACT set-similarity join (shingle-set Jaccard ≥ threshold) via
+    """EXACT set-similarity join (shingle-set Jaccard ≥ 60%) via
     prefix filtering — the PPJoin family's core idea (Xiao et al.,
     WWW'08), complementing the PROBABILISTIC MinHash/LSH path: no false
     negatives, no signature tuning, at the cost of one set-element join.
@@ -574,7 +566,7 @@ def prefix_filter_jaccard_pairs(
     prefixes ⇒ below threshold.  Candidates then verify EXACTLY against
     the full sets.
 
-    ``threshold_pct`` is an integer percent so the final test is pure
+    ``_JACCARD_PCT`` is an integer percent so the final test is pure
     integer math (100·inter ≥ pct·union) — engine-portable with no
     float boundary.  Scale: per-doc window (partitioned by doc), one
     join keyed on prefix shingles (rare by construction — the frequency
@@ -662,7 +654,7 @@ def prefix_filter_jaccard_pairs(
     # reused as both join sides below — materialize the ranking once
     prefix = ranked.filter(
         F.col("pos")
-        <= F.col("sz") - F.floor((F.lit(threshold_pct) * F.col("sz") + 99) / 100) + 1
+        <= F.col("sz") - F.floor((F.lit(_JACCARD_PCT) * F.col("sz") + 99) / 100) + 1
     ).select("doc", "tok", "sz", "pos")
     prefix = materialize(prefix, "prefix_filter_jaccard_pairs.prefix")
     a = prefix.select(
@@ -692,7 +684,7 @@ def prefix_filter_jaccard_pairs(
         # length filter (conservative, integer): 100·min ≥ pct·max
         .filter(
             F.lit(100) * F.least("sz_a", "sz_b")
-            >= F.lit(threshold_pct) * F.greatest("sz_a", "sz_b")
+            >= F.lit(_JACCARD_PCT) * F.greatest("sz_a", "sz_b")
         )
         .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
         .agg(
@@ -704,8 +696,8 @@ def prefix_filter_jaccard_pairs(
             ).alias("__ub")
         )
         .filter(
-            F.col("__ub") * (100 + threshold_pct)
-            >= F.lit(threshold_pct) * (F.col("sz_a") + F.col("sz_b"))
+            F.col("__ub") * (100 + _JACCARD_PCT)
+            >= F.lit(_JACCARD_PCT) * (F.col("sz_a") + F.col("sz_b"))
         )
         .select("doc_a", "doc_b", "sz_a", "sz_b")
     )
@@ -719,7 +711,7 @@ def prefix_filter_jaccard_pairs(
     )
     out = (
         inter.withColumn("uni", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        .filter(F.lit(100) * F.col("inter") >= F.lit(threshold_pct) * F.col("uni"))
+        .filter(F.lit(100) * F.col("inter") >= F.lit(_JACCARD_PCT) * F.col("uni"))
         .select(
             "doc_a",
             "doc_b",
@@ -751,14 +743,11 @@ def prefix_filter_jaccard_pairs(
 
 def lcs_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 7,
     cap: int = 16,
     collapse_exact: bool = False,
 ) -> DataFrame:
     """Longest common substring (in words) per document pair, exact for
-    common spans >= ``k`` words among grams under the frequency cap.
+    common spans >= k = ``_LCS_K`` words among grams under the frequency cap.
 
     Suffix-automaton/LCP methods find the longest common substring with
     a single-machine suffix structure; the distributed re-expression
@@ -774,6 +763,7 @@ def lcs_pairs(
     diagonal) + one pair-keyed window — no data-sized sort, no
     quadratic pair emission.
 
+    Documents are ``(doc_id, text)`` rows.
     Output: (da, db, lcs_words, n_anchors) for every pair sharing at
     least one capped gram; ``n_anchors`` = shared gram-position count.
 
@@ -791,18 +781,18 @@ def lcs_pairs(
 
     if collapse_exact:
         fp = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias(text_col),
-            fingerprint(F.col(text_col)).alias("__fp"),
+            F.col("doc_id").alias("doc_id"),
+            F.col("text").alias("text"),
+            fingerprint(F.col("text")).alias("__fp"),
         )
         reps = fp.groupBy("__fp").agg(
             F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).cast("bigint").alias("mult"),
         )
         rd = reps.join(
-            fp.select("doc_id", text_col), "doc_id"
-        ).select("doc_id", "mult", text_col)
-        base = lcs_pairs(rd, "doc_id", text_col, k=k, cap=cap)
+            fp.select("doc_id", "text"), "doc_id"
+        ).select("doc_id", "mult", "text")
+        base = lcs_pairs(rd, cap=cap)
         m = reps.select("doc_id", "mult")
         return (
             base.join(m.withColumnRenamed("doc_id", "da"), "da")
@@ -816,16 +806,16 @@ def lcs_pairs(
         )
 
     tokd = df.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w")
-    ).filter(F.size("w") >= k)
+        F.col("doc_id").alias("doc_id"), tokens(F.col("text")).alias("w")
+    ).filter(F.size("w") >= _LCS_K)
     pos = tokd.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.size("w") - (k - 1)),
+                F.sequence(F.lit(1), F.size("w") - (_LCS_K - 1)),
                 lambda i: F.struct(
                     i.cast("long").alias("p"),
-                    F.array_join(F.slice("w", i, k), " ").alias("g"),
+                    F.array_join(F.slice("w", i, _LCS_K), " ").alias("g"),
                 ),
             )
         ).alias("pg"),
@@ -872,7 +862,7 @@ def lcs_pairs(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("da", "db")
         .agg(
-            (F.max("cnt") + (k - 1)).cast("bigint").alias("lcs_words"),
+            (F.max("cnt") + (_LCS_K - 1)).cast("bigint").alias("lcs_words"),
             F.sum("cnt").cast("bigint").alias("n_anchors"),
         )
         .select("da", "db", "lcs_words", "n_anchors")

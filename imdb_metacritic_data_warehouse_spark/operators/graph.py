@@ -39,6 +39,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from .materialize import materialize
 
+_PR_ITERS = 3  # (personalized) PageRank rounds, unrolled by the oracle too
+_PR_DAMPING = 0.85
+_KCORE_K = 3
+_KCORE_ROUNDS = 6
+_LP_ROUNDS = 3  # label_propagation rounds
+_HITS_ITERS = 2
+
 
 def undirected_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Symmetrize distinct (a < b) pairs into a both-directions edge
@@ -51,20 +58,18 @@ def undirected_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
 
 def pagerank(
     edges: DataFrame,
-    iters: int = 3,
-    damping: float = 0.85,
     checkpoint_every: int = 1,
     symmetric: bool = False,
 ) -> DataFrame:
     """Power-iteration PageRank over an (src, dst) edge list.
 
-    Returns (node, pr).  ``iters`` fixed and small keeps the result
+    Returns (node, pr).  ``_PR_ITERS`` fixed and small keeps the result
     SQL-oracle-expressible (the DuckDB twin unrolls the same
     iterations); production runs would iterate to an L1 tolerance the
     same way connected_components loops to a fixpoint.
 
     ``checkpoint_every`` / ``symmetric``: same semantics as
-    :func:`personalized_pagerank` — 0 fuses the fixed small-``iters``
+    :func:`personalized_pagerank` — 0 fuses the fixed small-``_PR_ITERS``
     rounds into one job; symmetric edge lists get ``nodes`` from the
     degree aggregate instead of a union+distinct over 2|E| rows.
     """
@@ -91,9 +96,9 @@ def pagerank(
     # for nothing (measured ~30% of end-to-end on the co-purchase
     # graph).
 
-    base = (1.0 - damping) / n_nodes
+    base = (1.0 - _PR_DAMPING) / n_nodes
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
-    for it in range(iters):
+    for it in range(_PR_ITERS):
         # fresh-alias copies per round (see personalized_pagerank)
         degr = deg.select(
             F.col("src").alias("rsrc"), F.col("out_deg").alias("__od")
@@ -115,18 +120,18 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                    F.lit(base) + F.lit(_PR_DAMPING) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("pr"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < iters - 1:
+        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < _PR_ITERS - 1:
             ranks = materialize(ranks, "pagerank.ranks")
     return ranks
 
 
-def triangle_counts(pairs: DataFrame, a: str = "pa", b: str = "pb") -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node triangle counts over a distinct undirected pair list
-    (``a < b`` per row) — the clustering/community-density signal
+    (``pa < pb`` per row) — the clustering/community-density signal
     (and the robustness metric behind spam-graph detection).
 
     Scale shape — degree-ordered EDGE-ITERATOR counting: every edge is
@@ -144,7 +149,7 @@ def triangle_counts(pairs: DataFrame, a: str = "pa", b: str = "pb") -> DataFrame
 
     Returns (node, tri) for every node in at least one triangle.
     """
-    fwd = pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
+    fwd = pairs.select(F.col("pa").alias("x"), F.col("pb").alias("y"))
     deg = (
         fwd.select(F.col("x").alias("node"))
         .unionByName(fwd.select(F.col("y").alias("node")))
@@ -269,8 +274,6 @@ def bfs_distances(
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
-    iters: int = 3,
-    damping: float = 0.85,
     checkpoint_every: int = 1,
     symmetric: bool = False,
 ) -> DataFrame:
@@ -290,9 +293,9 @@ def personalized_pagerank(
     Each checkpoint bounds the plan tree but FORCES a job per round;
     the rank chain is linear (each round's frame feeds only the next),
     so skipping checkpoints is safe for correctness and lets several
-    rounds fuse into one job — right for small fixed ``iters``.
-    ``0`` disables intra-loop checkpoints entirely (use when ``iters``
-    is a small constant, as the oracle-bound 3-round queries are);
+    rounds fuse into one job — right for small fixed ``_PR_ITERS``.
+    ``0`` disables intra-loop checkpoints entirely (use when the round
+    count is a small constant, as the oracle-bound 3-round queries are);
     keep ``1`` for tolerance-driven production loops where the
     unrolled tree would otherwise grow without bound.
 
@@ -318,12 +321,12 @@ def personalized_pagerank(
     seed_nodes = seeds.select("node").distinct()
     n_seeds = seed_nodes.count()  # scalar only
     r0 = seed_nodes.withColumn("__r0", F.lit(1.0 / n_seeds))
-    teleport = F.lit(1.0) - F.lit(damping)
+    teleport = F.lit(1.0) - F.lit(_PR_DAMPING)
 
     ranks = nodes.join(F.broadcast(r0), "node", "left").select(
         "node", F.coalesce("__r0", F.lit(0.0)).alias("pr")
     )
-    for it in range(iters):
+    for it in range(_PR_ITERS):
         # fresh-alias copies re-key attribute ids per round: without the
         # per-round checkpoint the previous round's lineage embeds deg's
         # and edges' attributes, and re-joining the originals trips
@@ -351,18 +354,18 @@ def personalized_pagerank(
                 "node",
                 (
                     teleport * F.coalesce(F.col("__r0"), F.lit(0.0))
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                    + F.lit(_PR_DAMPING) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("pr"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < iters - 1:
+        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it < _PR_ITERS - 1:
             ranks = materialize(ranks, "personalized_pagerank.ranks")
     return ranks
 
 
-def degree_assortativity(pairs: DataFrame, a: str = "pa", b: str = "pb") -> DataFrame:
+def degree_assortativity(pairs: DataFrame) -> DataFrame:
     """Degree assortativity coefficient: Pearson correlation of
-    (deg(src), deg(dst)) over the symmetrized edge list — positive
+    (deg(src), deg(dst)) over the symmetrized ``pa``/``pb`` edge list — positive
     when hubs link to hubs (social-graph shape), negative when hubs
     link to leaves (star/catalog shape).
 
@@ -372,7 +375,7 @@ def degree_assortativity(pairs: DataFrame, a: str = "pa", b: str = "pb") -> Data
     Degrees come from one groupBy of the edge list and join back onto
     edges twice — both sides shuffled once on node id, no window, no
     driver collect.  Scales as O(E) shuffle however large the graph."""
-    edges = undirected_edges(pairs, a, b)
+    edges = undirected_edges(pairs, "pa", "pb")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     xy = (
         edges.join(deg.withColumnRenamed("src", "u").withColumnRenamed("d", "dx"),
@@ -400,15 +403,10 @@ def degree_assortativity(pairs: DataFrame, a: str = "pa", b: str = "pb") -> Data
     )
 
 
-def kcore_peel(
-    pairs: DataFrame,
-    k: int = 3,
-    rounds: int = 6,
-    a: str = "pa",
-    b: str = "pb",
-) -> DataFrame:
-    """Fixed-round k-core peeling: repeatedly drop nodes with degree
-    < k and the edges touching them.  ``rounds`` is FIXED (not
+def kcore_peel(pairs: DataFrame) -> DataFrame:
+    """Fixed-round k-core peeling of a ``pa``/``pb`` pair list:
+    repeatedly drop nodes with degree < ``_KCORE_K`` and the edges
+    touching them.  ``_KCORE_ROUNDS`` is FIXED (not
     run-to-convergence) so the operator is a deterministic twin of an
     unrolled SQL oracle — convergence is *reported*, not assumed: the
     caller reads ``n_nodes_prev == n_nodes`` from the summary.
@@ -417,21 +415,21 @@ def kcore_peel(
     current edge set — O(E) shuffle per round, lineage bounded by a
     localCheckpoint every other round (the CC discipline).  Returns a
     ONE-ROW summary ``(n_nodes, n_edges, node_id_sum, converged)``
-    where ``converged`` compares the node count after round ``rounds``
-    against round ``rounds``−1.
+    where ``converged`` compares the node count after the last round
+    against the one before it.
 
     The per-round surviving-node set broadcasts, so BOTH semi-join
     filters are map-side hash probes and only the degree aggregate
     moves data (one 2|E| shuffle per round instead of three E-sized
     ones)."""
-    edges = pairs.select(F.col(a).alias("pa"), F.col(b).alias("pb"))
+    edges = pairs.select(F.col("pa").alias("pa"), F.col("pb").alias("pb"))
     prev_nodes = None
-    for r in range(rounds):
+    for r in range(_KCORE_ROUNDS):
         deg = (
             undirected_edges(edges, "pa", "pb")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= k)
+            .filter(F.col("d") >= _KCORE_K)
             .select(F.col("src").alias("node"))
         )
         deg = F.broadcast(deg)
@@ -439,7 +437,7 @@ def kcore_peel(
             edges.join(deg.withColumnRenamed("node", "pa"), "pa", "left_semi")
             .join(deg.withColumnRenamed("node", "pb"), "pb", "left_semi")
         )
-        if r % 2 == 1 or r >= rounds - 2:
+        if r % 2 == 1 or r >= _KCORE_ROUNDS - 2:
             # checkpoint BEFORE aliasing prev so the final round builds
             # on materialized edges instead of re-executing the chain.
             # The FINAL round is checkpointed too (r10): the summary
@@ -447,7 +445,7 @@ def kcore_peel(
             # count), and unmaterialized each branch re-executed the
             # whole last round's degree aggregate + both semi-joins.
             edges = materialize(edges, "kcore_peel.edges")
-        if r == rounds - 2:
+        if r == _KCORE_ROUNDS - 2:
             prev_nodes = edges
     summary_edges = edges
     prev = prev_nodes if prev_nodes is not None else edges
@@ -484,9 +482,6 @@ def kcore_peel(
 
 def label_propagation(
     pairs: DataFrame,
-    rounds: int = 3,
-    a: str = "pa",
-    b: str = "pb",
     distinct_pairs: bool = False,
 ) -> DataFrame:
     """Fixed-round synchronous label propagation (Raghavan 2007) —
@@ -495,7 +490,7 @@ def label_propagation(
     start as node ids; each round every node adopts the most frequent
     label among its neighbors, ties broken by SMALLEST label — the
     deterministic twin of an unrolled SQL oracle (the kcore_peel
-    discipline: ``rounds`` is fixed, convergence is the caller's
+    discipline: ``_LP_ROUNDS`` is fixed, convergence is the caller's
     judgement, and every tie-break is total).
 
     Scale shape per round: one hash join (edges × labels, keyed on the
@@ -509,7 +504,7 @@ def label_propagation(
     so the plan never compounds across rounds.  Returns (v, label).
     The per-round label table broadcasts into the edges⋈labels join.
 
-    ``distinct_pairs``: declares the input a DISTINCT (a < b) pair
+    ``distinct_pairs``: declares the input a DISTINCT (pa < pb) pair
     list (what the co-purchase builder emits).  Round 1 then needs no
     join at all: initial labels are the node ids themselves and every
     (dst, src) edge occurs exactly once, so each neighbor label has
@@ -518,9 +513,9 @@ def label_propagation(
     edge list, provably identical to the generic round (the unrolled
     SQL oracle runs the generic form; both SFs differential-checked).
     """
-    und = undirected_edges(pairs, a, b)
+    und = undirected_edges(pairs, "pa", "pb")
     start = 0
-    if distinct_pairs and rounds > 0:
+    if distinct_pairs:
         lab = und.groupBy(F.col("dst").alias("v")).agg(
             F.min("src").alias("label")
         )
@@ -531,7 +526,7 @@ def label_propagation(
             .distinct()
             .select("v", F.col("v").alias("label"))
         )
-    for r in range(start, rounds):
+    for r in range(start, _LP_ROUNDS):
         labside = F.broadcast(
             lab.select(F.col("v").alias("src"), F.col("label").alias("nl"))
         )
@@ -558,7 +553,7 @@ def label_propagation(
     return lab
 
 
-def hits_bipartite(edges: DataFrame, iters: int = 2) -> DataFrame:
+def hits_bipartite(edges: DataFrame) -> DataFrame:
     """HITS hubs & authorities over a directed bipartite edge list
     (src → dst), e.g. supplier → supplied-part: a good hub points at
     good authorities and vice versa (Kleinberg's mutual-reinforcement
@@ -575,7 +570,7 @@ def hits_bipartite(edges: DataFrame, iters: int = 2) -> DataFrame:
     changes scale, never ranking), so any partition layout and either
     engine produce bit-identical scores; the caller divides by the
     integer total ONCE at the end (a single correctly-rounded double
-    division).  Integer headroom: scores grow like (d̄_s·d̄_d)^iters —
+    division).  Integer headroom: scores grow like (d̄_s·d̄_d)^_HITS_ITERS —
     ~2.7e11 at sf0.1's supplier⋈part density, 1000× under int64.  For
     graphs dense enough to overflow (score bound ≥ 2^62), renormalize
     per round like production HITS and give up bit-parity — the knob
@@ -583,7 +578,7 @@ def hits_bipartite(edges: DataFrame, iters: int = 2) -> DataFrame:
 
     Scale shape per half-step: one edges⋈scores join keyed on the
     scored side + one aggregate keyed on the other side — node-keyed
-    shuffles only, no global state; `iters` is small and fixed so the
+    shuffles only, no global state; ``_HITS_ITERS`` is small and fixed so the
     DuckDB oracle unrolls the same algebra.  Returns
     (node, role['hub'|'authority'], score bigint).  Both score tables
     broadcast, so only the per-half-step aggregate moves data.
@@ -592,7 +587,7 @@ def hits_bipartite(edges: DataFrame, iters: int = 2) -> DataFrame:
     hubs = edges.select(F.col("src").alias("node")).distinct()
     h = hubs.select("node", F.lit(1).cast("long").alias("score"))
     a = None
-    for _ in range(iters):
+    for _ in range(_HITS_ITERS):
         a = materialize(
             edges.join(
                 F.broadcast(h.select(F.col("node").alias("src"), "score")), "src"

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _BAND = 4
+_MAX_DISTANCE = 2  # below _BAND, so a match is at most one length band away
 
 
 def fuzzy_join(
@@ -33,16 +34,12 @@ def fuzzy_join(
     right: DataFrame,
     left_col: str,
     right_col: str,
-    max_distance: int = 2,
-    suffix: str = "_r",
 ) -> DataFrame:
     """All (left, right) pairs with ``levenshtein(left_col, right_col)
-    <= max_distance``, up to first-token blocking recall.  Right
-    columns come back suffixed; a ``distance`` column is appended.
+    <= _MAX_DISTANCE``, up to first-token blocking recall.  Right
+    columns come back suffixed ``_r``; a ``distance`` column is appended.
     One (token, band) shuffle; comparisons bounded by block sizes (AQE
     splits hot blocks)."""
-    if max_distance >= _BAND:
-        raise ValueError("max_distance must stay below the length-band width")
 
     def keyed(df, col, explode_bands):
         n = F.lower(F.col(col))
@@ -55,14 +52,14 @@ def fuzzy_join(
         return df.withColumn("__w1", F.split(n, " ")[0]).withColumn("__band", b)
 
     l_k = keyed(left, left_col, explode_bands=False)
-    r_cols = [F.col(c).alias(f"{c}{suffix}") for c in right.columns]
-    r_k = keyed(right.select(*r_cols), f"{right_col}{suffix}", explode_bands=True)
+    r_cols = [F.col(c).alias(f"{c}_r") for c in right.columns]
+    r_k = keyed(right.select(*r_cols), f"{right_col}_r", explode_bands=True)
     dist = F.levenshtein(
-        F.lower(F.col(left_col)), F.lower(F.col(f"{right_col}{suffix}")), max_distance
+        F.lower(F.col(left_col)), F.lower(F.col(f"{right_col}_r")), _MAX_DISTANCE
     )
     return (
         l_k.join(r_k, ["__w1", "__band"])
         .withColumn("distance", dist)
-        .filter((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
+        .filter((F.col("distance") >= 0) & (F.col("distance") <= _MAX_DISTANCE))
         .drop("__w1", "__band")
     )

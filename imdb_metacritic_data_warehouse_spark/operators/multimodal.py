@@ -25,13 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "doc_id long, media_type string, n_bytes long, checksum string, feature array<double>"
+_FEATURE_DIMS = 4
 
 
-def attach_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Synthesize a media column from the documents table (UTF-8 bytes
-    stand in for image content); real deployments read binary columns
-    straight from parquet."""
-    content = F.encode(F.col(text_col), "utf-8")
+    of ``text`` stand in for image content); real deployments read
+    binary columns straight from parquet."""
+    content = F.encode(F.col("text"), "utf-8")
     return docs.select(
         F.col("doc_id"),
         content.alias("content"),
@@ -39,22 +40,22 @@ def attach_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.struct(
             F.lit(64).alias("width"),
             F.lit(64).alias("height"),
-            F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
+            F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
         ).alias("meta"),
     )
 
 
-def _fake_feature(content: bytes, dims: int = 4) -> list[float]:
-    """Deterministic stand-in feature: byte-sum folded into ``dims``
-    buckets (replaces a CNN embedding)."""
-    acc = [0] * dims
+def _fake_feature(content: bytes) -> list[float]:
+    """Deterministic stand-in feature: byte-sum folded into
+    ``_FEATURE_DIMS`` buckets (replaces a CNN embedding)."""
+    acc = [0] * _FEATURE_DIMS
     for i, b in enumerate(content):
-        acc[i % dims] += b
+        acc[i % _FEATURE_DIMS] += b
     total = float(sum(acc)) or 1.0
     return [a / total for a in acc]
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content.
 
     ``mapInPandas`` keeps the per-batch pandas DataFrame shape: the UDF

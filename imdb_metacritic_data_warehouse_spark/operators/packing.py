@@ -31,12 +31,11 @@ def global_cumsum(
     order_cols: list[Column],
     value_col: str,
     out_col: str = "cumsum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Attach the inclusive prefix sum of ``value_col`` under a total
     order (``order_cols`` must be deterministic and unique-prefixed,
     like global_row_number's)."""
-    return global_prefix(df, order_cols, [value_col], None, num_partitions).withColumnRenamed(
+    return global_prefix(df, order_cols, [value_col], None).withColumnRenamed(
         f"cum_{value_col}", out_col
     )
 
@@ -46,10 +45,9 @@ def pack_sequences(
     id_col: str,
     token_col: str,
     budget: int,
-    order_cols: list[Column] | None = None,
 ) -> DataFrame:
     """Assign each document its training-sequence span under the
-    concat-and-cut layout.
+    concat-and-cut layout, documents in ``id_col`` order.
 
     Output: one row per (document, sequence) pair —
     ``(id_col, seq_id, tokens_in_seq, starts_here)`` where
@@ -57,10 +55,9 @@ def pack_sequences(
     token.  Rows with a non-positive token count are dropped (nothing
     to pack).
     """
-    order_cols = order_cols or [F.col(id_col)]
     spanned = (
         global_cumsum(
-            df.filter(F.col(token_col) > 0), order_cols, token_col, out_col="__end"
+            df.filter(F.col(token_col) > 0), [F.col(id_col)], token_col, out_col="__end"
         )
         .withColumn("__start", F.col("__end") - F.col(token_col))
     )
@@ -89,15 +86,14 @@ def plan_compaction(
     id_col: str,
     size_col: str,
     target_bytes: int,
-    order_cols: list[Column] | None = None,
 ) -> DataFrame:
     """Small-file compaction planning — the table-maintenance step that
     keeps a 100 TB parquet layout healthy (thousands of tiny files per
     partition kill scan throughput and driver planning time).
 
     Given a file inventory (id, size), assign every file to a merge
-    group of ~``target_bytes``: files are laid out in a deterministic
-    total order, each gets its global byte offset via the two-phase
+    group of ~``target_bytes``: files are laid out in ``id_col``
+    order, each gets its global byte offset via the two-phase
     ``global_cumsum`` (no single-task window), and its group is plain
     arithmetic ``floor(start / target)`` — files are never split
     (unlike ``pack_sequences``), so a group can overshoot by at most
@@ -105,9 +101,8 @@ def plan_compaction(
     driver of an actual rewrite job reads this plan and merges each
     bin in one task.
     """
-    order_cols = order_cols or [F.col(id_col)]
     spanned = global_cumsum(
-        df.filter(F.col(size_col) > 0), order_cols, size_col, out_col="__end"
+        df.filter(F.col(size_col) > 0), [F.col(id_col)], size_col, out_col="__end"
     ).withColumn("__start", F.col("__end") - F.col(size_col))
     t = F.lit(target_bytes).cast("long")
     return spanned.select(
@@ -118,11 +113,9 @@ def plan_compaction(
     )
 
 
-def deterministic_shuffle(
-    df: DataFrame, id_col: str, salt: str, out_col: str = "pos"
-) -> DataFrame:
+def deterministic_shuffle(df: DataFrame, id_col: str, salt: str) -> DataFrame:
     """Deterministic global permutation for training-order shuffling:
-    position = rank under ``md5(id || salt)`` (uniform, engine-portable,
+    ``pos`` = rank under ``md5(id || salt)`` (uniform, engine-portable,
     reshuffled by changing ``salt`` — no ``rand()``, so reruns and
     retried tasks agree).  Two-phase ranking via global_row_number."""
     from .rank import global_row_number
@@ -131,5 +124,5 @@ def deterministic_shuffle(
         "__shuf", F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
     )
     return global_row_number(
-        keyed, [F.col("__shuf"), F.col(id_col)], out_col=out_col
+        keyed, [F.col("__shuf"), F.col(id_col)], out_col="pos"
     ).drop("__shuf")

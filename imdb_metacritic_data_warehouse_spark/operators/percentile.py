@@ -54,7 +54,6 @@ def exact_percentiles_grouped(
     value_col: str,
     fracs: list[float],
     out_names: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles of ``value_col`` per ``keys``
     group, one output column per fraction (NULLs excluded, like
@@ -62,7 +61,7 @@ def exact_percentiles_grouped(
     out_names = out_names or [f"p{int(f * 100)}" for f in fracs]
     assert len(out_names) == len(fracs)
     keys = list(keys)  # [] = one global group (a keyless total percentile)
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
 
     v = F.col(value_col).cast("double")
     # materialized: every branch (local ranks, offsets, counts, ranked)
@@ -139,7 +138,6 @@ def weighted_median_grouped(
     keys: list[str],
     value_col: str,
     weight_col,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Lower weighted median of ``value_col`` per group: the smallest
     value whose cumulative weight reaches half the group total
@@ -155,7 +153,7 @@ def weighted_median_grouped(
     Output: keys… + total_weight + weighted_median.
     """
     keys = list(keys)
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     v = F.col(value_col).cast("double")
     wt = (weight_col if not isinstance(weight_col, str) else F.col(weight_col)).cast(
         "long"

@@ -27,7 +27,6 @@ def global_row_number(
     df: DataFrame,
     order_cols: list[Column],
     out_col: str = "rn",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Attach a 1-based global row number under a total order.
 
@@ -35,7 +34,7 @@ def global_row_number(
     column if the prefix is non-unique — otherwise, like the
     reference's SQL, ties get an arbitrary stable-only-per-plan order).
     """
-    return global_prefix(df, order_cols, [], out_col, num_partitions)
+    return global_prefix(df, order_cols, [], out_col)
 
 
 def global_prefix(

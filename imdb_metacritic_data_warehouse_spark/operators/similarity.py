@@ -23,6 +23,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from .materialize import materialize
 
+# Every operator here reads the ``embeddings`` shape: ``vec_id`` long
+# keys and ``embedding`` arrays of _DIMS doubles.
+_DIMS = 64
+_IVF_SEED = 42  # ivf_index's k-means seed
+_SAMPLED_K = 10  # ivf_sampled_topk's k and number of sampled cells
+_SAMPLED_LISTS = 16
+_LSH_PLANES = 4  # lsh_bucketed_topk's hyperplanes per table, and tables
+_LSH_TABLES = 8
+_PQ_BLOCKS = 4  # pq_codes' subvectors per vector, and codebook size
+_PQ_CODES = 8
+_JL_DIMS = 16  # jl_project's output width and its planes' first seed
+_JL_SEED = 7000
+_POWER_ITERS = 3  # gram_power_iteration rounds
+_CKA_SCALE = 10**4  # cka_grids' metric grid
+
 
 def _dot(a, b):
     """Sequential double-precision dot product (order-stable)."""
@@ -55,8 +70,6 @@ def cosine_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (vectors are
@@ -69,10 +82,10 @@ def cosine_topk(
     lambda — the same swap that fixed ``knn_graph`` (r7); fold order
     and hence every double is identical.  Leave None for unknown-width
     inputs (falls back to the interpreted path)."""
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    c = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
+    c = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("cv"))
     dot = (
         dot_codegen("qv", "cv", dims=dims)
         if dims is not None
@@ -111,9 +124,6 @@ def _plane_weights(plane: int, dims: int) -> list[float]:
 def ivf_index(
     embeddings: DataFrame,
     n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF index build: a seeded k-means coarse quantizer
     (``pyspark.ml``) partitions the corpus into ``n_lists`` cells (at
@@ -125,13 +135,13 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    vecs = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
     ml = vecs.withColumn(
         "features",
         array_to_vector(F.transform("v", lambda x: x.cast("double"))),
     )
     model = KMeans(
-        k=n_lists, seed=seed, featuresCol="features", predictionCol="cell"
+        k=n_lists, seed=_IVF_SEED, featuresCol="features", predictionCol="cell"
     ).fit(ml)
     assigned = model.transform(ml).select("vec_id", "v", "cell")
 
@@ -150,9 +160,6 @@ def ivf_topk(
     k: int = 10,
     n_lists: int = 16,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     index: tuple[DataFrame, DataFrame] | None = None,
     dims: int | None = None,
 ) -> DataFrame:
@@ -167,9 +174,7 @@ def ivf_topk(
     cells are missed) — the ``ann_ivf`` entry audits this with banded
     verdicts (recall@k floor vs the brute-force twin + structural
     invariants), so the k-means path has a hashable contract."""
-    assigned, cdf = index if index is not None else ivf_index(
-        embeddings, n_lists=n_lists, id_col=id_col, vec_col=vec_col, seed=seed
-    )
+    assigned, cdf = index if index is not None else ivf_index(embeddings, n_lists=n_lists)
     q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -214,15 +219,11 @@ def ivf_topk(
 def ivf_sampled_topk(
     embeddings: DataFrame,
     query_ids: list[int],
-    k: int = 10,
-    n_lists: int = 16,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
 ) -> DataFrame:
     """IVF ANN with a *deterministic sampled quantizer*: centroids are
-    the first ``n_lists`` corpus vectors (by id) instead of k-means
+    the first ``_SAMPLED_LISTS`` corpus vectors (by id) instead of k-means
     means.  Identical IVF structure to ``ivf_topk`` — cell assignment
     by nearest centroid, queries probe ``n_probe`` nearest cells, exact
     scoring only inside probed cells — but every step is a pure
@@ -231,12 +232,13 @@ def ivf_sampled_topk(
     rows-checked; this variant proves the cell/probe machinery).
 
     Plan shape: centroids broadcast (tiny), assignment = one map-side
-    combined groupBy(vec) over the N×n_lists distance rows, probe
-    routing over |Q|×n_lists rows, candidates bucket-bounded by cell.
+    combined groupBy(vec) over the N×_SAMPLED_LISTS distance rows, probe
+    routing over |Q|×_SAMPLED_LISTS rows, candidates bucket-bounded by cell.
     Distances round to 6 dp before argmin (both engines) so float
-    summation order can't flip a cell choice."""
-    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    cent = vecs.filter(F.col("vec_id") < n_lists).select(
+    summation order can't flip a cell choice.  Keeps the top
+    ``_SAMPLED_K`` per query."""
+    vecs = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
+    cent = vecs.filter(F.col("vec_id") < _SAMPLED_LISTS).select(
         F.col("vec_id").cast("int").alias("cell"), F.col("v").alias("cv")
     )
     d2 = F.round(
@@ -283,18 +285,15 @@ def ivf_sampled_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _SAMPLED_K)
         .select("query_id", "vec_id", "score", "rank")
     )
 
 
 def _sign_buckets(
     embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
     n_planes: int,
     n_tables: int,
-    dims: int = 64,
     with_vectors: bool = True,
 ) -> DataFrame:
     """(vec_id, v, tbl, bucket) for every hash table, fully codegen'd
@@ -317,14 +316,14 @@ def _sign_buckets(
     # ~1.9s steady-state, ~3× the execution time, at 8 tables × 4
     # planes × 64 dims).
     def _proj_expr(t: int, p: int) -> F.Column:
-        arr = ",".join(f"{w:.1f}D" for w in _plane_weights(t * 1000 + p, dims))
+        arr = ",".join(f"{w:.1f}D" for w in _plane_weights(t * 1000 + p, _DIMS))
         return F.expr(f"sum(x * element_at(array({arr}), pos + 1))").alias(f"s_{t}_{p}")
 
     projs = [_proj_expr(t, p) for t in range(n_tables) for p in range(n_planes)]
     per_vec = (
         embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.posexplode(F.col(vec_col)).alias("pos", "x"),
+            F.col("vec_id").alias("vec_id"),
+            F.posexplode(F.col("embedding")).alias("pos", "x"),
         )
         .groupBy("vec_id")
         .agg(*projs)
@@ -349,7 +348,7 @@ def _sign_buckets(
     )
     if not with_vectors:
         return tb
-    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    vecs = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
     return tb.join(vecs, "vec_id")
 
 
@@ -358,8 +357,6 @@ def knn_graph(
     k: int = 5,
     n_planes: int = 6,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate k-NN GRAPH over the whole corpus (every vector is a
     query) — the substrate for SemDeDup-style semantic dedup and
@@ -381,9 +378,7 @@ def knn_graph(
     multiple of the corpus.  The two vector re-joins hash-partition on
     vec_id and are candidate-bounded; locally Catalyst broadcasts the
     embedding scan.  Output: (src, dst, score, rank)."""
-    b = _sign_buckets(
-        embeddings, id_col, vec_col, n_planes, n_tables, with_vectors=False
-    )
+    b = _sign_buckets(embeddings, n_planes, n_tables, with_vectors=False)
     left = b.select(F.col("vec_id").alias("src"), "tbl", "bucket")
     right = b.select(F.col("vec_id").alias("dst"), "tbl", "bucket")
     cand = (
@@ -392,7 +387,7 @@ def knn_graph(
         .select("src", "dst")
         .dropDuplicates(["src", "dst"])
     )
-    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    vecs = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
     scored = (
         cand.join(
             vecs.select(F.col("vec_id").alias("src"), F.col("v").alias("sv")), "src"
@@ -408,36 +403,29 @@ def knn_graph(
     )
 
 
-def pq_codes(
-    embeddings: DataFrame,
-    n_blocks: int = 4,
-    n_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> DataFrame:
+def pq_codes(embeddings: DataFrame) -> DataFrame:
     """Product-quantization encoding — the IVF-PQ compression standard:
-    each vector splits into ``n_blocks`` subvectors and every block is
+    each vector splits into ``_PQ_BLOCKS`` subvectors and every block is
     replaced by the id of its nearest codebook entry, so a 64-float
-    vector stores as ``n_blocks`` small ints (asymmetric-distance
+    vector stores as ``_PQ_BLOCKS`` small ints (asymmetric-distance
     search decodes against the codebook, never the original floats).
 
     Codebooks use the *deterministic sampled quantizer* rule of
     ``ivf_sampled_topk`` — block b's codebook is the b-slices of the
-    first ``n_codes`` corpus vectors — so the whole encoding is a pure
+    first ``_PQ_CODES`` corpus vectors — so the whole encoding is a pure
     function of the data and the driver value-checks codes AND
     reconstruction error against the SQL oracle (a k-means codebook
     could only be rows-checked).  Swapping trained centroids in changes
     one frame.
 
-    Plan shape: block explode (N×n_blocks rows, codegen slice), one
-    BROADCAST of the n_blocks×n_codes codebook, per-(vec, block) argmin
+    Plan shape: block explode (N×_PQ_BLOCKS rows, codegen slice), one
+    BROADCAST of the _PQ_BLOCKS×_PQ_CODES codebook, per-(vec, block) argmin
     via ``min(struct(d2, code))`` (lexicographic — ties break on code,
     both engines), then one groupBy(vec) pivots codes to columns.
     Distances round to 6 dp before the argmin so float fold order can't
     flip a code.  Output: (vec_id, code_0..code_{B−1}, mse)."""
-    bs = dims // n_blocks
-    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    bs = _DIMS // _PQ_BLOCKS
+    vecs = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
 
     def blocks(col):
         return F.array(
@@ -446,7 +434,7 @@ def pq_codes(
                     F.lit(b).alias("block"),
                     F.slice(col, b * bs + 1, bs).alias("pv"),
                 )
-                for b in range(n_blocks)
+                for b in range(_PQ_BLOCKS)
             ]
         )
 
@@ -454,7 +442,7 @@ def pq_codes(
         "vec_id", "s.block", "s.pv"
     )
     cb = (
-        vecs.filter(F.col("vec_id") < n_codes)
+        vecs.filter(F.col("vec_id") < _PQ_CODES)
         .select(
             F.col("vec_id").cast("int").alias("code"),
             F.explode(blocks(F.col("v"))).alias("s"),
@@ -485,7 +473,7 @@ def pq_codes(
             F.max(F.when(F.col("block") == b, F.col("m.code")))
             .cast("int")
             .alias(f"code_{b}")
-            for b in range(n_blocks)
+            for b in range(_PQ_BLOCKS)
         ],
         # mse rounds at 12 dp, NOT 6: block d2's are rounded-6, so
         # Σd2/64 = k·15625·10⁻¹² — an EXACT 12-digit decimal, but at
@@ -494,15 +482,11 @@ def pq_codes(
         # BigDecimal HALF_UP and DuckDB's float rounding disagree
         # (bit the sf0.01 sweep on one row).  At 12 dp the true value
         # is representable and no tie can occur.
-        F.round(F.sum("m.d2") / F.lit(float(dims)), 12).alias("mse"),
+        F.round(F.sum("m.d2") / F.lit(float(_DIMS)), 12).alias("mse"),
     )
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 scalar quantization audit — the compression step
     before an embedding corpus ships to an ANN index (4× smaller than
     float32), plus the reconstruction-error stats that decide whether
@@ -520,9 +504,9 @@ def quantize_int8(
     in the last ulp, so they surface only under round(·, 6) (NOTES.md
     float-parity rule).  Output: (vec_id, scale, n_saturated,
     mean_abs_err, max_abs_err)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     staged = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id").alias("vec_id"),
         v.alias("__v"),
         (F.array_max(F.transform(v, F.abs)) / F.lit(127.0)).alias("__s"),
     )
@@ -551,9 +535,6 @@ def quantize_int8(
 
 def centroid_outliers(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     dims: int | None = None,
 ) -> DataFrame:
     """Embedding diagnostics: cosine of every vector to its own label's
@@ -573,9 +554,9 @@ def centroid_outliers(
     the centroid frame, not per pair (the ``embedding_neardup`` norm
     lesson).  Output: (vec_id, label, cos_centroid, outlier_rank)."""
     ex = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("label").alias("label"),
+        F.posexplode(F.col("embedding")).alias("pos", "x"),
     )
     # order-stable mean: fold doubles sorted by vec_id, then divide once
     elem = ex.groupBy("label", "pos").agg(
@@ -605,9 +586,9 @@ def centroid_outliers(
         .select("label", "cv", _dot(F.col("cv"), F.col("cv")).alias("cc"))
     )
     vecs = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        F.col(vec_col).alias("v"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("label").alias("label"),
+        F.col("embedding").alias("v"),
     )
     # per-vector cosine is the N-row hot path — codegen dot when the
     # width is known (r10), interpreted fallback otherwise; the
@@ -634,21 +615,18 @@ def lsh_bucketed_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
-    ``n_tables`` independent sign-bit hashes: a candidate is scored iff
-    it shares a bucket with the query in ≥1 table (misses a cos-θ
-    neighbor in all tables with prob. (1−(1−θ/π)^b)^L).  Plan: one scan
+    ``_LSH_TABLES`` independent sign-bit hashes of ``_LSH_PLANES`` bits:
+    a candidate is scored iff it shares a bucket with the query in ≥1
+    table (misses a cos-θ neighbor in all tables with prob.
+    (1−(1−θ/π)^b)^L).  Plan: one scan
     assigns all buckets (``_sign_buckets``), explode over tables,
     shuffle on (table, bucket) — candidate sets stay bucket-bounded
     instead of O(N·|Q|)."""
-    with_bucket = _sign_buckets(embeddings, id_col, vec_col, n_planes, n_tables)
+    with_bucket = _sign_buckets(embeddings, _LSH_PLANES, _LSH_TABLES)
     # NB: deriving q from `with_bucket` (filter AFTER bucketing) looks
     # like a double computation, but the two branches share an identical
     # shuffle → Spark's ReusedExchange computes the bucket assignment
@@ -683,11 +661,9 @@ def lsh_bucketed_topk(
 GRAM_SCALE = 10**7  # quantization: finer than float32 ulp at |x|≈1 (6e-8·x)
 
 
-def gram_upper_cells(
-    df: DataFrame, vec_col: str = "embedding", scale: int = GRAM_SCALE
-) -> DataFrame:
+def gram_upper_cells(df: DataFrame, scale: int = GRAM_SCALE) -> DataFrame:
     """Upper-triangle second-moment grid Σᵣ q(vᵣ[i])·q(vᵣ[j]) (1-based
-    i ≤ j) over an embedding column, where q(x) = floor(x·scale + 0.5)
+    i ≤ j) over the ``embedding`` column, where q(x) = floor(x·scale + 0.5)
     — the substrate for covariance / whitening / PCA prep at corpus
     scale.  Consumers recover the real-valued Gram as sxy / scale².
 
@@ -717,7 +693,7 @@ def gram_upper_cells(
             if len(pdf) == 0:
                 continue
             X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
                 dtype=np.float64,
             )
             Q = np.floor(X * scale + 0.5).astype(np.int64)
@@ -734,25 +710,19 @@ def gram_upper_cells(
                 )
 
     return (
-        df.select(vec_col)
+        df.select("embedding")
         .mapInPandas(part, schema="i int, j int, sxy long")
         .groupBy("i", "j")
         .agg(F.sum(F.col("sxy").cast("decimal(38,0)")).alias("sxy"))
     )
 
 
-def jl_project(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    out_dims: int = 16,
-    dims: int = 64,
-    seed: int = 7000,
-) -> DataFrame:
+def jl_project(df: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss random projection: ±1 hyperplane rows
     (md5-parity weights, plan literals — same derivation as the LSH
-    planes) map ``dims``→``out_dims``.  For ±1 entries the expected
-    squared distance scales by exactly ``out_dims``, so consumers
+    planes) map ``embedding``'s _DIMS→_JL_DIMS components of ``proj``.
+    For ±1 entries the expected squared distance scales by exactly
+    ``_JL_DIMS``, so consumers
     normalize by it rather than baking 1/sqrt(k) into the weights.
 
     Zero shuffle: each output component is one codegen indexed sum, the
@@ -761,18 +731,16 @@ def jl_project(
     addition keeps every component bit-identical to an engine that
     folds sequentially (the DuckDB ``list_dot_product`` oracle)."""
     comps = []
-    for j in range(out_dims):
-        w = _plane_weights(seed + j, dims)
+    for j in range(_JL_DIMS):
+        w = _plane_weights(_JL_SEED + j, _DIMS)
         terms = " + ".join(
-            f"CAST({vec_col}[{i}] AS DOUBLE) * {w[i]}" for i in range(dims)
+            f"CAST(embedding[{i}] AS DOUBLE) * {w[i]}" for i in range(_DIMS)
         )
         comps.append(F.expr(f"0.0D + {terms}"))
-    return df.withColumn(out_col, F.array(*comps))
+    return df.withColumn("proj", F.array(*comps))
 
 
-def gram_power_iteration(
-    grid: DataFrame, dims: int, iters: int = 3
-) -> DataFrame:
+def gram_power_iteration(grid: DataFrame, dims: int) -> DataFrame:
     """Fixed-iteration power method on the EXACT integer Gram grid
     (``gram_upper_cells`` output) — the top-principal-component prep
     that makes the order-free Gram pay off: matrix entries are exact
@@ -790,7 +758,7 @@ def gram_power_iteration(
     sqrt).  Everything after the corpus-sized Gram build is dim²-sized
     — each round costs O(dims²) regardless of row count.
 
-    Returns (i, vint, wi) after ``iters`` rounds: the micro-grid
+    Returns (i, vint, wi) after ``_POWER_ITERS`` rounds: the micro-grid
     iterate plus its final exact matrix-vector image, from which the
     caller derives loadings (vint/10⁶) and the Rayleigh quotient."""
     full = materialize(grid.select("i", "j", "sxy").unionByName(
@@ -830,7 +798,7 @@ def gram_power_iteration(
             )
         )
 
-    for _ in range(iters):
+    for _ in range(_POWER_ITERS):
         w = matvec(v)
         mx = w.agg(F.max(F.abs(F.col("wi"))).alias("mx"))
         v = w.crossJoin(F.broadcast(mx)).select(
@@ -849,15 +817,13 @@ def gram_power_iteration(
 
 def cka_grids(
     df: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 10**4,
     quant_levels: int = 127,
 ) -> DataFrame:
     """Sufficient statistics for a linear-CKA comparison between an
-    embedding column X and its int8 symmetric (de)quantization Y =
+    ``embedding`` column X and its int8 symmetric (de)quantization Y =
     round(x·L)/L: the three FULL integer Gram grids Gxx, Gxy
     (asymmetric), Gyy on the shared metric grid
-    q(v) = floor(v·scale + 0.5), plus per-dim column sums Sx/Sy —
+    q(v) = floor(v·_CKA_SCALE + 0.5), plus per-dim column sums Sx/Sy —
     everything a centered ||·||_F needs, in ONE mapInPandas pass
     (posexplode² would push dim²·N rows through the shuffle; this
     ships dim²·blocks — the gram_upper_cells discipline).
@@ -866,7 +832,7 @@ def cka_grids(
     1-based, and grid ∈ {'sx','sy'} carrying column sums in (i, s)
     with j = 0.  All sums are exact integers accumulated in
     decimal(38,0) — layout-invariant by construction.  The coarse
-    default scale (1e4, vs the covariance grid's 1e7) keeps the
+    scale (1e4, vs the covariance grid's 1e7) keeps the
     downstream centered cells N·G − S·S inside decimal(38,0) to
     ~10⁴× the test corpus; the metric is DEFINED on this grid, so
     both engines quantize identically and coarseness is not error.
@@ -879,12 +845,12 @@ def cka_grids(
             if len(pdf) == 0:
                 continue
             X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
                 dtype=np.float64,
             )
             Y = np.floor(X * quant_levels + 0.5) / quant_levels
-            QX = np.floor(X * scale + 0.5).astype(np.int64)
-            QY = np.floor(Y * scale + 0.5).astype(np.int64)
+            QX = np.floor(X * _CKA_SCALE + 0.5).astype(np.int64)
+            QY = np.floor(Y * _CKA_SCALE + 0.5).astype(np.int64)
             maxq = int(max(np.abs(QX).max(), np.abs(QY).max())) or 1
             block = max(1, min(len(QX), (2**62) // (maxq * maxq)))
             d = QX.shape[1]
@@ -908,7 +874,7 @@ def cka_grids(
                 )
 
     return (
-        df.select(vec_col)
+        df.select("embedding")
         .mapInPandas(part, schema="grid string, i int, j int, s long")
         .groupBy("grid", "i", "j")
         .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("s"))

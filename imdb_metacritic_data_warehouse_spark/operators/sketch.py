@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_HLL_P = 8  # hll_register_maxes: 2^8 registers per group
+_HLL_SEED = 4242
+
 
 def _bucket(key: Column, seed: int, width: int) -> Column:
     """Engine-portable bucket hash: first 60 bits of md5(seed:key).
@@ -58,7 +61,6 @@ def count_min_sketch(
     key: Column,
     depth: int = 3,
     width: int = 64,
-    weight: Column | None = None,
 ) -> DataFrame:
     """Build the sketch grid: one row per touched (seed, bucket) cell.
 
@@ -70,7 +72,6 @@ def count_min_sketch(
     (explicit filter), matching the DuckDB twin where ``seed||':'||key``
     propagates NULL and the NULL bucket never matches a probe.
     """
-    w = weight if weight is not None else F.lit(1)
     df = df.filter(key.isNotNull())
     cells = df.select(
         F.explode(
@@ -84,7 +85,7 @@ def count_min_sketch(
                 ]
             )
         ).alias("c"),
-        w.cast("long").alias("__w"),
+        F.lit(1).cast("long").alias("__w"),
     )
     return (
         cells.groupBy(F.col("c.seed").alias("seed"), F.col("c.bucket").alias("bucket"))
@@ -139,16 +140,15 @@ def hll_register_maxes(
     df: DataFrame,
     group_cols: list[str],
     key_col: str,
-    p: int = 8,
-    seed: int = 4242,
 ) -> DataFrame:
-    """HyperLogLog register table — per group, the 2^p bucket maxima
+    """HyperLogLog register table — per group, the 2^_HLL_P bucket maxima
     M_j of the leading-zero rank, built from the engine-portable md5
     hash family (Flajolet et al. 2007; no engine-private hash, unlike
     ``approx_count_distinct``'s private HLL++).
 
-    Hash layout per key: a 60-bit integer u; the top ``p`` bits pick
-    the bucket, the remaining ``w = 60 − p`` bits feed the rank
+    Hash layout per key: a 60-bit integer u of md5("_HLL_SEED:key");
+    the top ``_HLL_P`` bits pick the bucket, the remaining
+    ``w = 60 − _HLL_P`` bits feed the rank
     ``rho = w + 1 − bitlength(rest)`` (``w + 1`` when rest = 0).
     ``bitlength`` is ``length(bin(x))`` — an exact integer in both
     Spark and DuckDB, never a float log2 (which rounds wrong at exact
@@ -161,7 +161,7 @@ def hll_register_maxes(
     shuffle, the same mergeability that makes HLL the standard
     distributed distinct sketch (registers OR/MAX-merge across any
     partitioning)."""
-    w = 60 - p
+    w = 60 - _HLL_P
     # F.concat, not concat_ws: concat_ws SKIPS NULLs (a NULL key would
     # hash as just "<seed>:"), while the DuckDB oracle's `'seed:' || key`
     # propagates NULL — cross-engine divergence for any nullable
@@ -174,7 +174,7 @@ def hll_register_maxes(
     # tests/test_sketch_nullable_keys.py).
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string"))),
+            F.md5(F.concat(F.lit(f"{_HLL_SEED}:"), F.col(key_col).cast("string"))),
             1,
             15,
         ),
@@ -198,20 +198,18 @@ def hll_register_maxes(
     )
 
 
-def hll_estimate(
-    registers: DataFrame, group_cols: list[str], p: int = 8
-) -> DataFrame:
+def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
     """HLL estimate from a register table, with the standard
     small-range (linear counting) correction.
 
     Exactness discipline: the harmonic denominator Σ 2^{−M_j} is
     rescaled by 2^{w+1} so every term 2^{w+1−M_j} is an INTEGER
     (M_j ≤ w+1) — the sum is an exact bigint (≤ 2^p·2^{w+1} = 2^61
-    · 2^{p−60+p}… for p=8, ≤ 256·2^53 = 2^61), immune to float
+    · 2^{p−60+p}… for p = _HLL_P = 8, ≤ 256·2^53 = 2^61), immune to float
     summation order; only the final one-shot double expression (shared
     verbatim with the oracle) leaves integer land."""
-    m = 2 ** p
-    w = 60 - p
+    m = 2 ** _HLL_P
+    w = 60 - _HLL_P
     scale = w + 1
     per_group = registers.groupBy(*group_cols).agg(
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {scale} - mj)")).alias("s_used"),

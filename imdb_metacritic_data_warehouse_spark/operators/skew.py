@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_SALT_BUCKETS = 16  # salted_join: ways each hot key is split
+
 
 def salted_agg(
     df: DataFrame,
@@ -57,33 +59,30 @@ def salted_join(
     dim: DataFrame,
     keys: list[str],
     salt_col: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-split equi-join: big skewed ``fact`` ⋈ replicated ``dim``.
+    """Skew-split inner equi-join: big skewed ``fact`` ⋈ replicated ``dim``.
 
     AQE splits skewed SHUFFLE partitions after the fact; salting fixes
     the layout up front and is the only option when the engine must
     guarantee bounded task size (or when AQE's split heuristics miss —
     e.g. one key = 30% of the fact).  Rewrite:
 
-      fact side: salt = pmod(hash(salt_col), S) — appends the salt to
-                 the join key, splitting each hot key S ways;
+      fact side: salt = pmod(hash(salt_col), S) with S = _SALT_BUCKETS
+                 — appends the salt to the join key, splitting each
+                 hot key S ways;
       dim side:  every row replicated S times, once per salt value
                  (posexplode of a literal range — dim grows S×, which
                  is why this is for big⋈SMALLISH-but-not-broadcastable
                  or hot-key-heavy shapes).
 
     Join on (keys + salt); the salt column never escapes.  Semantics
-    identical to ``fact.join(dim, keys, how)`` for inner/left joins
-    because every fact row finds exactly its one salted dim copy.
+    identical to ``fact.join(dim, keys)`` because every fact row finds
+    exactly its one salted dim copy.
     Deterministic: salt comes from a data column, not rand().
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    salts = ",".join(str(i) for i in range(salt_buckets))
+    salts = ",".join(str(i) for i in range(_SALT_BUCKETS))
     fact_s = fact.withColumn(
-        "__salt", F.pmod(F.hash(F.col(salt_col)), F.lit(salt_buckets))
+        "__salt", F.pmod(F.hash(F.col(salt_col)), F.lit(_SALT_BUCKETS))
     )
     dim_s = dim.withColumn("__salt", F.explode(F.expr(f"array({salts})")))
-    return fact_s.join(dim_s, [*keys, "__salt"], how).drop("__salt")
+    return fact_s.join(dim_s, [*keys, "__salt"], "inner").drop("__salt")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_TOP_SNAPSHOTS = 2  # filter_top_snapshots keeps the two latest loads
+
 
 def filter_latest(df: DataFrame, col: str) -> DataFrame:
     """``WHERE col IN (SELECT max(col) FROM df)`` — P6/P7."""
@@ -25,9 +27,9 @@ def filter_latest(df: DataFrame, col: str) -> DataFrame:
     return df.join(F.broadcast(mx), F.col(col) == F.col("__mx"), "inner").drop("__mx")
 
 
-def filter_top_snapshots(df: DataFrame, col: str, k: int = 2) -> DataFrame:
-    """Keep rows whose ``col`` is among the ``k`` largest distinct
-    values — P8 (``mart/rating_slide.sql:23`` uses k=2 via nested
+def filter_top_snapshots(df: DataFrame, col: str) -> DataFrame:
+    """Keep rows whose ``col`` is among the ``_TOP_SNAPSHOTS`` largest
+    distinct values — P8 (``mart/rating_slide.sql:23`` uses k=2 via nested
     max-subqueries).  Distinct snapshot values (one per load batch) are
     ranked with a window over the *deduplicated* set, so the
     single-partition sort touches only #batches rows, then broadcast
@@ -36,7 +38,7 @@ def filter_top_snapshots(df: DataFrame, col: str, k: int = 2) -> DataFrame:
         df.select(col)
         .distinct()
         .withColumn("__rk", F.dense_rank().over(Window.orderBy(F.desc(col))))
-        .filter(F.col("__rk") <= k)
+        .filter(F.col("__rk") <= _TOP_SNAPSHOTS)
         .drop("__rk")
     )
     return df.join(F.broadcast(snaps), on=col, how="left_semi")
@@ -48,8 +50,6 @@ def pit_join(
     key: str,
     ts_col: str,
     how: str = "inner",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Point-in-time lookup against an SCD2-historized table: for each
     probe row, the version whose validity interval covers the probe
@@ -70,8 +70,8 @@ def pit_join(
     h = hist.alias("h")
     cond = (
         (F.col(f"p.{key}") == F.col(f"h.{key}"))
-        & (F.col(f"h.{valid_from}") <= F.col(f"p.{ts_col}"))
-        & (F.col(f"p.{ts_col}") < F.col(f"h.{valid_to}"))
+        & (F.col("h.valid_from") <= F.col(f"p.{ts_col}"))
+        & (F.col(f"p.{ts_col}") < F.col("h.valid_to"))
     )
     hist_cols = [
         F.col(f"h.{c}").alias(c) for c in hist.columns if c != key
@@ -83,10 +83,6 @@ def bitemporal_snapshot(
     records: DataFrame,
     tx_at,
     valid_at: str,
-    tx_from: str = "tx_from",
-    tx_to: str = "tx_to",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Bitemporal point query: rows believed true at transaction time
     ``tx_at`` AND valid at ``valid_at`` — the two-axis time travel that
@@ -102,11 +98,11 @@ def bitemporal_snapshot(
     and partition-prunable on ``valid_from`` when the table is
     date-partitioned (SCALE.md discipline)."""
     return records.filter(
-        (F.col(tx_from) <= F.lit(tx_at))
-        & (F.col(tx_to).isNull() | (F.col(tx_to) > F.lit(tx_at)))
-        & (F.col(valid_from) <= F.lit(valid_at).cast("date"))
+        (F.col("tx_from") <= F.lit(tx_at))
+        & (F.col("tx_to").isNull() | (F.col("tx_to") > F.lit(tx_at)))
+        & (F.col("valid_from") <= F.lit(valid_at).cast("date"))
         & (
-            F.col(valid_to).isNull()
-            | (F.col(valid_to) > F.lit(valid_at).cast("date"))
+            F.col("valid_to").isNull()
+            | (F.col("valid_to") > F.lit(valid_at).cast("date"))
         )
     )

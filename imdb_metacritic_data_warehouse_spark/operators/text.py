@@ -25,6 +25,12 @@ STOPWORDS: dict[str, list[str]] = {
     "fr": ["le", "la", "les", "et", "est", "un", "une", "dans"],
 }
 
+_BM25_K1 = 1.2  # bm25_scores' term-frequency saturation
+_BM25_B = 0.75  # and its length normalization
+_BPE_MERGES = 2  # bpe_train_symbols' merge rounds
+_WINNOW_N = 3  # winnow_fingerprints: word n-gram size and window width
+_WINNOW_W = 4
+
 # BPE-ish tokenizer: letter runs, digit runs, or single non-space symbols.
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -95,7 +101,7 @@ def quality_score(text: Column) -> Column:
     return F.round(score, 6)
 
 
-def text_analysis_frame(df, id_col: str = "doc_id", text_col: str = "text"):
+def text_analysis_frame(df):
     """One-pass-per-token text analysis: language-ID, token counts,
     quality, fingerprint.
 
@@ -116,14 +122,14 @@ def text_analysis_frame(df, id_col: str = "doc_id", text_col: str = "text"):
     a large expression tree made it the slowest bench query (22.5s
     driver-measured at sf0.1).  One shuffle on doc_id, scan-linear at
     100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     langs = sorted(STOPWORDS)
     tok = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         t.alias("__text"),
         F.explode(tokens(t)).alias("__tok"),
     )
-    staged = tok.groupBy(id_col, "__text").agg(
+    staged = tok.groupBy("doc_id", "__text").agg(
         F.count(F.lit(1)).alias("__n_tok"),
         *[
             F.sum(
@@ -152,7 +158,7 @@ def text_analysis_frame(df, id_col: str = "doc_id", text_col: str = "text"):
         6,
     )
     return staged.select(
-        id_col,
+        "doc_id",
         lang_case.alias("lang_id"),
         F.col("__n_tok").alias("n_tokens_ws"),
         token_count_bpe(t).alias("n_tokens_bpe"),
@@ -205,9 +211,9 @@ def rolling_fingerprint(text: Column) -> Column:
     )
 
 
-def repetition_stats(df, id_col: str = "doc_id", text_col: str = "text", n: int = 2):
+def repetition_stats(df):
     """Boilerplate/repetition quality signal: the share of a document's
-    word n-grams taken by its single most repeated n-gram (template
+    word bigrams taken by its single most repeated bigram (template
     pages, keyword stuffing, and decoding loops all spike it).
 
     Plan shape: ``shingle_rows`` (codegen posexplode+lead, one shuffle
@@ -215,7 +221,7 @@ def repetition_stats(df, id_col: str = "doc_id", text_col: str = "text", n: int 
     max/total — both aggregates hash-partition on doc_id, so Catalyst
     plans the second as a partial-only reuse of the first's exchange.
     Output: (doc_id, n_grams, max_gram_count, repetition_ratio)."""
-    grams = shingle_rows(df, id_col, text_col, n)
+    grams = shingle_rows(df, "doc_id", "text", 2)
     per_gram = grams.groupBy("doc_id", "s").agg(F.count(F.lit(1)).alias("__c"))
     return per_gram.groupBy("doc_id").agg(
         F.sum("__c").alias("n_grams"),
@@ -228,8 +234,6 @@ def repetition_stats(df, id_col: str = "doc_id", text_col: str = "text", n: int 
 
 def chunk_documents(
     df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_size: int = 64,
     stride: int = 48,
 ):
@@ -251,7 +255,7 @@ def chunk_documents(
     """
     if not (0 < stride <= chunk_size):
         raise ValueError("need 0 < stride <= chunk_size")
-    words = tokens(F.col(text_col))
+    words = tokens(F.col("text"))
     n = F.size(words)
     # with n words, last chunk start is the largest multiple of stride
     # still < n after the first full window: ceil(max(n - size, 0)/stride)
@@ -259,7 +263,7 @@ def chunk_documents(
         F.ceil(F.greatest(n - F.lit(chunk_size), F.lit(0)) / F.lit(stride)) + 1
     ).cast("int")
     chunked = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("__w"),
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
     )
@@ -267,14 +271,14 @@ def chunk_documents(
         F.col("__w"), F.col("chunk_id") * stride + 1, chunk_size
     )
     return chunked.select(
-        id_col,
+        "doc_id",
         "chunk_id",
         F.size(sliced).alias("n_words"),
         F.array_join(sliced, " ").alias("chunk_text"),
     )
 
 
-def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
+def unigram_logprob(df):
     """Corpus-statistics quality signal: each document's mean unigram
     negative log-probability under the corpus's own empirical unigram
     distribution (the cheap perplexity proxy data pipelines use to
@@ -289,7 +293,9 @@ def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     the scalar total rides a 1-row broadcast like every uncorrelated
     scalar subquery here.  Output: (doc_id, n_tokens, avg_neg_logprob).
     """
-    tok = df.select(F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = df.select(
+        F.col("doc_id").alias("doc_id"), F.explode(tokens(F.col("text"))).alias("t")
+    )
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("tc"))
     total = vocab.agg(F.sum("tc").alias("__total"))
     scored = (
@@ -303,7 +309,7 @@ def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
+def bigram_logprob(df):
     """Bigram-LM quality signal: each document's mean −ln p(w2|w1)
     under the corpus's own empirical bigram model with add-one
     smoothing over the unigram vocabulary — one step up the n-gram
@@ -317,9 +323,9 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     fewer than two tokens have no bigrams and drop out (same on the
     oracle side).  p(w2|w1) = (c(w1,w2)+1) / (c(w1·)+|V|).
     """
-    w = tokens(F.col(text_col))
+    w = tokens(F.col("text"))
     big = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))),
@@ -331,7 +337,7 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     vocab = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("t"))
+        df.select(F.explode(tokens(F.col("text"))).alias("t"))
         .agg(F.count_distinct("t").alias("vs"))
     )
     scored = (
@@ -349,9 +355,7 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def vocab_coverage(
-    df, vocab_size: int, id_col: str = "doc_id", text_col: str = "text"
-):
+def vocab_coverage(df, vocab_size: int):
     """Tokenizer-vocabulary coverage audit: build the top-``vocab_size``
     corpus vocabulary (frequency-ranked, ties by token — deterministic)
     and score every document's out-of-vocabulary token rate — the check
@@ -368,7 +372,7 @@ def vocab_coverage(
     from pyspark.sql import Window
 
     tok = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("t")
+        F.col("doc_id").alias("doc_id"), F.explode(tokens(F.col("text"))).alias("t")
     )
     counts = tok.groupBy("t").agg(F.count(F.lit(1)).alias("tc"))
     w = Window.orderBy(F.desc("tc"), F.asc("t"))
@@ -399,10 +403,6 @@ def vocab_coverage(
 def bm25_scores(
     df,
     terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ):
     """BM25 relevance of every document against a literal term list —
     the classic lexical retrieval scorer (the baseline half of hybrid
@@ -421,7 +421,7 @@ def bm25_scores(
     contributions sum in fixed literal order — bit-identical doubles on
     any engine.  Output: (id, n_tokens, bm25) for docs matching ≥1 term.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     dl = F.size(toks)
     tf = {t: dl - F.size(F.array_remove(toks, t)) for t in terms}
     stats = df.agg(
@@ -441,14 +441,18 @@ def bm25_scores(
         tf_d = tf[t].cast("double")
         contrib = idf * (
             tf_d
-            * F.lit(k1 + 1.0)
-            / (tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / avgdl))
+            * F.lit(_BM25_K1 + 1.0)
+            / (
+                tf_d
+                + F.lit(_BM25_K1)
+                * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * dl.cast("double") / avgdl)
+            )
         )
         score = contrib if score is None else score + contrib
     return (
         df.join(F.broadcast(stats))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             dl.alias("n_tokens"),
             F.round(score, 6).alias("bm25"),
         )
@@ -456,7 +460,7 @@ def bm25_scores(
     )
 
 
-def duplicated_ngram_fraction(df, id_col: str = "doc_id", text_col: str = "text", n: int = 5):
+def duplicated_ngram_fraction(df, n: int = 5):
     """Cross-document duplication score: the share of a document's
     DISTINCT word n-grams that also occur in at least one other
     document (the corpus-level boilerplate signal used to audit a
@@ -470,7 +474,7 @@ def duplicated_ngram_fraction(df, id_col: str = "doc_id", text_col: str = "text"
     hash — both aggregates are map-side-partial friendly; no step is
     quadratic in corpus size.  Output: (doc_id, n_shingles,
     dup_shingles, dup_fraction)."""
-    grams = shingle_rows(df, id_col, text_col, n).distinct()
+    grams = shingle_rows(df, "doc_id", "text", n).distinct()
     gram_df = grams.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
     return (
         grams.join(gram_df, "s")
@@ -490,9 +494,6 @@ def duplicated_ngram_fraction(df, id_col: str = "doc_id", text_col: str = "text"
 def contamination_overlap(
     df,
     bench,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     n: int = 5,
 ):
     """Partial-contamination score: for each corpus document, the
@@ -506,7 +507,7 @@ def contamination_overlap(
     common small-benchmark case — Catalyst decides from stats), LEFT
     join corpus grams against it, one conditional sum per document.
     Output: (doc_id, n_shingles, bench_hits, overlap_frac)."""
-    corpus_grams = shingle_rows(df, id_col, text_col, n).distinct()
+    corpus_grams = shingle_rows(df, "doc_id", "text", n).distinct()
     # each benchmark row needs a DISTINCT id: shingle_rows windows by
     # (doc_id, pos), so a shared constant id would interleave words
     # from different benchmark texts into garbage n-grams
@@ -514,7 +515,7 @@ def contamination_overlap(
         shingle_rows(
             bench.select(
                 F.monotonically_increasing_id().alias("__bid"),
-                F.col(bench_text_col).alias("__btext"),
+                F.col("text").alias("__btext"),
             ),
             "__bid",
             "__btext",
@@ -608,7 +609,7 @@ def contamination_against_index(docs, index):
     )
 
 
-def quality_logit_score(df, id_col: str = "doc_id", text_col: str = "text"):
+def quality_logit_score(df):
     """Deployed-classifier quality gate: a fixed-weight logistic model
     over four engineered signals (token count, punctuation ratio,
     English stopword rate, top-bigram repetition ratio) — the shape a
@@ -621,21 +622,19 @@ def quality_logit_score(df, id_col: str = "doc_id", text_col: str = "text"):
     doc_id-partitioned aggregate pair).  sigmoid = 1/(1+exp(−z)) on
     exact-integer-derived doubles → engine-portable.
     Output: (doc_id, logit, quality_prob)."""
-    rep = repetition_stats(df, id_col, text_col, n=2).select(
-        "doc_id", "repetition_ratio"
-    )
-    toks = tokens(F.col(text_col))
+    rep = repetition_stats(df).select("doc_id", "repetition_ratio")
+    toks = tokens(F.col("text"))
     n_tok = F.size(toks).cast("double")
-    n_char = F.length(F.col(text_col)).cast("double")
-    n_clean = F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z0-9 ]", "")).cast(
+    n_char = F.length(F.col("text")).cast("double")
+    n_clean = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z0-9 ]", "")).cast(
         "double"
     )
     punct_ratio = F.when(n_char > 0, (n_char - n_clean) / n_char).otherwise(F.lit(0.0))
     stop_rate = F.when(
-        n_tok > 0, stopword_hits(F.col(text_col), "en").cast("double") / n_tok
+        n_tok > 0, stopword_hits(F.col("text"), "en").cast("double") / n_tok
     ).otherwise(F.lit(0.0))
     feats = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         n_tok.alias("__ntok"),
         punct_ratio.alias("__punct"),
         stop_rate.alias("__stop"),
@@ -654,7 +653,7 @@ def quality_logit_score(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def bpe_pair_counts(df, text_col: str = "text"):
+def bpe_pair_counts(df):
     """The merge-candidate counting step of BPE tokenizer training,
     distributed: count adjacent character pairs across the corpus,
     weighted by word frequency.  (A full BPE trainer iterates this —
@@ -667,7 +666,7 @@ def bpe_pair_counts(df, text_col: str = "text"):
     is vocabulary-sized, not corpus-sized) → per-word position explode
     + ``substr(w, i, 2)`` (codegen; positional, no higher-order
     lambdas) → pair aggregate.  Output: (pair, cnt)."""
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = df.select(F.explode(tokens(F.col("text"))).alias("w"))
     wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     pairs = (
         wc.filter(F.length("w") >= 2)
@@ -732,10 +731,8 @@ def shingle_rows(df, id_col: str, text_col: str, n: int = 3):
     return short.unionByName(long)
 
 
-def bpe_train_symbols(
-    df, text_col: str = "text", merges: int = 2
-) -> "DataFrame":
-    """Iterative BPE tokenizer training, distributed: ``merges`` rounds
+def bpe_train_symbols(df) -> "DataFrame":
+    """Iterative BPE tokenizer training, distributed: ``_BPE_MERGES`` rounds
     of count-adjacent-pairs → merge the argmax pair across the corpus
     (``bpe_pair_counts`` is one count step; this is the loop).
 
@@ -755,26 +752,26 @@ def bpe_train_symbols(
     symbols appear with their corpus frequencies, which validates both
     the pair selection and the rewrite.
     """
-    sym = _bpe_merged_symbols(df, text_col, merges)
+    sym = _bpe_merged_symbols(df, _BPE_MERGES)
     return sym.groupBy(F.col("sym").alias("symbol")).agg(
         F.sum("c").alias("cnt")
     )
 
 
-def bpe_word_token_counts(df, text_col: str = "text", merges: int = 2):
+def bpe_word_token_counts(df, merges: int = 2):
     """Per-word token counts under the trained merges — the ENCODE half
     of the tokenizer (train + apply on the same engine): after
     ``merges`` rounds, each word's token count is its surviving symbol
     count.  Vocabulary-sized output, built for a broadcast join back
     onto the corpus (see bpe_encode_docs).  Returns (w, n_sym)."""
-    sym = _bpe_merged_symbols(df, text_col, merges)
+    sym = _bpe_merged_symbols(df, merges)
     return sym.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
 
 
-def _bpe_merged_symbols(df, text_col: str, merges: int):
+def _bpe_merged_symbols(df, merges: int):
     from pyspark.sql import Window
 
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = df.select(F.explode(tokens(F.col("text"))).alias("w"))
     wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # the symbol table feeds pair counting AND the rewrite each round,
     # and the next round compounds the lineage — checkpoint per round
@@ -829,17 +826,17 @@ def _bpe_merged_symbols(df, text_col: str, merges: int):
     return sym
 
 
-def readability_score(text_col: str = "text"):
-    """Flesch reading-ease over regexp surface counts — sentences are
+def readability_score():
+    """Flesch reading-ease of ``text`` over regexp surface counts — sentences are
     terminal-punctuation runs, words are non-space runs, syllables are
     approximated by vowel-group runs (the standard heuristic when no
     dictionary is on the cluster).  Pure codegen ``regexp_count``
     column arithmetic: zero shuffle, zero Python, identical regex
     semantics across engines for these character-class patterns.
     Returns (words, sentences, syllables, score) columns as a dict."""
-    words = F.regexp_count(F.col(text_col), F.lit(r"\S+"))
-    sentences = F.greatest(F.regexp_count(F.col(text_col), F.lit(r"[.!?]+")), F.lit(1))
-    syllables = F.regexp_count(F.lower(F.col(text_col)), F.lit(r"[aeiouy]+"))
+    words = F.regexp_count(F.col("text"), F.lit(r"\S+"))
+    sentences = F.greatest(F.regexp_count(F.col("text"), F.lit(r"[.!?]+")), F.lit(1))
+    syllables = F.regexp_count(F.lower(F.col("text")), F.lit(r"[aeiouy]+"))
     w = F.greatest(words, F.lit(1)).cast("double")
     score = (
         F.lit(206.835)
@@ -854,13 +851,13 @@ def readability_score(text_col: str = "text"):
     }
 
 
-def winnow_fingerprints(df, id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, w: int = 4):
+def winnow_fingerprints(df):
     """MOSS winnowing fingerprint selection (Schleimer, Wilkerson &
-    Aiken, SIGMOD'03): hash every word ``n``-gram, then from each
-    window of ``w`` consecutive hashes keep the minimum (rightmost on
-    ties).  Guarantees: any shared substring of ≥ w+n−1 words yields at
-    least one shared fingerprint, and ≥ 1 fingerprint is kept per w
+    Aiken, SIGMOD'03) over a ``(doc_id, text)`` corpus: hash every word
+    n-gram (n = _WINNOW_N), then from each window of w = _WINNOW_W
+    consecutive hashes keep the minimum (rightmost on ties).
+    Guarantees: any shared substring of ≥ w+n−1 words yields at least
+    one shared fingerprint, and ≥ 1 fingerprint is kept per w
     consecutive positions (density ~2/(w+1)).
 
     Rightmost-min tie rule folded into ONE integer key per position —
@@ -872,22 +869,24 @@ def winnow_fingerprints(df, id_col: str = "doc_id", text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    words = tokens(F.col(text_col))
+    words = tokens(F.col("text"))
     wo = Window.partitionBy("doc_id").orderBy("pos")
-    lead_cols = [F.lead("w0", k).over(wo).alias(f"w{k}") for k in range(1, n)]
+    lead_cols = [
+        F.lead("w0", k).over(wo).alias(f"w{k}") for k in range(1, _WINNOW_N)
+    ]
     sh = (
-        df.filter(F.size(words) >= n)
-        .select(F.col(id_col).alias("doc_id"),
+        df.filter(F.size(words) >= _WINNOW_N)
+        .select(F.col("doc_id").alias("doc_id"),
                 F.posexplode(words).alias("pos", "w0"))
         .select("doc_id", "pos", "w0", *lead_cols)
-        .filter(F.col(f"w{n - 1}").isNotNull())
+        .filter(F.col(f"w{_WINNOW_N - 1}").isNotNull())
         .select(
             "doc_id",
             "pos",
             F.conv(
                 F.substring(
                     F.md5(F.concat(*[
-                        c for k in range(n)
+                        c for k in range(_WINNOW_N)
                         for c in ([F.lit(" ")] if k else []) + [F.col(f"w{k}")]
                     ])),
                     1, 10,
@@ -900,9 +899,9 @@ def winnow_fingerprints(df, id_col: str = "doc_id", text_col: str = "text",
         "doc_id", "pos", key,
         F.max("pos").over(Window.partitionBy("doc_id")).alias("max_pos"),
     )
-    frame = wo.rowsBetween(Window.currentRow, w - 1)
+    frame = wo.rowsBetween(Window.currentRow, _WINNOW_W - 1)
     return (
-        k.filter(F.col("pos") <= F.col("max_pos") - (w - 1))
+        k.filter(F.col("pos") <= F.col("max_pos") - (_WINNOW_W - 1))
         .select("doc_id", F.min("key").over(frame).alias("mk"))
         .select("doc_id", F.expr("mk div 1048576").alias("fph"))
         .distinct()

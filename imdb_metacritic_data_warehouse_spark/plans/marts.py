@@ -184,7 +184,7 @@ def build_rating_slide(wh) -> DataFrame:
     t2 = (
         _rating_snapshot(
             wh,
-            lambda df: filter_top_snapshots(df, "valid_from", k=2),
+            lambda df: filter_top_snapshots(df, "valid_from"),
             with_rank=False,
         )
         .select("movie_id")

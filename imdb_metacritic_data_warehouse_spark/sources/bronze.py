@@ -65,7 +65,7 @@ def read_bronze(spark: SparkSession, root: str, table: str) -> DataFrame:
     return spark.read.schema(schema).parquet(f"{root}/{table}.parquet")
 
 
-def write_bronze(df: DataFrame, root: str, table: str, mode: str = "overwrite") -> None:
+def write_bronze(df: DataFrame, root: str, table: str) -> None:
     """Batch write (replaces the reference's per-row INSERT+commit,
     ``imdb parser.py:240-242``; ``overwrite`` = S10 truncate-then-load)."""
-    df.write.mode(mode).parquet(f"{root}/{table}.parquet")
+    df.write.mode("overwrite").parquet(f"{root}/{table}.parquet")

@@ -29,20 +29,16 @@ def write_bucketed(
     table: str,
     bucket_key: str,
     num_buckets: int = 32,
-    sort: bool = True,
     partition_by: list[str] | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) catalog table.
+    """Persist ``df`` as a bucketed and bucket-sorted catalog table.
     ``partition_by`` composes with bucketing (partition dirs, buckets
     within each) — co-located joins survive it (asserted in
     tests/test_plan_quality.py)."""
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w = w.bucketBy(num_buckets, bucket_key)
-    if sort:
-        w = w.sortBy(bucket_key)
-    w.saveAsTable(table)
+    w.bucketBy(num_buckets, bucket_key).sortBy(bucket_key).saveAsTable(table)
 
 
 class BucketedVersionedTable:

@@ -44,6 +44,8 @@ from ..functions.keys import null_safe_neq_any
 
 _POINTER = "_VERSION"
 _SCHEMA = "_schema.json"
+_RETAIN = 2  # committed versions kept for time travel
+_ORPHAN_AGE_SECONDS = 3600.0  # vacuum spares younger uncommitted dirs
 
 
 class VersionedParquetTable:
@@ -74,7 +76,8 @@ class VersionedParquetTable:
     # -- IO -----------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame:
         """Read the committed version, or time-travel to an older one
-        still inside the retention window (``_gc`` keeps the last 2).
+        still inside the retention window (``_gc`` keeps the last
+        ``_RETAIN``).
         Opens with the version's committed schema (no inference job)
         when it has one."""
         v = self.current_version() if version is None else version
@@ -106,30 +109,25 @@ class VersionedParquetTable:
         self._gc(keep=v)
         return v
 
-    def compact(self, target_partitions: int = 1) -> int:
-        """Rewrite the current version into ``target_partitions`` files —
-        the small-files countermeasure.  Every SCD2 merge writes a fresh
+    def compact(self) -> int:
+        """Rewrite the current version into one file — the small-files
+        countermeasure.  Every SCD2 merge writes a fresh
         version that can fragment into one file per shuffle task; at
         cluster scale thousands of tiny files per table degrade scan
         planning and NameNode/listing pressure, so compact
-        periodically (target ≈ table_bytes / 128 MB).  Runs through the
-        same atomic commit as any write."""
-        return self.write(self.read().coalesce(target_partitions))
+        periodically.  Runs through the same atomic commit as any
+        write."""
+        return self.write(self.read().coalesce(1))
 
-    def vacuum(self, retain: int = 2, orphan_age_seconds: float = 3600.0) -> list[str]:
-        """Explicit maintenance sweep, the union of two cleanups ``_gc``
-        alone never does:
-
-        - version dirs OLDER than the retention window (same rule as
-          the per-write ``_gc``, re-applied in case retention policy
-          shrank after the fact);
-        - ORPHANED dirs from crashed writes: a ``v=N`` with N above the
-          committed pointer was written but never committed (the crash
-          window ``write`` survives by design) and would otherwise leak
-          a full table copy forever.  Orphans younger than
-          ``orphan_age_seconds`` are kept — they may be a concurrent
-          writer mid-flight (first-writer-wins discipline), so vacuum
-          is safe to run alongside writers by default.
+    def vacuum(self) -> list[str]:
+        """Explicit maintenance sweep for the cleanup the per-write
+        ``_gc`` never does: ORPHANED dirs from crashed writes.  A
+        ``v=N`` with N above the committed pointer was written but
+        never committed (the crash window ``write`` survives by design)
+        and would otherwise leak a full table copy forever.  Orphans
+        younger than ``_ORPHAN_AGE_SECONDS`` are kept — they may be a
+        concurrent writer mid-flight (first-writer-wins discipline), so
+        vacuum is safe to run alongside writers.
 
         Returns the removed paths (for the operator's audit log)."""
         cur = self.current_version()
@@ -138,7 +136,7 @@ class VersionedParquetTable:
         import time as _time
 
         removed: list[str] = []
-        cutoff = _time.time() - orphan_age_seconds
+        cutoff = _time.time() - _ORPHAN_AGE_SECONDS
         for entry in os.listdir(self.path):
             if not entry.startswith("v="):
                 continue
@@ -147,15 +145,13 @@ class VersionedParquetTable:
             except ValueError:
                 continue
             p = os.path.join(self.path, entry)
-            stale_old = v <= cur - retain
-            orphan = v > cur and os.path.getmtime(p) < cutoff
-            if stale_old or orphan:
+            if v > cur and os.path.getmtime(p) < cutoff:
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(p)
         return removed
 
-    def _gc(self, keep: int, retain: int = 2) -> None:
-        """Drop version dirs older than the last ``retain`` (time-travel
+    def _gc(self, keep: int) -> None:
+        """Drop version dirs older than the last ``_RETAIN`` (time-travel
         window); never the committed one."""
         if not os.path.isdir(self.path):
             return
@@ -165,7 +161,7 @@ class VersionedParquetTable:
                     v = int(entry.split("=", 1)[1])
                 except ValueError:
                     continue
-                if v <= keep - retain:
+                if v <= keep - _RETAIN:
                     shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
 
 
@@ -173,30 +169,29 @@ def version_diff(
     table: VersionedParquetTable,
     pk: str,
     v_from: int | None = None,
-    v_to: int | None = None,
     include_old: bool = False,
 ) -> DataFrame:
-    """Change-data-feed between two committed versions (the lakehouse
+    """Change-data-feed from ``v_from`` to the current version (the lakehouse
     CDF surface a downstream incremental consumer reads instead of
     re-scanning the table): one FULL OUTER join on the pk classifies
     every key as ``insert`` / ``delete`` / ``update`` (any non-pk column
     differing, null-safe) — unchanged keys are dropped.  Emitted values
     are the NEW row for insert/update and the OLD row for delete, so
-    applying the feed to ``v_from`` reproduces ``v_to`` exactly.
+    applying the feed to ``v_from`` reproduces the current version
+    exactly.
 
-    Defaults compare the previous committed version against the current
-    one (both must still be inside the retention window).  A NULL pk
-    names no row and never matches: every NULL-pk row of ``v_from`` is
-    a delete and every one of ``v_to`` an insert.  Scale: the pk join
+    ``v_from`` defaults to the previous committed version; it must
+    still be inside the retention window.  A NULL pk names no row and
+    never matches: every NULL-pk row of ``v_from`` is a delete and
+    every one of the current version an insert.  Scale: the pk join
     is the only shuffle."""
     from pyspark.sql import functions as F
 
     cur = table.current_version()
     if cur is None:
         raise FileNotFoundError(f"table {table.name} has no committed version")
-    v_to = cur if v_to is None else v_to
-    v_from = v_to - 1 if v_from is None else v_from
-    new = table.read(v_to)
+    v_from = cur - 1 if v_from is None else v_from
+    new = table.read(cur)
     cols = new.columns
     attrs = [c for c in cols if c != pk]
     # presence markers: never NULL on their own side, unlike the pk

@@ -131,9 +131,7 @@ def test_interval_overlap_join_exact_and_dedup(spark):
     )
     got = sorted(
         (r.lid, r.rid_r)
-        for r in interval_overlap_join(
-            left, right, "k", chunk_seconds=86400
-        ).collect()
+        for r in interval_overlap_join(left, right, "k").collect()
     )
     assert got == [("a", "x"), ("a", "y"), ("b", "x"), ("c", "w")]
 

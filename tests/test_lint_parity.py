@@ -213,3 +213,99 @@ def _uncalled_package_names() -> list[str]:
 
 def test_every_package_function_has_a_caller():
     assert _uncalled_package_names() == []
+
+
+# Every defaulted parameter of an operator-layer function must take a
+# second value at some call site (tests included): one that every caller
+# leaves at one value is a constant, not a knob.  Name-based like the
+# scan above, so a function reached through ``*args``/``**kwargs`` or
+# passed around as a value is skipped rather than guessed at.
+_KNOB_DIRS = tuple(
+    os.path.join(_PKG, d) + os.sep for d in ("operators", "sources", "functions", "plans")
+)
+
+
+def _call_trees():
+    for rel, path in _py_sources():
+        with open(path) as fh:
+            yield rel, ast.parse(fh.read())
+    for root, prefix in (("tests", ""), ("perfbench", "test_")):
+        for name in sorted(os.listdir(os.path.join(_REPO, root))):
+            if name.startswith(prefix) and name.endswith(".py"):
+                with open(os.path.join(_REPO, root, name)) as fh:
+                    yield os.path.join(root, name), ast.parse(fh.read())
+
+
+def _knob_defs(rel, tree):
+    """(name, args, leading params a call does not pass, location) for
+    every function and method in the module; a constructor goes by its
+    class name."""
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield stmt.name, stmt.args, 0, f"{rel}:{stmt.lineno} {stmt.name}"
+        elif isinstance(stmt, ast.ClassDef):
+            for fn in stmt.body:
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                static = any(
+                    getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list
+                )
+                name = stmt.name if fn.name == "__init__" else fn.name
+                loc = f"{rel}:{fn.lineno} {stmt.name}.{fn.name}"
+                yield name, fn.args, 0 if static else 1, loc
+
+
+def _single_valued_parameters() -> list[str]:
+    trees = list(_call_trees())
+    defs = [
+        d for rel, tree in trees if rel.startswith(_KNOB_DIRS) for d in _knob_defs(rel, tree)
+    ]
+    names = {d[0] for d in defs}
+    calls: dict[str, list[ast.Call]] = {n: [] for n in names}
+    skipped: set[str] = set()
+    for _rel, tree in trees:
+        callees = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                if name in calls:
+                    callees.add(id(n.func))
+                    calls[name].append(n)
+                    if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                        k.arg is None for k in n.keywords
+                    ):
+                        skipped.add(name)
+        for n in ast.walk(tree):  # a bare reference passes the function as a value
+            if id(n) in callees:
+                continue
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load) and n.id in names:
+                skipped.add(n.id)
+            elif (
+                isinstance(n, ast.Attribute) and n.attr in names and isinstance(n.ctx, ast.Load)
+            ):
+                skipped.add(n.attr)
+    found = []
+    for name, args, lead, loc in defs:
+        if name in skipped or not calls[name]:
+            continue
+        positional = args.posonlyargs + args.args
+        defaulted = list(zip(positional[len(positional) - len(args.defaults):], args.defaults))
+        defaulted += [
+            (a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
+        ]
+        index = {a.arg: i - lead for i, a in enumerate(positional)}
+        for arg, default in defaulted:
+            values = set()
+            for call in calls[name]:
+                given = [k.value for k in call.keywords if k.arg == arg.arg]
+                i = index.get(arg.arg, -1)
+                if not given and 0 <= i < len(call.args):
+                    given = [call.args[i]]
+                values.add(ast.dump(given[0] if given else default))
+            if len(values) == 1:
+                found.append(f"{loc}({arg.arg}={ast.unparse(default)})")
+    return sorted(found)
+
+
+def test_every_operator_parameter_takes_two_values():
+    assert _single_valued_parameters() == []

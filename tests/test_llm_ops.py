@@ -221,8 +221,8 @@ def test_ann_recall_floor(spark, sf_dir):
         ivf_sampled_topk,
     )
 
-    s2 = mean_recall(ivf_sampled_topk(e, qids, k=10, n_probe=2))
-    s8 = mean_recall(ivf_sampled_topk(e, qids, k=10, n_probe=8))
+    s2 = mean_recall(ivf_sampled_topk(e, qids, n_probe=2))
+    s8 = mean_recall(ivf_sampled_topk(e, qids, n_probe=8))
     assert s2 >= 0.1  # sampled centroids are a weaker quantizer than k-means
     assert s8 >= s2
 
@@ -538,7 +538,7 @@ def test_knn_graph_finds_cluster_neighbors(spark):
     for i in range(10, 15):
         rows.append((i, [0.0, 0.0, 1.0, 0.01 * (i - 10)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    g = knn_graph(emb, k=3, n_planes=3, n_tables=4, id_col="vec_id").collect()
+    g = knn_graph(emb, k=3, n_planes=3, n_tables=4).collect()
     by_src = {}
     for r in g:
         by_src.setdefault(r.src, []).append(r.dst)
@@ -605,7 +605,7 @@ def test_session_new_operators_handle_empty_inputs(spark):
     one = spark.createDataFrame([(i, "only") for i in range(10)], "id long, lang string")
     assert balanced_resample(one, "id", "lang").count() == 10
     assert stratified_topk_sample(one, "id", "lang", 100).count() == 10  # k > |stratum|
-    assert centroid_outliers(empty_emb, label_col="label").count() == 0
+    assert centroid_outliers(empty_emb).count() == 0
     assert knn_graph(empty_emb).count() == 0
     assert plan_compaction(
         spark.createDataFrame([], "file_id long, size_bytes long"),
@@ -694,7 +694,7 @@ def test_pq_codes_identity_and_copy(spark):
     vecs = [(i, rng.randn(64).astype("float32").tolist()) for i in range(9)]
     vecs.append((9, vecs[3][1]))  # exact copy of codebook entry 3
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    got = {r.vec_id: r for r in pq_codes(emb, n_blocks=4, n_codes=8).collect()}
+    got = {r.vec_id: r for r in pq_codes(emb).collect()}
     for i in range(8):
         assert (got[i].code_0, got[i].code_1, got[i].code_2, got[i].code_3) == (
             i, i, i, i,
@@ -726,7 +726,7 @@ def test_fuzzy_join_blocking_and_threshold(spark):
     )
     got = sorted(
         (r.id, r.id_r, r.distance)
-        for r in fuzzy_join(left, right, "name", "name", max_distance=2).collect()
+        for r in fuzzy_join(left, right, "name", "name").collect()
     )
     assert got == [(1, 10, 1), (1, 11, 2), (2, 13, 0)]
 
@@ -827,7 +827,7 @@ def test_prefix_filter_jaccard_position_filter_lossless(spark):
 
     got = {
         (r["doc_a"], r["doc_b"]): (r["inter"], r["uni"])
-        for r in prefix_filter_jaccard_pairs(df, "doc_id", "text", 60).collect()
+        for r in prefix_filter_jaccard_pairs(df, "doc_id", "text").collect()
     }
     assert got == expected and len(expected) >= 8
 
@@ -847,7 +847,7 @@ def test_prefix_filter_jaccard_exact_pairs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         (r["doc_a"], r["doc_b"]): r
-        for r in prefix_filter_jaccard_pairs(df, "doc_id", "text", 60).collect()
+        for r in prefix_filter_jaccard_pairs(df, "doc_id", "text").collect()
     }
     assert out[(1, 2)]["jaccard"] == 1.0
     # doc3 appends one word: shingle sets 8 vs 9, intersection 8 -> 8/9
@@ -916,7 +916,7 @@ def test_prefix_filter_collapse_exact_multiplicity(spark):
         (5, "unrelated trigram free words entirely disjoint content here now"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = prefix_filter_jaccard_pairs(df, "doc_id", "text", 60, collapse_exact=True)
+    out = prefix_filter_jaccard_pairs(df, "doc_id", "text", collapse_exact=True)
     got = {(r["doc_a"], r["doc_b"]): r for r in out.collect()}
     # docs 1/2/3 collapse to representative 1 with multiplicity 3;
     # the only surviving pair is (1, 4)
@@ -1042,7 +1042,7 @@ def test_bpe_train_merges_known_corpus(spark):
     docs = spark.createDataFrame(
         [(1, "abab abab abab ab ab")], "doc_id long, text string"
     )
-    got = {r.symbol: r.cnt for r in bpe_train_symbols(docs, merges=2).collect()}
+    got = {r.symbol: r.cnt for r in bpe_train_symbols(docs).collect()}
     assert got == {"ab": 8}
 
 
@@ -1055,7 +1055,7 @@ def test_bpe_train_two_merges_builds_on_first(spark):
     docs = spark.createDataFrame(
         [(1, "abc abc abc abc abc abd abd")], "doc_id long, text string"
     )
-    got = {r.symbol: r.cnt for r in bpe_train_symbols(docs, merges=2).collect()}
+    got = {r.symbol: r.cnt for r in bpe_train_symbols(docs).collect()}
     assert got == {"abc": 5, "ab": 2, "d": 2}
 
 
@@ -1163,11 +1163,34 @@ def test_vacuum_removes_stale_and_orphans(spark, tmp_path):
     fresh = os.path.join(str(tmp_path), "t", "v=10")
     os.makedirs(fresh)
 
-    removed = t.vacuum(retain=1)
+    removed = t.vacuum()
     names = {os.path.basename(p) for p in removed}
-    assert names == {"v=3", "v=9"}  # stale old + aged orphan
+    assert names == {"v=9"}  # aged orphan; retention is _gc's job
     assert os.path.isdir(fresh)
+    assert os.path.isdir(os.path.join(str(tmp_path), "t", "v=3"))
     assert t.read().count() == 5  # committed version untouched
+
+
+def test_content_cache_removes_stale_staging_dirs(spark, tmp_path, monkeypatch):
+    """A staging dir a crashed cache writer left behind is swept by the
+    next build once it is an hour old; a fresh one (a concurrent writer
+    mid-flight) survives, and the build commits under its key."""
+    import os
+    import time
+
+    from imdb_metacritic_data_warehouse_spark.entry_queries import q03_dedup_lsh as q03
+
+    monkeypatch.setattr(q03, "_CONTENT_CACHE", str(tmp_path))
+    stale = tmp_path / "tmpstale"
+    stale.mkdir()
+    os.utime(stale, (time.time() - 7200, time.time() - 7200))
+    fresh = tmp_path / "tmpfresh"
+    fresh.mkdir()
+    src = spark.createDataFrame([(1, "a")], "k long, v string")
+    out = q03._content_cached(spark, "/data/sf0.001/", src, "t-v1", lambda df: df)
+    assert out.collect() == src.collect()
+    assert not stale.exists() and fresh.exists()
+    assert [e for e in os.listdir(tmp_path) if e.startswith("t-v1-sf0.001-1-")]
 
 
 def test_bmp_roundtrip_including_stride_padding(spark):
@@ -1344,7 +1367,7 @@ def test_lcs_pairs_planted_spans(spark):
     )
     got = {
         (r.da, r.db): (r.lcs_words, r.n_anchors)
-        for r in lcs_pairs(docs, k=7, cap=16).collect()
+        for r in lcs_pairs(docs, cap=16).collect()
     }
     # (1,2): 12-word span -> 6 consecutive 7-gram starts -> 6+6 = 12
     # (1,3)/(2,3): exactly one shared 7-gram -> lcs 7
@@ -1355,6 +1378,6 @@ def test_lcs_pairs_planted_spans(spark):
     # vanish; pair (1,2)'s run splits {1,2} | {4,5,6} -> max 3 -> 3+6=9
     got2 = {
         (r.da, r.db): (r.lcs_words, r.n_anchors)
-        for r in lcs_pairs(docs, k=7, cap=2).collect()
+        for r in lcs_pairs(docs, cap=2).collect()
     }
     assert got2 == {(1, 2): (9, 5)}

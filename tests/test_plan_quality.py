@@ -508,7 +508,7 @@ def test_jaccard_prefix_join_carries_hashes_not_strings(spark):
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    df = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 60)
+    df = prefix_filter_jaccard_pairs(docs, "doc_id", "text")
     plan = _plan(df)
     # verification joins run over the checkpointed hashed element table
     assert "ExistingRDD" in plan
@@ -544,7 +544,7 @@ def test_plan_only_builds_the_whole_tree(spark, case):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     with plan_only(), spark_jobs(spark) as jobs:
         if case == "jaccard_prefix_join":
-            df = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 60)
+            df = prefix_filter_jaccard_pairs(docs, "doc_id", "text")
             assert jobs() == set()
         else:
             df = QUERIES[case](spark, SF_DIR)

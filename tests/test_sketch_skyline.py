@@ -170,7 +170,7 @@ def test_bpe_encode_consistent_with_training(spark):
         "doc_id long, text string",
     )
     inv_mass = (
-        bpe_train_symbols(docs, merges=2)
+        bpe_train_symbols(docs)
         .agg(F.sum("cnt").alias("m")).collect()[0]["m"]
     )
     wc = (
@@ -248,7 +248,7 @@ def test_personalized_pagerank_localizes_mass(spark):
     ranks = {
         r["node"]: r["pr"]
         for r in personalized_pagerank(
-            undirected_edges(pairs, "pa", "pb"), seeds, iters=3
+            undirected_edges(pairs, "pa", "pb"), seeds
         ).collect()
     }
     assert all(ranks[n] == 0.0 for n in (10, 11, 12))

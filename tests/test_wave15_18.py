@@ -100,7 +100,7 @@ def test_isotropy_extremes(spark):
         df = spark.createDataFrame(
             [(i, v) for i, v in enumerate(rows)], "vec_id long, embedding array<float>"
         )
-        grid = gram_upper_cells(df, "embedding", scale=10000)
+        grid = gram_upper_cells(df, scale=10000)
         s19 = F.col("sxy").cast("decimal(19,0)")
         r = grid.agg(
             F.sum(F.when(F.col("i") == F.col("j"), s19).otherwise(F.lit(0))).alias("tr"),

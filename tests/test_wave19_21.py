@@ -26,7 +26,7 @@ def test_hits_bipartite_hand_graph(spark):
         [(1, 10), (1, 11), (1, 12), (2, 10)], ["src", "dst"]
     )
     got = {
-        (r.role, r.node): r.score for r in hits_bipartite(edges, iters=2).collect()
+        (r.role, r.node): r.score for r in hits_bipartite(edges).collect()
     }
     assert got[("hub", 1)] == 14
     assert got[("hub", 2)] == 6
@@ -104,7 +104,7 @@ def test_winnowing_guarantee_planted_shared_span(spark):
         ],
         ["doc_id", "text"],
     )
-    fp = winnow_fingerprints(docs, "doc_id", "text", n=3, w=4)
+    fp = winnow_fingerprints(docs)
     rows = fp.collect()
     by_doc = {}
     for r in rows:
@@ -123,7 +123,7 @@ def test_winnowing_density_bound(spark):
 
     words = " ".join(f"w{i}" for i in range(40))  # 38 shingles, 35 windows
     docs = spark.createDataFrame([(1, words)], ["doc_id", "text"])
-    n_fp = winnow_fingerprints(docs, "doc_id", "text", n=3, w=4).count()
+    n_fp = winnow_fingerprints(docs).count()
     assert 1 <= n_fp <= 35
 
 

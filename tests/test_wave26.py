@@ -27,7 +27,7 @@ def test_cka_identity_is_one(spark):
     # quant_levels = 10^4 == metric scale => Y quantizes exactly to X's grid
     g = {
         (r.grid, r.i, r.j): int(r.s)
-        for r in cka_grids(df, "embedding", scale=10**4, quant_levels=10**8).collect()
+        for r in cka_grids(df, quant_levels=10**8).collect()
     }
     for (grid, i, j), s in g.items():
         if grid == "xx":

@@ -54,7 +54,7 @@ def test_readability_counts(spark):
     df = spark.createDataFrame(
         [("the cat sat. on a mat!",)], "text string"
     )
-    cols = readability_score("text")
+    cols = readability_score()
     r = df.select(
         cols["n_words"].alias("w"),
         cols["n_sentences"].alias("s"),
@@ -157,7 +157,7 @@ def test_kcore_peel_known_graph(spark):
     # must peel away entirely
     k4 = [(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b]
     pairs = spark.createDataFrame(k4 + [(4, 5), (5, 6)], "pa long, pb long")
-    row = kcore_peel(pairs, k=3, rounds=6).collect()[0]
+    row = kcore_peel(pairs).collect()[0]
     assert row.n_nodes == 4
     assert row.n_edges == 6
     assert row.node_id_sum == 10
@@ -171,7 +171,7 @@ def test_kcore_peel_fully_dissolves(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (2, 5), (2, 6)], "pa long, pb long"
     )
-    row = kcore_peel(pairs, k=3, rounds=6).collect()[0]
+    row = kcore_peel(pairs).collect()[0]
     assert row.n_nodes == 0
     assert row.n_edges == 0
     assert row.converged == 1
@@ -297,8 +297,8 @@ def test_hll_estimate_accuracy_model(spark):
         df = spark.range(n).select(
             F.lit("g").alias("grp"), F.col("id").alias("k")
         )
-        regs = hll_register_maxes(df, ["grp"], "k", p=8)
-        est = hll_estimate(regs, ["grp"], p=8).collect()[0].hll_estimate
+        regs = hll_register_maxes(df, ["grp"], "k")
+        est = hll_estimate(regs, ["grp"]).collect()[0].hll_estimate
         assert abs(est - n) < 0.2 * n, (n, est)
 
 
@@ -334,7 +334,7 @@ def test_label_propagation_two_cliques(spark):
     edges += [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
     edges.append((4, 10))  # bridge
     df = spark.createDataFrame(edges, "pa long, pb long")
-    lab = {r.v: r.label for r in label_propagation(df, rounds=3).collect()}
+    lab = {r.v: r.label for r in label_propagation(df).collect()}
     assert set(lab[v] for v in (1, 2, 3)) == {1}
     assert set(lab[v] for v in (11, 12, 13)) == {10}
 
@@ -397,10 +397,10 @@ def test_hll_null_keys_dropped_like_oracle(spark):
     )
     a = {
         (r.bucket, r.mj)
-        for r in hll_register_maxes(base, ["grp"], "k", p=8).collect()
+        for r in hll_register_maxes(base, ["grp"], "k").collect()
     }
     b = {
         (r.bucket, r.mj)
-        for r in hll_register_maxes(with_null, ["grp"], "k", p=8).collect()
+        for r in hll_register_maxes(with_null, ["grp"], "k").collect()
     }
     assert a == b
